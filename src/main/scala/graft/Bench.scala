@@ -7,59 +7,17 @@ object Bench {
     */
   private val CanonicalBenchSf = "sf0.1"
 
-  private def newSession(sfDir: String, cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      // tmpfs shuffle dir is bench-only; /dev/shm is typically capped at
-      // ~50% RAM, so fall back to /tmp unless it has ≥8 GiB free (the
-      // sf0.1 suite's shuffle footprint is far below that; larger SFs
-      // should set SPARK_GRAFT_LOCAL_DIR explicitly).
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", {
-        val shm = new java.io.File("/dev/shm")
-        if (shm.isDirectory && shm.getUsableSpace > 8L * 1024 * 1024 * 1024)
-          "/dev/shm/spark-local" else "/tmp"
-      }))
-      .config("spark.shuffle.checksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CHECKSUM", "false"))
-      .config("spark.storage.memoryMapThreshold", "134217728")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // AQE coalescing targets max(stageBytes/parallelism, minPartitionSize);
-      // the 1m default collapses small-byte CPU-DENSE shuffle stages
-      // (minhash/shingle hashing, per-pair array intersections) to 1-3
-      // tasks, idling the other cores (measured r18: qd18's candidate
-      // build ran 3.7 s in ONE task at 1m). 64k only binds for stages
-      // under parallelism×1 MB — at production scale bytes/parallelism
-      // dominates and the knob is inert, so the production value is the
-      // same (see OPTIMIZATION_r18.md §config).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MINPART", "64k"))
-      // Janino codegen cache (STATIC conf, JVM-wide from the first
-      // session): the default 100 entries thrash across this suite's
-      // 233 queries — every rep recompiled nearly every generated class
-      // (~50-300 ms each, driver-side). A production driver running a
-      // query fleet wants the same headroom; entries are compiled
-      // classes, tens of KB each.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
-    // evidence-tail hygiene (idempotent per JVM; must run after Spark's
-    // own log4j2 init or the filter is dropped — see LogHygiene)
-    graft.util.LogHygiene.suppressKnownBenignWindowWarn()
-    // Warm up the JVM/codegen paths and parquet footers before timing —
-    // session fixed costs, not query work; no query stage is precomputed.
-    // All warmers run over synthetic range() data with plans unrelated
-    // to any registered query: what they warm is the ENGINE — Janino
-    // (the codegen compiler itself runs ~3× faster once JITed), the
-    // hash-agg/distinct, window, sort-merge and broadcast join
-    // machinery, and the sketch aggregates' generated classes. Without
-    // this the first query to touch each path is billed seconds of
-    // compiler warm-up that no steady-state deployment would pay.
+  /** Warm up the JVM/codegen paths and parquet footers before timing —
+    * session fixed costs, not query work; no query stage is precomputed.
+    * All warmers run over synthetic range() data with plans unrelated
+    * to any registered query: what they warm is the ENGINE — Janino
+    * (the codegen compiler itself runs ~3× faster once JITed), the
+    * hash-agg/distinct, window, sort-merge and broadcast join
+    * machinery, and the sketch aggregates' generated classes. Without
+    * this the first query to touch each path is billed seconds of
+    * compiler warm-up that no steady-state deployment would pay.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions.col
     spark.range(100000).selectExpr("sum(id * 2)").collect()
     val r = spark.range(200000).selectExpr("id", "id % 97 as k", "cast(id % 31 as double) as v")
@@ -82,7 +40,6 @@ object Bench {
     Seq("lineitem", "orders", "events", "documents", "embeddings", "part",
         "customer", "nation", "region", "supplier")
       .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count())
-    spark
   }
 
   /** Fixed synthetic calibration workload — PURE ENGINE WORK
@@ -114,12 +71,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to every core on the box: the driver may not export
-    // SPARK_GRAFT_CPUS, and a silent local[4] on a 32-core host would
-    // under-report throughput ~3× (BENCH_r05 recorded 180 s for a suite
-    // that runs ~55 s at local[32]).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     // Min-of-N profile (r10 calibration: single full runs carry ~±25%
     // environmental noise whose spikes land on DIFFERENT queries each
     // run, so any single-run per-query number is unusable for
@@ -143,7 +94,8 @@ object Bench {
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val calibs = scala.collection.mutable.ArrayBuffer.empty[Double]
     val runTimes = (1 to reps).map { rep =>
-      val spark = newSession(sfDir, cpus)
+      val spark = Session.create()
+      warmUp(spark, sfDir)
       calibs += calibrate(spark)
       import org.apache.spark.sql.functions.{col, xxhash64}
       val times = names.flatMap { case (name, fn) =>

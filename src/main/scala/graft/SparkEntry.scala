@@ -4,10 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.analytics.Relational
 import graft.timeseries.{TsOracle, TsQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
-  * Every implemented operator registers a `queries` entry; every
-  * SQL-expressible one also registers a DuckDB oracle in `oracleSql`
-  * with IDENTICAL column names/types (floats rounded to 4 dp).
+/** Driver contract — see SURVEY.md §2 for the inventory. Every
+  * implemented operator registers ONE `ops` entry: its builder and its
+  * oracle, a DuckDB `Sql` with IDENTICAL column names/types (floats
+  * rounded to 4 dp) or a `NoOracle` naming the spec test that gates it.
+  * `queries` and `oracleSql` are the driver's views of that table.
   */
 object SparkEntry {
 
@@ -88,314 +89,6 @@ object SparkEntry {
                   AS hot_families
          FROM ($hot) hh) h"""
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "qa1_pricing_summary" -> ((s, d) => Relational.pricingSummary(s, d)),
-    "qa2_revenue_join" -> ((s, d) => Relational.revenueByNation(s, d)),
-    "qa3_top_n" -> ((s, d) => Relational.topCustomersPerSegment(s, d)),
-    "q01_resample" -> ((s, d) => TsQueries.q01Resample(s, d)),
-    "q02_fill_forward" -> ((s, d) => TsQueries.q02FillForward(s, d)),
-    "q03_sliding_window" -> ((s, d) => TsQueries.q03SlidingWindow(s, d)),
-    "q04_quantile_scale" -> ((s, d) => TsQueries.q04QuantileScale(s, d)),
-    "q05_anomaly_inject" -> ((s, d) => TsQueries.q05AnomalyInject(s, d)),
-    "q06_ewma" -> ((s, d) => TsQueries.q06Ewma(s, d)),
-    "q07_patch_std" -> ((s, d) => TsQueries.q07PatchStd(s, d)),
-    "q08_patchify" -> ((s, d) => TsQueries.q08Patchify(s, d)),
-    "q09_knn_score" -> ((s, d) => graft.timeseries.Detect.knnScore(s, d)),
-    "q10_gaussian_score" -> ((s, d) => graft.timeseries.Detect.gaussianScore(s, d)),
-    // q11/q12 register the CAPPED reference-set path (the 100 TB
-    // default) — exact ≡ uncapped at every test scale (positions hold
-    // ≪ maxRef windows; DetectSpec asserts bit-equality), so the exact
-    // DuckDB oracles below remain the correctness anchor
-    "q11_lof_weight" -> ((s, d) => graft.timeseries.Detect.lofWeight(s, d)),
-    "q12_knn_dist_weight" -> ((s, d) => graft.timeseries.Detect.nearestDistWeight(s, d)),
-    "q13_coreset" -> ((s, d) => graft.timeseries.Coreset.coreset(s, d)),
-    "q14_consec_runs" -> ((s, d) => graft.timeseries.Postprocess.consecRuns(s, d)),
-    "q15_zscore_outliers" -> ((s, d) => graft.timeseries.Postprocess.zscoreOutliers(s, d)),
-    "q16_threshold_metrics" -> ((s, d) => graft.timeseries.Metrics.thresholdMetrics(s, d)),
-    "q17_auroc" -> ((s, d) => graft.timeseries.Metrics.auroc(s, d)),
-    "q40_auroc_approx" -> ((s, d) => graft.timeseries.Metrics.aurocApprox(s, d)),
-    "q23_detect_pipeline" -> ((s, d) => graft.timeseries.Detect.pipeline(s, d)),
-    "q18_impute_linear" -> ((s, d) => graft.timeseries.Impute.imputeLinear(s, d)),
-    "q19_impute_seasonal" -> ((s, d) => graft.timeseries.Impute.imputeSeasonal(s, d)),
-    "q20_impute_knn" -> ((s, d) => graft.timeseries.Impute.imputeKnn(s, d)),
-    "q21_seasonal_naive" -> ((s, d) => graft.timeseries.Forecast.seasonalNaive(s, d)),
-    "q22_linreg_forecast" -> ((s, d) => graft.timeseries.Forecast.olsForecast(s, d)),
-    "q24_stl_seasonal" -> ((s, d) => graft.timeseries.Forecast.seasonalProfile(s, d)),
-    "qd1_dedup_exact" -> ((s, d) => graft.text.Dedup.exact(s, d)),
-    "qd2_minhash_lsh" -> ((s, d) => graft.text.Dedup.minhashLsh(s, d)),
-    "qd3_simhash" -> ((s, d) => graft.text.Dedup.simhash(s, d)),
-    "qd6_dup_clusters" -> ((s, d) => graft.text.Dedup.dupClusters(s, d)),
-    "qd4_ngram_jaccard" -> ((s, d) => graft.text.Dedup.ngramJaccard(s, d)),
-    "qd5_embed_neardup" -> ((s, d) => graft.vector.Similarity.embedNearDup(s, d)),
-    "qv1_cosine_topk" -> ((s, d) => graft.vector.Similarity.cosineTopK(s, d)),
-    "qv16_range_search" -> ((s, d) => graft.vector.Similarity.rangeSearch(s, d)),
-    "qv2_lsh_ann" -> ((s, d) => graft.vector.Similarity.lshAnn(s, d)),
-    "qv3_ivf_ann" -> ((s, d) => graft.vector.Similarity.ivfAnn(s, d)),
-    "qt1_token_count" -> ((s, d) => graft.text.TextOps.tokenCount(s, d)),
-    "qt2_quality_score" -> ((s, d) => graft.text.TextOps.qualityScore(s, d)),
-    "qt3_lang_id" -> ((s, d) => graft.text.TextOps.langId(s, d)),
-    "qt4_fingerprint" -> ((s, d) => graft.text.TextOps.fingerprint(s, d)),
-    "qm1_binary_meta" -> ((s, d) => graft.multimodal.BinaryMeta.mediaFeatures(s, d)),
-    "q25_pointwise_metrics" -> ((s, d) => graft.timeseries.PointwiseMetrics.pointwiseMetrics(s, d)),
-    "q26_mllib_forecast" -> ((s, d) => graft.timeseries.MllibForecast.mllibForecast(s, d)),
-    "q27_threshold_sweep" -> ((s, d) => graft.timeseries.Metrics.thresholdSweep(s, d)),
-    "q28_window_labels" -> ((s, d) => TsQueries.q28WindowLabels(s, d)),
-    "q29_highest_patch" -> ((s, d) => graft.timeseries.Postprocess.highestPatchFlags(s, d)),
-    "qa4_rollup" -> ((s, d) => Relational.revenueRollup(s, d)),
-    "qa5_semi_join" -> ((s, d) => Relational.bigSpenderSegments(s, d)),
-    "qa6_running_window" -> ((s, d) => Relational.runningRevenue(s, d)),
-    "qt5_json_extract" -> ((s, d) => graft.text.TextOps.jsonExtract(s, d)),
-    "qt6_top_bigrams" -> ((s, d) => graft.text.TextOps.topBigrams(s, d)),
-    "qa7_anti_join" -> ((s, d) => Relational.partsNeverOrdered(s, d)),
-    "qe1_sessionize" -> ((s, d) => graft.analytics.Events.sessionize(s, d)),
-    "qe2_funnel" -> ((s, d) => graft.analytics.Events.funnel(s, d)),
-    "qp1_profile" -> ((s, d) => graft.analytics.Events.profile(s, d)),
-    "qe3_retention" -> ((s, d) => graft.analytics.Events.retention(s, d)),
-    "qe4_asof_join" -> ((s, d) => graft.analytics.Events.asofJoin(s, d)),
-    "qp2_approx_distinct" -> ((s, d) => graft.analytics.Events.approxDistinct(s, d)),
-    "qa8_latest_row" -> ((s, d) => Relational.latestRow(s, d)),
-    "q31_range_join" -> ((s, d) => graft.timeseries.Intervals.rangeJoin(s, d)),
-    "q32_acf" -> ((s, d) => graft.timeseries.Forecast.acf(s, d)),
-    "q33_level_shift" -> ((s, d) => graft.timeseries.Intervals.levelShift(s, d)),
-    "q34_mad_outliers" -> ((s, d) => graft.timeseries.Intervals.madOutliers(s, d)),
-    "qt7_tfidf" -> ((s, d) => graft.text.TextOps.tfidf(s, d)),
-    "qa9_cube" -> ((s, d) => Relational.revenueCube(s, d)),
-    "qp3_approx_quantile" -> ((s, d) => graft.analytics.Events.approxQuantiles(s, d)),
-    "qd7_dedup_stats" -> ((s, d) => graft.text.Dedup.dupStats(s, d)),
-    "q35_horizon_backtest" -> ((s, d) => graft.timeseries.Forecast.horizonBacktest(s, d)),
-    "q39_direct_horizon" -> ((s, d) => graft.timeseries.Forecast.directHorizonForecast(s, d)),
-    "q41_window_pairs" -> ((s, d) => graft.timeseries.Forecast.windowPairs(s, d)),
-    "q42_rescaled_metrics" -> ((s, d) => graft.timeseries.Forecast.rescaledMetrics(s, d)),
-    "q43_calendar_filter" -> ((s, d) => graft.timeseries.TsQueries.q43CalendarFilter(s, d)),
-    "qm2_frame_sample" -> ((s, d) => graft.multimodal.BinaryMeta.frameSample(s, d)),
-    "qm7_frame_neardup" -> ((s, d) => graft.multimodal.BinaryMeta.frameNearDup(s, d)),
-    "qm8_media_clusters" -> ((s, d) => graft.multimodal.BinaryMeta.mediaClusters(s, d)),
-    "qm9_imageio_decode" -> ((s, d) => graft.multimodal.BinaryMeta.imageioFeatures(s, d)),
-    "qa10_stratified_sample" -> ((s, d) => Relational.stratifiedSample(s, d)),
-    "qa11_salted_agg" -> ((s, d) => Relational.saltedAgg(s, d)),
-    "qa12_pivot" -> ((s, d) => Relational.eventPivot(s, d)),
-    "qp4_group_quantiles" -> ((s, d) => graft.analytics.Events.groupQuantiles(s, d)),
-    "q36_xcorr" -> ((s, d) => graft.timeseries.Intervals.crossCorr(s, d)),
-    "q37_seasonal_residual" -> ((s, d) => graft.timeseries.Intervals.seasonalResidual(s, d)),
-    "q38_cleaning_impact" -> ((s, d) => graft.timeseries.Forecast.cleaningImpact(s, d)),
-    "qv4_ann_eval" -> ((s, d) => graft.vector.Similarity.annEval(s, d)),
-    "qv17_probe_sweep" -> ((s, d) => graft.vector.Similarity.probeSweep(s, d)),
-    "qv18_hybrid_search" -> ((s, d) => graft.vector.Similarity.hybridSearch(s, d)),
-    "qv22_hybrid_ivf" -> ((s, d) => graft.vector.Similarity.hybridSearchIvf(s, d)),
-    "qv23_hybrid_eval" -> ((s, d) => graft.vector.Similarity.hybridEval(s, d)),
-    "qv24_hybrid_guarded" -> ((s, d) => graft.vector.Similarity.hybridSearch(s, d,
-      fallbackMaxDfShare = graft.vector.Similarity.Bm25FallbackMaxDfShare)),
-    // the GUARDED SERVING configuration (what hybridServeStream mirrors):
-    // IVF dense branch + qv24's fallback df ceiling, registered so the
-    // thing that serves is the thing that's oracled and benched
-    "qv25_hybrid_ivf_guarded" -> ((s, d) => graft.vector.Similarity.hybridSearchIvf(s, d,
-      fallbackMaxDfShare = graft.vector.Similarity.Bm25FallbackMaxDfShare)),
-    // the heavy-tailed OFFICIAL gate (see ZipfDir): df-gated design
-    // paths running on a corpus whose shape actually engages them
-    "qz1_hybrid_eligible" -> ((s, _) => graft.vector.Similarity.hybridSearch(s, ZipfDir)),
-    "qz2_hybrid_ivf_guarded" -> ((s, _) => graft.vector.Similarity.hybridSearchIvf(s, ZipfDir,
-      fallbackMaxDfShare = graft.vector.Similarity.Bm25FallbackMaxDfShare)),
-    "qz3_containment" -> ((s, _) => graft.text.Dedup.containment(s, ZipfDir)),
-    "qz4_boilerplate" -> ((s, _) => graft.text.TextOps.boilerplate(s, ZipfDir)),
-    "qz5_vocab_coverage" -> ((s, _) => graft.text.TextOps.vocabCoverage(s, ZipfDir)),
-    "qz6_minhash_lsh" -> ((s, _) => graft.text.Dedup.minhashLsh(s, ZipfDir)),
-    "qz7_unigram_nll" -> ((s, _) => graft.text.TextOps.unigramNll(s, ZipfDir)),
-    "qz8_dsir_weights" -> ((s, _) => graft.text.TextOps.dsirWeights(s, ZipfDir)),
-    // r15: the dedup GRAPH on the heavy-tailed corpus — star candidate
-    // edges, the (now-default) star cluster chain, and the one-sided
-    // incremental band probe, driver-official instead of builder-run
-    "qz9_star_edges" -> ((s, _) => graft.text.Dedup.lshStarEdges(s, ZipfDir)),
-    "qz10_star_clusters" -> ((s, _) => graft.text.Dedup.starClusters(s, ZipfDir)),
-    // incMod=2: the zipf planted pairs are (…8, …9) ids — a %5 split
-    // can never separate one, so it would gate a structurally empty set
-    "qz11_incremental_dedup" -> ((s, _) => graft.text.Dedup.incrementalDedup(s, ZipfDir,
-      incMod = 2L)),
-    // r15: the other two guarded pair-blockers on heavy-tailed text —
-    // qd4's length blocks and qd3's stop-chunk df cap, live on a corpus
-    // whose length/fingerprint distributions actually skew
-    "qz12_ngram_jaccard" -> ((s, _) => graft.text.Dedup.ngramJaccard(s, ZipfDir)),
-    "qz13_simhash" -> ((s, _) => graft.text.Dedup.simhash(s, ZipfDir)),
-    // r16: the EMBEDDING-space pair-blockers on the corpus shape they
-    // exist for — zipf labels (majority class = 37% of vectors) and
-    // archetype-clustered vectors (within-archetype cos ≈ 0.98, top
-    // seeded cell ≈ 4× uniform occupancy). qd11's cell guard and qd5's
-    // label guard both run LIVE here (skew present, caps non-binding).
-    "qz14_semantic_dedup" -> ((s, _) => graft.vector.Similarity.semanticDedup(s, ZipfDir)),
-    "qz15_embed_neardup" -> ((s, _) => graft.vector.Similarity.embedNearDup(s, ZipfDir)),
-    // r16: the embedding-index AUDITS on the distribution they audit
-    // for — qv10's hot flag (cell skew > 2x uniform) actually FIRES on
-    // the archetype-clustered cells (head cell 3.5x), and qv8's
-    // centroid-outlier scan runs over majority-class label centroids;
-    // on the driver's isotropic corpus both audits are parity-green
-    // but structurally idle
-    "qz16_index_stats" -> ((s, _) => graft.vector.Similarity.indexStats(s, ZipfDir)),
-    "qz17_centroid_outlier" -> ((s, _) => graft.vector.Similarity.centroidOutlier(s, ZipfDir)),
-    // qz18-qz20 (r17): the EVENTS side of the heavy-tailed gate — the
-    // zipf events table (Zipf types, Zipf user activity with a ~20%
-    // bot head) makes qp5's skew profiler, qe15's rate-limit flag and
-    // qe1's dense-stream sessionization run their design paths
-    // (ZipfCorpusSpec pins fires-on-zipf / idle-on-base)
-    "qz18_skew_profile" -> ((s, _) => graft.analytics.Events.skewProfile(s, ZipfDir)),
-    "qz19_burst_rate" -> ((s, _) => graft.analytics.Events.burstRate(s, ZipfDir)),
-    "qz20_sessionize" -> ((s, _) => graft.analytics.Events.sessionize(s, ZipfDir)),
-    // qh1/qh2 (r17): the guard family's report-mode pre-flight,
-    // oracle-checked on BOTH committed corpora — clean on zipf at
-    // production caps (0 rows), firing on hotdata's planted 100-strong
-    // groups at tightened caps (>= 7 rows by construction)
-    // qz22/qz23 (r17): the remaining structurally-idle families on
-    // skew — qe13's overlap matrix SATURATES on the driver's uniform
-    // events (every user touches all 5 types → every jaccard ≈ 1);
-    // zipf types differentiate it. qm3's pHash pigeonhole had no zipf
-    // row at all; the corpus's perturbed near-dups and passage
-    // carriers give it real byte-level collisions.
-    "qz22_audience_overlap" -> ((s, _) => graft.analytics.Events.audienceOverlap(s, ZipfDir)),
-    "qz23_phash_neardup" -> ((s, _) => graft.multimodal.BinaryMeta.phashNearDup(s, ZipfDir)),
-    "qh1_hot_report" -> ((s, _) => graft.text.HotReport.hotBlockReport(s, ZipfDir)),
-    "qh2_hot_report_fires" -> ((s, _) => graft.text.HotReport.hotBlockReport(s, HotDir,
-      maxBucket = 50, maxBlock = 50, maxLabel = 70, maxCell = 70)),
-    // qz24/qz25 (r18): the RELATIONAL side of the heavy-tailed gate —
-    // the committed zipf facts carry a mega-order (~13% of all
-    // lineitem rows on ONE l_orderkey) and a mega-customer (~16% of
-    // orders), so qa11's salted two-phase agg finally runs where the
-    // salt fan-out MATTERS (qz24: hot group ~2000× the median) and
-    // qa2's lineitem⋈orders leg is a genuinely skewed fact-fact join
-    // (qz25: AQE's skew-join split engages — ZipfCorpusSpec pins the
-    // split present on zipf / absent on base).
-    "qz24_salted_agg" -> ((s, _) => Relational.saltedLineAgg(s, ZipfDir)),
-    "qz25_skew_fact_join" -> ((s, _) => Relational.revenueByNation(s, ZipfDir)),
-    // qc6/qc7 (r18): the funnel manifest with the guard family's
-    // pre-flight verdict attached — report-then-build as one keyed op;
-    // clean at production caps on the driver corpus (qc6), all four
-    // families surfaced on the planted hotdata corpus at qh2's caps
-    // while the build itself still runs (qc7)
-    "qc6_build_preflight" -> ((s, d) => graft.text.TextOps.corpusBuildPreflight(s, d)),
-    "qc7_preflight_fires" -> ((s, _) => graft.text.TextOps.corpusBuildPreflight(s, HotDir,
-      maxBucket = 50, maxBlock = 50, maxLabel = 70, maxCell = 70)),
-    "qv19_rank_metrics" -> ((s, d) => graft.vector.Similarity.rankMetrics(s, d)),
-    "qv20_dim_sweep" -> ((s, d) => graft.vector.Similarity.dimSweep(s, d)),
-    "qv21_index_upsert" -> ((s, d) => graft.vector.Similarity.indexUpsert(s, d)),
-    "qv26_hot_cell_split" -> ((s, d) => graft.vector.Similarity.hotCellSplit(s, d)),
-    // qz21: the split on the corpus whose head cell actually FIRES
-    // qv10's hot flag (qz16) — ≥1 split row by construction
-    "qz21_hot_cell_split" -> ((s, _) => graft.vector.Similarity.hotCellSplit(s, ZipfDir)),
-    "qt8_langid_eval" -> ((s, d) => graft.text.TextOps.langIdEval(s, d)),
-    "qd8_minhash_est" -> ((s, d) => graft.text.Dedup.minhashEstimate(s, d)),
-    "qd9_incremental_dedup" -> ((s, d) => graft.text.Dedup.incrementalDedup(s, d)),
-    "qt9_repetition" -> ((s, d) => graft.text.TextOps.repetition(s, d)),
-    "qa13_mixture_sample" -> ((s, d) => Relational.mixtureSample(s, d)),
-    "qe5_window_funnel" -> ((s, d) => graft.analytics.Events.windowFunnel(s, d)),
-    "qt10_quality_filter" -> ((s, d) => graft.text.TextOps.qualityFilter(s, d)),
-    "qd10_bloom_dedup" -> ((s, d) => graft.text.Dedup.bloomIncrementalDedup(s, d)),
-    "qa14_incremental_agg" -> ((s, d) => Relational.incrementalAgg(s, d)),
-    "qa15_zorder" -> ((s, d) => Relational.zorderLayout(s, d)),
-    "qa16_merge_upsert" -> ((s, d) => Relational.mergeUpsert(s, d)),
-    "qd11_semantic_dedup" -> ((s, d) => graft.vector.Similarity.semanticDedup(s, d)),
-    "qd12_decontaminate" -> ((s, d) => graft.text.Dedup.decontaminate(s, d)),
-    "qv5_pq_ann" -> ((s, d) => graft.vector.Similarity.pqAnn(s, d)),
-    "qt12_vocab_coverage" -> ((s, d) => graft.text.TextOps.vocabCoverage(s, d)),
-    "qd13_dup_spans" -> ((s, d) => graft.text.Dedup.dupSpans(s, d)),
-    "q44_masked_pairs" -> ((s, d) => graft.timeseries.Impute.maskedPairs(s, d)),
-    "q55_learned_impute" -> ((s, d) => graft.timeseries.Impute.learnedImpute(s, d)),
-    "q56_feature_forecast" -> ((s, d) => graft.timeseries.Forecast.featureForecast(s, d)),
-    "q57_learned_cleaning" -> ((s, d) => graft.timeseries.Forecast.learnedCleaningImpact(s, d)),
-    "q58_conformal" -> ((s, d) => graft.timeseries.Forecast.conformalIntervals(s, d)),
-    "q59_decompose_forecast" -> ((s, d) => graft.timeseries.Forecast.decomposeForecast(s, d)),
-    "q60_recursive_forecast" -> ((s, d) => graft.timeseries.Forecast.recursiveForecast(s, d)),
-    // rows-only (declared in ContractSpec): boosted-tree split search
-    // has no SQL analogue; quality gated in ForecastImputeSpec
-    "q61_gbt_forecast" -> ((s, d) => graft.timeseries.MllibForecast.gbtForecast(s, d)),
-    "q62_refit_trigger" -> ((s, d) => graft.timeseries.Forecast.refitTrigger(s, d)),
-    "q63_interval_score" -> ((s, d) => graft.timeseries.Forecast.intervalScore(s, d)),
-    "q64_forecast_scorecard" -> ((s, d) => graft.timeseries.Forecast.forecastScorecard(s, d)),
-    "q65_trailing_forecast" -> ((s, d) => graft.timeseries.Forecast.trailingForecast(s, d)),
-    "qd17_dup_weight" -> ((s, d) => graft.text.Dedup.dupWeight(s, d)),
-    "qd18_containment" -> ((s, d) => graft.text.Dedup.containment(s, d)),
-    "qd19_global_dup_spans" -> ((s, d) => graft.text.Dedup.globalDupSpans(s, d)),
-    "qd20_dedup_spans" -> ((s, d) => graft.text.Dedup.dedupSpans(s, d)),
-    "qd21_dedup_fixpoint" -> ((s, d) => graft.text.Dedup.dedupSpansFixpoint(s, d)),
-    // r16, rows-only: the PRODUCTION run-until-clean span hygiene (the
-    // callable a build materializes) — pass count is data-dependent, so
-    // no fixed SQL mirrors it; qd21's fixed trace is the oracle twin and
-    // TextSpec pins the proven-clean re-scan contract
-    "qd24_span_fixpoint" -> ((s, d) => graft.text.Dedup.dedupSpansClean(s, d)),
-    // qd25 (r18): qd21's sibling — the pass-3 rebuilt TEXT itself,
-    // oracle-mirrored by the same nested chain, covering qd24's output
-    // wherever the fixpoint lands within 3 passes (TextSpec pins ≡)
-    "qd25_span_corpus" -> ((s, d) => graft.text.Dedup.dedupSpansCorpus(s, d)),
-    "qd22_lsh_star_edges" -> ((s, d) => graft.text.Dedup.lshStarEdges(s, d)),
-    "qd23_star_clusters" -> ((s, d) => graft.text.Dedup.starClusters(s, d)),
-    "qt21_domain_cap" -> ((s, d) => graft.text.TextOps.domainCap(s, d)),
-    "qt22_dsir_weights" -> ((s, d) => graft.text.TextOps.dsirWeights(s, d)),
-    "qt23_pii_redact" -> ((s, d) => graft.text.TextOps.piiRedact(s, d)),
-    "qt24_doc_chunks" -> ((s, d) => graft.text.TextOps.chunkDocs(s, d)),
-    "qt25_bpe_merges" -> ((s, d) => graft.text.TextOps.bpeMerges(s, d)),
-    "qt26_bpe_encode" -> ((s, d) => graft.text.TextOps.bpeEncode(s, d)),
-    "qt27_chunk_dedup" -> ((s, d) => graft.text.TextOps.chunkDedup(s, d)),
-    "qt28_bpe_vocab" -> ((s, d) => graft.text.TextOps.bpeMergesLocal(s, d)),
-    "qt29_bpe_encode64" -> ((s, d) => graft.text.TextOps.bpeEncodeLocal(s, d)),
-    "qc4_budget_plan" -> ((s, d) => graft.text.TextOps.budgetPlan(s, d)),
-    "qc5_chunk_index" -> ((s, d) => graft.text.TextOps.chunkIndex(s, d)),
-    "qc1_corpus_build" -> ((s, d) => graft.text.TextOps.corpusBuild(s, d)),
-    "qc2_epoch_shuffle" -> ((s, d) => graft.text.TextOps.epochShuffle(s, d)),
-    "qc3_dataset_card" -> ((s, d) => graft.text.TextOps.datasetCard(s, d)),
-    "qv6_ivfpq_ann" -> ((s, d) => graft.vector.Similarity.ivfPqAnn(s, d)),
-    "qv11_sq8_ann" -> ((s, d) => graft.vector.Similarity.sq8Ann(s, d)),
-    "qv12_refine_ann" -> ((s, d) => graft.vector.Similarity.refineAnn(s, d)),
-    "qv13_kmeans" -> ((s, d) => graft.vector.Similarity.kmeansFit(s, d)),
-    "qv14_mips" -> ((s, d) => graft.vector.Similarity.mipsTopK(s, d)),
-    "qv15_filtered_topk" -> ((s, d) => graft.vector.Similarity.filteredTopK(s, d)),
-    "qt19_pii_scan" -> ((s, d) => graft.text.TextOps.piiScan(s, d)),
-    "qm3_phash_neardup" -> ((s, d) => graft.multimodal.BinaryMeta.phashNearDup(s, d)),
-    "qe7_top_paths" -> ((s, d) => graft.analytics.Events.topPaths(s, d)),
-    "qp5_skew_profile" -> ((s, d) => graft.analytics.Events.skewProfile(s, d)),
-    "qt11_pack_shards" -> ((s, d) => graft.text.TextOps.packShards(s, d)),
-    "qe6_transitions" -> ((s, d) => graft.analytics.Events.transitions(s, d)),
-    "qe16_next_event" -> ((s, d) => graft.analytics.Events.nextEventEval(s, d)),
-    "qe17_cuped" -> ((s, d) => graft.analytics.Events.cuped(s, d)),
-    "qp11_expectations" -> ((s, d) => graft.analytics.Events.expectations(s, d)),
-    "qm10_resize" -> ((s, d) => graft.multimodal.BinaryMeta.resizePlanes(s, d)),
-    "q45_cusum" -> ((s, d) => graft.timeseries.Intervals.cusum(s, d)),
-    "q46_episodes" -> ((s, d) => graft.timeseries.Intervals.episodes(s, d)),
-    "q47_median_filter" -> ((s, d) => graft.timeseries.Intervals.medianFilter(s, d)),
-    "qp7_drift" -> ((s, d) => TsQueries.qp7Drift(s, d)),
-    "q48_decompose" -> ((s, d) => graft.timeseries.Forecast.decompose(s, d)),
-    "qe8_scd2" -> ((s, d) => graft.analytics.Events.scd2(s, d)),
-    "qv7_knn_label" -> ((s, d) => graft.vector.Similarity.knnLabel(s, d)),
-    "qp8_corr_matrix" -> ((s, d) => graft.analytics.Events.corrMatrix(s, d)),
-    "qe9_rfm" -> ((s, d) => graft.analytics.Events.rfm(s, d)),
-    "qe10_attribution" -> ((s, d) => graft.analytics.Events.attribution(s, d)),
-    "qt16_char_entropy" -> ((s, d) => graft.text.TextOps.charEntropy(s, d)),
-    "q49_periodogram" -> ((s, d) => graft.timeseries.Forecast.periodogram(s, d)),
-    "qv8_centroid_outlier" -> ((s, d) => graft.vector.Similarity.centroidOutlier(s, d)),
-    "qd14_pagerank" -> ((s, d) => graft.text.Dedup.pageRank(s, d)),
-    "qt17_bigram_nll" -> ((s, d) => graft.text.TextOps.bigramNll(s, d)),
-    "qm4_shard_manifest" -> ((s, d) => graft.multimodal.BinaryMeta.shardManifest(s, d)),
-    "qm5_modality_stats" -> ((s, d) => graft.multimodal.BinaryMeta.modalityStats(s, d)),
-    "qm6_modal_coverage" -> ((s, d) => graft.multimodal.BinaryMeta.modalCoverage(s, d)),
-    "qt20_mix_weights" -> ((s, d) => graft.text.TextOps.mixWeights(s, d)),
-    "qp9_histogram" -> ((s, d) => graft.analytics.Events.histProfile(s, d)),
-    "qa17_grouping_sets" -> ((s, d) => Relational.groupingSets(s, d)),
-    "qv9_centroid_drift" -> ((s, d) => graft.vector.Similarity.centroidDrift(s, d)),
-    "q50_anomaly_mask" -> ((s, d) => graft.timeseries.Postprocess.anomalyMask(s, d)),
-    "qe11_cohort_ltv" -> ((s, d) => graft.analytics.Events.cohortLtv(s, d)),
-    "qp10_quality_audit" -> ((s, d) => graft.analytics.Events.qualityAudit(s, d)),
-    "qd15_novelty" -> ((s, d) => graft.text.Dedup.novelty(s, d)),
-    "qv10_index_stats" -> ((s, d) => graft.vector.Similarity.indexStats(s, d)),
-    "qd16_canonical" -> ((s, d) => graft.text.Dedup.canonical(s, d)),
-    "q51_point_adjust" -> ((s, d) => graft.timeseries.Metrics.pointAdjust(s, d)),
-    "qt18_source_scorecard" -> ((s, d) => graft.text.TextOps.sourceScorecard(s, d)),
-    "q52_strength" -> ((s, d) => graft.timeseries.Forecast.strength(s, d)),
-    "q53_reconcile" -> ((s, d) => graft.timeseries.Forecast.reconcile(s, d)),
-    "q54_refit_backtest" -> ((s, d) => graft.timeseries.Forecast.refitBacktest(s, d)),
-    "qe12_survival" -> ((s, d) => graft.analytics.Events.survival(s, d)),
-    "qe13_audience_overlap" -> ((s, d) => graft.analytics.Events.audienceOverlap(s, d)),
-    "qe14_dau_mau" -> ((s, d) => graft.analytics.Events.dauMau(s, d)),
-    "qe15_burst_rate" -> ((s, d) => graft.analytics.Events.burstRate(s, d)),
-    "qp6_completeness" -> ((s, d) => TsQueries.qp6Completeness(s, d)),
-    "qt13_boilerplate" -> ((s, d) => graft.text.TextOps.boilerplate(s, d)),
-    "qt14_unigram_nll" -> ((s, d) => graft.text.TextOps.unigramNll(s, d)),
-    "qt15_line_dedup" -> ((s, d) => graft.text.TextOps.lineDedup(s, d)),
-  )
 
   /** Shared with the qz18/qz19/qz20 zipf-events twins (one SQL
     * definition per operator — the qz gate re-points it at the
@@ -487,8 +180,22 @@ object SparkEntry {
       FROM prs"""
   }
 
-  def oracleSql: Map[String, String] = Map(
-    "qa1_pricing_summary" ->
+  /** One registered operator: its DataFrame builder and its oracle. */
+  final case class Op(build: (SparkSession, String) => DataFrame, oracle: Oracle)
+
+  sealed trait Oracle
+  /** DuckDB SQL with IDENTICAL column names/types (floats rounded to 4 dp). */
+  final case class Sql(text: String) extends Oracle
+  /** No SQL analogue: `test` in spec class `spec` gates the operator
+    * instead (ContractSpec checks the named test exists). The driver
+    * falls back to its rows-only check for these keys.
+    */
+  final case class NoOracle(reason: String, spec: String, test: String) extends Oracle
+
+  // after the helper vals above: object initialisation runs top-down,
+  // so an entry that reads a later val would capture null
+  val ops: Map[String, Op] = Map(
+    "qa1_pricing_summary" -> Op((s, d) => Relational.pricingSummary(s, d), Sql(
       """SELECT l_returnflag, l_linestatus,
          floor((sum(CAST(floor((l_quantity)*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS sum_qty,
          floor((sum(CAST(floor((l_extendedprice)*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS sum_base_price,
@@ -498,9 +205,9 @@ object SparkEntry {
          floor((sum(CAST(floor((l_extendedprice)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))*10000 + 0.5)/10000 AS avg_price,
          floor((sum(CAST(floor((l_discount)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))*10000 + 0.5)/10000 AS avg_disc,
          count(*) AS count_order
-         FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-    "qa2_revenue_join" -> Qa2Sql,
-    "qa3_top_n" ->
+         FROM lineitem GROUP BY l_returnflag, l_linestatus""")),
+    "qa2_revenue_join" -> Op((s, d) => Relational.revenueByNation(s, d), Sql(Qa2Sql)),
+    "qa3_top_n" -> Op((s, d) => Relational.topCustomersPerSegment(s, d), Sql(
       """SELECT c_mktsegment, rnk, c_custkey, c_name, total_spend FROM (
            SELECT c_mktsegment, c_custkey, c_name,
                   floor((sum(CAST(floor((o_totalprice)*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS total_spend,
@@ -508,114 +215,80 @@ object SparkEntry {
                                      ORDER BY floor((sum(CAST(floor((o_totalprice)*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 DESC, c_custkey) AS rnk
            FROM orders JOIN customer ON o_custkey = c_custkey
            GROUP BY c_mktsegment, c_custkey, c_name
-         ) WHERE rnk <= 3""",
-    "q01_resample" -> TsOracle.q01,
-    "q02_fill_forward" -> TsOracle.q02,
-    "q03_sliding_window" -> TsOracle.q03(48, 24),
-    "q04_quantile_scale" -> TsOracle.q04,
-    "q05_anomaly_inject" -> TsOracle.q05,
-    "q06_ewma" -> TsOracle.q06,
-    "q07_patch_std" -> TsOracle.q07,
-    "q08_patchify" -> TsOracle.q08,
-    "q09_knn_score" -> TsOracle.q09,
-    "q10_gaussian_score" -> TsOracle.q10,
-    "q11_lof_weight" -> TsOracle.q11(),
-    "q12_knn_dist_weight" -> TsOracle.q12,
-    "q14_consec_runs" -> TsOracle.q14(),
-    "q15_zscore_outliers" -> TsOracle.q15(),
-    "q16_threshold_metrics" -> TsOracle.q16(),
-    "q17_auroc" -> TsOracle.q17,
-    "q40_auroc_approx" -> TsOracle.q40(),
-    "q23_detect_pipeline" -> TsOracle.q23(),
-    "q18_impute_linear" -> TsOracle.q18,
-    "q19_impute_seasonal" -> TsOracle.q19,
-    "q20_impute_knn" -> TsOracle.q20(),
-    "q21_seasonal_naive" -> TsOracle.q21,
-    "q22_linreg_forecast" -> TsOracle.q22,
-    "q24_stl_seasonal" -> TsOracle.q24,
-    "qd1_dedup_exact" -> graft.text.DocOracle.qd1,
-    "qd2_minhash_lsh" -> graft.text.DocOracle.qd2(),
-    "qd3_simhash" -> graft.text.DocOracle.qd3(),
-    "qd6_dup_clusters" -> graft.text.DocOracle.qd6(),
-    "qd4_ngram_jaccard" -> graft.text.DocOracle.qd4,
-    "qd5_embed_neardup" -> graft.text.DocOracle.qd5(),
-    "qv1_cosine_topk" -> graft.text.DocOracle.qv1(),
-    "qv16_range_search" -> graft.text.DocOracle.qv16(),
-    "qv2_lsh_ann" -> graft.text.DocOracle.qv2(),
-    "qv3_ivf_ann" -> graft.text.DocOracle.qv3(),
-    "qv4_ann_eval" -> graft.text.DocOracle.qv4(),
-    "qv17_probe_sweep" -> graft.text.DocOracle.qv17(),
-    "qv18_hybrid_search" -> graft.text.DocOracle.qv18(),
-    "qv22_hybrid_ivf" -> graft.text.DocOracle.qv22(),
-    "qv23_hybrid_eval" -> graft.text.DocOracle.qv23(),
-    "qv24_hybrid_guarded" -> graft.text.DocOracle.qv24(),
-    "qv25_hybrid_ivf_guarded" -> graft.text.DocOracle.qv22(
-      fallbackShare = graft.vector.Similarity.Bm25FallbackMaxDfShare),
-    "qz1_hybrid_eligible" -> onZipf(graft.text.DocOracle.qv18()),
-    "qz2_hybrid_ivf_guarded" -> onZipf(graft.text.DocOracle.qv22(
-      fallbackShare = graft.vector.Similarity.Bm25FallbackMaxDfShare)),
-    "qz3_containment" -> onZipf(graft.text.DocOracle.qd18()),
-    "qz4_boilerplate" -> onZipf(graft.text.DocOracle.qt13()),
-    "qz5_vocab_coverage" -> onZipf(graft.text.DocOracle.qt12()),
-    "qz6_minhash_lsh" -> onZipf(graft.text.DocOracle.qd2()),
-    "qz7_unigram_nll" -> onZipf(graft.text.DocOracle.qt14),
-    "qz8_dsir_weights" -> onZipf(graft.text.DocOracle.qt22()),
-    "qz9_star_edges" -> onZipf(graft.text.DocOracle.qd22()),
-    // qd23 ≡ qd6 closure — on the zipf corpus too, the parity gate
-    // itself proves the star reduction loses no cluster
-    "qz10_star_clusters" -> onZipf(graft.text.DocOracle.qd6()),
-    "qz11_incremental_dedup" -> onZipf(graft.text.DocOracle.qd9(incMod = 2)),
-    "qz12_ngram_jaccard" -> onZipf(graft.text.DocOracle.qd4),
-    "qz13_simhash" -> onZipf(graft.text.DocOracle.qd3()),
-    "qz14_semantic_dedup" -> onZipf(graft.text.DocOracle.qd11()),
-    "qz15_embed_neardup" -> onZipf(graft.text.DocOracle.qd5()),
-    "qz16_index_stats" -> onZipf(graft.text.DocOracle.qv10()),
-    "qz17_centroid_outlier" -> onZipf(graft.text.DocOracle.qv8()),
-    "qz18_skew_profile" -> onZipf(Qp5Sql),
-    "qz19_burst_rate" -> onZipf(Qe15Sql),
-    "qz20_sessionize" -> onZipf(Qe1Sql),
-    "qz22_audience_overlap" -> onZipf(Qe13Sql),
-    "qz23_phash_neardup" -> onZipf(graft.multimodal.BinaryMeta.qm3OracleSql()),
-    "qz24_salted_agg" -> onZipfFacts("""
-      SELECT l_orderkey, count(*) AS n_items,
-             CAST(sum(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty
-      FROM lineitem GROUP BY l_orderkey"""),
-    "qz25_skew_fact_join" -> onZipfFacts(Qa2Sql),
-    "qc6_build_preflight" -> preflightSql(graft.text.DocOracle.qc1(),
-      graft.text.DocOracle.qhot(graft.text.Dedup.LshMaxBucket,
-        graft.text.Dedup.NgramMaxBlock,
-        graft.vector.Similarity.EmbedMaxLabel, 1L << 20)),
-    "qc7_preflight_fires" -> onHot(preflightSql(graft.text.DocOracle.qc1(),
-      graft.text.DocOracle.qhot(50, 50, 70, 70))),
-    "qh1_hot_report" -> onZipf(graft.text.DocOracle.qhot(
-      graft.text.Dedup.LshMaxBucket, graft.text.Dedup.NgramMaxBlock,
-      graft.vector.Similarity.EmbedMaxLabel, 1L << 20)),
-    "qh2_hot_report_fires" -> onHot(graft.text.DocOracle.qhot(50, 50, 70, 70)),
-    "qz21_hot_cell_split" -> onZipf(graft.text.DocOracle.qv26()),
-    "qv19_rank_metrics" -> graft.text.DocOracle.qv19(),
-    "qv20_dim_sweep" -> graft.text.DocOracle.qv20(),
-    "qv21_index_upsert" -> graft.text.DocOracle.qv21(),
-    "qt1_token_count" -> graft.text.DocOracle.qt1,
-    "qt2_quality_score" -> graft.text.DocOracle.qt2,
-    "qt3_lang_id" -> graft.text.DocOracle.qt3,
-    "qt8_langid_eval" -> graft.text.DocOracle.qt8,
-    "qt4_fingerprint" -> graft.text.DocOracle.qt4(),
-    "q25_pointwise_metrics" -> TsOracle.q25(),
-    "q27_threshold_sweep" -> TsOracle.q27(),
-    "q28_window_labels" -> TsOracle.q28,
-    "q29_highest_patch" -> TsOracle.q29(),
-    "qa4_rollup" -> """
+         ) WHERE rnk <= 3""")),
+    "q01_resample" -> Op((s, d) => TsQueries.q01Resample(s, d), Sql(TsOracle.q01)),
+    "q02_fill_forward" -> Op((s, d) => TsQueries.q02FillForward(s, d), Sql(TsOracle.q02)),
+    "q03_sliding_window" -> Op((s, d) => TsQueries.q03SlidingWindow(s, d), Sql(TsOracle.q03(48, 24))),
+    "q04_quantile_scale" -> Op((s, d) => TsQueries.q04QuantileScale(s, d), Sql(TsOracle.q04)),
+    "q05_anomaly_inject" -> Op((s, d) => TsQueries.q05AnomalyInject(s, d), Sql(TsOracle.q05)),
+    "q06_ewma" -> Op((s, d) => TsQueries.q06Ewma(s, d), Sql(TsOracle.q06)),
+    "q07_patch_std" -> Op((s, d) => TsQueries.q07PatchStd(s, d), Sql(TsOracle.q07)),
+    "q08_patchify" -> Op((s, d) => TsQueries.q08Patchify(s, d), Sql(TsOracle.q08)),
+    "q09_knn_score" -> Op((s, d) => graft.timeseries.Detect.knnScore(s, d), Sql(TsOracle.q09)),
+    "q10_gaussian_score" -> Op((s, d) => graft.timeseries.Detect.gaussianScore(s, d), Sql(TsOracle.q10)),
+    // q11/q12 register the CAPPED reference-set path (the 100 TB
+    // default) — exact ≡ uncapped at every test scale (positions hold
+    // ≪ maxRef windows; DetectSpec asserts bit-equality), so the exact
+    // DuckDB oracles below remain the correctness anchor
+    "q11_lof_weight" -> Op((s, d) => graft.timeseries.Detect.lofWeight(s, d), Sql(TsOracle.q11())),
+    "q12_knn_dist_weight" -> Op((s, d) => graft.timeseries.Detect.nearestDistWeight(s, d), Sql(TsOracle.q12)),
+    "q13_coreset" -> Op((s, d) => graft.timeseries.Coreset.coreset(s, d),
+      NoOracle("greedy k-center selection has no SQL analogue",
+        "graft.DetectSpec", "coreset operator returns ~10% of denoised bank")),
+    "q14_consec_runs" -> Op((s, d) => graft.timeseries.Postprocess.consecRuns(s, d), Sql(TsOracle.q14())),
+    "q15_zscore_outliers" -> Op((s, d) => graft.timeseries.Postprocess.zscoreOutliers(s, d),
+      Sql(TsOracle.q15())),
+    "q16_threshold_metrics" -> Op((s, d) => graft.timeseries.Metrics.thresholdMetrics(s, d),
+      Sql(TsOracle.q16())),
+    "q17_auroc" -> Op((s, d) => graft.timeseries.Metrics.auroc(s, d), Sql(TsOracle.q17)),
+    "q40_auroc_approx" -> Op((s, d) => graft.timeseries.Metrics.aurocApprox(s, d), Sql(TsOracle.q40())),
+    "q23_detect_pipeline" -> Op((s, d) => graft.timeseries.Detect.pipeline(s, d), Sql(TsOracle.q23())),
+    "q18_impute_linear" -> Op((s, d) => graft.timeseries.Impute.imputeLinear(s, d), Sql(TsOracle.q18)),
+    "q19_impute_seasonal" -> Op((s, d) => graft.timeseries.Impute.imputeSeasonal(s, d), Sql(TsOracle.q19)),
+    "q20_impute_knn" -> Op((s, d) => graft.timeseries.Impute.imputeKnn(s, d), Sql(TsOracle.q20())),
+    "q21_seasonal_naive" -> Op((s, d) => graft.timeseries.Forecast.seasonalNaive(s, d), Sql(TsOracle.q21)),
+    "q22_linreg_forecast" -> Op((s, d) => graft.timeseries.Forecast.olsForecast(s, d), Sql(TsOracle.q22)),
+    "q24_stl_seasonal" -> Op((s, d) => graft.timeseries.Forecast.seasonalProfile(s, d), Sql(TsOracle.q24)),
+    "qd1_dedup_exact" -> Op((s, d) => graft.text.Dedup.exact(s, d), Sql(graft.text.DocOracle.qd1)),
+    "qd2_minhash_lsh" -> Op((s, d) => graft.text.Dedup.minhashLsh(s, d), Sql(graft.text.DocOracle.qd2())),
+    "qd3_simhash" -> Op((s, d) => graft.text.Dedup.simhash(s, d), Sql(graft.text.DocOracle.qd3())),
+    "qd6_dup_clusters" -> Op((s, d) => graft.text.Dedup.dupClusters(s, d), Sql(graft.text.DocOracle.qd6())),
+    "qd4_ngram_jaccard" -> Op((s, d) => graft.text.Dedup.ngramJaccard(s, d), Sql(graft.text.DocOracle.qd4)),
+    "qd5_embed_neardup" -> Op((s, d) => graft.vector.Similarity.embedNearDup(s, d),
+      Sql(graft.text.DocOracle.qd5())),
+    "qv1_cosine_topk" -> Op((s, d) => graft.vector.Similarity.cosineTopK(s, d),
+      Sql(graft.text.DocOracle.qv1())),
+    "qv16_range_search" -> Op((s, d) => graft.vector.Similarity.rangeSearch(s, d),
+      Sql(graft.text.DocOracle.qv16())),
+    "qv2_lsh_ann" -> Op((s, d) => graft.vector.Similarity.lshAnn(s, d), Sql(graft.text.DocOracle.qv2())),
+    "qv3_ivf_ann" -> Op((s, d) => graft.vector.Similarity.ivfAnn(s, d), Sql(graft.text.DocOracle.qv3())),
+    "qt1_token_count" -> Op((s, d) => graft.text.TextOps.tokenCount(s, d), Sql(graft.text.DocOracle.qt1)),
+    "qt2_quality_score" -> Op((s, d) => graft.text.TextOps.qualityScore(s, d), Sql(graft.text.DocOracle.qt2)),
+    "qt3_lang_id" -> Op((s, d) => graft.text.TextOps.langId(s, d), Sql(graft.text.DocOracle.qt3)),
+    "qt4_fingerprint" -> Op((s, d) => graft.text.TextOps.fingerprint(s, d), Sql(graft.text.DocOracle.qt4())),
+    "qm1_binary_meta" -> Op((s, d) => graft.multimodal.BinaryMeta.mediaFeatures(s, d),
+      Sql(graft.multimodal.BinaryMeta.qm1OracleSql)),
+    "q25_pointwise_metrics" -> Op((s, d) => graft.timeseries.PointwiseMetrics.pointwiseMetrics(s, d),
+      Sql(TsOracle.q25())),
+    "q26_mllib_forecast" -> Op((s, d) => graft.timeseries.MllibForecast.mllibForecast(s, d),
+      NoOracle("MLlib's WLS/Cholesky solver internals have no SQL analogue",
+        "graft.ForecastImputeSpec", "mllib forecast agrees with the closed-form normal equations")),
+    "q27_threshold_sweep" -> Op((s, d) => graft.timeseries.Metrics.thresholdSweep(s, d), Sql(TsOracle.q27())),
+    "q28_window_labels" -> Op((s, d) => TsQueries.q28WindowLabels(s, d), Sql(TsOracle.q28)),
+    "q29_highest_patch" -> Op((s, d) => graft.timeseries.Postprocess.highestPatchFlags(s, d),
+      Sql(TsOracle.q29())),
+    "qa4_rollup" -> Op((s, d) => Relational.revenueRollup(s, d), Sql("""
       SELECT coalesce(l_returnflag, 'ALL') AS rf, coalesce(l_linestatus, 'ALL') AS ls,
              floor((sum(CAST(floor((l_extendedprice * (1.0 - l_discount))*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS revenue,
              count(*) AS n
-      FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-    "qa5_semi_join" -> """
+      FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""")),
+    "qa5_semi_join" -> Op((s, d) => Relational.bigSpenderSegments(s, d), Sql("""
       SELECT c_mktsegment, count(*) AS n_customers
       FROM customer
       WHERE EXISTS (SELECT 1 FROM orders
                     WHERE o_custkey = c_custkey AND o_totalprice > 100000.0)
-      GROUP BY c_mktsegment""",
-    "qa6_running_window" -> """
+      GROUP BY c_mktsegment""")),
+    "qa6_running_window" -> Op((s, d) => Relational.runningRevenue(s, d), Sql("""
       SELECT l_suppkey, l_orderkey, l_linenumber,
              CAST(floor(epoch(l_shipdate)) AS BIGINT) AS ship_epoch,
              floor((sum(l_extendedprice * (1.0 - l_discount))
@@ -623,16 +296,16 @@ object SparkEntry {
                           ORDER BY l_shipdate, l_orderkey, l_linenumber,
                                    l_extendedprice, l_discount
                           ROWS UNBOUNDED PRECEDING))*10000 + 0.5)/10000 AS running_rev
-      FROM lineitem""",
-    "qt5_json_extract" -> """
+      FROM lineitem""")),
+    "qt5_json_extract" -> Op((s, d) => graft.text.TextOps.jsonExtract(s, d), Sql("""
       SELECT event_type, count(k) AS n,
              floor((avg(k))*10000 + 0.5)/10000 AS avg_k,
              min(k) AS min_k, max(k) AS max_k
       FROM (SELECT event_type,
                    CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
             FROM events)
-      GROUP BY event_type""",
-    "qt6_top_bigrams" -> """
+      GROUP BY event_type""")),
+    "qt6_top_bigrams" -> Op((s, d) => graft.text.TextOps.topBigrams(s, d), Sql("""
       WITH tk AS (
         SELECT doc_id, unnest(range(len(string_split(text, ' ')))) AS i,
                unnest(string_split(text, ' ')) AS tok
@@ -652,14 +325,14 @@ object SparkEntry {
         SELECT lang, bigram, n,
                row_number() OVER (PARTITION BY lang ORDER BY n DESC, bigram) AS rnk
         FROM counts
-      ) WHERE rnk <= 5""",
-    "qa7_anti_join" -> """
+      ) WHERE rnk <= 5""")),
+    "qa7_anti_join" -> Op((s, d) => Relational.partsNeverOrdered(s, d), Sql("""
       SELECT p_brand, count(*) AS n_unsold
       FROM part
       WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)
-      GROUP BY p_brand""",
-    "qe1_sessionize" -> Qe1Sql,
-    "qe2_funnel" -> """
+      GROUP BY p_brand""")),
+    "qe1_sessionize" -> Op((s, d) => graft.analytics.Events.sessionize(s, d), Sql(Qe1Sql)),
+    "qe2_funnel" -> Op((s, d) => graft.analytics.Events.funnel(s, d), Sql("""
       WITH ev AS (
         SELECT user_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events
       ),
@@ -673,8 +346,8 @@ object SparkEntry {
       SELECT 1 AS stage, 'signup' AS event_type, (SELECT count(*) FROM s1) AS n_users
       UNION ALL SELECT 2, 'view', (SELECT count(*) FROM s2)
       UNION ALL SELECT 3, 'click', (SELECT count(*) FROM s3)
-      UNION ALL SELECT 4, 'purchase', (SELECT count(*) FROM s4)""",
-    "qp1_profile" -> ("""
+      UNION ALL SELECT 4, 'purchase', (SELECT count(*) FROM s4)""")),
+    "qp1_profile" -> Op((s, d) => graft.analytics.Events.profile(s, d), Sql(("""
       SELECT 'l_quantity' AS column_name,
              CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
              count(DISTINCT l_quantity) AS n_distinct,
@@ -694,21 +367,8 @@ object SparkEntry {
              CAST(sum(CASE WHEN l_tax IS NULL THEN 1 ELSE 0 END) AS BIGINT),
              count(DISTINCT l_tax),
              floor((min(l_tax))*10000 + 0.5)/10000,
-             floor((max(l_tax))*10000 + 0.5)/10000 FROM lineitem"""),
-    "qe15_burst_rate" -> Qe15Sql,
-    "qe14_dau_mau" -> s"""
-      WITH ev AS (
-        SELECT CAST(floor(CAST(floor(epoch(ts)) AS BIGINT) / 86400) AS BIGINT) AS day,
-               user_id
-        FROM events
-      ), pairs AS (SELECT DISTINCT day, user_id FROM ev),
-      dau AS (SELECT day, CAST(count(*) AS BIGINT) AS dau FROM pairs GROUP BY day),
-      fan AS (SELECT day + i AS day, user_id FROM pairs, unnest(range(0, ${graft.analytics.Events.DauMauWindow})) AS u(i)),
-      mau AS (SELECT day, CAST(count(DISTINCT user_id) AS BIGINT) AS mau FROM fan GROUP BY day)
-      SELECT d.day, d.dau, m.mau,
-             floor((CAST(d.dau AS DOUBLE) / m.mau)*10000 + 0.5)/10000 AS stickiness
-      FROM dau d JOIN mau m USING (day)""",
-    "qe3_retention" -> """
+             floor((max(l_tax))*10000 + 0.5)/10000 FROM lineitem"""))),
+    "qe3_retention" -> Op((s, d) => graft.analytics.Events.retention(s, d), Sql("""
       WITH ev AS (
         SELECT user_id,
                CAST(floor(CAST(floor(epoch(ts)) AS BIGINT) / 604800) AS BIGINT) AS week
@@ -717,8 +377,8 @@ object SparkEntry {
       SELECT c.cohort_week, e.week - c.cohort_week AS week_offset,
              count(DISTINCT e.user_id) AS n_users
       FROM ev e JOIN coh c USING (user_id)
-      GROUP BY c.cohort_week, e.week - c.cohort_week""",
-    "qe4_asof_join" -> """
+      GROUP BY c.cohort_week, e.week - c.cohort_week""")),
+    "qe4_asof_join" -> Op((s, d) => graft.analytics.Events.asofJoin(s, d), Sql("""
       WITH ev AS (
         SELECT event_id, user_id, event_type,
                CAST(floor(epoch(ts)) AS BIGINT) AS tsec, value FROM events
@@ -733,14 +393,14 @@ object SparkEntry {
       SELECT a.user_id, a.event_id, a.tsec, b.view_event_id, b.view_tsec,
              a.tsec - b.view_tsec AS gap_s,
              floor((b.view_value)*10000 + 0.5)/10000 AS view_value
-      FROM a ASOF LEFT JOIN b ON a.user_id = b.user_id AND a.tsec > b.view_tsec""",
-    "qp2_approx_distinct" -> """
+      FROM a ASOF LEFT JOIN b ON a.user_id = b.user_id AND a.tsec > b.view_tsec""")),
+    "qp2_approx_distinct" -> Op((s, d) => graft.analytics.Events.approxDistinct(s, d), Sql("""
       SELECT 'l_partkey' AS column_name, count(DISTINCT l_partkey) AS n_exact,
              CAST(1 AS INT) AS approx_ok FROM lineitem
       UNION ALL SELECT 'l_suppkey', count(DISTINCT l_suppkey), 1 FROM lineitem
       UNION ALL SELECT 'l_quantity', count(DISTINCT l_quantity), 1 FROM lineitem
-      UNION ALL SELECT 'l_extendedprice', count(DISTINCT l_extendedprice), 1 FROM lineitem""",
-    "qa8_latest_row" -> """
+      UNION ALL SELECT 'l_extendedprice', count(DISTINCT l_extendedprice), 1 FROM lineitem""")),
+    "qa8_latest_row" -> Op((s, d) => Relational.latestRow(s, d), Sql("""
       WITH ev AS (
         SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS tsec,
                event_type, value FROM events
@@ -749,13 +409,18 @@ object SparkEntry {
              floor((value)*10000 + 0.5)/10000 AS value
       FROM (SELECT *, row_number() OVER (PARTITION BY user_id
                                          ORDER BY tsec DESC, event_id DESC) AS rn FROM ev)
-      WHERE rn = 1""",
-    "qa9_cube" -> """
+      WHERE rn = 1""")),
+    "q31_range_join" -> Op((s, d) => graft.timeseries.Intervals.rangeJoin(s, d), Sql(TsOracle.q31())),
+    "q32_acf" -> Op((s, d) => graft.timeseries.Forecast.acf(s, d), Sql(TsOracle.q32())),
+    "q33_level_shift" -> Op((s, d) => graft.timeseries.Intervals.levelShift(s, d), Sql(TsOracle.q33())),
+    "q34_mad_outliers" -> Op((s, d) => graft.timeseries.Intervals.madOutliers(s, d), Sql(TsOracle.q34())),
+    "qt7_tfidf" -> Op((s, d) => graft.text.TextOps.tfidf(s, d), Sql(graft.text.DocOracle.qt7())),
+    "qa9_cube" -> Op((s, d) => Relational.revenueCube(s, d), Sql("""
       SELECT coalesce(l_returnflag, 'ALL') AS rf, coalesce(l_linestatus, 'ALL') AS ls,
              floor((sum(CAST(floor((l_extendedprice * (1.0 - l_discount))*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS revenue,
              count(*) AS n
-      FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""",
-    "qp3_approx_quantile" -> """
+      FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""")),
+    "qp3_approx_quantile" -> Op((s, d) => graft.analytics.Events.approxQuantiles(s, d), Sql("""
       SELECT 'l_quantity' AS column_name, CAST(0.25 AS DOUBLE) AS q,
              floor((quantile_cont(l_quantity, 0.25))*10000 + 0.5)/10000 AS exact_q,
              CAST(1 AS INT) AS approx_ok FROM lineitem
@@ -768,19 +433,35 @@ object SparkEntry {
       UNION ALL SELECT 'l_extendedprice', CAST(0.5 AS DOUBLE),
              floor((quantile_cont(l_extendedprice, 0.5))*10000 + 0.5)/10000, 1 FROM lineitem
       UNION ALL SELECT 'l_extendedprice', CAST(0.75 AS DOUBLE),
-             floor((quantile_cont(l_extendedprice, 0.75))*10000 + 0.5)/10000, 1 FROM lineitem""",
-    "qd7_dedup_stats" -> graft.text.DocOracle.qd7(),
-    "qd8_minhash_est" -> graft.text.DocOracle.qd8(),
-    "qa10_stratified_sample" -> """
+             floor((quantile_cont(l_extendedprice, 0.75))*10000 + 0.5)/10000, 1 FROM lineitem""")),
+    "qd7_dedup_stats" -> Op((s, d) => graft.text.Dedup.dupStats(s, d), Sql(graft.text.DocOracle.qd7())),
+    "q35_horizon_backtest" -> Op((s, d) => graft.timeseries.Forecast.horizonBacktest(s, d),
+      Sql(TsOracle.q35())),
+    "q39_direct_horizon" -> Op((s, d) => graft.timeseries.Forecast.directHorizonForecast(s, d),
+      Sql(TsOracle.q39())),
+    "q41_window_pairs" -> Op((s, d) => graft.timeseries.Forecast.windowPairs(s, d), Sql(TsOracle.q41())),
+    "q42_rescaled_metrics" -> Op((s, d) => graft.timeseries.Forecast.rescaledMetrics(s, d),
+      Sql(TsOracle.q42)),
+    "q43_calendar_filter" -> Op((s, d) => graft.timeseries.TsQueries.q43CalendarFilter(s, d),
+      Sql(TsOracle.q43())),
+    "qm2_frame_sample" -> Op((s, d) => graft.multimodal.BinaryMeta.frameSample(s, d),
+      Sql(graft.multimodal.BinaryMeta.qm2OracleSql())),
+    "qm7_frame_neardup" -> Op((s, d) => graft.multimodal.BinaryMeta.frameNearDup(s, d),
+      Sql(graft.multimodal.BinaryMeta.qm7OracleSql())),
+    "qm8_media_clusters" -> Op((s, d) => graft.multimodal.BinaryMeta.mediaClusters(s, d),
+      Sql(graft.multimodal.BinaryMeta.qm8OracleSql())),
+    "qm9_imageio_decode" -> Op((s, d) => graft.multimodal.BinaryMeta.imageioFeatures(s, d),
+      Sql(graft.multimodal.BinaryMeta.qm9OracleSql())),
+    "qa10_stratified_sample" -> Op((s, d) => Relational.stratifiedSample(s, d), Sql("""
       SELECT lang, count(*) AS n_total,
              CAST(sum(CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
                                 % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled
-      FROM documents GROUP BY lang""",
-    "qa11_salted_agg" -> """
+      FROM documents GROUP BY lang""")),
+    "qa11_salted_agg" -> Op((s, d) => Relational.saltedAgg(s, d), Sql("""
       SELECT event_type, count(*) AS n_events,
              CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS sum_floor_v
-      FROM events GROUP BY event_type""",
-    "qa12_pivot" -> """
+      FROM events GROUP BY event_type""")),
+    "qa12_pivot" -> Op((s, d) => Relational.eventPivot(s, d), Sql("""
       WITH ev AS (
         SELECT event_type,
                CAST(floor(floor(CAST(floor(epoch(ts)) AS BIGINT) / 3600) % 24 / 4) AS INT) AS slot
@@ -793,8 +474,8 @@ object SparkEntry {
              count(*) FILTER (WHERE slot = 3) AS h3,
              count(*) FILTER (WHERE slot = 4) AS h4,
              count(*) FILTER (WHERE slot = 5) AS h5
-      FROM ev GROUP BY event_type""",
-    "qp4_group_quantiles" -> """
+      FROM ev GROUP BY event_type""")),
+    "qp4_group_quantiles" -> Op((s, d) => graft.analytics.Events.groupQuantiles(s, d), Sql("""
       SELECT event_type, CAST(0.25 AS DOUBLE) AS q,
              floor((quantile_cont(value, 0.25))*10000 + 0.5)/10000 AS v FROM events GROUP BY event_type
       UNION ALL SELECT event_type, CAST(0.5 AS DOUBLE),
@@ -802,24 +483,161 @@ object SparkEntry {
       UNION ALL SELECT event_type, CAST(0.75 AS DOUBLE),
              floor((quantile_cont(value, 0.75))*10000 + 0.5)/10000 FROM events GROUP BY event_type
       UNION ALL SELECT event_type, CAST(0.95 AS DOUBLE),
-             floor((quantile_cont(value, 0.95))*10000 + 0.5)/10000 FROM events GROUP BY event_type""",
-    "q36_xcorr" -> TsOracle.q36(),
-    "q37_seasonal_residual" -> TsOracle.q37(),
-    "q38_cleaning_impact" -> TsOracle.q38,
-    "q31_range_join" -> TsOracle.q31(),
-    "q35_horizon_backtest" -> TsOracle.q35(),
-    "q39_direct_horizon" -> TsOracle.q39(),
-    "q41_window_pairs" -> TsOracle.q41(),
-    "q42_rescaled_metrics" -> TsOracle.q42,
-    "q43_calendar_filter" -> TsOracle.q43(),
-    "q32_acf" -> TsOracle.q32(),
-    "q33_level_shift" -> TsOracle.q33(),
-    "q34_mad_outliers" -> TsOracle.q34(),
-    "qt7_tfidf" -> graft.text.DocOracle.qt7(),
-    "qd9_incremental_dedup" -> graft.text.DocOracle.qd9(),
-    "qt9_repetition" -> graft.text.DocOracle.qt9,
-    "qa13_mixture_sample" -> graft.text.DocOracle.qa13(),
-    "qe5_window_funnel" -> """
+             floor((quantile_cont(value, 0.95))*10000 + 0.5)/10000 FROM events GROUP BY event_type""")),
+    "q36_xcorr" -> Op((s, d) => graft.timeseries.Intervals.crossCorr(s, d), Sql(TsOracle.q36())),
+    "q37_seasonal_residual" -> Op((s, d) => graft.timeseries.Intervals.seasonalResidual(s, d),
+      Sql(TsOracle.q37())),
+    "q38_cleaning_impact" -> Op((s, d) => graft.timeseries.Forecast.cleaningImpact(s, d), Sql(TsOracle.q38)),
+    "qv4_ann_eval" -> Op((s, d) => graft.vector.Similarity.annEval(s, d), Sql(graft.text.DocOracle.qv4())),
+    "qv17_probe_sweep" -> Op((s, d) => graft.vector.Similarity.probeSweep(s, d),
+      Sql(graft.text.DocOracle.qv17())),
+    "qv18_hybrid_search" -> Op((s, d) => graft.vector.Similarity.hybridSearch(s, d),
+      Sql(graft.text.DocOracle.qv18())),
+    "qv22_hybrid_ivf" -> Op((s, d) => graft.vector.Similarity.hybridSearchIvf(s, d),
+      Sql(graft.text.DocOracle.qv22())),
+    "qv23_hybrid_eval" -> Op((s, d) => graft.vector.Similarity.hybridEval(s, d),
+      Sql(graft.text.DocOracle.qv23())),
+    "qv24_hybrid_guarded" -> Op((s, d) => graft.vector.Similarity.hybridSearch(s, d,
+      fallbackMaxDfShare = graft.vector.Similarity.Bm25FallbackMaxDfShare),
+      Sql(graft.text.DocOracle.qv24())),
+    // the GUARDED SERVING configuration (what hybridServeStream mirrors):
+    // IVF dense branch + qv24's fallback df ceiling, registered so the
+    // thing that serves is the thing that's oracled and benched
+    "qv25_hybrid_ivf_guarded" -> Op((s, d) => graft.vector.Similarity.hybridSearchIvf(s, d,
+      fallbackMaxDfShare = graft.vector.Similarity.Bm25FallbackMaxDfShare), Sql(graft.text.DocOracle.qv22(
+      fallbackShare = graft.vector.Similarity.Bm25FallbackMaxDfShare))),
+    // the heavy-tailed OFFICIAL gate (see ZipfDir): df-gated design
+    // paths running on a corpus whose shape actually engages them
+    "qz1_hybrid_eligible" -> Op((s, _) => graft.vector.Similarity.hybridSearch(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qv18()))),
+    "qz2_hybrid_ivf_guarded" -> Op((s, _) => graft.vector.Similarity.hybridSearchIvf(s, ZipfDir,
+      fallbackMaxDfShare = graft.vector.Similarity.Bm25FallbackMaxDfShare), Sql(onZipf(graft.text.DocOracle.qv22(
+      fallbackShare = graft.vector.Similarity.Bm25FallbackMaxDfShare)))),
+    "qz3_containment" -> Op((s, _) => graft.text.Dedup.containment(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qd18()))),
+    "qz4_boilerplate" -> Op((s, _) => graft.text.TextOps.boilerplate(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qt13()))),
+    "qz5_vocab_coverage" -> Op((s, _) => graft.text.TextOps.vocabCoverage(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qt12()))),
+    "qz6_minhash_lsh" -> Op((s, _) => graft.text.Dedup.minhashLsh(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qd2()))),
+    "qz7_unigram_nll" -> Op((s, _) => graft.text.TextOps.unigramNll(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qt14))),
+    "qz8_dsir_weights" -> Op((s, _) => graft.text.TextOps.dsirWeights(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qt22()))),
+    // r15: the dedup GRAPH on the heavy-tailed corpus — star candidate
+    // edges, the (now-default) star cluster chain, and the one-sided
+    // incremental band probe, driver-official instead of builder-run
+    "qz9_star_edges" -> Op((s, _) => graft.text.Dedup.lshStarEdges(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qd22()))),
+    // qd23 ≡ qd6 closure — on the zipf corpus too, the parity gate
+    // itself proves the star reduction loses no cluster
+    "qz10_star_clusters" -> Op((s, _) => graft.text.Dedup.starClusters(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qd6()))),
+    // incMod=2: the zipf planted pairs are (…8, …9) ids — a %5 split
+    // can never separate one, so it would gate a structurally empty set
+    "qz11_incremental_dedup" -> Op((s, _) => graft.text.Dedup.incrementalDedup(s, ZipfDir,
+      incMod = 2L),
+      Sql(onZipf(graft.text.DocOracle.qd9(incMod = 2)))),
+    // r15: the other two guarded pair-blockers on heavy-tailed text —
+    // qd4's length blocks and qd3's stop-chunk df cap, live on a corpus
+    // whose length/fingerprint distributions actually skew
+    "qz12_ngram_jaccard" -> Op((s, _) => graft.text.Dedup.ngramJaccard(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qd4))),
+    "qz13_simhash" -> Op((s, _) => graft.text.Dedup.simhash(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qd3()))),
+    // r16: the EMBEDDING-space pair-blockers on the corpus shape they
+    // exist for — zipf labels (majority class = 37% of vectors) and
+    // archetype-clustered vectors (within-archetype cos ≈ 0.98, top
+    // seeded cell ≈ 4× uniform occupancy). qd11's cell guard and qd5's
+    // label guard both run LIVE here (skew present, caps non-binding).
+    "qz14_semantic_dedup" -> Op((s, _) => graft.vector.Similarity.semanticDedup(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qd11()))),
+    "qz15_embed_neardup" -> Op((s, _) => graft.vector.Similarity.embedNearDup(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qd5()))),
+    // r16: the embedding-index AUDITS on the distribution they audit
+    // for — qv10's hot flag (cell skew > 2x uniform) actually FIRES on
+    // the archetype-clustered cells (head cell 3.5x), and qv8's
+    // centroid-outlier scan runs over majority-class label centroids;
+    // on the driver's isotropic corpus both audits are parity-green
+    // but structurally idle
+    "qz16_index_stats" -> Op((s, _) => graft.vector.Similarity.indexStats(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qv10()))),
+    "qz17_centroid_outlier" -> Op((s, _) => graft.vector.Similarity.centroidOutlier(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qv8()))),
+    // qz18-qz20 (r17): the EVENTS side of the heavy-tailed gate — the
+    // zipf events table (Zipf types, Zipf user activity with a ~20%
+    // bot head) makes qp5's skew profiler, qe15's rate-limit flag and
+    // qe1's dense-stream sessionization run their design paths
+    // (ZipfCorpusSpec pins fires-on-zipf / idle-on-base)
+    "qz18_skew_profile" -> Op((s, _) => graft.analytics.Events.skewProfile(s, ZipfDir), Sql(onZipf(Qp5Sql))),
+    "qz19_burst_rate" -> Op((s, _) => graft.analytics.Events.burstRate(s, ZipfDir), Sql(onZipf(Qe15Sql))),
+    "qz20_sessionize" -> Op((s, _) => graft.analytics.Events.sessionize(s, ZipfDir), Sql(onZipf(Qe1Sql))),
+    // qh1/qh2 (r17): the guard family's report-mode pre-flight,
+    // oracle-checked on BOTH committed corpora — clean on zipf at
+    // production caps (0 rows), firing on hotdata's planted 100-strong
+    // groups at tightened caps (>= 7 rows by construction)
+    // qz22/qz23 (r17): the remaining structurally-idle families on
+    // skew — qe13's overlap matrix SATURATES on the driver's uniform
+    // events (every user touches all 5 types → every jaccard ≈ 1);
+    // zipf types differentiate it. qm3's pHash pigeonhole had no zipf
+    // row at all; the corpus's perturbed near-dups and passage
+    // carriers give it real byte-level collisions.
+    "qz22_audience_overlap" -> Op((s, _) => graft.analytics.Events.audienceOverlap(s, ZipfDir),
+      Sql(onZipf(Qe13Sql))),
+    "qz23_phash_neardup" -> Op((s, _) => graft.multimodal.BinaryMeta.phashNearDup(s, ZipfDir),
+      Sql(onZipf(graft.multimodal.BinaryMeta.qm3OracleSql()))),
+    "qh1_hot_report" -> Op((s, _) => graft.text.HotReport.hotBlockReport(s, ZipfDir), Sql(onZipf(graft.text.DocOracle.qhot(
+      graft.text.Dedup.LshMaxBucket, graft.text.Dedup.NgramMaxBlock,
+      graft.vector.Similarity.EmbedMaxLabel, 1L << 20)))),
+    "qh2_hot_report_fires" -> Op((s, _) => graft.text.HotReport.hotBlockReport(s, HotDir,
+      maxBucket = 50, maxBlock = 50, maxLabel = 70, maxCell = 70),
+      Sql(onHot(graft.text.DocOracle.qhot(50, 50, 70, 70)))),
+    // qz24/qz25 (r18): the RELATIONAL side of the heavy-tailed gate —
+    // the committed zipf facts carry a mega-order (~13% of all
+    // lineitem rows on ONE l_orderkey) and a mega-customer (~16% of
+    // orders), so qa11's salted two-phase agg finally runs where the
+    // salt fan-out MATTERS (qz24: hot group ~2000× the median) and
+    // qa2's lineitem⋈orders leg is a genuinely skewed fact-fact join
+    // (qz25: AQE's skew-join split engages — ZipfCorpusSpec pins the
+    // split present on zipf / absent on base).
+    "qz24_salted_agg" -> Op((s, _) => Relational.saltedLineAgg(s, ZipfDir), Sql(onZipfFacts("""
+      SELECT l_orderkey, count(*) AS n_items,
+             CAST(sum(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty
+      FROM lineitem GROUP BY l_orderkey"""))),
+    "qz25_skew_fact_join" -> Op((s, _) => Relational.revenueByNation(s, ZipfDir), Sql(onZipfFacts(Qa2Sql))),
+    // qc6/qc7 (r18): the funnel manifest with the guard family's
+    // pre-flight verdict attached — report-then-build as one keyed op;
+    // clean at production caps on the driver corpus (qc6), all four
+    // families surfaced on the planted hotdata corpus at qh2's caps
+    // while the build itself still runs (qc7)
+    "qc6_build_preflight" -> Op((s, d) => graft.text.TextOps.corpusBuildPreflight(s, d), Sql(preflightSql(graft.text.DocOracle.qc1(),
+      graft.text.DocOracle.qhot(graft.text.Dedup.LshMaxBucket,
+        graft.text.Dedup.NgramMaxBlock,
+        graft.vector.Similarity.EmbedMaxLabel, 1L << 20)))),
+    "qc7_preflight_fires" -> Op((s, _) => graft.text.TextOps.corpusBuildPreflight(s, HotDir,
+      maxBucket = 50, maxBlock = 50, maxLabel = 70, maxCell = 70), Sql(onHot(preflightSql(graft.text.DocOracle.qc1(),
+      graft.text.DocOracle.qhot(50, 50, 70, 70))))),
+    "qv19_rank_metrics" -> Op((s, d) => graft.vector.Similarity.rankMetrics(s, d),
+      Sql(graft.text.DocOracle.qv19())),
+    "qv20_dim_sweep" -> Op((s, d) => graft.vector.Similarity.dimSweep(s, d),
+      Sql(graft.text.DocOracle.qv20())),
+    "qv21_index_upsert" -> Op((s, d) => graft.vector.Similarity.indexUpsert(s, d),
+      Sql(graft.text.DocOracle.qv21())),
+    "qv26_hot_cell_split" -> Op((s, d) => graft.vector.Similarity.hotCellSplit(s, d),
+      Sql(graft.text.DocOracle.qv26())),
+    // qz21: the split on the corpus whose head cell actually FIRES
+    // qv10's hot flag (qz16) — ≥1 split row by construction
+    "qz21_hot_cell_split" -> Op((s, _) => graft.vector.Similarity.hotCellSplit(s, ZipfDir),
+      Sql(onZipf(graft.text.DocOracle.qv26()))),
+    "qt8_langid_eval" -> Op((s, d) => graft.text.TextOps.langIdEval(s, d), Sql(graft.text.DocOracle.qt8)),
+    "qd8_minhash_est" -> Op((s, d) => graft.text.Dedup.minhashEstimate(s, d),
+      Sql(graft.text.DocOracle.qd8())),
+    "qd9_incremental_dedup" -> Op((s, d) => graft.text.Dedup.incrementalDedup(s, d),
+      Sql(graft.text.DocOracle.qd9())),
+    "qt9_repetition" -> Op((s, d) => graft.text.TextOps.repetition(s, d), Sql(graft.text.DocOracle.qt9)),
+    "qa13_mixture_sample" -> Op((s, d) => Relational.mixtureSample(s, d), Sql(graft.text.DocOracle.qa13())),
+    "qe5_window_funnel" -> Op((s, d) => graft.analytics.Events.windowFunnel(s, d), Sql("""
       WITH ev AS (
         SELECT user_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events
         WHERE event_type IN ('signup', 'view', 'click', 'purchase')
@@ -842,13 +660,19 @@ object SparkEntry {
         FROM u LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)
                LEFT JOIN s3 USING (user_id) LEFT JOIN s4 USING (user_id)
       )
-      SELECT level, count(*) AS n_users FROM lvl GROUP BY level""",
-    "qt10_quality_filter" -> graft.text.DocOracle.qt10(),
-    "qd10_bloom_dedup" -> graft.text.DocOracle.qd10,
-    "qd11_semantic_dedup" -> graft.text.DocOracle.qd11(),
-    "qd12_decontaminate" -> graft.text.DocOracle.qd12(),
-    "qa15_zorder" -> Relational.zorderOracle(),
-    "qa16_merge_upsert" -> """
+      SELECT level, count(*) AS n_users FROM lvl GROUP BY level""")),
+    "qt10_quality_filter" -> Op((s, d) => graft.text.TextOps.qualityFilter(s, d),
+      Sql(graft.text.DocOracle.qt10())),
+    "qd10_bloom_dedup" -> Op((s, d) => graft.text.Dedup.bloomIncrementalDedup(s, d),
+      Sql(graft.text.DocOracle.qd10)),
+    "qa14_incremental_agg" -> Op((s, d) => Relational.incrementalAgg(s, d), Sql("""
+      SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
+             sum(CAST(floor((l_quantity)*10000 + 0.5) AS BIGINT)) / 10000.0 AS sum_qty,
+             sum(CAST(floor((l_extendedprice*(1-l_discount))*10000 + 0.5) AS BIGINT)) / 10000.0 AS revenue,
+             floor((sum(CAST(floor((l_quantity)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))*10000 + 0.5)/10000 AS avg_qty
+      FROM lineitem GROUP BY l_returnflag, l_linestatus""")),
+    "qa15_zorder" -> Op((s, d) => Relational.zorderLayout(s, d), Sql(Relational.zorderOracle())),
+    "qa16_merge_upsert" -> Op((s, d) => Relational.mergeUpsert(s, d), Sql("""
       WITH base AS (
         SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
         FROM orders WHERE o_orderkey % 7 != 0
@@ -866,45 +690,64 @@ object SparkEntry {
              CASE WHEN o_orderkey IS NULL THEN 'insert'
                   WHEN op = 'U' THEN 'update' ELSE 'keep' END AS action
       FROM base FULL OUTER JOIN delta ON o_orderkey = d_orderkey
-      WHERE op IS NULL OR op != 'D'""",
-    "qv5_pq_ann" -> graft.text.DocOracle.qv5(),
-    "qt12_vocab_coverage" -> graft.text.DocOracle.qt12(),
-    "qd13_dup_spans" -> graft.text.DocOracle.qd13(),
-    "q44_masked_pairs" -> graft.timeseries.TsOracle.q44(),
-    "q55_learned_impute" -> graft.timeseries.TsOracle.q55(),
-    "q56_feature_forecast" -> graft.timeseries.TsOracle.q56(),
-    "q57_learned_cleaning" -> graft.timeseries.TsOracle.q57(),
-    "q58_conformal" -> graft.timeseries.TsOracle.q58(),
-    "q59_decompose_forecast" -> graft.timeseries.TsOracle.q59(),
-    "q60_recursive_forecast" -> graft.timeseries.TsOracle.q60(),
-    "q62_refit_trigger" -> graft.timeseries.TsOracle.q62(),
-    "q63_interval_score" -> graft.timeseries.TsOracle.q63(),
-    "q64_forecast_scorecard" -> graft.timeseries.TsOracle.q64,
-    "q65_trailing_forecast" -> graft.timeseries.TsOracle.q65(),
-    "qd17_dup_weight" -> graft.text.DocOracle.qd17(),
-    "qd18_containment" -> graft.text.DocOracle.qd18(),
-    "qd19_global_dup_spans" -> graft.text.DocOracle.qd19(),
-    "qd20_dedup_spans" -> graft.text.DocOracle.qd20(),
-    "qd21_dedup_fixpoint" -> graft.text.DocOracle.qd21(),
-    "qd25_span_corpus" -> graft.text.DocOracle.qd25(),
-    "qd22_lsh_star_edges" -> graft.text.DocOracle.qd22(),
+      WHERE op IS NULL OR op != 'D'""")),
+    "qd11_semantic_dedup" -> Op((s, d) => graft.vector.Similarity.semanticDedup(s, d),
+      Sql(graft.text.DocOracle.qd11())),
+    "qd12_decontaminate" -> Op((s, d) => graft.text.Dedup.decontaminate(s, d),
+      Sql(graft.text.DocOracle.qd12())),
+    "qv5_pq_ann" -> Op((s, d) => graft.vector.Similarity.pqAnn(s, d), Sql(graft.text.DocOracle.qv5())),
+    "qt12_vocab_coverage" -> Op((s, d) => graft.text.TextOps.vocabCoverage(s, d),
+      Sql(graft.text.DocOracle.qt12())),
+    "qd13_dup_spans" -> Op((s, d) => graft.text.Dedup.dupSpans(s, d), Sql(graft.text.DocOracle.qd13())),
+    "q44_masked_pairs" -> Op((s, d) => graft.timeseries.Impute.maskedPairs(s, d),
+      Sql(graft.timeseries.TsOracle.q44())),
+    "q55_learned_impute" -> Op((s, d) => graft.timeseries.Impute.learnedImpute(s, d),
+      Sql(graft.timeseries.TsOracle.q55())),
+    "q56_feature_forecast" -> Op((s, d) => graft.timeseries.Forecast.featureForecast(s, d),
+      Sql(graft.timeseries.TsOracle.q56())),
+    "q57_learned_cleaning" -> Op((s, d) => graft.timeseries.Forecast.learnedCleaningImpact(s, d),
+      Sql(graft.timeseries.TsOracle.q57())),
+    "q58_conformal" -> Op((s, d) => graft.timeseries.Forecast.conformalIntervals(s, d),
+      Sql(graft.timeseries.TsOracle.q58())),
+    "q59_decompose_forecast" -> Op((s, d) => graft.timeseries.Forecast.decomposeForecast(s, d),
+      Sql(graft.timeseries.TsOracle.q59())),
+    "q60_recursive_forecast" -> Op((s, d) => graft.timeseries.Forecast.recursiveForecast(s, d),
+      Sql(graft.timeseries.TsOracle.q60())),
+    "q61_gbt_forecast" -> Op((s, d) => graft.timeseries.MllibForecast.gbtForecast(s, d),
+      NoOracle("a boosted ensemble's split search has no SQL analogue",
+        "graft.ForecastImputeSpec", "q61 GBT forecast beats the linear q22 corpus-wide (deterministic seed)")),
+    "q62_refit_trigger" -> Op((s, d) => graft.timeseries.Forecast.refitTrigger(s, d),
+      Sql(graft.timeseries.TsOracle.q62())),
+    "q63_interval_score" -> Op((s, d) => graft.timeseries.Forecast.intervalScore(s, d),
+      Sql(graft.timeseries.TsOracle.q63())),
+    "q64_forecast_scorecard" -> Op((s, d) => graft.timeseries.Forecast.forecastScorecard(s, d),
+      Sql(graft.timeseries.TsOracle.q64)),
+    "q65_trailing_forecast" -> Op((s, d) => graft.timeseries.Forecast.trailingForecast(s, d),
+      Sql(graft.timeseries.TsOracle.q65())),
+    "qd17_dup_weight" -> Op((s, d) => graft.text.Dedup.dupWeight(s, d), Sql(graft.text.DocOracle.qd17())),
+    "qd18_containment" -> Op((s, d) => graft.text.Dedup.containment(s, d), Sql(graft.text.DocOracle.qd18())),
+    "qd19_global_dup_spans" -> Op((s, d) => graft.text.Dedup.globalDupSpans(s, d),
+      Sql(graft.text.DocOracle.qd19())),
+    "qd20_dedup_spans" -> Op((s, d) => graft.text.Dedup.dedupSpans(s, d), Sql(graft.text.DocOracle.qd20())),
+    "qd21_dedup_fixpoint" -> Op((s, d) => graft.text.Dedup.dedupSpansFixpoint(s, d),
+      Sql(graft.text.DocOracle.qd21())),
+    // r16: the PRODUCTION run-until-clean span hygiene (the callable a
+    // build materializes)
+    "qd24_span_fixpoint" -> Op((s, d) => graft.text.Dedup.dedupSpansClean(s, d),
+      NoOracle("the fixpoint's pass count is data-dependent; qd21 is its oracle twin",
+        "graft.TextSpec", "qd24 dedupSpansClean: proven span-free fixpoint, loud when maxPasses binds")),
+    // qd25 (r18): qd21's sibling — the pass-3 rebuilt TEXT itself,
+    // oracle-mirrored by the same nested chain, covering qd24's output
+    // wherever the fixpoint lands within 3 passes (TextSpec pins ≡)
+    "qd25_span_corpus" -> Op((s, d) => graft.text.Dedup.dedupSpansCorpus(s, d),
+      Sql(graft.text.DocOracle.qd25())),
+    "qd22_lsh_star_edges" -> Op((s, d) => graft.text.Dedup.lshStarEdges(s, d),
+      Sql(graft.text.DocOracle.qd22())),
     // qd23's oracle is LITERALLY qd6's clique-edge closure: the gate
     // itself proves the star reduction preserves every cluster.
-    "qd23_star_clusters" -> graft.text.DocOracle.qd6(),
-    "qc1_corpus_build" -> graft.text.DocOracle.qc1(),
-    "qt22_dsir_weights" -> graft.text.DocOracle.qt22(),
-    "qt23_pii_redact" -> graft.text.DocOracle.qt23(),
-    "qt24_doc_chunks" -> graft.text.DocOracle.qt24(),
-    "qt25_bpe_merges" -> graft.text.DocOracle.qt25(),
-    "qt26_bpe_encode" -> graft.text.DocOracle.qt26(),
-    // qt28/qt29 = qt25/qt26's exact semantics at a production round
-    // count: the SAME unrolled-CTE mirrors, 64 rounds
-    "qt28_bpe_vocab" -> graft.text.DocOracle.qt25(rounds = 64),
-    "qt29_bpe_encode64" -> graft.text.DocOracle.qt26(rounds = 64),
-    "qt27_chunk_dedup" -> graft.text.DocOracle.qt27(),
-    "qc2_epoch_shuffle" -> graft.text.DocOracle.qc2(),
-    "qc3_dataset_card" -> graft.text.DocOracle.qc3(),
-    "qt21_domain_cap" -> """
+    "qd23_star_clusters" -> Op((s, d) => graft.text.Dedup.starClusters(s, d),
+      Sql(graft.text.DocOracle.qd6())),
+    "qt21_domain_cap" -> Op((s, d) => graft.text.TextOps.domainCap(s, d), Sql("""
       WITH r AS (
         SELECT source, n_chars,
                row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
@@ -915,15 +758,69 @@ object SparkEntry {
              CAST(count(*) - sum(CASE WHEN rn <= 20 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
              CAST(sum(CASE WHEN rn <= 20 THEN n_chars ELSE 0 END) AS BIGINT) AS kept_chars,
              CAST(sum(CASE WHEN rn > 20 THEN n_chars ELSE 0 END) AS BIGINT) AS dropped_chars
-      FROM r GROUP BY source""",
-    "qv6_ivfpq_ann" -> graft.text.DocOracle.qv6(),
-    "qv11_sq8_ann" -> graft.text.DocOracle.qv11(),
-    "qv12_refine_ann" -> graft.text.DocOracle.qv12(),
-    "qv13_kmeans" -> graft.text.DocOracle.qv13(),
-    "qv14_mips" -> graft.text.DocOracle.qv14(),
-    "qv15_filtered_topk" -> graft.text.DocOracle.qv15(),
-    "qt19_pii_scan" -> graft.text.DocOracle.qt19(),
-    "qe7_top_paths" -> """
+      FROM r GROUP BY source""")),
+    "qt22_dsir_weights" -> Op((s, d) => graft.text.TextOps.dsirWeights(s, d),
+      Sql(graft.text.DocOracle.qt22())),
+    "qt23_pii_redact" -> Op((s, d) => graft.text.TextOps.piiRedact(s, d), Sql(graft.text.DocOracle.qt23())),
+    "qt24_doc_chunks" -> Op((s, d) => graft.text.TextOps.chunkDocs(s, d), Sql(graft.text.DocOracle.qt24())),
+    "qt25_bpe_merges" -> Op((s, d) => graft.text.TextOps.bpeMerges(s, d), Sql(graft.text.DocOracle.qt25())),
+    "qt26_bpe_encode" -> Op((s, d) => graft.text.TextOps.bpeEncode(s, d), Sql(graft.text.DocOracle.qt26())),
+    "qt27_chunk_dedup" -> Op((s, d) => graft.text.TextOps.chunkDedup(s, d), Sql(graft.text.DocOracle.qt27())),
+    // qt28/qt29 = qt25/qt26's exact semantics at a production round
+    // count: the SAME unrolled-CTE mirrors, 64 rounds
+    "qt28_bpe_vocab" -> Op((s, d) => graft.text.TextOps.bpeMergesLocal(s, d),
+      Sql(graft.text.DocOracle.qt25(rounds = 64))),
+    "qt29_bpe_encode64" -> Op((s, d) => graft.text.TextOps.bpeEncodeLocal(s, d),
+      Sql(graft.text.DocOracle.qt26(rounds = 64))),
+    "qc4_budget_plan" -> Op((s, d) => graft.text.TextOps.budgetPlan(s, d), Sql("""
+      WITH tk AS (
+        SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
+      ), nt AS (
+        SELECT doc_id, count(*) AS nt FROM tk WHERE tok <> '' GROUP BY doc_id
+      ), per AS (
+        SELECT source, count(*) AS n_docs,
+               CAST(sum(coalesce(nt, 0)) AS BIGINT) AS n_tok
+        FROM documents d LEFT JOIN nt USING (doc_id) GROUP BY source
+      ), tot AS (SELECT CAST(sum(n_tok) AS BIGINT) AS tot FROM per),
+      sh AS (
+        SELECT source, n_docs, n_tok, tot,
+               CAST(n_tok AS DOUBLE) / tot AS p_nat,
+               CAST(floor(pow(CAST(n_tok AS DOUBLE) / tot, 0.7) * 1000000 + 0.5) AS BIGINT) AS pa_q
+        FROM per, tot
+      ), z AS (SELECT CAST(sum(pa_q) AS BIGINT) AS z FROM sh),
+      plan4 AS (
+        SELECT source,
+               CAST(pa_q AS DOUBLE) / z AS w_raw,
+               n_tok,
+               CAST(floor((CAST(pa_q AS DOUBLE) / z) *
+                          CAST(CAST(floor(tot / 2.0) AS BIGINT) AS DOUBLE)) AS BIGINT) AS target_toks
+        FROM sh, z
+      )
+      SELECT source, floor(w_raw * 10000 + 0.5)/10000 AS w_mix,
+             target_toks, n_tok AS avail_toks,
+             least(n_tok, target_toks) AS alloc_toks,
+             CASE WHEN target_toks > 0 THEN
+               floor((least(n_tok, target_toks) * 1.0 / target_toks)*10000 + 0.5)/10000
+             END AS fill,
+             CASE WHEN least(n_tok, target_toks) < target_toks THEN 1 ELSE 0 END AS binding
+      FROM plan4""")),
+    "qc5_chunk_index" -> Op((s, d) => graft.text.TextOps.chunkIndex(s, d), Sql(graft.text.DocOracle.qc5())),
+    "qc1_corpus_build" -> Op((s, d) => graft.text.TextOps.corpusBuild(s, d), Sql(graft.text.DocOracle.qc1())),
+    "qc2_epoch_shuffle" -> Op((s, d) => graft.text.TextOps.epochShuffle(s, d),
+      Sql(graft.text.DocOracle.qc2())),
+    "qc3_dataset_card" -> Op((s, d) => graft.text.TextOps.datasetCard(s, d), Sql(graft.text.DocOracle.qc3())),
+    "qv6_ivfpq_ann" -> Op((s, d) => graft.vector.Similarity.ivfPqAnn(s, d), Sql(graft.text.DocOracle.qv6())),
+    "qv11_sq8_ann" -> Op((s, d) => graft.vector.Similarity.sq8Ann(s, d), Sql(graft.text.DocOracle.qv11())),
+    "qv12_refine_ann" -> Op((s, d) => graft.vector.Similarity.refineAnn(s, d),
+      Sql(graft.text.DocOracle.qv12())),
+    "qv13_kmeans" -> Op((s, d) => graft.vector.Similarity.kmeansFit(s, d), Sql(graft.text.DocOracle.qv13())),
+    "qv14_mips" -> Op((s, d) => graft.vector.Similarity.mipsTopK(s, d), Sql(graft.text.DocOracle.qv14())),
+    "qv15_filtered_topk" -> Op((s, d) => graft.vector.Similarity.filteredTopK(s, d),
+      Sql(graft.text.DocOracle.qv15())),
+    "qt19_pii_scan" -> Op((s, d) => graft.text.TextOps.piiScan(s, d), Sql(graft.text.DocOracle.qt19())),
+    "qm3_phash_neardup" -> Op((s, d) => graft.multimodal.BinaryMeta.phashNearDup(s, d),
+      Sql(graft.multimodal.BinaryMeta.qm3OracleSql())),
+    "qe7_top_paths" -> Op((s, d) => graft.analytics.Events.topPaths(s, d), Sql("""
       WITH ev AS (
         SELECT event_id, user_id, event_type,
                CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events
@@ -935,10 +832,10 @@ object SparkEntry {
         SELECT user_id, string_agg(event_type, '>' ORDER BY rn) AS path
         FROM r WHERE rn <= 3 GROUP BY user_id
       ), c AS (SELECT path, count(*) AS n_users FROM p GROUP BY path)
-      SELECT path, n_users FROM c ORDER BY n_users DESC, path LIMIT 10""",
-    "qp5_skew_profile" -> Qp5Sql,
-    "qt11_pack_shards" -> graft.text.DocOracle.qt11(),
-    "qe6_transitions" -> """
+      SELECT path, n_users FROM c ORDER BY n_users DESC, path LIMIT 10""")),
+    "qp5_skew_profile" -> Op((s, d) => graft.analytics.Events.skewProfile(s, d), Sql(Qp5Sql)),
+    "qt11_pack_shards" -> Op((s, d) => graft.text.TextOps.packShards(s, d), Sql(graft.text.DocOracle.qt11())),
+    "qe6_transitions" -> Op((s, d) => graft.analytics.Events.transitions(s, d), Sql("""
       WITH ev AS (
         SELECT event_id, user_id, event_type,
                CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events
@@ -951,8 +848,8 @@ object SparkEntry {
       )
       SELECT src, dst, n,
              floor((n * 1.0 / sum(n) OVER (PARTITION BY src))*10000 + 0.5)/10000 AS p
-      FROM cnt""",
-    "qe16_next_event" -> """
+      FROM cnt""")),
+    "qe16_next_event" -> Op((s, d) => graft.analytics.Events.nextEventEval(s, d), Sql("""
       WITH ev AS (
         SELECT event_id, user_id, event_type,
                CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events
@@ -978,43 +875,8 @@ object SparkEntry {
              floor((CAST(sum(CASE WHEN s.dst = m.pred_dst THEN 1 ELSE 0 END) AS BIGINT) * 1.0 / count(*))*10000 + 0.5)/10000 AS acc
       FROM st s CROSS JOIN rng LEFT JOIN model m USING (src)
       WHERE s.dtsec >= rng.tcut
-      GROUP BY s.src, m.pred_dst""",
-    "qp11_expectations" -> """
-      WITH r AS (
-        SELECT count(*) AS n,
-          sum(CASE WHEN l_returnflag IS NOT NULL THEN 1 ELSE 0 END) AS c1,
-          sum(CASE WHEN l_quantity >= 0 THEN 1 ELSE 0 END) AS c2,
-          sum(CASE WHEN l_discount BETWEEN 0.0 AND 0.1 THEN 1 ELSE 0 END) AS c3,
-          sum(CASE WHEN l_returnflag IN ('A','N','R') THEN 1 ELSE 0 END) AS c4,
-          sum(CASE WHEN l_extendedprice > 0 THEN 1 ELSE 0 END) AS c5,
-          sum(CASE WHEN l_quantity <= 40 THEN 1 ELSE 0 END) AS c6,
-          sum(CASE WHEN l_quantity <= 45 THEN 1 ELSE 0 END) AS c7
-        FROM lineitem
-      ), u AS (
-        SELECT count(*) AS n,
-               (SELECT count(*) FROM (SELECT DISTINCT l_orderkey, l_linenumber
-                                      FROM lineitem)) AS d
-        FROM lineitem
-      ), f AS (
-        SELECT count(*) AS n,
-               sum(CASE WHEN o.o_orderkey IS NOT NULL THEN 1 ELSE 0 END) AS h
-        FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o
-        ON l.l_orderkey = o.o_orderkey
-      ), allc AS (
-        SELECT 'complete_returnflag' AS check_name, floor((c1 * 1.0 / n)*10000 + 0.5)/10000 AS metric, 1.0 AS threshold FROM r
-        UNION ALL SELECT 'nonnegative_quantity', floor((c2 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
-        UNION ALL SELECT 'range_discount', floor((c3 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
-        UNION ALL SELECT 'members_returnflag', floor((c4 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
-        UNION ALL SELECT 'positive_price', floor((c5 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
-        UNION ALL SELECT 'quantity_le_40', floor((c6 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
-        UNION ALL SELECT 'mostly_quantity_le_45', floor((c7 * 1.0 / n)*10000 + 0.5)/10000, 0.85 FROM r
-        UNION ALL SELECT 'unique_pk', floor((d * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM u
-        UNION ALL SELECT 'ref_orders', floor((h * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM f
-      )
-      SELECT check_name, metric, threshold,
-             CASE WHEN metric >= threshold THEN 1 ELSE 0 END AS passed
-      FROM allc""",
-    "qe17_cuped" -> """
+      GROUP BY s.src, m.pred_dst""")),
+    "qe17_cuped" -> Op((s, d) => graft.analytics.Events.cuped(s, d), Sql("""
       WITH ev AS (
         SELECT user_id, event_type,
                CAST(floor(epoch(ts)) AS BIGINT) AS tsec, value FROM events
@@ -1052,19 +914,50 @@ object SparkEntry {
           floor((least(CAST(1 AS DOUBLE), CAST(sxy AS DOUBLE) * CAST(sxy AS DOUBLE) /
                  (CAST(sxx AS DOUBLE) * CAST(syy AS DOUBLE))))*10000 + 0.5)/10000
         END AS var_reduction
-      FROM s WHERE n1 > 0 AND n - n1 > 0""",
-    "qa14_incremental_agg" -> """
-      SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-             sum(CAST(floor((l_quantity)*10000 + 0.5) AS BIGINT)) / 10000.0 AS sum_qty,
-             sum(CAST(floor((l_extendedprice*(1-l_discount))*10000 + 0.5) AS BIGINT)) / 10000.0 AS revenue,
-             floor((sum(CAST(floor((l_quantity)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))*10000 + 0.5)/10000 AS avg_qty
-      FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-    "q45_cusum" -> TsOracle.q45(),
-    "q46_episodes" -> TsOracle.q46(),
-    "q47_median_filter" -> TsOracle.q47(),
-    "qp7_drift" -> TsOracle.qp7(),
-    "q48_decompose" -> TsOracle.q48(),
-    "qe8_scd2" -> """
+      FROM s WHERE n1 > 0 AND n - n1 > 0""")),
+    "qp11_expectations" -> Op((s, d) => graft.analytics.Events.expectations(s, d), Sql("""
+      WITH r AS (
+        SELECT count(*) AS n,
+          sum(CASE WHEN l_returnflag IS NOT NULL THEN 1 ELSE 0 END) AS c1,
+          sum(CASE WHEN l_quantity >= 0 THEN 1 ELSE 0 END) AS c2,
+          sum(CASE WHEN l_discount BETWEEN 0.0 AND 0.1 THEN 1 ELSE 0 END) AS c3,
+          sum(CASE WHEN l_returnflag IN ('A','N','R') THEN 1 ELSE 0 END) AS c4,
+          sum(CASE WHEN l_extendedprice > 0 THEN 1 ELSE 0 END) AS c5,
+          sum(CASE WHEN l_quantity <= 40 THEN 1 ELSE 0 END) AS c6,
+          sum(CASE WHEN l_quantity <= 45 THEN 1 ELSE 0 END) AS c7
+        FROM lineitem
+      ), u AS (
+        SELECT count(*) AS n,
+               (SELECT count(*) FROM (SELECT DISTINCT l_orderkey, l_linenumber
+                                      FROM lineitem)) AS d
+        FROM lineitem
+      ), f AS (
+        SELECT count(*) AS n,
+               sum(CASE WHEN o.o_orderkey IS NOT NULL THEN 1 ELSE 0 END) AS h
+        FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o
+        ON l.l_orderkey = o.o_orderkey
+      ), allc AS (
+        SELECT 'complete_returnflag' AS check_name, floor((c1 * 1.0 / n)*10000 + 0.5)/10000 AS metric, 1.0 AS threshold FROM r
+        UNION ALL SELECT 'nonnegative_quantity', floor((c2 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
+        UNION ALL SELECT 'range_discount', floor((c3 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
+        UNION ALL SELECT 'members_returnflag', floor((c4 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
+        UNION ALL SELECT 'positive_price', floor((c5 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
+        UNION ALL SELECT 'quantity_le_40', floor((c6 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
+        UNION ALL SELECT 'mostly_quantity_le_45', floor((c7 * 1.0 / n)*10000 + 0.5)/10000, 0.85 FROM r
+        UNION ALL SELECT 'unique_pk', floor((d * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM u
+        UNION ALL SELECT 'ref_orders', floor((h * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM f
+      )
+      SELECT check_name, metric, threshold,
+             CASE WHEN metric >= threshold THEN 1 ELSE 0 END AS passed
+      FROM allc""")),
+    "qm10_resize" -> Op((s, d) => graft.multimodal.BinaryMeta.resizePlanes(s, d),
+      Sql(graft.multimodal.BinaryMeta.qm10OracleSql())),
+    "q45_cusum" -> Op((s, d) => graft.timeseries.Intervals.cusum(s, d), Sql(TsOracle.q45())),
+    "q46_episodes" -> Op((s, d) => graft.timeseries.Intervals.episodes(s, d), Sql(TsOracle.q46())),
+    "q47_median_filter" -> Op((s, d) => graft.timeseries.Intervals.medianFilter(s, d), Sql(TsOracle.q47())),
+    "qp7_drift" -> Op((s, d) => TsQueries.qp7Drift(s, d), Sql(TsOracle.qp7())),
+    "q48_decompose" -> Op((s, d) => graft.timeseries.Forecast.decompose(s, d), Sql(TsOracle.q48())),
+    "qe8_scd2" -> Op((s, d) => graft.analytics.Events.scd2(s, d), Sql("""
       WITH ev AS (
         SELECT event_id, user_id, event_type,
                CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events
@@ -1072,9 +965,9 @@ object SparkEntry {
       SELECT user_id, event_id, event_type, tsec AS valid_from,
              lead(tsec) OVER w AS valid_to,
              CASE WHEN lead(tsec) OVER w IS NULL THEN 1 ELSE 0 END AS is_current
-      FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)""",
-    "qv7_knn_label" -> graft.text.DocOracle.qv7(),
-    "qp8_corr_matrix" -> {
+      FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)""")),
+    "qv7_knn_label" -> Op((s, d) => graft.vector.Similarity.knnLabel(s, d), Sql(graft.text.DocOracle.qv7())),
+    "qp8_corr_matrix" -> Op((s, d) => graft.analytics.Events.corrMatrix(s, d), Sql({
       val colScales = Seq("l_quantity" -> "1.0", "l_extendedprice" -> "0.001",
         "l_discount" -> "100.0", "l_tax" -> "100.0")
       val cols = colScales.map(_._1)
@@ -1099,25 +992,218 @@ object SparkEntry {
             floor((s_${a}_$b / sqrt(CAST(s_$a AS DOUBLE) * CAST(s_$b AS DOUBLE)))*10000 + 0.5)/10000
           END AS corr FROM s"""
       }.mkString("\n      UNION ALL ")}"""
-    },
-    "qt16_char_entropy" -> graft.text.DocOracle.qt16(),
-    "q49_periodogram" -> graft.timeseries.Forecast.periodogramOracle(),
-    "qv8_centroid_outlier" -> graft.text.DocOracle.qv8(),
-    "qd14_pagerank" -> graft.text.DocOracle.qd14(),
-    "qt17_bigram_nll" -> graft.text.DocOracle.qt17(),
-    "qv9_centroid_drift" -> graft.text.DocOracle.qv9(),
-    "q50_anomaly_mask" -> graft.timeseries.TsOracle.q50(),
-    "qd15_novelty" -> graft.text.DocOracle.qd15(),
-    "qv10_index_stats" -> graft.text.DocOracle.qv10(),
-    "qv26_hot_cell_split" -> graft.text.DocOracle.qv26(),
-    "qd16_canonical" -> graft.text.DocOracle.qd16(),
-    "q51_point_adjust" -> graft.timeseries.TsOracle.q51(),
-    "qt18_source_scorecard" -> graft.text.DocOracle.qt18,
-    "q52_strength" -> graft.timeseries.TsOracle.q52(),
-    "q53_reconcile" -> graft.timeseries.TsOracle.q53,
-    "q54_refit_backtest" -> graft.timeseries.TsOracle.q54(),
-    "qe13_audience_overlap" -> Qe13Sql,
-    "qe12_survival" -> """
+    })),
+    "qe9_rfm" -> Op((s, d) => graft.analytics.Events.rfm(s, d), Sql({
+      def bkt(v: String, b: String) =
+        (1 to 4).map(i => s"(CASE WHEN $v > $b[$i] THEN 1 ELSE 0 END)").mkString(" + ")
+      s"""
+      WITH o AS (
+        SELECT o_custkey, CAST(o_orderdate AS DATE) AS od,
+               CAST(floor(o_totalprice*10000 + 0.5) AS BIGINT) AS price_q4
+        FROM orders
+      ), mx AS (SELECT max(od) AS md FROM o),
+      per AS (
+        SELECT o_custkey, date_diff('day', max(od), (SELECT md FROM mx)) AS recency_d,
+               count(*) AS frequency, CAST(sum(price_q4) AS BIGINT) AS mon_q4
+        FROM o GROUP BY 1
+      ), b AS (
+        SELECT quantile_cont(recency_d, [0.2,0.4,0.6,0.8]) AS rb,
+               quantile_cont(frequency, [0.2,0.4,0.6,0.8]) AS fb,
+               quantile_cont(mon_q4,    [0.2,0.4,0.6,0.8]) AS mb
+        FROM per
+      ), scored AS (
+        SELECT o_custkey, recency_d, frequency,
+          floor((mon_q4/10000.0)*10000 + 0.5)/10000 AS monetary,
+          6 - (1 + ${bkt("recency_d", "rb")}) AS r_score,
+          1 + ${bkt("frequency", "fb")} AS f_score,
+          1 + ${bkt("mon_q4", "mb")} AS m_score
+        FROM per, b
+      )
+      SELECT o_custkey, recency_d, frequency, monetary, r_score, f_score, m_score,
+             r_score*100 + f_score*10 + m_score AS rfm
+      FROM scored"""
+    })),
+    "qe10_attribution" -> Op((s, d) => graft.analytics.Events.attribution(s, d), Sql("""
+      WITH ev AS (
+        SELECT event_id, user_id, event_type,
+               CAST(floor(epoch(ts)) AS BIGINT) AS tsec, value FROM events
+      ), t0 AS (
+        SELECT user_id, tsec, event_type,
+               row_number() OVER (PARTITION BY user_id, tsec ORDER BY event_id DESC) AS rn
+        FROM ev WHERE event_type IN ('click', 'view', 'signup')
+      ), t AS (
+        SELECT user_id, tsec AS t_t, event_type AS t_type FROM t0 WHERE rn = 1
+      ), a AS (
+        SELECT user_id, event_id, tsec, value FROM ev WHERE event_type = 'purchase'
+      ), j AS (
+        SELECT a.tsec, a.value, t.t_type, t.t_t,
+               (t.t_t IS NOT NULL AND a.tsec - t.t_t <= 3600) AS hit
+        FROM a ASOF LEFT JOIN t ON a.user_id = t.user_id AND a.tsec > t.t_t
+      ), c AS (
+        SELECT CASE WHEN hit THEN t_type ELSE 'direct' END AS channel, value,
+               CASE WHEN hit THEN tsec - t_t END AS gap_s
+        FROM j
+      )
+      SELECT channel, count(*) AS n_conv,
+             floor((sum(CAST(floor(value*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS revenue,
+             floor((CAST(sum(gap_s) AS DOUBLE) / count(*))*10000 + 0.5)/10000 AS avg_gap_s
+      FROM c GROUP BY 1""")),
+    "qt16_char_entropy" -> Op((s, d) => graft.text.TextOps.charEntropy(s, d),
+      Sql(graft.text.DocOracle.qt16())),
+    "q49_periodogram" -> Op((s, d) => graft.timeseries.Forecast.periodogram(s, d),
+      Sql(graft.timeseries.Forecast.periodogramOracle())),
+    "qv8_centroid_outlier" -> Op((s, d) => graft.vector.Similarity.centroidOutlier(s, d),
+      Sql(graft.text.DocOracle.qv8())),
+    "qd14_pagerank" -> Op((s, d) => graft.text.Dedup.pageRank(s, d), Sql(graft.text.DocOracle.qd14())),
+    "qt17_bigram_nll" -> Op((s, d) => graft.text.TextOps.bigramNll(s, d), Sql(graft.text.DocOracle.qt17())),
+    "qm4_shard_manifest" -> Op((s, d) => graft.multimodal.BinaryMeta.shardManifest(s, d), Sql("""
+      WITH m AS (
+        SELECT doc_id, 'text/' || lang AS media_type,
+               CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
+        FROM documents
+      ), c AS (
+        SELECT doc_id, media_type, n_bytes,
+               CAST(floor((sum(n_bytes) OVER (PARTITION BY media_type ORDER BY doc_id
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_bytes) / 4096) AS BIGINT) AS shard
+        FROM m
+      )
+      SELECT media_type, shard, count(*) AS n_items,
+             CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
+             min(doc_id) AS first_doc, max(doc_id) AS last_doc
+      FROM c GROUP BY 1, 2""")),
+    "qm5_modality_stats" -> Op((s, d) => graft.multimodal.BinaryMeta.modalityStats(s, d), Sql("""
+      WITH m AS (
+        SELECT 'text/' || lang AS media_type, text,
+               CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
+        FROM documents
+      ), s AS (
+        SELECT media_type, CAST(count(*) AS BIGINT) AS n_items,
+               CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
+               floor(avg(n_bytes)*10000 + 0.5)/10000 AS mean_bytes,
+               CAST(count(DISTINCT text) AS BIGINT) AS n_distinct
+        FROM m GROUP BY 1
+      )
+      SELECT media_type, n_items, total_bytes, mean_bytes, n_distinct,
+             floor(CAST(n_items - n_distinct AS DOUBLE) / n_items * 10000 + 0.5)/10000 AS dup_rate
+      FROM s""")),
+    "qm6_modal_coverage" -> Op((s, d) => graft.multimodal.BinaryMeta.modalCoverage(s, d), Sql("""
+      WITH m AS (
+        SELECT doc_id, 'text/' || lang AS media_type,
+               CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
+        FROM documents
+      ), e AS (
+        SELECT vec_id AS doc_id, CAST(len(embedding) AS BIGINT) AS dim FROM embeddings
+      ), j AS (
+        SELECT coalesce(m.media_type, '(embedding_only)') AS media_type, m.n_bytes, e.dim
+        FROM m FULL OUTER JOIN e USING (doc_id)
+      )
+      SELECT media_type, count(*) AS n_items,
+        CAST(sum(CASE WHEN dim IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_missing_embedding,
+        CAST(sum(CASE WHEN n_bytes IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_missing_payload,
+        CAST(sum(CASE WHEN dim IS NOT NULL AND dim <> 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_dim_mismatch,
+        CAST(sum(CASE WHEN n_bytes IS NOT NULL AND dim = 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_complete,
+        floor(CAST(sum(CASE WHEN n_bytes IS NOT NULL AND dim = 64 THEN 1 ELSE 0 END) AS DOUBLE)
+              / count(*) * 10000 + 0.5)/10000 AS pct_complete
+      FROM j GROUP BY 1""")),
+    "qt20_mix_weights" -> Op((s, d) => graft.text.TextOps.mixWeights(s, d), Sql("""
+      WITH tk AS (
+        SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
+      ), nt AS (
+        SELECT doc_id, count(*) AS nt FROM tk WHERE tok <> '' GROUP BY doc_id
+      ), per AS (
+        SELECT source, count(*) AS n_docs,
+               CAST(sum(coalesce(nt, 0)) AS BIGINT) AS n_tok
+        FROM documents d LEFT JOIN nt USING (doc_id) GROUP BY source
+      ), tot AS (SELECT CAST(sum(n_tok) AS BIGINT) AS tot FROM per),
+      sh AS (
+        SELECT source, n_docs, n_tok,
+               CAST(n_tok AS DOUBLE) / tot AS p_nat,
+               CAST(floor(pow(CAST(n_tok AS DOUBLE) / tot, 0.7) * 1000000 + 0.5) AS BIGINT) AS pa_q
+        FROM per, tot
+      ), z AS (SELECT CAST(sum(pa_q) AS BIGINT) AS z FROM sh)
+      SELECT source, n_docs, n_tok,
+             floor(p_nat * 10000 + 0.5)/10000 AS p_nat,
+             floor(CAST(pa_q AS DOUBLE) / z * 10000 + 0.5)/10000 AS w_mix,
+             CASE WHEN p_nat > 0
+                  THEN floor((CAST(pa_q AS DOUBLE) / z) / p_nat * 10000 + 0.5)/10000
+             END AS oversample
+      FROM sh, z""")),
+    "qp9_histogram" -> Op((s, d) => graft.analytics.Events.histProfile(s, d), Sql({
+      def sub(c: String) = s"""
+      SELECT '$c' AS column_name, bin,
+             floor((mn + (mx - mn) * bin / 16)*10000 + 0.5)/10000 AS lo,
+             floor((mn + (mx - mn) * (bin + 1) / 16)*10000 + 0.5)/10000 AS hi,
+             count(*) AS n
+      FROM (
+        SELECT CASE WHEN mx = mn THEN 0
+               ELSE least(CAST(floor(($c - mn) / (mx - mn) * 16) AS INT), 15) END AS bin,
+               mn, mx
+        FROM lineitem, (SELECT min($c) AS mn, max($c) AS mx FROM lineitem)
+      ) GROUP BY bin, mn, mx"""
+      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+        .map(sub).mkString("\n      UNION ALL\n")
+    })),
+    "qa17_grouping_sets" -> Op((s, d) => Relational.groupingSets(s, d), Sql("""
+      SELECT coalesce(l_returnflag, 'ALL') AS rf, coalesce(l_linestatus, 'ALL') AS ls,
+             floor((sum(CAST(floor((l_extendedprice * (1.0 - l_discount))*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS revenue,
+             count(*) AS n
+      FROM lineitem
+      GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())""")),
+    "qv9_centroid_drift" -> Op((s, d) => graft.vector.Similarity.centroidDrift(s, d),
+      Sql(graft.text.DocOracle.qv9())),
+    "q50_anomaly_mask" -> Op((s, d) => graft.timeseries.Postprocess.anomalyMask(s, d),
+      Sql(graft.timeseries.TsOracle.q50())),
+    "qe11_cohort_ltv" -> Op((s, d) => graft.analytics.Events.cohortLtv(s, d), Sql("""
+      WITH ev AS (
+        SELECT user_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS tsec, value
+        FROM events
+      ), firsts AS (
+        SELECT user_id, CAST(floor(min(tsec) / 604800) AS BIGINT) AS cohort_week
+        FROM ev GROUP BY user_id
+      ), sizes AS (
+        SELECT cohort_week, count(*) AS cohort_size FROM firsts GROUP BY cohort_week
+      ), p AS (
+        SELECT f.cohort_week,
+               CAST(floor(e.tsec / 604800) AS BIGINT) - f.cohort_week AS age_weeks,
+               e.user_id, e.value
+        FROM ev e JOIN firsts f USING (user_id) WHERE e.event_type = 'purchase'
+      ), roll AS (
+        SELECT cohort_week, age_weeks, count(DISTINCT user_id) AS n_active,
+               CAST(sum(CAST(floor(value*10000 + 0.5) AS BIGINT)) AS BIGINT) AS rev_q4
+        FROM p GROUP BY cohort_week, age_weeks
+      )
+      SELECT r.cohort_week, r.age_weeks, s.cohort_size, r.n_active,
+             floor((r.rev_q4 / 10000.0)*10000 + 0.5)/10000 AS revenue,
+             floor(((sum(r.rev_q4) OVER (PARTITION BY r.cohort_week ORDER BY r.age_weeks
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) / 10000.0)*10000 + 0.5)/10000 AS cum_revenue
+      FROM roll r JOIN sizes s USING (cohort_week)""")),
+    "qp10_quality_audit" -> Op((s, d) => graft.analytics.Events.qualityAudit(s, d), Sql({
+      def sub(t: String, c: String) = s"""
+      SELECT '$t' AS table_name, '$c' AS column_name, count(*) AS n,
+             CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
+             CAST(sum(CASE WHEN isnan($c) THEN 1 ELSE 0 END) AS BIGINT) AS n_nan,
+             CAST(sum(CASE WHEN isinf($c) THEN 1 ELSE 0 END) AS BIGINT) AS n_inf,
+             CAST(sum(CASE WHEN $c = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
+             CAST(sum(CASE WHEN $c < 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_neg
+      FROM $t"""
+      (Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax").map(sub("lineitem", _)) ++
+        Seq(sub("events", "value"), sub("orders", "o_totalprice"))).mkString("\n      UNION ALL\n")
+    })),
+    "qd15_novelty" -> Op((s, d) => graft.text.Dedup.novelty(s, d), Sql(graft.text.DocOracle.qd15())),
+    "qv10_index_stats" -> Op((s, d) => graft.vector.Similarity.indexStats(s, d),
+      Sql(graft.text.DocOracle.qv10())),
+    "qd16_canonical" -> Op((s, d) => graft.text.Dedup.canonical(s, d), Sql(graft.text.DocOracle.qd16())),
+    "q51_point_adjust" -> Op((s, d) => graft.timeseries.Metrics.pointAdjust(s, d),
+      Sql(graft.timeseries.TsOracle.q51())),
+    "qt18_source_scorecard" -> Op((s, d) => graft.text.TextOps.sourceScorecard(s, d),
+      Sql(graft.text.DocOracle.qt18)),
+    "q52_strength" -> Op((s, d) => graft.timeseries.Forecast.strength(s, d),
+      Sql(graft.timeseries.TsOracle.q52())),
+    "q53_reconcile" -> Op((s, d) => graft.timeseries.Forecast.reconcile(s, d),
+      Sql(graft.timeseries.TsOracle.q53)),
+    "q54_refit_backtest" -> Op((s, d) => graft.timeseries.Forecast.refitBacktest(s, d),
+      Sql(graft.timeseries.TsOracle.q54())),
+    "qe12_survival" -> Op((s, d) => graft.analytics.Events.survival(s, d), Sql("""
       WITH ev AS (
         SELECT user_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events
       ), mx AS (SELECT max(tsec) AS tmax FROM ev),
@@ -1157,234 +1243,32 @@ object SparkEntry {
                   ELSE floor((exp(sum(lq) OVER (ORDER BY d
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / 1000000.0))*10000 + 0.5)/10000
              END AS surv
-      FROM lg""",
-    "qp10_quality_audit" -> {
-      def sub(t: String, c: String) = s"""
-      SELECT '$t' AS table_name, '$c' AS column_name, count(*) AS n,
-             CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-             CAST(sum(CASE WHEN isnan($c) THEN 1 ELSE 0 END) AS BIGINT) AS n_nan,
-             CAST(sum(CASE WHEN isinf($c) THEN 1 ELSE 0 END) AS BIGINT) AS n_inf,
-             CAST(sum(CASE WHEN $c = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
-             CAST(sum(CASE WHEN $c < 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_neg
-      FROM $t"""
-      (Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax").map(sub("lineitem", _)) ++
-        Seq(sub("events", "value"), sub("orders", "o_totalprice"))).mkString("\n      UNION ALL\n")
-    },
-    "qe11_cohort_ltv" -> """
+      FROM lg""")),
+    "qe13_audience_overlap" -> Op((s, d) => graft.analytics.Events.audienceOverlap(s, d), Sql(Qe13Sql)),
+    "qe14_dau_mau" -> Op((s, d) => graft.analytics.Events.dauMau(s, d), Sql(s"""
       WITH ev AS (
-        SELECT user_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS tsec, value
+        SELECT CAST(floor(CAST(floor(epoch(ts)) AS BIGINT) / 86400) AS BIGINT) AS day,
+               user_id
         FROM events
-      ), firsts AS (
-        SELECT user_id, CAST(floor(min(tsec) / 604800) AS BIGINT) AS cohort_week
-        FROM ev GROUP BY user_id
-      ), sizes AS (
-        SELECT cohort_week, count(*) AS cohort_size FROM firsts GROUP BY cohort_week
-      ), p AS (
-        SELECT f.cohort_week,
-               CAST(floor(e.tsec / 604800) AS BIGINT) - f.cohort_week AS age_weeks,
-               e.user_id, e.value
-        FROM ev e JOIN firsts f USING (user_id) WHERE e.event_type = 'purchase'
-      ), roll AS (
-        SELECT cohort_week, age_weeks, count(DISTINCT user_id) AS n_active,
-               CAST(sum(CAST(floor(value*10000 + 0.5) AS BIGINT)) AS BIGINT) AS rev_q4
-        FROM p GROUP BY cohort_week, age_weeks
-      )
-      SELECT r.cohort_week, r.age_weeks, s.cohort_size, r.n_active,
-             floor((r.rev_q4 / 10000.0)*10000 + 0.5)/10000 AS revenue,
-             floor(((sum(r.rev_q4) OVER (PARTITION BY r.cohort_week ORDER BY r.age_weeks
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) / 10000.0)*10000 + 0.5)/10000 AS cum_revenue
-      FROM roll r JOIN sizes s USING (cohort_week)""",
-    "qa17_grouping_sets" -> """
-      SELECT coalesce(l_returnflag, 'ALL') AS rf, coalesce(l_linestatus, 'ALL') AS ls,
-             floor((sum(CAST(floor((l_extendedprice * (1.0 - l_discount))*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS revenue,
-             count(*) AS n
-      FROM lineitem
-      GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())""",
-    "qp9_histogram" -> {
-      def sub(c: String) = s"""
-      SELECT '$c' AS column_name, bin,
-             floor((mn + (mx - mn) * bin / 16)*10000 + 0.5)/10000 AS lo,
-             floor((mn + (mx - mn) * (bin + 1) / 16)*10000 + 0.5)/10000 AS hi,
-             count(*) AS n
-      FROM (
-        SELECT CASE WHEN mx = mn THEN 0
-               ELSE least(CAST(floor(($c - mn) / (mx - mn) * 16) AS INT), 15) END AS bin,
-               mn, mx
-        FROM lineitem, (SELECT min($c) AS mn, max($c) AS mx FROM lineitem)
-      ) GROUP BY bin, mn, mx"""
-      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-        .map(sub).mkString("\n      UNION ALL\n")
-    },
-    "qm1_binary_meta" -> graft.multimodal.BinaryMeta.qm1OracleSql,
-    "qm3_phash_neardup" -> graft.multimodal.BinaryMeta.qm3OracleSql(),
-    "qm2_frame_sample" -> graft.multimodal.BinaryMeta.qm2OracleSql(),
-    "qm7_frame_neardup" -> graft.multimodal.BinaryMeta.qm7OracleSql(),
-    "qm8_media_clusters" -> graft.multimodal.BinaryMeta.qm8OracleSql(),
-    "qm9_imageio_decode" -> graft.multimodal.BinaryMeta.qm9OracleSql(),
-    "qm10_resize" -> graft.multimodal.BinaryMeta.qm10OracleSql(),
-    "qm4_shard_manifest" -> """
-      WITH m AS (
-        SELECT doc_id, 'text/' || lang AS media_type,
-               CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-        FROM documents
-      ), c AS (
-        SELECT doc_id, media_type, n_bytes,
-               CAST(floor((sum(n_bytes) OVER (PARTITION BY media_type ORDER BY doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_bytes) / 4096) AS BIGINT) AS shard
-        FROM m
-      )
-      SELECT media_type, shard, count(*) AS n_items,
-             CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
-             min(doc_id) AS first_doc, max(doc_id) AS last_doc
-      FROM c GROUP BY 1, 2""",
-    "qm5_modality_stats" -> """
-      WITH m AS (
-        SELECT 'text/' || lang AS media_type, text,
-               CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-        FROM documents
-      ), s AS (
-        SELECT media_type, CAST(count(*) AS BIGINT) AS n_items,
-               CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
-               floor(avg(n_bytes)*10000 + 0.5)/10000 AS mean_bytes,
-               CAST(count(DISTINCT text) AS BIGINT) AS n_distinct
-        FROM m GROUP BY 1
-      )
-      SELECT media_type, n_items, total_bytes, mean_bytes, n_distinct,
-             floor(CAST(n_items - n_distinct AS DOUBLE) / n_items * 10000 + 0.5)/10000 AS dup_rate
-      FROM s""",
-    "qm6_modal_coverage" -> """
-      WITH m AS (
-        SELECT doc_id, 'text/' || lang AS media_type,
-               CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-        FROM documents
-      ), e AS (
-        SELECT vec_id AS doc_id, CAST(len(embedding) AS BIGINT) AS dim FROM embeddings
-      ), j AS (
-        SELECT coalesce(m.media_type, '(embedding_only)') AS media_type, m.n_bytes, e.dim
-        FROM m FULL OUTER JOIN e USING (doc_id)
-      )
-      SELECT media_type, count(*) AS n_items,
-        CAST(sum(CASE WHEN dim IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_missing_embedding,
-        CAST(sum(CASE WHEN n_bytes IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_missing_payload,
-        CAST(sum(CASE WHEN dim IS NOT NULL AND dim <> 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_dim_mismatch,
-        CAST(sum(CASE WHEN n_bytes IS NOT NULL AND dim = 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_complete,
-        floor(CAST(sum(CASE WHEN n_bytes IS NOT NULL AND dim = 64 THEN 1 ELSE 0 END) AS DOUBLE)
-              / count(*) * 10000 + 0.5)/10000 AS pct_complete
-      FROM j GROUP BY 1""",
-    "qt20_mix_weights" -> """
-      WITH tk AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-      ), nt AS (
-        SELECT doc_id, count(*) AS nt FROM tk WHERE tok <> '' GROUP BY doc_id
-      ), per AS (
-        SELECT source, count(*) AS n_docs,
-               CAST(sum(coalesce(nt, 0)) AS BIGINT) AS n_tok
-        FROM documents d LEFT JOIN nt USING (doc_id) GROUP BY source
-      ), tot AS (SELECT CAST(sum(n_tok) AS BIGINT) AS tot FROM per),
-      sh AS (
-        SELECT source, n_docs, n_tok,
-               CAST(n_tok AS DOUBLE) / tot AS p_nat,
-               CAST(floor(pow(CAST(n_tok AS DOUBLE) / tot, 0.7) * 1000000 + 0.5) AS BIGINT) AS pa_q
-        FROM per, tot
-      ), z AS (SELECT CAST(sum(pa_q) AS BIGINT) AS z FROM sh)
-      SELECT source, n_docs, n_tok,
-             floor(p_nat * 10000 + 0.5)/10000 AS p_nat,
-             floor(CAST(pa_q AS DOUBLE) / z * 10000 + 0.5)/10000 AS w_mix,
-             CASE WHEN p_nat > 0
-                  THEN floor((CAST(pa_q AS DOUBLE) / z) / p_nat * 10000 + 0.5)/10000
-             END AS oversample
-      FROM sh, z""",
-    "qc5_chunk_index" -> graft.text.DocOracle.qc5(),
-    "qc4_budget_plan" -> """
-      WITH tk AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-      ), nt AS (
-        SELECT doc_id, count(*) AS nt FROM tk WHERE tok <> '' GROUP BY doc_id
-      ), per AS (
-        SELECT source, count(*) AS n_docs,
-               CAST(sum(coalesce(nt, 0)) AS BIGINT) AS n_tok
-        FROM documents d LEFT JOIN nt USING (doc_id) GROUP BY source
-      ), tot AS (SELECT CAST(sum(n_tok) AS BIGINT) AS tot FROM per),
-      sh AS (
-        SELECT source, n_docs, n_tok, tot,
-               CAST(n_tok AS DOUBLE) / tot AS p_nat,
-               CAST(floor(pow(CAST(n_tok AS DOUBLE) / tot, 0.7) * 1000000 + 0.5) AS BIGINT) AS pa_q
-        FROM per, tot
-      ), z AS (SELECT CAST(sum(pa_q) AS BIGINT) AS z FROM sh),
-      plan4 AS (
-        SELECT source,
-               CAST(pa_q AS DOUBLE) / z AS w_raw,
-               n_tok,
-               CAST(floor((CAST(pa_q AS DOUBLE) / z) *
-                          CAST(CAST(floor(tot / 2.0) AS BIGINT) AS DOUBLE)) AS BIGINT) AS target_toks
-        FROM sh, z
-      )
-      SELECT source, floor(w_raw * 10000 + 0.5)/10000 AS w_mix,
-             target_toks, n_tok AS avail_toks,
-             least(n_tok, target_toks) AS alloc_toks,
-             CASE WHEN target_toks > 0 THEN
-               floor((least(n_tok, target_toks) * 1.0 / target_toks)*10000 + 0.5)/10000
-             END AS fill,
-             CASE WHEN least(n_tok, target_toks) < target_toks THEN 1 ELSE 0 END AS binding
-      FROM plan4""",
-    "qe10_attribution" -> """
-      WITH ev AS (
-        SELECT event_id, user_id, event_type,
-               CAST(floor(epoch(ts)) AS BIGINT) AS tsec, value FROM events
-      ), t0 AS (
-        SELECT user_id, tsec, event_type,
-               row_number() OVER (PARTITION BY user_id, tsec ORDER BY event_id DESC) AS rn
-        FROM ev WHERE event_type IN ('click', 'view', 'signup')
-      ), t AS (
-        SELECT user_id, tsec AS t_t, event_type AS t_type FROM t0 WHERE rn = 1
-      ), a AS (
-        SELECT user_id, event_id, tsec, value FROM ev WHERE event_type = 'purchase'
-      ), j AS (
-        SELECT a.tsec, a.value, t.t_type, t.t_t,
-               (t.t_t IS NOT NULL AND a.tsec - t.t_t <= 3600) AS hit
-        FROM a ASOF LEFT JOIN t ON a.user_id = t.user_id AND a.tsec > t.t_t
-      ), c AS (
-        SELECT CASE WHEN hit THEN t_type ELSE 'direct' END AS channel, value,
-               CASE WHEN hit THEN tsec - t_t END AS gap_s
-        FROM j
-      )
-      SELECT channel, count(*) AS n_conv,
-             floor((sum(CAST(floor(value*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS revenue,
-             floor((CAST(sum(gap_s) AS DOUBLE) / count(*))*10000 + 0.5)/10000 AS avg_gap_s
-      FROM c GROUP BY 1""",
-    "qe9_rfm" -> {
-      def bkt(v: String, b: String) =
-        (1 to 4).map(i => s"(CASE WHEN $v > $b[$i] THEN 1 ELSE 0 END)").mkString(" + ")
-      s"""
-      WITH o AS (
-        SELECT o_custkey, CAST(o_orderdate AS DATE) AS od,
-               CAST(floor(o_totalprice*10000 + 0.5) AS BIGINT) AS price_q4
-        FROM orders
-      ), mx AS (SELECT max(od) AS md FROM o),
-      per AS (
-        SELECT o_custkey, date_diff('day', max(od), (SELECT md FROM mx)) AS recency_d,
-               count(*) AS frequency, CAST(sum(price_q4) AS BIGINT) AS mon_q4
-        FROM o GROUP BY 1
-      ), b AS (
-        SELECT quantile_cont(recency_d, [0.2,0.4,0.6,0.8]) AS rb,
-               quantile_cont(frequency, [0.2,0.4,0.6,0.8]) AS fb,
-               quantile_cont(mon_q4,    [0.2,0.4,0.6,0.8]) AS mb
-        FROM per
-      ), scored AS (
-        SELECT o_custkey, recency_d, frequency,
-          floor((mon_q4/10000.0)*10000 + 0.5)/10000 AS monetary,
-          6 - (1 + ${bkt("recency_d", "rb")}) AS r_score,
-          1 + ${bkt("frequency", "fb")} AS f_score,
-          1 + ${bkt("mon_q4", "mb")} AS m_score
-        FROM per, b
-      )
-      SELECT o_custkey, recency_d, frequency, monetary, r_score, f_score, m_score,
-             r_score*100 + f_score*10 + m_score AS rfm
-      FROM scored"""
-    },
-    "qp6_completeness" -> TsOracle.qp6,
-    "qt13_boilerplate" -> graft.text.DocOracle.qt13(),
-    "qt14_unigram_nll" -> graft.text.DocOracle.qt14,
-    "qt15_line_dedup" -> graft.text.DocOracle.qt15(),
+      ), pairs AS (SELECT DISTINCT day, user_id FROM ev),
+      dau AS (SELECT day, CAST(count(*) AS BIGINT) AS dau FROM pairs GROUP BY day),
+      fan AS (SELECT day + i AS day, user_id FROM pairs, unnest(range(0, ${graft.analytics.Events.DauMauWindow})) AS u(i)),
+      mau AS (SELECT day, CAST(count(DISTINCT user_id) AS BIGINT) AS mau FROM fan GROUP BY day)
+      SELECT d.day, d.dau, m.mau,
+             floor((CAST(d.dau AS DOUBLE) / m.mau)*10000 + 0.5)/10000 AS stickiness
+      FROM dau d JOIN mau m USING (day)""")),
+    "qe15_burst_rate" -> Op((s, d) => graft.analytics.Events.burstRate(s, d), Sql(Qe15Sql)),
+    "qp6_completeness" -> Op((s, d) => TsQueries.qp6Completeness(s, d), Sql(TsOracle.qp6)),
+    "qt13_boilerplate" -> Op((s, d) => graft.text.TextOps.boilerplate(s, d),
+      Sql(graft.text.DocOracle.qt13())),
+    "qt14_unigram_nll" -> Op((s, d) => graft.text.TextOps.unigramNll(s, d), Sql(graft.text.DocOracle.qt14)),
+    "qt15_line_dedup" -> Op((s, d) => graft.text.TextOps.lineDedup(s, d), Sql(graft.text.DocOracle.qt15())),
   )
+
+  /** The driver contract's two views of `ops`. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    ops.map { case (k, op) => k -> op.build }
+
+  val oracleSql: Map[String, String] =
+    ops.collect { case (k, Op(_, Sql(text))) => k -> text }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,27 +8,7 @@ object Verify {
     // dump to those queries (dev aid; the driver passes exactly two).
     val (Array(sfDir, outDir), onlyArr) = args.splitAt(2)
     val only: Set[String] = onlyArr.toSet
-    // match the host: the driver may not export SPARK_GRAFT_CPUS, and a
-    // silent local[4] on a 32-core box makes the correctness run ~3× slower
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); Spark 4 reads it only as
-      // long (nanos since epoch) — TsCore normalizes.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // evidence-tail hygiene (see LogHygiene): collapse the deliberate
-    // bounded-window WARN flood to one summary line at exit. Installed
-    // AFTER the session exists — Spark (re)initializes the log4j2
-    // configuration during its own startup, which would drop a filter
-    // added to the pre-init configuration object.
-    val suppressed = graft.util.LogHygiene.suppressKnownBenignWindowWarn()
+    val spark = Session.create()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.nonEmpty && !only.contains(name)) ()
@@ -54,6 +33,8 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Session installed the filter; this returns its counter
+    val suppressed = graft.util.LogHygiene.suppressKnownBenignWindowWarn()
     if (suppressed.get > 0)
       System.err.println(graft.util.LogHygiene.summaryLine(suppressed))
     spark.stop()

@@ -49,25 +49,21 @@ object MllibForecast {
     // Concurrent driver loop: each per-series fit is an independent set
     // of Spark jobs over the checkpointed base — running them in
     // parallel overlaps their scheduling + aggregation latency (the
-    // normal-solver fit is 2-3 small jobs each).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val rows = mlSeries.map { s =>
-      Future {
-        val train = assembler.transform(base.filter(col("series") === s && col("t") < col("tsplit")))
-        val test = assembler.transform(base.filter(col("series") === s && col("t") >= col("tsplit")))
-        val model = lr.fit(train)
-        val pred = model.transform(test)
-        val err = pred.agg(
-          avg(abs(col("y") - col("prediction"))).as("mae"),
-          sqrt(avg((col("y") - col("prediction")) * (col("y") - col("prediction")))).as("rmse"))
-          .head()
-        (s, model.intercept, model.coefficients(0), model.coefficients(1), model.coefficients(2),
-          err.getDouble(0), err.getDouble(1))
-      }
-    }.map(Await.result(_, Duration.Inf))
-    val mlDf = rows.toSeq.toDF("series", "b0", "b1", "b2", "b3", "mae", "rmse")
+    // normal-solver fit is 2-3 small jobs each). Overlap bounds the pool
+    // and cancels every sibling fit if one fails; rows keep series order.
+    val rows = graft.util.Overlap.all(spark, "q26")(mlSeries.toSeq.map { s => () =>
+      val train = assembler.transform(base.filter(col("series") === s && col("t") < col("tsplit")))
+      val test = assembler.transform(base.filter(col("series") === s && col("t") >= col("tsplit")))
+      val model = lr.fit(train)
+      val pred = model.transform(test)
+      val err = pred.agg(
+        avg(abs(col("y") - col("prediction"))).as("mae"),
+        sqrt(avg((col("y") - col("prediction")) * (col("y") - col("prediction")))).as("rmse"))
+        .head()
+      (s, model.intercept, model.coefficients(0), model.coefficients(1), model.coefficients(2),
+        err.getDouble(0), err.getDouble(1))
+    })
+    val mlDf = rows.toDF("series", "b0", "b1", "b2", "b3", "mae", "rmse")
     val all =
       if (!hasOverflow) mlDf
       else mlDf.unionByName(
@@ -98,8 +94,8 @@ object MllibForecast {
     * spec's "beats the linear model corpus-wide" gate is apples to
     * apples.
     *
-    * Rows-only (declared in ContractSpec next to q13/q26): a boosted
-    * ensemble's split search has no SQL analogue. Deterministic seed;
+    * Rows-only (a NoOracle entry in SparkEntry.ops, next to q13/q26):
+    * a boosted ensemble's split search has no SQL analogue. Deterministic seed;
     * ForecastImputeSpec gates the quality claim (beats q22's linear
     * MAE corpus-wide). Depth-2 trees × 20 rounds measured best here:
     * the feed is quasi-linear with a low SNR, so deeper trees only buy

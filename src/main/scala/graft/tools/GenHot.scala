@@ -87,12 +87,7 @@ object GenHot {
 
   def main(args: Array[String]): Unit = {
     val dst = args.headOption.getOrElse("/root/repo/hotdata")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.create()
     def wr(df: DataFrame, t: String): Unit = {
       val tmp = s"$dst/_tmp_$t"
       df.coalesce(1).write.mode("overwrite").parquet(tmp)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -306,13 +306,7 @@ object GenZipf {
     // the default
     val vocab = args.collectFirst { case a if a.startsWith("--vocab=") =>
       a.stripPrefix("--vocab=").toInt }.getOrElse(VocabSize)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.create()
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     // single FILE per table — the driver's layout (tools/check.py's
     // DuckDB views read '<dir>/<t>.parquet' as one file)

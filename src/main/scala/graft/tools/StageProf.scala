@@ -1,63 +1,28 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (optimization round): run ONE registered query with the
   * bench's timed action and print a per-stage table — wall time, task
   * time, shuffle read/write bytes, records — plus job count. The
   * empirical half of guide §1 without the UI.
-  * Usage: tools/run_main.sh graft.tools.StageProf <query> [sfDir] [cpus] [reps]
+  * Usage: tools/run_main.sh graft.tools.StageProf <query> [sfDir] [cores] [reps]
   */
 object StageProf {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 2) args(2) else
-      Runtime.getRuntime.availableProcessors().toString
+    val cores = if (args.length > 2) args(2).toInt else graft.Session.envCores
     val reps = if (args.length > 3) args(3).toInt else 1
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // share the BENCH session defaults (ADVICE r18: the profiler
-      // claims to replicate the bench session, so its AQE floor and
-      // codegen cache must match Bench.newSession or evidence is
-      // measured under the wrong config)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MINPART", "64k"))
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // bench-equivalent warmers (subset): JIT/codegen machinery
-    spark.range(100000).selectExpr("sum(id * 2)").collect()
-    val r = spark.range(200000).selectExpr("id", "id % 97 as k", "cast(id % 31 as double) as v")
-    r.groupBy("k").agg(org.apache.spark.sql.functions.countDistinct("v"),
-      org.apache.spark.sql.functions.sum("v")).count()
-    r.selectExpr("k", "sum(v) over (partition by k order by id rows between unbounded preceding and current row) as rs").count()
-    r.as("a").join(r.as("b"), "k").count()
-    r.join(org.apache.spark.sql.functions.broadcast(r.limit(100)), "id").count()
-    r.distinct().count()
-    graft.functions.VectorExprs.register(spark)
+    val spark = graft.Session.create(cores)
+    graft.Bench.warmUp(spark, sfDir)
 
     case class St(id: Int, name: String, wallMs: Long, taskMs: Long,
                   srMB: Double, swMB: Double, recIn: Long, tasks: Int)
     val stages = scala.collection.mutable.ArrayBuffer.empty[St]
-    val jobSites = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
     var jobs = 0
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs += 1
-        jobSites += ((js.time,
-          Option(js.properties).flatMap(p => Option(p.getProperty("callSite.short")))
-            .getOrElse(js.stageInfos.headOption.map(_.name.split("\n")(0)).getOrElse("?"))
-            .take(100)))
-      }
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs += 1
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
         val wall = (for {s <- si.submissionTime; c <- si.completionTime} yield c - s).getOrElse(-1L)
@@ -97,15 +62,6 @@ object StageProf {
       }
       val wallSum = stages.map(_.wallMs).sum
       println(f"stage wall sum: ${wallSum / 1000.0}%.3f s (overlap possible); gaps = driver/planning time")
-      if (sys.env.contains("SPARK_GRAFT_PROF_JOBS")) {
-        println("-- jobs (start-to-start deltas) --")
-        val js = jobSites.toSeq.sortBy(_._1)
-        js.zipWithIndex.foreach { case ((t, site), i) =>
-          val d = if (i + 1 < js.size) js(i + 1)._1 - t else -1L
-          println(f"$i%4d ${d}%7d ms  $site")
-        }
-      }
-      jobSites.clear()
     }
     spark.stop()
   }

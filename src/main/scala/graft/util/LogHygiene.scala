@@ -6,7 +6,7 @@ import org.apache.logging.log4j.core.filter.AbstractFilter
 import org.apache.logging.log4j.message.Message
 import java.util.concurrent.atomic.AtomicLong
 
-/** Evidence-tail hygiene for the driver-run mains (Bench/Verify): the
+/** Evidence-tail hygiene for graft.Session's sessions: the
   * repo's DELIBERATE bounded unpartitioned windows — seed-cell
   * numbering over `limit(nCells)` rows (Similarity), the documented
   * single-task series index (TsCore), day-grain DAU/MAU (Events),
@@ -21,8 +21,9 @@ import java.util.concurrent.atomic.AtomicLong
   * precision log filter: it denies ONLY that exact message from the
   * WindowExec logger, counts what it dropped, and the main prints one
   * summary line — every other WARN (including unknown future WARNs
-  * from WindowExec itself) still reaches the tail. Specs and library
-  * callers never install it; the warning stays visible in development.
+  * from WindowExec itself) still reaches the tail. `graft.Session`
+  * installs it for every session it builds; library callers with
+  * their own session never get it.
   */
 object LogHygiene {
 

@@ -2,12 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards the driver contract itself: `oracleSql` keys must reference
-  * real queries, and the rows-only set (queries with NO oracle) must
-  * stay exactly the declared four — a typo'd oracle key or a new query
-  * registered without its oracle would otherwise degrade SILENTLY to
-  * the driver's weaker rows-only check and surface only in the
-  * round-end CORRECTNESS report.
+/** Guards the driver contract itself: the rows-only set (queries with
+  * a NoOracle entry) must stay exactly the declared four, each naming a
+  * spec test that exists — a new query registered without its oracle
+  * would otherwise degrade SILENTLY to the driver's weaker rows-only
+  * check and surface only in the round-end CORRECTNESS report.
   */
 class ContractSpec extends AnyFunSuite {
 
@@ -16,15 +15,39 @@ class ContractSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracle entries without a query: $orphans")
   }
 
+  private val noOracle: Map[String, SparkEntry.NoOracle] =
+    SparkEntry.ops.collect { case (k, SparkEntry.Op(_, n: SparkEntry.NoOracle)) => k -> n }
+
   test("the rows-only set is exactly the declared q13/q26/q61/qd24") {
     // q13's greedy k-center, q26's MLlib solver internals, q61's
     // boosted-tree split search, and qd24's data-dependent fixpoint
     // pass count are the only computations with no SQL analogue; all
     // four are spec-verified (qd24's oracle-mirrorable twin is qd21)
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(rowsOnly === Set("q13_coreset", "q26_mllib_forecast", "q61_gbt_forecast",
+    assert(noOracle.keySet === Set("q13_coreset", "q26_mllib_forecast", "q61_gbt_forecast",
         "qd24_span_fixpoint"),
       "a query lost (or gained) its oracle without the declaration moving")
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet === noOracle.keySet)
+  }
+
+  test("every NoOracle entry names an existing spec test that gates it") {
+    noOracle.foreach { case (k, n) =>
+      val suite = Class.forName(n.spec).getDeclaredConstructor().newInstance()
+        .asInstanceOf[org.scalatest.Suite]
+      assert(suite.testNames.contains(n.test), s"$k: ${n.spec} has no test '${n.test}'")
+    }
+  }
+
+  test("exactly one file under src/main builds a SparkSession") {
+    // graft.Session is the one session factory: a second builder would
+    // fork the settings every main, tool and spec is meant to share
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val builders = files(new java.io.File("src/main")).filter { f =>
+      f.getName.endsWith(".scala") &&
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+          .contains("SparkSession.builder")
+    }.map(_.getPath.stripPrefix("src/main/scala/"))
+    assert(builders === Seq("graft/Session.scala"))
   }
 
   test("query keys follow the short-prefix naming the bench JSON relies on") {

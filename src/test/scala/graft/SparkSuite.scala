@@ -8,13 +8,5 @@ trait SparkSuite extends AnyFunSuite {
   val Sf001 = "/root/testdata/sf0.001"
   val Sf01 = "/root/testdata/sf0.01"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.create(cores = 4)
 }

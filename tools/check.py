@@ -6,10 +6,13 @@ Usage: python3 tools/check.py <outDir-from-Verify> <sfDir> [query ...]
 
 Mimics the driver: for each query, read outDir/<name> parquet (Spark
 result), run oracleSql[name] in DuckDB against the sfDir parquet tables,
-sort columns by name, sort rows, and compare values.
+sort columns by name, sort rows, and compare values. A key with no output
+directory (Verify ran a subset, or the query failed there — see Verify's
+stderr) prints SKIP and is counted apart; only FAIL makes the exit non-zero.
 """
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -54,7 +57,6 @@ def main():
     # materializations; spill goes to GRAFT_DUCK_TMP if set (e.g. a
     # volume with headroom); GRAFT_DUCK_MEM caps/raises the memory
     # budget explicitly.
-    import os
     con.execute("SET preserve_insertion_order=false")
     if os.environ.get("GRAFT_DUCK_TMP"):
         con.execute(f"SET temp_directory='{os.environ['GRAFT_DUCK_TMP']}'")
@@ -68,9 +70,13 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
-    n_pass = n_fail = 0
+    n_pass = n_fail = n_skip = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
+            continue
+        if not os.path.isdir(f"{out_dir}/{name}"):
+            print(f"SKIP {name}: not run")
+            n_skip += 1
             continue
         try:
             got = canon(pd.read_parquet(f"{out_dir}/{name}"))
@@ -101,7 +107,7 @@ def main():
         else:
             print(f"PASS {name} ({len(got)} rows)")
             n_pass += 1
-    print(f"== {n_pass} pass, {n_fail} fail ==")
+    print(f"== {n_pass} pass, {n_fail} fail, {n_skip} skip ==")
     sys.exit(1 if n_fail else 0)
 
 
