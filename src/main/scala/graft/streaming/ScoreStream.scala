@@ -937,10 +937,10 @@ object ScoreStream {
   /** Streaming twin of the BATCH detection scorer, wired to a
     * ModelStore artifact: patch-feature rows stream in (series, win,
     * pos, f0..f8 + event-time ts), each patch is scored against the
-    * SAVED packed memory bank with the same codegen
-    * graft_min_dist2/graft_argmin_dist2 kernels the batch path uses
-    * (one broadcast bank row — a stream-static join, so the stream side
-    * never shuffles before its windowed reduce), and per-(series, win)
+    * SAVED packed memory bank by the batch path's own scan
+    * (Detect.bankScored: one broadcast bank row — a stream-static
+    * join, so the stream side never shuffles before its windowed
+    * reduce), and per-(series, win)
     * max scores emit once the watermark closes the window, flagged
     * against the saved threshold. Score values are BIT-IDENTICAL to
     * Detect.pipeline / ModelStore.loadAndScore on the same patches
@@ -952,16 +952,9 @@ object ScoreStream {
                       watermark: String = "2 hours"): DataFrame = {
     import graft.timeseries.{Detect, ModelStore}
     graft.functions.VectorExprs.register(spark)
-    val packed = ModelStore.packedBank(spark, modelPath)
     val thr = ModelStore.threshold(spark, modelPath)
-    patches
-      .withWatermark("ts", watermark)
-      .select(col("ts"), col("series"), col("win"),
-        array(Detect.FeatCols.map(col): _*).as("p"))
-      .crossJoin(broadcast(packed))
-      .withColumn("idx", expr("graft_argmin_dist2(bf, p)"))
-      .withColumn("pscore",
-        sqrt(expr("graft_min_dist2(bf, p)")) * expr("ws[int(idx)]"))
+    Detect.bankScored(patches.withWatermark("ts", watermark),
+        ModelStore.packedBank(spark, modelPath), Seq("ts", "series", "win"))
       .groupBy(window(col("ts"), windowDur), col("series"), col("win"))
       .agg(max("pscore").as("score"))
       .crossJoin(broadcast(thr))

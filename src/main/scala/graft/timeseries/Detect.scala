@@ -147,6 +147,42 @@ object Detect {
           Num.r4(sqrt(form)).as("mdist"))
     }
 
+  /** The capped reference side with the LOUD truncation guard: the
+    * registered q11/q12 stay bit-identical to their exact-uncapped
+    * DuckDB oracles ONLY while no position exceeds maxRef windows — if
+    * a scale bump ever trips the cap, a parity break must point HERE,
+    * not at the pairwise logic. `counts` are the per-position bank
+    * counts of [[positionCounts]]; when none exceeds the cap the capped
+    * set IS the input and no roster rank-join is planned.
+    */
+  private def cappedRef(withId: DataFrame, maxRef: Int, counts: => Seq[Long]): DataFrame = {
+    val over = if (maxRef == Int.MaxValue) 0 else counts.count(_ > maxRef)
+    if (over == 0) withId
+    else {
+      Console.err.println(
+        s"[graft] pairwiseRef: cap maxRef=$maxRef TRUNCATES $over " +
+          "position(s) — capped result now diverges from the exact " +
+          "pairwise (and its oracle) by design")
+      // the candidate roster is the bank's own (pos, id) set — tiny
+      // relative to the pair stream; rank it, keep the first maxRef
+      val wRef = Window.partitionBy("pos").orderBy("id")
+      val refIds = withId.select("pos", "id").distinct()
+        .withColumn("rr", row_number().over(wRef)).filter(col("rr") <= maxRef)
+        .select("pos", "id")
+      withId.join(refIds, Seq("pos", "id"))
+    }
+  }
+
+  /** Bank windows per patch position (one row per (window, pos), so
+    * this is also the position's roster size), collected in ONE job:
+    * ≤ |positions| longs reach the driver.
+    */
+  private def positionCounts(withId: DataFrame): Seq[Long] =
+    withId.groupBy("pos").count().collect().map(_.getLong(1)).toSeq
+
+  private def withBankId(bank: DataFrame): DataFrame =
+    bank.withColumn("id", concat_ws("#", col("series"), col("win")))
+
   /** Pairwise distances against a CAPPED reference set: every patch is
     * still scored, but the neighbour-candidate side is truncated to the
     * deterministic first `maxRef` window ids per position BEFORE the
@@ -158,37 +194,14 @@ object Detect {
     * pairwise (DetectSpec asserts bit-equality), so the oracle stays
     * the exact mirror at test scales.
     */
-  /** The capped reference side with the LOUD truncation guard (one tiny
-    * agg on the roster): the registered q11/q12 stay bit-identical to
-    * their exact-uncapped DuckDB oracles ONLY while no position exceeds
-    * maxRef windows — if a scale bump ever trips the cap, a parity
-    * break must point HERE, not at the pairwise logic.
-    */
-  private def cappedRef(withId: DataFrame, maxRef: Int): DataFrame =
-    if (maxRef == Int.MaxValue) withId
-    else {
-      // the candidate roster is the bank's own (pos, id) set — tiny
-      // relative to the pair stream; rank it, keep the first maxRef
-      val wRef = Window.partitionBy("pos").orderBy("id")
-      val roster = withId.select("pos", "id").distinct()
-      val over = roster.groupBy("pos").count()
-        .filter(col("count") > maxRef).count()
-      if (over > 0)
-        Console.err.println(
-          s"[graft] pairwiseRef: cap maxRef=$maxRef TRUNCATES $over " +
-            "position(s) — capped result now diverges from the exact " +
-            "pairwise (and its oracle) by design")
-      val refIds = roster
-        .withColumn("rr", row_number().over(wRef)).filter(col("rr") <= maxRef)
-        .select("pos", "id")
-      withId.join(refIds, Seq("pos", "id"))
-    }
-
   private[graft] def pairwiseRef(bank: DataFrame, maxRef: Int): DataFrame = {
-    val pid = concat_ws("#", col("series"), col("win"))
-    val withId = bank.withColumn("id", pid)
+    val withId = withBankId(bank)
+    pairs(withId, cappedRef(withId, maxRef, positionCounts(withId)))
+  }
+
+  private def pairs(withId: DataFrame, ref: DataFrame): DataFrame = {
     val a = renamed(withId, "a_")
-    val b = renamed(cappedRef(withId, maxRef), "b_")
+    val b = renamed(ref, "b_")
     a.join(b, col("a_pos") === col("b_pos") && col("a_id") =!= col("b_id"))
       .select(col("a_pos").as("pos"), col("a_id").as("id"), col("b_id").as("nid"),
         sqrt(dist2("a_", "b_")).as("d"))
@@ -219,23 +232,22 @@ object Detect {
                             k: Int, eps: Double,
                             maxBroadcastBytes: Long = KnnBroadcastMaxBytes): DataFrame = {
     graft.functions.VectorExprs.register(spark)
-    val pid = concat_ws("#", col("series"), col("win"))
-    val withId = bank.withColumn("id", pid)
-    // exact packed payload: Σ_pos min(|pos|, maxRef) features × 9 × 8 B
-    // (a |positions|-row partial agg — trivial next to the scan itself)
-    val estBytes = withId.groupBy("pos").agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum(least(col("c"), lit(maxRef.toLong))), lit(0L)))
-      .first().getLong(0) * FeatCols.length * 8L
+    val withId = withBankId(bank)
+    // one per-position count job feeds both guards: the exact packed
+    // payload Σ_pos min(|pos|, maxRef) features × 9 × 8 B, and the cap
+    val counts = positionCounts(withId)
+    val ref = cappedRef(withId, maxRef, counts)
+    val estBytes = counts.map(math.min(_, maxRef.toLong)).sum * FeatCols.length * 8L
     if (estBytes > maxBroadcastBytes) {
       System.err.println(s"[detect] knnRef packed table ~$estBytes B exceeds " +
         s"$maxBroadcastBytes B — falling back to the pairwise+trim plan")
       val trimW = Window.partitionBy("pos", "id").orderBy(col("d"), col("nid"))
-      return pairwiseRef(bank, maxRef)
+      return pairs(withId, ref)
         .withColumn("d", col("d") + eps)
         .withColumn("rn", row_number().over(trimW)).filter(col("rn") <= k)
         .select("pos", "id", "nid", "d")
     }
-    val packed = cappedRef(withId, maxRef)
+    val packed = ref
       .select(col("pos"),
         struct(col("id"), array(FeatCols.map(col): _*).as("fs")).as("s"))
       .groupBy("pos").agg(array_sort(collect_list(col("s"))).as("ps"))
@@ -271,51 +283,95 @@ object Detect {
   def nearestDistWeightExact(spark: SparkSession, sfDir: String): DataFrame =
     nearestDistWeight(spark, sfDir, maxRef = Int.MaxValue)
 
-  /** q23: end-to-end SoftPatch pipeline (ref softpatch.py fit + predict):
-    * nearest-dist patch weights (+1) on the bank → denoise (drop the top
-    * `denoiseThr` weight quantile) → score test patches against the kept
-    * bank → soft re-weight by the matched bank patch's weight → window
-    * score = max → flag windows above the (1−contam) score quantile.
-    * The kept bank stays broadcast; ties on distance break by bank id.
+  /** A weighted bank (id, pos, wgt, f0..f8) packed into ONE broadcastable
+    * row: `bf` = features flattened sorted by (id, pos), `ws` = the
+    * parallel weights — the input shape of [[bankScored]]. The sorted
+    * packing makes the scan's first-index tie-break the oracle's
+    * `ORDER BY d, id` nearest-patch choice.
     */
-  def pipeline(spark: SparkSession, sfDir: String,
-               denoiseThr: Double = 0.15, contamRate: Double = 0.1): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val (bank, test) = TsCore.bankAndTest(spark, sfDir)
-    val w = nearestDistWeight(spark, sfDir).withColumn("wgt", col("w_nearest") + 1.0)
-    // denoise threshold via the distributed range-sort (util.Quantiles),
-    // embedded as a plan literal — at billions of bank patches the old
-    // single-group percentile() buffer was the one non-distributed step
-    val thrW = graft.util.Quantiles.exactLit(w, "wgt", 1.0 - denoiseThr)
-    val bid = bank.withColumn("id", concat_ws("#", col("series"), col("win")))
-    val kept = bid.join(w.select("id", "pos", "wgt"), Seq("id", "pos"))
-      .filter(col("wgt") <= thrW)
-    // Kept bank broadcasts as ONE row: features flattened sorted by
-    // (id, pos) + the parallel weight array. graft_argmin_dist2 keeps
-    // the FIRST index on exact distance ties, so the sorted packing
-    // reproduces the oracle's `ORDER BY d, id` nearest-patch choice.
-    val packed = kept
+  def packBank(bank: DataFrame): DataFrame =
+    bank
       .select(struct(col("id"), col("pos"), col("wgt"),
         array(FeatCols.map(col): _*).as("fs")).as("s"))
       .agg(array_sort(collect_list(col("s"))).as("ps"))
       .select(flatten(expr("transform(ps, x -> x.fs)")).as("bf"),
               expr("transform(ps, x -> x.wgt)").as("ws"))
-    val pscores = test
-      .select(col("series"), col("win"), col("pos"), array(FeatCols.map(col): _*).as("p"))
+
+  /** The weighted nearest-bank patch score `pscore` of every row of
+    * `points` (carrying f0..f8 and the `keep` columns) against a
+    * [[packBank]] row — the one scan behind [[pipeline]],
+    * ModelStore.loadAndScore and streaming.ScoreStream.bankScoreStream.
+    * Each patch scans the bank ONCE: graft_argmin_dist2 picks the
+    * nearest row (first index on exact ties), and that row's squared
+    * distance is graft_l2 over its 9-element slice — the same
+    * ascending fold of the same squared differences as the scan, so
+    * bit-identical to graft_min_dist2 (VectorExprSpec asserts it).
+    * pscore = sqrt(d²) · the matched row's weight.
+    *
+    * A batch `points` table is first spread on (series, win)
+    * (util.Tables.spread: a no-op once the input is split to the
+    * session's parallelism), so the scan runs on every core — a
+    * scored table of a few thousand rows otherwise arrives as ONE
+    * partition — and the callers' per-window max reuses that
+    * exchange. A streaming `points` table is scanned as it arrives.
+    */
+  def bankScored(points: DataFrame, packed: DataFrame, keep: Seq[String]): DataFrame = {
+    val dim = FeatCols.length
+    val pts = if (points.isStreaming) points else graft.util.Tables.spread(points, "series", "win")
+    pts.select(keep.map(col) :+ array(FeatCols.map(col): _*).as("p"): _*)
       .crossJoin(broadcast(packed))
-      .withColumn("idx", expr("graft_argmin_dist2(bf, p)"))
-      .select(col("series"), col("win"),
-        (sqrt(expr("graft_min_dist2(bf, p)")) *
-          expr("ws[int(idx)]")).as("pscore"))
+      .withColumn("idx", expr("int(graft_argmin_dist2(bf, p))"))
+      .select(keep.map(col) :+ (sqrt(expr(s"graft_l2(slice(bf, idx * $dim + 1, $dim), p)")) *
+        expr("ws[idx]")).as("pscore"): _*)
+  }
+
+  /** q23: end-to-end SoftPatch pipeline (ref softpatch.py fit + predict):
+    * nearest-dist patch weights (+1) on the bank → denoise (drop the top
+    * `denoiseThr` weight quantile) → score test patches against the kept
+    * bank → soft re-weight by the matched bank patch's weight → window
+    * score = max → flag windows above the (1−contam) score quantile.
+    * The kept bank broadcasts as one packed row ([[bankScored]]); ties
+    * on distance break by bank id.
+    */
+  def pipeline(spark: SparkSession, sfDir: String,
+               denoiseThr: Double = 0.15, contamRate: Double = 0.1): DataFrame = {
     // window scores materialize once (the threshold pass and the final
     // select would otherwise each recompute the broadcast-kernel scan)
     val winScores = TsCore.cached(spark, sfDir, s"q23ws_$denoiseThr") {
-      pscores.groupBy("series", "win").agg(max("pscore").as("score"))
+      windowScores(spark, sfDir, denoiseThr)
     }
     val thrS = graft.util.Quantiles.exactLit(winScores, "score", 1.0 - contamRate)
     winScores
       .select(col("series"), col("win"), Num.r4(col("score")).as("score"),
         when(col("score") > thrS, 1).otherwise(0).as("pred"))
+  }
+
+  /** q23's per-window scores (series, win, score) before the cache —
+    * the plan PlanSpec inspects behind [[pipeline]]'s cached stage.
+    */
+  private[graft] def windowScores(spark: SparkSession, sfDir: String,
+                                  denoiseThr: Double): DataFrame = {
+    graft.functions.VectorExprs.register(spark)
+    bankScored(TsCore.bankAndTest(spark, sfDir)._2, packBank(keptBank(spark, sfDir, denoiseThr)),
+        Seq("series", "win"))
+      .groupBy("series", "win").agg(max("pscore").as("score"))
+  }
+
+  /** The denoised bank (id, pos, wgt, f0..f8): nearest-dist weights
+    * (+1), the top `denoiseThr` weight quantile dropped — q23's kept
+    * bank and the bank ModelStore.save persists.
+    */
+  private[graft] def keptBank(spark: SparkSession, sfDir: String,
+                              denoiseThr: Double): DataFrame = {
+    val (bank, _) = TsCore.bankAndTest(spark, sfDir)
+    val w = nearestDistWeight(spark, sfDir).withColumn("wgt", col("w_nearest") + 1.0)
+    // denoise threshold via the distributed range-sort (util.Quantiles),
+    // embedded as a plan literal — at billions of bank patches the old
+    // single-group percentile() buffer was the one non-distributed step
+    val thrW = graft.util.Quantiles.exactLit(w, "wgt", 1.0 - denoiseThr)
+    withBankId(bank).join(w.select("id", "pos", "wgt"), Seq("id", "pos"))
+      .filter(col("wgt") <= thrW)
+      .select((Seq("id", "pos", "wgt") ++ FeatCols).map(col): _*)
   }
 
   /** Local Outlier Factor (k=6) per patch position over the bank

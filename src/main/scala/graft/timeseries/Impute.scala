@@ -241,15 +241,18 @@ object Impute {
   def imputeLinear(spark: SparkSession, sfDir: String): DataFrame = {
     val wPrev = Window.partitionBy("series").orderBy("t")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wNext = Window.partitionBy("series").orderBy("t")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    // the next clean point is the LAST one of the reversed running frame
+    // (t is unique per series): a growing frame, where first() over
+    // [current, unbounded following) re-aggregates the tail per row
+    val wNext = Window.partitionBy("series").orderBy(col("t").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val vc = when(col("is_anom") === 0, col("v_anom"))
     val tc = when(col("is_anom") === 0, col("t"))
     flaggedSeries(spark, sfDir)
       .withColumn("vp", last(vc, ignoreNulls = true).over(wPrev))
       .withColumn("tp", last(tc, ignoreNulls = true).over(wPrev))
-      .withColumn("vn", first(vc, ignoreNulls = true).over(wNext))
-      .withColumn("tn", first(tc, ignoreNulls = true).over(wNext))
+      .withColumn("vn", last(vc, ignoreNulls = true).over(wNext))
+      .withColumn("tn", last(tc, ignoreNulls = true).over(wNext))
       .select(col("series"), col("t"), col("is_anom").as("was_anom"),
         Num.r4(when(col("is_anom") === 0, col("v_anom"))
           .when(col("vp").isNotNull && col("vn").isNotNull,

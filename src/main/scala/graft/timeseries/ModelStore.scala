@@ -22,44 +22,20 @@ object ModelStore {
   def save(spark: SparkSession, sfDir: String, path: String,
            denoiseThr: Double = 0.15, contamRate: Double = 0.1): Unit = {
     import spark.implicits._
-    val (bank, _) = TsCore.bankAndTest(spark, sfDir)
-    val w = Detect.nearestDistWeight(spark, sfDir).withColumn("wgt", col("w_nearest") + 1.0)
-    val thrW = graft.util.Quantiles.exactLit(w, "wgt", 1.0 - denoiseThr)
-    val kept = bank.withColumn("id", concat_ws("#", col("series"), col("win")))
-      .join(w.select("id", "pos", "wgt"), Seq("id", "pos"))
-      .filter(col("wgt") <= thrW)
-      .select((Seq("id", "pos", "wgt").map(col) ++ Detect.FeatCols.map(col)): _*)
-    kept.write.mode("overwrite").parquet(s"$path/bank")
+    Detect.keptBank(spark, sfDir, denoiseThr).write.mode("overwrite").parquet(s"$path/bank")
     TsCore.scaleBounds(spark, sfDir).write.mode("overwrite").parquet(s"$path/bounds")
     val scores = Detect.pipeline(spark, sfDir, denoiseThr, contamRate)
     Seq(graft.util.Quantiles.exactOne(scores, "score", 1.0 - contamRate))
       .toDF("threshold").write.mode("overwrite").parquet(s"$path/threshold")
   }
 
-  /** Reload artifacts and score the given patch table (same f0..f8
-    * schema) against the saved bank — no refit. The bank broadcasts as
-    * ONE packed row (features flattened sorted by (id, pos) + the
-    * parallel weight array) and each probe patch runs the codegen
-    * graft_min_dist2 / graft_argmin_dist2 scan — the same shape as
-    * Detect.pipeline, NOT a |patches|×|bank|-row join: the scored side
-    * never widens or shuffles before its (series, win) reduce.
-    * graft_argmin_dist2 keeps the FIRST index on exact distance ties,
-    * so the (id, pos)-sorted packing reproduces the pipeline's
-    * `ORDER BY d, id` nearest-patch choice.
-    */
-  /** The saved bank packed into ONE broadcastable row: features
-    * flattened sorted by (id, pos) plus the parallel weight array —
-    * the input shape of the codegen scan kernels. Shared by the batch
-    * scorer below and the streaming scorer
+  /** The saved bank packed into ONE broadcastable row (Detect.packBank:
+    * features flattened sorted by (id, pos) plus the parallel weight
+    * array). Shared by [[loadAndScore]] and the streaming scorer
     * (streaming.ScoreStream.bankScoreStream).
     */
   def packedBank(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/bank")
-      .select(struct(col("id"), col("pos"), col("wgt"),
-        array(Detect.FeatCols.map(col): _*).as("fs")).as("s"))
-      .agg(array_sort(collect_list(col("s"))).as("ps"))
-      .select(flatten(expr("transform(ps, x -> x.fs)")).as("bf"),
-              expr("transform(ps, x -> x.wgt)").as("ws"))
+    Detect.packBank(spark.read.parquet(s"$path/bank"))
 
   /** The saved score threshold (single row, column `threshold`). */
   def threshold(spark: SparkSession, path: String): DataFrame =
@@ -459,18 +435,17 @@ object ModelStore {
       .withColumn("p_refit", Forecast.refitPred("cutB"))
       .drop(Seq("cutA", "cutB").flatMap(c => (0 to 3).map(i => s"b${i}_$c")): _*)
 
+  /** Reload artifacts and score the given patch table (same f0..f8
+    * schema) against the saved bank — no refit. The scan is
+    * Detect.bankScored, the one Detect.pipeline runs: the scored side
+    * never widens before its (series, win) reduce, and the nearest-
+    * patch tie-break is the pipeline's `ORDER BY d, id`.
+    */
   def loadAndScore(spark: SparkSession, path: String, patches: DataFrame): DataFrame = {
     graft.functions.VectorExprs.register(spark)
-    val packed = packedBank(spark, path)
-    val thr = threshold(spark, path)
-    patches
-      .select(col("series"), col("win"), col("pos"), array(Detect.FeatCols.map(col): _*).as("p"))
-      .crossJoin(broadcast(packed))
-      .withColumn("idx", expr("graft_argmin_dist2(bf, p)"))
-      .select(col("series"), col("win"),
-        (sqrt(expr("graft_min_dist2(bf, p)")) * expr("ws[int(idx)]")).as("pscore"))
+    Detect.bankScored(patches, packedBank(spark, path), Seq("series", "win"))
       .groupBy("series", "win").agg(max("pscore").as("score"))
-      .crossJoin(broadcast(thr))
+      .crossJoin(broadcast(threshold(spark, path)))
       .select(col("series"), col("win"), Num.r4(col("score")).as("score"),
         when(col("score") > col("threshold"), 1).otherwise(0).as("pred"))
   }

@@ -1,6 +1,6 @@
 package graft.timeseries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.util.Num
@@ -60,41 +60,50 @@ object Postprocess {
     * position p extends to [max(0, p−ps/2), min(p+ps/2+1, len−1))
     * — the EXCLUSIVE right end means position 23 is never added by
     * extension (and a spike AT 23 contributes only 19..22), while
-    * already-flagged spikes add nothing. One union of three
-    * (series, win)-local flag builds + a windows-bounded range join
-    * for the extensions — embarrassingly parallel per window.
+    * already-flagged spikes add nothing.
+    *
+    * One window chain over a single (series, win) partitioning: the
+    * heatmap attaches to the scored windows' points once (the heatmap
+    * covers every position of a scored window — windows are complete
+    * and the bank fit has every position), then
+    *   - top patch: `first(pos)` over (mdist DESC, pos);
+    *   - runs: q14's `pos − row_number()` run id, member of a run of
+    *     ≥ minRun points; a point is padded-run flagged when a member
+    *     lies within ±ps/2 (runs are contiguous, so this is exactly
+    *     [rstart − ps/2, rend + ps/2] clipped to the window);
+    *   - spikes: q15's z over the window;
+    *   - extension: a point within ±ps/2 of an unflagged spike, capped
+    *     at DaySize−2.
+    * The ±ps/2 neighbourhoods are RANGE frames over pos, so there is
+    * no flag build, distinct, anti-join or range join to shuffle.
     */
   def anomalyMask(spark: SparkSession, sfDir: String,
                   patchSize: Int = TsCore.FeatPatch, minRun: Int = 2,
                   thr: Double = 2.5): DataFrame = {
     require(patchSize >= 2 && patchSize % 2 == 0, s"patchSize=$patchSize")
     val ps2 = patchSize / 2
-    val top = highestPatchFlags(spark, sfDir, patchSize)
-    val wins = top.select("series", "win").distinct()
-    val grid = TsCore.scaled(spark, sfDir).select("series", "win", "pos")
-      .join(wins, Seq("series", "win"))
-    val consec = consecRuns(spark, sfDir, minRun, ps2)
-      .join(wins, Seq("series", "win"))
-    val spikes = zscoreOutliers(spark, sfDir, thr)
-      .filter(col("flag_spike") === 1).select("series", "win", "pos")
-      .join(wins, Seq("series", "win"))
-    val already = top.select("series", "win", "pos")
-      .unionByName(consec.select("series", "win", "pos")).distinct()
-    val extSrc = spikes.join(already, Seq("series", "win", "pos"), "left_anti")
-      .select(col("series"), col("win"), col("pos").as("p"))
-    val ext = grid.join(extSrc, Seq("series", "win"))
-      .filter(col("pos") >= greatest(col("p") - ps2, lit(0)) &&
-        col("pos") <= least(col("p") + ps2, lit(TsCore.DaySize - 2)))
-      .select("series", "win", "pos").distinct()
-      .withColumn("flag_spike_ext", lit(1))
-    grid
-      .join(top, Seq("series", "win", "pos"), "left")
-      .join(consec, Seq("series", "win", "pos"), "left")
-      .join(ext, Seq("series", "win", "pos"), "left")
-      .select(col("series"), col("win"), col("pos"),
-        coalesce(col("flag_top_patch"), lit(0)).as("flag_top_patch"),
-        coalesce(col("flag_consec"), lit(0)).as("flag_consec"),
-        coalesce(col("flag_spike_ext"), lit(0)).as("flag_spike_ext"))
+    val seq = Window.partitionBy("series", "win").orderBy("pos")
+    val whole = seq.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val near = seq.rangeBetween(-ps2, ps2)
+    val run = Window.partitionBy("series", "win", "vs").orderBy("pos")
+    def flag(c: Column) = when(c, 1).otherwise(0)
+    val fstart = floor(col("top") / patchSize) * patchSize
+    TsCore.scaled(spark, sfDir).select("series", "win", "pos", "vs")
+      .join(Detect.gaussianScore(spark, sfDir), Seq("series", "win", "pos"))
+      .withColumn("top", first("pos")
+        .over(Window.partitionBy("series", "win").orderBy(col("mdist").desc, col("pos"))))
+      .withColumn("runid", col("pos") - row_number().over(run))
+      .withColumn("inrun", flag(count(lit(1))
+        .over(Window.partitionBy("series", "win", "vs", "runid")) >= minRun))
+      .withColumn("z", (col("vs") - avg("vs").over(whole)) / stddev_samp("vs").over(whole))
+      .withColumn("flag_top_patch",
+        flag(col("pos") >= fstart && col("pos") < fstart + patchSize))
+      .withColumn("flag_consec", max("inrun").over(near))
+      .withColumn("extsrc", flag((col("z") > thr || col("z") < -thr) &&
+        col("flag_top_patch") === 0 && col("flag_consec") === 0))
+      .select(col("series"), col("win"), col("pos"), col("flag_top_patch"), col("flag_consec"),
+        flag(col("pos") <= TsCore.DaySize - 2 && max("extsrc").over(near) === 1)
+          .as("flag_spike_ext"))
       .withColumn("mask", greatest(col("flag_top_patch"), col("flag_consec"), col("flag_spike_ext")))
   }
 

@@ -99,12 +99,14 @@ object TsCore {
     * windows are later dropped (ref process_aemo.py:219).
     */
   def fillWeekWalk(sp: DataFrame): DataFrame = {
-    val wPhase = Window.partitionBy("series", "phase").orderBy("t")
+    val wPhase = Window.partitionBy("series", "phase")
+    // both directions are growing frames (t is unique per phase): the
+    // next observation is the LAST one of the reversed running frame
     sp.withColumn("phase", col("t") % WeekLag)
       .withColumn("pv", last("v", ignoreNulls = true)
-        .over(wPhase.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("nv", first("v", ignoreNulls = true)
-        .over(wPhase.rowsBetween(1, Window.unboundedFollowing)))
+        .over(wPhase.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)))
+      .withColumn("nv", last("v", ignoreNulls = true)
+        .over(wPhase.orderBy(col("t").desc).rowsBetween(Window.unboundedPreceding, -1)))
       .withColumn("v_filled", coalesce(col("v"), col("pv"), col("nv")))
       .withColumn("src", when(col("v").isNotNull, lit("obs"))
                           .when(col("pv").isNotNull, lit("lag"))

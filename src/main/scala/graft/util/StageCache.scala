@@ -1,6 +1,8 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.metric.SQLMetric
 
 /** Session-scoped cache of shared pipeline stages, keyed by
   * (session, input dir, stage name). Queries compose the same upstream
@@ -20,10 +22,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * entries until the JVM exits; that is the cost of caching their
   * frames at all.
   */
-object StageCache {
+object StageCache extends AdaptiveSparkPlanHelper {
+
+  /** A cached stage and the SQL metrics of the plan that builds it. */
+  private final case class Entry(df: DataFrame, metrics: Seq[SQLMetric])
 
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Entry]()
 
   private def sweepStopped(): Unit = {
     val it = cache.keySet().iterator()
@@ -47,7 +52,7 @@ object StageCache {
     // computeIfAbsent forbids reentrant updates.
     val key = (spark, sfDir, name)
     val hit = cache.get(key)
-    if (hit != null) hit
+    if (hit != null) hit.df
     else {
       // localCheckpoint (not persist): materializes the stage AND
       // truncates lineage, so downstream plans reference a flat
@@ -60,8 +65,24 @@ object StageCache {
       // saved, same total compute, and the plan is a flat LogicalRDD
       // either way. On a cluster this would be a reliable checkpoint /
       // staged table.
-      cache.putIfAbsent(key, build.localCheckpoint(eager = false))
-      cache.get(key)
+      //
+      // The entry also pins the build plan's SQL metrics. The first
+      // consumer's stages compute the stage's partitions in parallel;
+      // when one of them is a result job (a broadcast collect) it
+      // checkpoints the RDD on completion and clears its lineage — the
+      // last reference to those metrics. A sibling map stage still
+      // running on the same partitions then reports updates to
+      // accumulators the driver has already collected ("DAGScheduler:
+      // Failed to update accumulator … non-existent accumulator", and
+      // the stage's metrics are lost). The metrics are a few longs per
+      // operator; the plan itself (and its broadcasts) is not held.
+      val df = build
+      val staged = df.localCheckpoint(eager = false)
+      val metrics = collectWithSubqueries(df.queryExecution.executedPlan) {
+        case p => p.metrics.values.toSeq
+      }.flatten
+      cache.putIfAbsent(key, Entry(staged, metrics))
+      cache.get(key).df
     }
   }
 }

@@ -261,6 +261,47 @@ class PlanSpec extends SparkSuite {
     }
   }
 
+  test("q50 mask is one (series, win) window chain — ≤ 3 exchanges, ≤ 1 join") {
+    val p = plan(graft.timeseries.Postprocess.anomalyMask(spark, Sf01))
+    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
+    val joins = "(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"
+      .r.findAllIn(p).size
+    assert(exchanges <= 3, s"q50 re-grew its flag-build shuffles ($exchanges):\n${p.take(2000)}")
+    assert(joins <= 1, s"q50 re-grew its flag joins ($joins):\n${p.take(2000)}")
+  }
+
+  test("bank scorers scan the packed bank once per patch — no graft_min_dist2 pass") {
+    import graft.timeseries.{Detect, ModelStore}
+    val dir = java.nio.file.Files.createTempDirectory("planspec-model").toString
+    ModelStore.save(spark, Sf01, dir)
+    val patches = graft.timeseries.TsCore.bankAndTest(spark, Sf01)._2
+    val streamDir = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(dir, "stream")).toString
+    val stream = spark.readStream.schema(patches.schema.add("ts", "timestamp"))
+      .parquet(streamDir)
+    for ((name, df) <- Seq(
+        // q23's scan sits behind its cached window-score stage
+        "q23" -> Detect.windowScores(spark, Sf01, denoiseThr = 0.15),
+        "loadAndScore" -> ModelStore.loadAndScore(spark, dir, patches),
+        "bankScoreStream" -> graft.streaming.ScoreStream.bankScoreStream(spark, dir, stream))) {
+      val p = if (df.isStreaming) df.queryExecution.analyzed.toString else plan(df)
+      assert(p.contains("graft_argmin_dist2"), s"$name lost the scan kernel:\n${p.take(1500)}")
+      assert(!p.contains("graft_min_dist2"), s"$name scans the bank twice:\n${p.take(1500)}")
+    }
+  }
+
+  test("q18/q02 fills use growing frames — no UnboundedFollowing re-aggregation") {
+    import graft.timeseries.{Impute, TsCore}
+    for ((name, df) <- Seq(
+        "q18" -> Impute.imputeLinear(spark, Sf01),
+        "q02" -> TsCore.fillWeekWalk(TsCore.spine(spark, Sf01)))) {
+      val p = plan(df)
+      assert(p.contains("Window"), s"$name lost its window:\n${p.take(1200)}")
+      assert(!p.toLowerCase.contains("unboundedfollowing"),
+        s"$name re-aggregates the tail per row:\n${p.take(1200)}")
+    }
+  }
+
   test("qt13/qt14 probe sides meet broadcast tables — the doc stream never sort-merges") {
     val p13 = plan(graft.text.TextOps.boilerplate(spark, Sf01))
     assert(p13.contains("BroadcastHashJoin"), s"boiler set must broadcast:\n${p13.take(800)}")

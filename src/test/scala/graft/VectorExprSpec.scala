@@ -58,7 +58,10 @@ class VectorExprSpec extends SparkSuite {
     }
     val df = cases.toDF("bank", "p", "dim")
       .selectExpr("bank", "p", "dim",
-        "graft_min_dist2(bank, p) AS kmin", "graft_argmin_dist2(bank, p) AS kidx")
+        "graft_min_dist2(bank, p) AS kmin", "graft_argmin_dist2(bank, p) AS kidx",
+        // the single-pass route of Detect.bankScored: the argmin row's
+        // distance re-read over its slice
+        "graft_l2(slice(bank, int(graft_argmin_dist2(bank, p)) * dim + 1, dim), p) AS kslice")
       .collect()
     df.foreach { r =>
       val bank = r.getAs[scala.collection.Seq[Double]]("bank")
@@ -70,6 +73,9 @@ class VectorExprSpec extends SparkSuite {
       val bruteIdx = d2s.indexWhere(_ == bruteMin) // FIRST index on ties
       assert(r.getAs[Double]("kmin") === bruteMin)
       assert(r.getAs[Long]("kidx") === bruteIdx.toLong)
+      assert(java.lang.Double.doubleToRawLongBits(r.getAs[Double]("kslice")) ===
+        java.lang.Double.doubleToRawLongBits(r.getAs[Double]("kmin")),
+        "slice re-read must equal the scan's min bit-for-bit")
     }
   }
 
@@ -153,9 +159,10 @@ class VectorExprSpec extends SparkSuite {
     import spark.implicits._
     val df = Seq((Array.empty[Double], Array(1.0, 2.0)))
       .toDF("bank", "p")
-      .selectExpr("graft_min_dist2(bank, p) AS m", "graft_argmin_dist2(bank, p) AS i")
+      .selectExpr("graft_min_dist2(bank, p) AS m", "graft_argmin_dist2(bank, p) AS i",
+        "graft_l2(slice(bank, int(graft_argmin_dist2(bank, p)) * 2 + 1, 2), p) AS s")
       .collect()
-    assert(df.head.isNullAt(0) && df.head.isNullAt(1))
+    assert(df.head.isNullAt(0) && df.head.isNullAt(1) && df.head.isNullAt(2))
   }
 
   test("graft_sorted_inter equals size(array_intersect) on 300 random sorted sets") {
