@@ -35,7 +35,7 @@ object Bench {
     r.selectExpr("id", "array(cast(id as double), v) as a",
         "array(v, cast(id as double)) as b")
       .selectExpr("sum(graft_dot(a, b))", "sum(graft_l2(a, b))",
-        "sum(graft_min_dist2(a, b))", "sum(graft_argmin_dist2(a, b))",
+        "sum(graft_argmin_dist2(a, b))",
         "sum(graft_sorted_inter(array(id, id + 97), array(id, id + 31)))").count()
     Seq("lineitem", "orders", "events", "documents", "embeddings", "part",
         "customer", "nation", "region", "supplier")

@@ -1,36 +1,17 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import graft.functions.{ArgMinDist2, DotProduct, L2Dist2, MinDist2, VectorExprs}
+import graft.functions.VectorExprs
 
 /** SparkSessionExtensions entry point: register the engine's native
   * expressions at session build time —
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`).
+  * `.withExtensions(new GraftExtensions)`). Injects every kernel of
+  * VectorExprs.Registrations, the list `VectorExprs.register` uses.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      VectorExprs.DotInfo,
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_l2"),
-      VectorExprs.L2Info,
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        L2Dist2(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_min_dist2"),
-      VectorExprs.MinDist2Info,
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MinDist2(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_argmin_dist2"),
-      VectorExprs.ArgMinDist2Info,
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ArgMinDist2(exprs(0), exprs(1))))
+    VectorExprs.Registrations.foreach(ext.injectFunction)
     // rewrite the idiomatic HOF dot product into the codegen kernel
     ext.injectOptimizerRule(_ => graft.functions.DotRewrite)
   }

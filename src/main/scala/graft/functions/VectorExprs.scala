@@ -166,16 +166,20 @@ case class L2Dist2(left: Expression, right: Expression) extends BinaryExpression
     copy(left = newLeft, right = newRight)
 }
 
-/** Shared kernel: scan a bank of `m = flat.len / dim` points (row-major
-  * flattened, dim = point.len) and return min / argmin of squared L2 to
-  * `point`. Inner sum ascending; strict `<` keeps the FIRST index on
-  * ties, so with a bank sorted by (id, pos) the argmin tie-break matches
-  * the oracle's `ORDER BY d, id`. Replaces an O(n·m)-row broadcast join +
-  * hash-agg with an O(n)-row codegen loop — the difference between a
-  * 180M-row shuffle and 6.7k tight loops at sf0.1, and the reason the
-  * scored side never shuffles at 100 TB.
+/** 0-based index of the nearest bank row (null if the bank is empty):
+  * scans a bank of `m = flat.len / dim` points (row-major flattened,
+  * dim = point.len) for the least squared L2 to `point`. Inner sum
+  * ascending; strict `<` keeps the FIRST index on ties, so with a bank
+  * sorted by (id, pos) the tie-break matches the oracle's
+  * `ORDER BY d, id`. The nearest row's distance is graft_l2 over its
+  * slice — the same fold of the same squared differences, so equal to
+  * the scan's minimum bit-for-bit (VectorExprSpec asserts it).
+  * Replaces an O(n·m)-row broadcast join + hash-agg with an O(n)-row
+  * codegen loop — the difference between a 180M-row shuffle and 6.7k
+  * tight loops at sf0.1, and the reason the scored side never shuffles
+  * at 100 TB.
   */
-sealed trait BankScanDist2 extends BinaryExpression {
+case class ArgMinDist2(left: Expression, right: Expression) extends BinaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = {
     val ok = Seq(left, right).forall(_.dataType match {
       case ArrayType(DoubleType, _) => true
@@ -185,9 +189,11 @@ sealed trait BankScanDist2 extends BinaryExpression {
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires array<double> inputs, got ${left.dataType} / ${right.dataType}")
   }
+  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def prettyName: String = "graft_argmin_dist2"
+  override def nullable: Boolean = true
 
-  /** @return (minD2, argminIndex) over the flattened bank. */
-  protected final def scan(a: Any, b: Any): (Double, Long) = {
+  override def nullSafeEval(a: Any, b: Any): Any = {
     val flat = a.asInstanceOf[ArrayData]
     val p = b.asInstanceOf[ArrayData]
     val dim = p.numElements()
@@ -203,80 +209,34 @@ sealed trait BankScanDist2 extends BinaryExpression {
       if (s < best) { best = s; bi = i.toLong }
       i += 1
     }
-    (best, bi)
-  }
-
-  protected final def scanCode(ctx: CodegenContext, a: String, b: String,
-                               best: String, bi: String): String = {
-    val dim = ctx.freshName("dim")
-    val m = ctx.freshName("m")
-    val i = ctx.freshName("i")
-    val j = ctx.freshName("j")
-    val off = ctx.freshName("off")
-    val s = ctx.freshName("s")
-    val d = ctx.freshName("d")
-    s"""
-       |int $dim = $b.numElements();
-       |int $m = ($dim == 0) ? 0 : $a.numElements() / $dim;
-       |double $best = Double.POSITIVE_INFINITY;
-       |long $bi = -1L;
-       |for (int $i = 0; $i < $m; $i++) {
-       |  double $s = 0.0;
-       |  int $off = $i * $dim;
-       |  for (int $j = 0; $j < $dim; $j++) {
-       |    double $d = $b.getDouble($j) - $a.getDouble($off + $j);
-       |    $s += $d * $d;
-       |  }
-       |  if ($s < $best) { $best = $s; $bi = (long) $i; }
-       |}
-     """.stripMargin
-  }
-}
-
-/** Min squared L2 distance from `point` to any bank row (null if empty). */
-case class MinDist2(left: Expression, right: Expression) extends BankScanDist2 {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_min_dist2"
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (best, bi) = scan(a, b)
-    if (bi < 0) null else best
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val best = ctx.freshName("best")
-      val bi = ctx.freshName("bi")
-      s"""
-         |${scanCode(ctx, a, b, best, bi)}
-         |if ($bi < 0) { ${ev.isNull} = true; } else { ${ev.value} = $best; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** 0-based index of the nearest bank row (first index on ties; null if
-  * the bank is empty).
-  */
-case class ArgMinDist2(left: Expression, right: Expression) extends BankScanDist2 {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def prettyName: String = "graft_argmin_dist2"
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (_, bi) = scan(a, b)
     if (bi < 0) null else bi
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
+      val dim = ctx.freshName("dim")
+      val m = ctx.freshName("m")
+      val i = ctx.freshName("i")
+      val j = ctx.freshName("j")
+      val off = ctx.freshName("off")
+      val s = ctx.freshName("s")
+      val d = ctx.freshName("d")
       val best = ctx.freshName("best")
       val bi = ctx.freshName("bi")
       s"""
-         |${scanCode(ctx, a, b, best, bi)}
+         |int $dim = $b.numElements();
+         |int $m = ($dim == 0) ? 0 : $a.numElements() / $dim;
+         |double $best = Double.POSITIVE_INFINITY;
+         |long $bi = -1L;
+         |for (int $i = 0; $i < $m; $i++) {
+         |  double $s = 0.0;
+         |  int $off = $i * $dim;
+         |  for (int $j = 0; $j < $dim; $j++) {
+         |    double $d = $b.getDouble($j) - $a.getDouble($off + $j);
+         |    $s += $d * $d;
+         |  }
+         |  if ($s < $best) { $best = $s; $bi = (long) $i; }
+         |}
          |if ($bi < 0) { ${ev.isNull} = true; } else { ${ev.value} = $bi; }
        """.stripMargin
     })
@@ -477,13 +437,14 @@ case class KnnDist(children: Seq[Expression]) extends Expression
 }
 
 object VectorExprs {
-  val DotInfo = new ExpressionInfo(classOf[DotProduct].getName, "graft_dot")
-  val L2Info = new ExpressionInfo(classOf[L2Dist2].getName, "graft_l2")
-  val MinDist2Info = new ExpressionInfo(classOf[MinDist2].getName, "graft_min_dist2")
-  val ArgMinDist2Info = new ExpressionInfo(classOf[ArgMinDist2].getName, "graft_argmin_dist2")
 
-  /** The full kernel set, name → builder — one list so registration
-    * can never drift from the set of names operators resolve.
+  private def kernel[T <: Expression](name: String, cls: Class[T])(build: Seq[Expression] => T)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** The full kernel set, (name, info, builder) — one list behind both
+    * [[register]] and graft.GraftExtensions, so neither route can drift
+    * from the set of names operators resolve.
     * graft_bloom_agg / graft_might_contain expose Spark's own
     * runtime-filter bloom expressions as addressable SQL functions:
     * bloom_agg(xxhash64(key), nItems, nBits) builds the
@@ -492,19 +453,20 @@ object VectorExprs {
     * for InjectRuntimeFilter, here explicit for bloom-prefiltered
     * operators (Dedup.bloomIncrementalDedup).
     */
-  private val Registrations: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_dot" -> (exprs => DotProduct(exprs(0), exprs(1))),
-    "graft_l2" -> (exprs => L2Dist2(exprs(0), exprs(1))),
-    "graft_min_dist2" -> (exprs => MinDist2(exprs(0), exprs(1))),
-    "graft_argmin_dist2" -> (exprs => ArgMinDist2(exprs(0), exprs(1))),
-    "graft_sorted_inter" -> (exprs => SortedInterCount(exprs(0), exprs(1))),
-    "graft_knn" -> (exprs => KnnDist(exprs)),
-    "graft_bloom_agg" ->
-      (exprs => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        exprs(0), exprs(1), exprs(2))),
-    "graft_might_contain" ->
-      (exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        exprs(0), exprs(1))))
+  private[graft] val Registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    Seq(
+      kernel("graft_dot", classOf[DotProduct])(e => DotProduct(e(0), e(1))),
+      kernel("graft_l2", classOf[L2Dist2])(e => L2Dist2(e(0), e(1))),
+      kernel("graft_argmin_dist2", classOf[ArgMinDist2])(e => ArgMinDist2(e(0), e(1))),
+      kernel("graft_sorted_inter", classOf[SortedInterCount])(e => SortedInterCount(e(0), e(1))),
+      kernel("graft_knn", classOf[KnnDist])(e => KnnDist(e)),
+      kernel("graft_bloom_agg", classOf[BloomFilterAggregate])(
+        e => new BloomFilterAggregate(e(0), e(1), e(2))),
+      kernel("graft_might_contain", classOf[BloomFilterMightContain])(
+        e => BloomFilterMightContain(e(0), e(1))))
+  }
 
   /** Idempotent per-session registration; use `expr("graft_dot(a, b)")`. */
   def register(spark: SparkSession): Unit = {
@@ -517,9 +479,8 @@ object VectorExprs {
     // each name individually means a session where one name already
     // exists (user-registered, or set drift across versions) still gets
     // every MISSING kernel registered instead of silently none.
-    Registrations.foreach { case (name, builder) =>
-      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    Registrations.foreach { case (id, info, builder) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
     }
   }
 }

@@ -3,7 +3,7 @@ package graft.timeseries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.util.Num
+import graft.util.{Num, StageCache}
 
 /** Memory-bank anomaly detection operators (reference:
   * src/anomaly_detection/softpatch.py, common.py NearestNeighbourScorer,
@@ -28,25 +28,17 @@ object Detect {
 
   /** q09: kNN (k=1) anomaly score — distance from each test patch to its
     * nearest bank patch; window score = max over patches (ref
-    * softpatch.py _predict + PatchMaker.score). Bank is broadcast: the
-    * scored side streams map-side.
+    * softpatch.py _predict + PatchMaker.score). The unweighted bank
+    * (wgt = 1) packs into one broadcast row and each test patch scans it
+    * once ([[bankScored]]) — the scored side never widens or shuffles,
+    * which is the 100 TB contract. x · 1.0 == x, and sqrt of the nearest
+    * row's squared distance equals the oracle's min over sqrt'd
+    * distances (sqrt is monotone).
     */
   def knnScore(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.VectorExprs.register(spark)
     val (bank, test) = TsCore.bankAndTest(spark, sfDir)
-    // The whole bank broadcasts as ONE flattened array row; each test
-    // patch runs the codegen'd graft_min_dist2 scan (min is
-    // order-independent, so collect_list order doesn't matter). This
-    // replaces a |test|×|bank|-row broadcast join + hash-agg with one
-    // tight loop per test row — the scored side never widens or
-    // shuffles, which is the 100 TB contract.
-    // min over squared distances, sqrt once per patch: sqrt is monotone,
-    // so sqrt(min(d2)) == min(sqrt(d2)) exactly — matches the oracle.
-    val bankRow = bank.agg(flatten(collect_list(array(FeatCols.map(col): _*))).as("bf"))
-    test.select(col("series"), col("win"), col("pos"), array(FeatCols.map(col): _*).as("p"))
-      .crossJoin(broadcast(bankRow))
-      .select(col("series"), col("win"), col("pos"),
-        sqrt(expr("graft_min_dist2(bf, p)")).as("pscore"))
+    bankScored(test, packBank(withBankId(bank).withColumn("wgt", lit(1.0))), Seq("series", "win"))
       .groupBy("series", "win")
       .agg(Num.r4(max("pscore")).as("score"))
   }
@@ -269,7 +261,7 @@ object Detect {
     */
   def nearestDistWeight(spark: SparkSession, sfDir: String,
                         maxRef: Int = 10000): DataFrame =
-    TsCore.cached(spark, sfDir, s"nnweight_$maxRef") {
+    StageCache.cached(spark, sfDir, s"nnweight_$maxRef") {
       val (bank, _) = TsCore.bankAndTest(spark, sfDir)
       // k=1, eps=0: the kernel's single winner IS min(raw d) — sqrt+0.0
       // is bit-identical to sqrt on IEEE doubles
@@ -299,13 +291,13 @@ object Detect {
 
   /** The weighted nearest-bank patch score `pscore` of every row of
     * `points` (carrying f0..f8 and the `keep` columns) against a
-    * [[packBank]] row — the one scan behind [[pipeline]],
+    * [[packBank]] row — the one scan behind [[knnScore]], [[pipeline]],
     * ModelStore.loadAndScore and streaming.ScoreStream.bankScoreStream.
     * Each patch scans the bank ONCE: graft_argmin_dist2 picks the
     * nearest row (first index on exact ties), and that row's squared
     * distance is graft_l2 over its 9-element slice — the same
     * ascending fold of the same squared differences as the scan, so
-    * bit-identical to graft_min_dist2 (VectorExprSpec asserts it).
+    * bit-identical to the scan's minimum (VectorExprSpec asserts it).
     * pscore = sqrt(d²) · the matched row's weight.
     *
     * A batch `points` table is first spread on (series, win)
@@ -337,7 +329,7 @@ object Detect {
                denoiseThr: Double = 0.15, contamRate: Double = 0.1): DataFrame = {
     // window scores materialize once (the threshold pass and the final
     // select would otherwise each recompute the broadcast-kernel scan)
-    val winScores = TsCore.cached(spark, sfDir, s"q23ws_$denoiseThr") {
+    val winScores = StageCache.cached(spark, sfDir, s"q23ws_$denoiseThr") {
       windowScores(spark, sfDir, denoiseThr)
     }
     val thrS = graft.util.Quantiles.exactLit(winScores, "score", 1.0 - contamRate)

@@ -3,7 +3,7 @@ package graft.timeseries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.util.{Joins, Num}
+import graft.util.{Joins, Num, StageCache}
 
 /** Load forecasting capability (reference: src/forecasting/ seq2seq GRU /
   * SCINet). Re-expressed Spark-first: a seasonal-naive baseline and a
@@ -87,38 +87,14 @@ object Forecast {
       Num.r4(col("mae")).as("mae"), Num.r4(col("rmse")).as("rmse"))
   }
 
-  /** 3-feature OLS fit over a train frame (series, y, x1..x3) →
-    * per-series coefficients — the Cramer solve shared by q22 and
-    * q54's per-fold refits (identical expression structure in
-    * TsOracle.q22/q54 for bit parity).
+  /** The 3-lag OLS fit (series, b1, b2, b3, b0) over a train frame
+    * (series, y, x1..x3) — q22/q26/q60/q64's [[Ols]] solve.
     */
-  private def olsFit(train: DataFrame): DataFrame = {
-    val means = train.groupBy("series").agg(
-      avg("y").as("my"), avg("x1").as("m1"), avg("x2").as("m2"), avg("x3").as("m3"))
-    def c(a: String, ma: String, b: String, mb: String) =
-      sum((col(a) - col(ma)) * (col(b) - col(mb)))
-    val stats = Joins.dimJoin(train, means, Seq("series"), None).groupBy("series").agg(
-      c("x1", "m1", "x1", "m1").as("s11"), c("x1", "m1", "x2", "m2").as("s12"),
-      c("x1", "m1", "x3", "m3").as("s13"), c("x2", "m2", "x2", "m2").as("s22"),
-      c("x2", "m2", "x3", "m3").as("s23"), c("x3", "m3", "x3", "m3").as("s33"),
-      c("x1", "m1", "y", "my").as("sy1"), c("x2", "m2", "y", "my").as("sy2"),
-      c("x3", "m3", "y", "my").as("sy3"))
-    val det = col("s11") * (col("s22") * col("s33") - col("s23") * col("s23")) -
-      col("s12") * (col("s12") * col("s33") - col("s23") * col("s13")) +
-      col("s13") * (col("s12") * col("s23") - col("s22") * col("s13"))
-    val b1 = (col("sy1") * (col("s22") * col("s33") - col("s23") * col("s23")) -
-      col("s12") * (col("sy2") * col("s33") - col("s23") * col("sy3")) +
-      col("s13") * (col("sy2") * col("s23") - col("s22") * col("sy3"))) / det
-    val b2 = (col("s11") * (col("sy2") * col("s33") - col("sy3") * col("s23")) -
-      col("sy1") * (col("s12") * col("s33") - col("s23") * col("s13")) +
-      col("s13") * (col("s12") * col("sy3") - col("sy2") * col("s13"))) / det
-    val b3 = (col("s11") * (col("s22") * col("sy3") - col("s23") * col("sy2")) -
-      col("s12") * (col("s12") * col("sy3") - col("sy2") * col("s13")) +
-      col("sy1") * (col("s12") * col("s23") - col("s22") * col("s13"))) / det
-    Joins.dimJoin(stats, means, Seq("series"), None)
-      .select(col("series"), b1.as("b1"), b2.as("b2"), b3.as("b3"),
-        (col("my") - b1 * col("m1") - b2 * col("m2") - b3 * col("m3")).as("b0"))
-  }
+  private def olsFit(train: DataFrame): DataFrame =
+    Ols.fit(train, Seq("series"), Seq(Ols.Fit("", Lags)))
+
+  /** The lag regressors every forecast fit uses. */
+  private val Lags = ("x1", "x2", "x3")
 
   /** The grouped per-series normal-equations solve over a lagBase-shaped
     * frame — one shuffle for the sufficient statistics, a broadcast of
@@ -222,65 +198,24 @@ object Forecast {
           lag("y", h + TsCore.DaySize - 1).over(w).as(s"x2_$h"),
           lag("y", h + TsCore.WeekLag - 1).over(w).as(s"x3_$h"))
     }
-    val combined = TsCore.cached(spark, sfDir, s"q39lags_${horizons.mkString("_")}") {
+    val combined = StageCache.cached(spark, sfDir, s"q39lags_${horizons.mkString("_")}") {
       TsCore.filled(spark, sfDir)
         .select(col("series"), col("t"), col("v_filled").as("y"))
         .select(Seq(col("series"), col("t"), col("y")) ++ lagCols: _*)
         .transform(Joins.dimJoin(_, boundaryT(spark, sfDir), Seq("series"), None))
     }
-    // ALL horizons solve in THREE shared aggregation passes (means →
-    // centered sums → test errors) with per-horizon when(ok_h, …) guards,
-    // instead of |h| independent olsSolve chains (4 shuffling stages
-    // each). A conditional sum visits the same rows in the same scan
-    // order as the filtered frame it replaces, so every sufficient
-    // statistic — and therefore every coefficient and error — is
-    // bit-identical to the per-horizon solve (h=1 ≡ q22 stays asserted
-    // in ForecastImputeSpec; the oracle CTE chain is unchanged).
+    // ALL horizons solve in THREE shared aggregation passes (the two
+    // Ols passes, then test errors) with per-horizon when(ok_h, …)
+    // guards, instead of |h| independent olsSolve chains (4 shuffling
+    // stages each). The guarded passes are bit-identical to the
+    // per-horizon solve (h=1 ≡ q22 is asserted in ForecastImputeSpec).
     def ok(h: Int) = col("y").isNotNull && col(s"x1_$h").isNotNull &&
       col(s"x2_$h").isNotNull && col(s"x3_$h").isNotNull
     val train = combined.filter(col("t") < col("tsplit"))
     val test = combined.filter(col("t") >= col("tsplit"))
-    val meanAggs = horizons.flatMap { h => Seq(
-      avg(when(ok(h), col("y"))).as(s"my_$h"),
-      avg(when(ok(h), col(s"x1_$h"))).as(s"m1_$h"),
-      avg(when(ok(h), col(s"x2_$h"))).as(s"m2_$h"),
-      avg(when(ok(h), col(s"x3_$h"))).as(s"m3_$h")) }
-    val means = train.groupBy("series").agg(meanAggs.head, meanAggs.tail: _*)
-    def cc(h: Int, a: String, ma: String, b: String, mb: String) =
-      sum(when(ok(h), (col(a) - col(ma)) * (col(b) - col(mb))))
-    val statAggs = horizons.flatMap { h => Seq(
-      cc(h, s"x1_$h", s"m1_$h", s"x1_$h", s"m1_$h").as(s"s11_$h"),
-      cc(h, s"x1_$h", s"m1_$h", s"x2_$h", s"m2_$h").as(s"s12_$h"),
-      cc(h, s"x1_$h", s"m1_$h", s"x3_$h", s"m3_$h").as(s"s13_$h"),
-      cc(h, s"x2_$h", s"m2_$h", s"x2_$h", s"m2_$h").as(s"s22_$h"),
-      cc(h, s"x2_$h", s"m2_$h", s"x3_$h", s"m3_$h").as(s"s23_$h"),
-      cc(h, s"x3_$h", s"m3_$h", s"x3_$h", s"m3_$h").as(s"s33_$h"),
-      cc(h, s"x1_$h", s"m1_$h", "y", s"my_$h").as(s"sy1_$h"),
-      cc(h, s"x2_$h", s"m2_$h", "y", s"my_$h").as(s"sy2_$h"),
-      cc(h, s"x3_$h", s"m3_$h", "y", s"my_$h").as(s"sy3_$h")) }
-    val stats = Joins.dimJoin(train, means, Seq("series"), None)
-      .groupBy("series").agg(statAggs.head, statAggs.tail: _*)
-    // per-horizon Cramer's rule — the same expression structure as
-    // olsSolve (and TsOracle.q39), just on suffixed columns
-    val coefCols = horizons.flatMap { h =>
-      def s(n: String) = col(s"$n$h")
-      val det = s("s11_") * (s("s22_") * s("s33_") - s("s23_") * s("s23_")) -
-        s("s12_") * (s("s12_") * s("s33_") - s("s23_") * s("s13_")) +
-        s("s13_") * (s("s12_") * s("s23_") - s("s22_") * s("s13_"))
-      val b1 = (s("sy1_") * (s("s22_") * s("s33_") - s("s23_") * s("s23_")) -
-        s("s12_") * (s("sy2_") * s("s33_") - s("s23_") * s("sy3_")) +
-        s("s13_") * (s("sy2_") * s("s23_") - s("s22_") * s("sy3_"))) / det
-      val b2 = (s("s11_") * (s("sy2_") * s("s33_") - s("sy3_") * s("s23_")) -
-        s("sy1_") * (s("s12_") * s("s33_") - s("s23_") * s("s13_")) +
-        s("s13_") * (s("s12_") * s("sy3_") - s("sy2_") * s("s13_"))) / det
-      val b3 = (s("s11_") * (s("s22_") * s("sy3_") - s("s23_") * s("sy2_")) -
-        s("s12_") * (s("s12_") * s("sy3_") - s("sy2_") * s("s13_")) +
-        s("sy1_") * (s("s12_") * s("s23_") - s("s22_") * s("s13_"))) / det
-      Seq(b1.as(s"b1_$h"), b2.as(s"b2_$h"), b3.as(s"b3_$h"),
-        (s("my_") - b1 * s("m1_") - b2 * s("m2_") - b3 * s("m3_")).as(s"b0_$h"))
-    }
-    val coefs = Joins.dimJoin(stats, means, Seq("series"), None)
-      .select(col("series") +: coefCols: _*)
+    val coefs = Ols.fit(train, Seq("series"), horizons.map { h =>
+      Ols.Fit(s"_$h", (s"x1_$h", s"x2_$h", s"x3_$h"), Some(ok(h)))
+    })
     val errAggs = horizons.flatMap { h =>
       val p = col(s"b0_$h") + col(s"b1_$h") * col(s"x1_$h") +
         col(s"b2_$h") * col(s"x2_$h") + col(s"b3_$h") * col(s"x3_$h")
@@ -404,7 +339,7 @@ object Forecast {
   private[timeseries] def decomposeBase(spark: SparkSession, sfDir: String,
                                         half: Int): DataFrame = {
     require(half >= 1, s"half=$half: trend frame half-width must be positive")
-    TsCore.cached(spark, sfDir, s"decbase_$half") {
+    StageCache.cached(spark, sfDir, s"decbase_$half") {
       val w = 2 * half + 1
       val ws = Window.partitionBy("series").orderBy("t")
       val cumW = ws.rowsBetween(Window.unboundedPreceding, 0)
@@ -629,7 +564,7 @@ object Forecast {
   private[graft] def decomposeBaseTrailing(spark: SparkSession, sfDir: String,
                                            half: Int): DataFrame = {
     require(half >= 1, s"half=$half: trend frame half-width must be positive")
-    TsCore.cached(spark, sfDir, s"decbaset_$half") {
+    StageCache.cached(spark, sfDir, s"decbaset_$half") {
       val w = 2 * half + 1
       val ws = Window.partitionBy("series").orderBy("t")
       val cumW = ws.rowsBetween(Window.unboundedPreceding, 0)
@@ -870,6 +805,15 @@ SELECT series, period, n, power,
 FROM pows"""
   }
 
+  /** Per-series 3-lag OLS fits over a lag+cuts frame, one per suffix
+    * `sf`, trained on the rows where ok(sf) holds (b0_sf..b3_sf) —
+    * q54's expanding folds and q62's stale/refit cuts, in the same two
+    * [[Ols]] passes.
+    */
+  private def condOlsCoefs(withB: DataFrame, sufs: Seq[String],
+                           ok: String => Column): DataFrame =
+    Ols.fit(withB, Seq("series"), sufs.map(sf => Ols.Fit(s"_$sf", Lags, Some(ok(sf)))))
+
   /** q54: expanding-window refit backtest — the proper model evaluation
     * next to q35's persistence backtest: q22's 3-lag OLS is REFIT at
     * each fold boundary (per-series fractions of the feature range) and
@@ -885,68 +829,12 @@ FROM pows"""
     * lag table. A conditional aggregate visits the same rows in the
     * same scan order as the filtered frame it replaces, so every
     * sufficient statistic, coefficient and error is bit-identical to
-    * the per-fold solve (the oracle CTE chain is unchanged). The
+    * the per-fold solve. The
     * |series|-scale boundary/mean/coefficient frames join through
     * [[graft.util.Joins.dimJoin]]'s size-aware (None) path — at
     * millions of meters they are tens of MB and must not be
     * unconditionally broadcast.
     */
-  /** Conditional MULTI-MODEL OLS fit over a lag+cuts frame: for each
-    * suffix `s` with train predicate ok(s), the per-series
-    * (b0_s..b3_s) coefficients from the two conditional sufficient-
-    * statistics passes — olsFit's exact expression structure
-    * (means → centered scatter → Cramer), generated ONCE and shared by
-    * q54's expanding folds and q62's stale/refit cuts so the
-    * determinant algebra cannot diverge between them. A conditional
-    * aggregate visits the same rows in the same scan order as the
-    * filtered frame it replaces, so each model's coefficients are
-    * bit-identical to a dedicated per-cut solve.
-    */
-  private def condOlsCoefs(withB: DataFrame, sufs: Seq[String],
-                           ok: String => Column): DataFrame = {
-    val meanAggs = sufs.flatMap { sf => Seq(
-      avg(when(ok(sf), col("y"))).as(s"my_$sf"),
-      avg(when(ok(sf), col("x1"))).as(s"m1_$sf"),
-      avg(when(ok(sf), col("x2"))).as(s"m2_$sf"),
-      avg(when(ok(sf), col("x3"))).as(s"m3_$sf")) }
-    val means = withB.groupBy("series").agg(meanAggs.head, meanAggs.tail: _*)
-    def cc(sf: String, a: String, ma: String, b: String, mb: String) =
-      sum(when(ok(sf), (col(a) - col(ma)) * (col(b) - col(mb))))
-    val statAggs = sufs.flatMap { sf => Seq(
-      cc(sf, "x1", s"m1_$sf", "x1", s"m1_$sf").as(s"s11_$sf"),
-      cc(sf, "x1", s"m1_$sf", "x2", s"m2_$sf").as(s"s12_$sf"),
-      cc(sf, "x1", s"m1_$sf", "x3", s"m3_$sf").as(s"s13_$sf"),
-      cc(sf, "x2", s"m2_$sf", "x2", s"m2_$sf").as(s"s22_$sf"),
-      cc(sf, "x2", s"m2_$sf", "x3", s"m3_$sf").as(s"s23_$sf"),
-      cc(sf, "x3", s"m3_$sf", "x3", s"m3_$sf").as(s"s33_$sf"),
-      cc(sf, "x1", s"m1_$sf", "y", s"my_$sf").as(s"sy1_$sf"),
-      cc(sf, "x2", s"m2_$sf", "y", s"my_$sf").as(s"sy2_$sf"),
-      cc(sf, "x3", s"m3_$sf", "y", s"my_$sf").as(s"sy3_$sf")) }
-    val stats = graft.util.Joins.dimJoin(withB, means, Seq("series"), None)
-      .groupBy("series").agg(statAggs.head, statAggs.tail: _*)
-    // per-model Cramer's rule — the exact expression structure of
-    // olsFit (and TsOracle.q54/q62), on suffixed columns
-    val coefCols = sufs.flatMap { sf =>
-      def s(n: String) = col(s"$n$sf")
-      val det = s("s11_") * (s("s22_") * s("s33_") - s("s23_") * s("s23_")) -
-        s("s12_") * (s("s12_") * s("s33_") - s("s23_") * s("s13_")) +
-        s("s13_") * (s("s12_") * s("s23_") - s("s22_") * s("s13_"))
-      val b1 = (s("sy1_") * (s("s22_") * s("s33_") - s("s23_") * s("s23_")) -
-        s("s12_") * (s("sy2_") * s("s33_") - s("s23_") * s("sy3_")) +
-        s("s13_") * (s("sy2_") * s("s23_") - s("s22_") * s("sy3_"))) / det
-      val b2 = (s("s11_") * (s("sy2_") * s("s33_") - s("sy3_") * s("s23_")) -
-        s("sy1_") * (s("s12_") * s("s33_") - s("s23_") * s("s13_")) +
-        s("s13_") * (s("s12_") * s("sy3_") - s("sy2_") * s("s13_"))) / det
-      val b3 = (s("s11_") * (s("s22_") * s("sy3_") - s("s23_") * s("sy2_")) -
-        s("s12_") * (s("s12_") * s("sy3_") - s("sy2_") * s("s13_")) +
-        s("sy1_") * (s("s12_") * s("s23_") - s("s22_") * s("s13_"))) / det
-      Seq(b1.as(s"b1_$sf"), b2.as(s"b2_$sf"), b3.as(s"b3_$sf"),
-        (s("my_") - b1 * s("m1_") - b2 * s("m2_") - b3 * s("m3_")).as(s"b0_$sf"))
-    }
-    graft.util.Joins.dimJoin(stats, means, Seq("series"), None)
-      .select(col("series") +: coefCols: _*)
-  }
-
   def refitBacktest(spark: SparkSession, sfDir: String,
                     fracs: Seq[Double] = Seq(0.7, 0.8, 0.9)): DataFrame = {
     require(fracs.nonEmpty && fracs == fracs.sorted && fracs.distinct == fracs
@@ -964,7 +852,7 @@ FROM pows"""
     // materialize the lag+boundary frame ONCE (q39's discipline): the
     // three agg passes below otherwise each re-derive the per-series
     // window sort — 4 lag passes where one suffices
-    val withB = TsCore.cached(spark, sfDir, s"q54lags_${fracs.mkString("_")}") {
+    val withB = StageCache.cached(spark, sfDir, s"q54lags_${fracs.mkString("_")}") {
       graft.util.Joins.dimJoin(base, bnds.drop("t0", "t1"), Seq("series"), None)
     }
     def trainOk(i: Int) = col("t") < col(s"cut$i")
@@ -1037,7 +925,7 @@ FROM pows"""
     val cuts = rng.select(col("series"),
       (col("t0") + floor((col("t1") - col("t0") + 1) * fracA).cast("long")).as("cutA"),
       (col("t0") + floor((col("t1") - col("t0") + 1) * fracB).cast("long")).as("cutB"))
-    TsCore.cached(spark, sfDir, s"q62lags_${fracA}_$fracB") {
+    StageCache.cached(spark, sfDir, s"q62lags_${fracA}_$fracB") {
       graft.util.Joins.dimJoin(base, cuts, Seq("series"), None)
     }
   }
@@ -1052,7 +940,7 @@ FROM pows"""
     */
   private[graft] def refitArtifact(spark: SparkSession, sfDir: String,
                                    fracA: Double = 0.7, fracB: Double = 0.85): DataFrame =
-    TsCore.cached(spark, sfDir, s"q62art_${fracA}_$fracB") {
+    StageCache.cached(spark, sfDir, s"q62art_${fracA}_$fracB") {
       val withB = refitLags(spark, sfDir, fracA, fracB)
       graft.util.Joins.dimJoin(
         withB.select("series", "cutA", "cutB").distinct(),
@@ -1182,7 +1070,7 @@ FROM pows"""
     require(rollH >= 1, s"rollH=$rollH")
     val w = Window.partitionBy("series").orderBy("t")
     val wRoll = w.rowsBetween(-rollH, -1)
-    TsCore.cached(spark, sfDir, s"q56base_$rollH") {
+    StageCache.cached(spark, sfDir, s"q56base_$rollH") {
       val f = TsCore.filled(spark, sfDir)
         .select(col("series"), col("t"), col("v_filled").as("y"))
         .withColumn("yq", floor(col("y") * 10000d + 0.5d).cast("long"))
@@ -1360,7 +1248,7 @@ FROM pows"""
     * cache the per-series lag window and the boundary join run twice.
     */
   private[timeseries] def conformalResiduals(spark: SparkSession, sfDir: String): DataFrame =
-    TsCore.cached(spark, sfDir, "q58resid") {
+    StageCache.cached(spark, sfDir, "q58resid") {
       snSpine(spark, sfDir)
         .filter(col("y").isNotNull && col("p").isNotNull)
         .withColumn("tcal", col("tsplit") - lit(TsCore.WeekLag))

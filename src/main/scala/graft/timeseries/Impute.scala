@@ -139,33 +139,8 @@ object Impute {
       .select(col("series"), (col("pos") - col("mi")).as("o"),
         col("v").as("y"), col("xl"), col("xr"), col("xs"))
 
-    // ---- per-(series, offset) ridge via q22's Cramer structure ----
-    val means = trainRows.groupBy("series", "o").agg(
-      avg("y").as("my"), avg("xl").as("m1"), avg("xr").as("m2"), avg("xs").as("m3"))
-    def c(a: String, ma: String, b: String, mb: String) =
-      sum((col(a) - col(ma)) * (col(b) - col(mb)))
-    val stats = Joins.dimJoin(trainRows, means, Seq("series", "o"), None)
-      .groupBy("series", "o").agg(
-        (c("xl", "m1", "xl", "m1") + lambda).as("s11"), c("xl", "m1", "xr", "m2").as("s12"),
-        c("xl", "m1", "xs", "m3").as("s13"), (c("xr", "m2", "xr", "m2") + lambda).as("s22"),
-        c("xr", "m2", "xs", "m3").as("s23"), (c("xs", "m3", "xs", "m3") + lambda).as("s33"),
-        c("xl", "m1", "y", "my").as("sy1"), c("xr", "m2", "y", "my").as("sy2"),
-        c("xs", "m3", "y", "my").as("sy3"))
-    val det = col("s11") * (col("s22") * col("s33") - col("s23") * col("s23")) -
-      col("s12") * (col("s12") * col("s33") - col("s23") * col("s13")) +
-      col("s13") * (col("s12") * col("s23") - col("s22") * col("s13"))
-    val b1 = (col("sy1") * (col("s22") * col("s33") - col("s23") * col("s23")) -
-      col("s12") * (col("sy2") * col("s33") - col("s23") * col("sy3")) +
-      col("s13") * (col("sy2") * col("s23") - col("s22") * col("sy3"))) / det
-    val b2 = (col("s11") * (col("sy2") * col("s33") - col("sy3") * col("s23")) -
-      col("sy1") * (col("s12") * col("s33") - col("s23") * col("s13")) +
-      col("s13") * (col("s12") * col("sy3") - col("sy2") * col("s13"))) / det
-    val b3 = (col("s11") * (col("s22") * col("sy3") - col("s23") * col("sy2")) -
-      col("s12") * (col("s12") * col("sy3") - col("sy2") * col("s13")) +
-      col("sy1") * (col("s12") * col("s23") - col("s22") * col("s13"))) / det
-    Joins.dimJoin(stats, means, Seq("series", "o"), None)
-      .select(col("series"), col("o"), b1.as("b1"), b2.as("b2"), b3.as("b3"),
-        (col("my") - b1 * col("m1") - b2 * col("m2") - b3 * col("m3")).as("b0"))
+    // ---- per-(series, offset) ridge: q22's solve plus the diagonal ----
+    Ols.fit(trainRows, Seq("series", "o"), Seq(Ols.Fit("", ("xl", "xr", "xs"))), lambda)
   }
 
   /** The q55 apply expression — shared by the in-session eval, the

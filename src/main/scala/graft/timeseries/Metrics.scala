@@ -3,7 +3,7 @@ package graft.timeseries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.util.Num
+import graft.util.{Num, StageCache}
 
 /** Detection quality metrics (reference: src/anomaly_detection/metrics.py
   * compute_timeseriewise_retrieval_metrics). Single-pass aggregations —
@@ -15,7 +15,7 @@ object Metrics {
     * (any injected point in the window).
     */
   def scoredWithGt(spark: SparkSession, sfDir: String): DataFrame =
-    TsCore.cached(spark, sfDir, "scoredgt") {
+    StageCache.cached(spark, sfDir, "scoredgt") {
       val (_, test) = TsCore.bankAndTest(spark, sfDir)
       val gt = test.groupBy("series", "win").agg(max("is_anom").as("gt"))
       Detect.knnScore(spark, sfDir).join(gt, Seq("series", "win"))

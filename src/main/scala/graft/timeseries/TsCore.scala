@@ -3,7 +3,7 @@ package graft.timeseries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.util.{Joins, Num, Tables}
+import graft.util.{Joins, Num, StageCache, Tables}
 
 /** Shared time-series processing chain, re-expressing the reference's
   * data pipeline (reference: src/data_processing/process_aemo.py,
@@ -24,14 +24,6 @@ import graft.util.{Joins, Num, Tables}
   */
 object TsCore {
 
-  /** Session-scoped cache of shared chain stages (see util.StageCache).
-    * Entries are grid-cell sized — orders of magnitude below the raw
-    * event scan.
-    */
-  private[graft] def cached(spark: SparkSession, sfDir: String, name: String)
-                           (build: => DataFrame): DataFrame =
-    graft.util.StageCache.cached(spark, sfDir, name)(build)
-
   val DaySize = 24          // points per day window (hourly grid)
   val WeekLag = 168         // 7 * 24, seasonal fill lag (ref process_aemo.py:64-66)
   val Alpha = 0.2           // EWMA alpha (ref feature_extractor.py moving_average)
@@ -48,7 +40,7 @@ object TsCore {
     * cached stage, so no query pays a second raw-events scan.
     */
   private[graft] def hourlyAgg(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "gridraw") {
+    StageCache.cached(spark, sfDir, "gridraw") {
       val raw = Tables.events(spark, sfDir)
       // ts encoding (nanos-long / TIMESTAMP / TIMESTAMP_NTZ) → util.Ts
       val hr = graft.util.Ts.hour(raw)
@@ -68,7 +60,7 @@ object TsCore {
   /** q01: regularize irregular events onto a fixed hourly grid per series.
     * Scan → single shuffle on (series, t) with map-side partial agg.
     */
-  def hourlyGrid(spark: SparkSession, sfDir: String): DataFrame = cached(spark, sfDir, "grid") {
+  def hourlyGrid(spark: SparkSession, sfDir: String): DataFrame = StageCache.cached(spark, sfDir, "grid") {
     hourlyAgg(spark, sfDir).crossJoin(broadcast(gridOrigin(spark, sfDir)))
       .select(col("series"), (col("hr") - col("t0")).as("t"), col("n"), col("v"))
   }
@@ -116,7 +108,7 @@ object TsCore {
   }
 
   /** q02: the week-walk fill over the event spine. */
-  def filled(spark: SparkSession, sfDir: String): DataFrame = cached(spark, sfDir, "filled") {
+  def filled(spark: SparkSession, sfDir: String): DataFrame = StageCache.cached(spark, sfDir, "filled") {
     fillWeekWalk(spine(spark, sfDir))
   }
 
@@ -124,7 +116,7 @@ object TsCore {
     * any null are dropped. Partition key (series, win) — embarrassingly
     * parallel downstream.
     */
-  def dayWindows(spark: SparkSession, sfDir: String): DataFrame = cached(spark, sfDir, "daywin") {
+  def dayWindows(spark: SparkSession, sfDir: String): DataFrame = StageCache.cached(spark, sfDir, "daywin") {
     val d = filled(spark, sfDir)
       .select(col("series"), (col("t") / DaySize).cast("long").as("win"),
               (col("t") % DaySize).as("pos"), col("v_filled").as("v"))
@@ -207,7 +199,7 @@ object TsCore {
     * (ref synth_anomaly.py _anomaly_type1-4). Window prefix sums give the
     * "energy" terms; everything else is a CASE over (pos, apos, alen).
     */
-  def injected(spark: SparkSession, sfDir: String): DataFrame = cached(spark, sfDir, "inject") {
+  def injected(spark: SparkSession, sfDir: String): DataFrame = StageCache.cached(spark, sfDir, "inject") {
     val wseq = Window.partitionBy("series", "win").orderBy("pos")
     val wall = Window.partitionBy("series", "win")
     val base = dayWindows(spark, sfDir)
@@ -253,7 +245,7 @@ object TsCore {
 
   /** Injected windows quantile-scaled: vs = (v_anom - lo) / (hi - lo). */
   def scaled(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "scaled") {
+    StageCache.cached(spark, sfDir, "scaled") {
       injected(spark, sfDir)
         .transform(Joins.dimJoin(_, scaleBounds(spark, sfDir), Seq("series"), None))
         .withColumn("vs", Num.r4((col("v_anom") - col("lo")) / (col("hi") - col("lo"))))
@@ -286,7 +278,7 @@ object TsCore {
     * PatchMaker.patchify / torch Unfold(padding=1)): for each pos,
     * 3 channels × offsets {-1,0,+1} → f0..f8 (channel-major).
     */
-  def patches(spark: SparkSession, sfDir: String): DataFrame = cached(spark, sfDir, "patches") {
+  def patches(spark: SparkSession, sfDir: String): DataFrame = StageCache.cached(spark, sfDir, "patches") {
     val wseq = Window.partitionBy("series", "win").orderBy("pos")
     def off(c: String, o: Int): Column = o match {
       case -1 => coalesce(lag(c, 1).over(wseq), lit(0.0))
@@ -304,7 +296,7 @@ object TsCore {
     * Uses the per-series max win so the boundary is data-derived.
     */
   def splitBoundary(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "boundary") {
+    StageCache.cached(spark, sfDir, "boundary") {
       dayWindows(spark, sfDir).groupBy("series")
         .agg(floor((max("win") + 1) * TrainFrac).as("mwin"))
     }
@@ -315,7 +307,7 @@ object TsCore {
   def bankAndTest(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     def p = patches(spark, sfDir)
       .transform(Joins.dimJoin(_, splitBoundary(spark, sfDir), Seq("series"), None))
-    (cached(spark, sfDir, "bank") { p.filter(col("win") < col("mwin")).drop("mwin") },
-     cached(spark, sfDir, "test") { p.filter(col("win") >= col("mwin")).drop("mwin") })
+    (StageCache.cached(spark, sfDir, "bank") { p.filter(col("win") < col("mwin")).drop("mwin") },
+     StageCache.cached(spark, sfDir, "test") { p.filter(col("win") >= col("mwin")).drop("mwin") })
   }
 }

@@ -165,6 +165,50 @@ testp AS (
   private def dist2(l: String, r: String): String =
     (0 to 8).map(i => s"($l.f$i - $r.f$i)*($l.f$i - $r.f$i)").mkString(" + ")
 
+  /** Ols.fit's oracle twin: the means → stats → coefs → coefs2 CTE
+    * group over `src`, per group of `keys`, with the same operation
+    * sequence as the Spark solve so both engines agree bit-for-bit.
+    * `name` maps each base CTE name to this instance's (`rmeans`,
+    * `means_f0`, …); `lambda > 0` adds the ridge diagonal. The text
+    * starts at the means CTE's name and ends with coefs2's closing
+    * paren, so callers splice it into a WITH list.
+    */
+  private def olsCtes(name: String => String, src: String, keys: Seq[String],
+                      x: (String, String, String) = ("x1", "x2", "x3"),
+                      lambda: Double = 0.0): String = {
+    val (x1, x2, x3) = x
+    val (means, stats, coefs) = (name("means"), name("stats"), name("coefs"))
+    val k = keys.mkString(", ")
+    def q(t: String) = keys.map(c => s"$t.$c").mkString(", ")
+    def c(a: String, ma: String, b: String, mb: String) = s"sum(($a - $ma) * ($b - $mb))"
+    val ridge = if (lambda > 0) s" + $lambda" else ""
+    val det = "s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)"
+    s"""$means AS (
+  SELECT $k, avg(y) AS my, avg($x1) AS m1, avg($x2) AS m2, avg($x3) AS m3
+  FROM $src GROUP BY $k
+), $stats AS (
+  SELECT ${q("t")},
+    ${c(x1, "m1", x1, "m1")}$ridge AS s11, ${c(x1, "m1", x2, "m2")} AS s12,
+    ${c(x1, "m1", x3, "m3")} AS s13, ${c(x2, "m2", x2, "m2")}$ridge AS s22,
+    ${c(x2, "m2", x3, "m3")} AS s23, ${c(x3, "m3", x3, "m3")}$ridge AS s33,
+    ${c(x1, "m1", "y", "my")} AS sy1, ${c(x2, "m2", "y", "my")} AS sy2,
+    ${c(x3, "m3", "y", "my")} AS sy3
+  FROM $src t JOIN $means USING ($k) GROUP BY ${q("t")}
+), $coefs AS (
+  SELECT ${q("s")},
+    (sy1 * (s22 * s33 - s23 * s23) - s12 * (sy2 * s33 - s23 * sy3) + s13 * (sy2 * s23 - s22 * sy3))
+      / ($det) AS b1,
+    (s11 * (sy2 * s33 - sy3 * s23) - sy1 * (s12 * s33 - s23 * s13) + s13 * (s12 * sy3 - sy2 * s13))
+      / ($det) AS b2,
+    (s11 * (s22 * sy3 - s23 * sy2) - s12 * (s12 * sy3 - sy2 * s13) + sy1 * (s12 * s23 - s22 * s13))
+      / ($det) AS b3,
+    m.my, m.m1, m.m2, m.m3
+  FROM $stats s JOIN $means m USING ($k)
+), ${name("coefs2")} AS (
+  SELECT $k, b1, b2, b3, my - b1 * m1 - b2 * m2 - b3 * m3 AS b0 FROM $coefs
+)"""
+  }
+
   def q01: String = prefix + "SELECT series, t, n, v FROM grid"
 
   def q02: String = prefix + "SELECT series, t, floor((v_filled)*10000 + 0.5)/10000 AS v_filled, src FROM filled"
@@ -246,30 +290,7 @@ JOIN (
   WHERE t.win < b.mwin AND t.mi >= 1
     AND t.pos >= t.mi AND t.pos < t.mi + $maskSize
     AND coalesce(sp.v, sn.v) IS NOT NULL
-), rmeans AS (
-  SELECT series, o, avg(y) AS my, avg(xl) AS m1, avg(xr) AS m2, avg(xs) AS m3
-  FROM trainrows GROUP BY series, o
-), rstats AS (
-  SELECT t.series, t.o,
-    sum((xl - m1) * (xl - m1)) + $lambda AS s11, sum((xl - m1) * (xr - m2)) AS s12,
-    sum((xl - m1) * (xs - m3)) AS s13, sum((xr - m2) * (xr - m2)) + $lambda AS s22,
-    sum((xr - m2) * (xs - m3)) AS s23, sum((xs - m3) * (xs - m3)) + $lambda AS s33,
-    sum((xl - m1) * (y - my)) AS sy1, sum((xr - m2) * (y - my)) AS sy2,
-    sum((xs - m3) * (y - my)) AS sy3
-  FROM trainrows t JOIN rmeans USING (series, o) GROUP BY t.series, t.o
-), rcoefs AS (
-  SELECT s.series, s.o,
-    (sy1 * (s22 * s33 - s23 * s23) - s12 * (sy2 * s33 - s23 * sy3) + s13 * (sy2 * s23 - s22 * sy3))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b1,
-    (s11 * (sy2 * s33 - sy3 * s23) - sy1 * (s12 * s33 - s23 * s13) + s13 * (s12 * sy3 - sy2 * s13))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b2,
-    (s11 * (s22 * sy3 - s23 * sy2) - s12 * (s12 * sy3 - sy2 * s13) + sy1 * (s12 * s23 - s22 * s13))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b3,
-    m.my, m.m1, m.m2, m.m3
-  FROM rstats s JOIN rmeans m USING (series, o)
-), rcoefs2 AS (
-  SELECT series, o, b1, b2, b3, my - b1 * m1 - b2 * m2 - b3 * m3 AS b0 FROM rcoefs
-)"""
+), ${olsCtes("r" + _, "trainrows", Seq("series", "o"), ("xl", "xr", "xs"), lambda)}"""
 
   /** q55's application feature base (clean-point lookup + span-edge
     * context) — shared by q55 and q57.
@@ -1074,33 +1095,11 @@ WHERE b.t >= rgsplit.tsplit"""
       s"t0 + CAST(floor((t1 - t0 + 1) * $f) AS BIGINT) AS b$i"
     }.mkString(",\n         ")
     val folds = fracs.indices.map { i =>
+      val ols = olsCtes(n => s"${n}_f$i", s"train_f$i", Seq("series"))
       s"""
 , train_f$i AS (
   SELECT f.* FROM basef54 f JOIN bnd54 b USING (series) WHERE f.t < b.b$i
-), means_f$i AS (
-  SELECT series, avg(y) AS my, avg(x1) AS m1, avg(x2) AS m2, avg(x3) AS m3
-  FROM train_f$i GROUP BY series
-), stats_f$i AS (
-  SELECT t.series,
-    sum((x1 - m1) * (x1 - m1)) AS s11, sum((x1 - m1) * (x2 - m2)) AS s12,
-    sum((x1 - m1) * (x3 - m3)) AS s13, sum((x2 - m2) * (x2 - m2)) AS s22,
-    sum((x2 - m2) * (x3 - m3)) AS s23, sum((x3 - m3) * (x3 - m3)) AS s33,
-    sum((x1 - m1) * (y - my)) AS sy1, sum((x2 - m2) * (y - my)) AS sy2,
-    sum((x3 - m3) * (y - my)) AS sy3
-  FROM train_f$i t JOIN means_f$i USING (series) GROUP BY t.series
-), coefs_f$i AS (
-  SELECT s.series,
-    (sy1 * (s22 * s33 - s23 * s23) - s12 * (sy2 * s33 - s23 * sy3) + s13 * (sy2 * s23 - s22 * sy3))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b1,
-    (s11 * (sy2 * s33 - sy3 * s23) - sy1 * (s12 * s33 - s23 * s13) + s13 * (s12 * sy3 - sy2 * s13))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b2,
-    (s11 * (s22 * sy3 - s23 * sy2) - s12 * (s12 * sy3 - sy2 * s13) + sy1 * (s12 * s23 - s22 * s13))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b3,
-    m.my, m.m1, m.m2, m.m3
-  FROM stats_f$i s JOIN means_f$i m USING (series)
-), coefs2_f$i AS (
-  SELECT series, b1, b2, b3, my - b1 * m1 - b2 * m2 - b3 * m3 AS b0 FROM coefs_f$i
-), res_f$i AS (
+), $ols, res_f$i AS (
   SELECT f.series, $i AS fold, count(*) AS n,
     ${r4("avg(abs(f.y - (c.b0 + c.b1 * f.x1 + c.b2 * f.x2 + c.b3 * f.x3)))")} AS mae,
     ${r4("sqrt(avg((f.y - (c.b0 + c.b1 * f.x1 + c.b2 * f.x2 + c.b3 * f.x3)) * (f.y - (c.b0 + c.b1 * f.x1 + c.b2 * f.x2 + c.b3 * f.x3))))")} AS rmse
@@ -1144,30 +1143,7 @@ WHERE b.t >= rgsplit.tsplit"""
   SELECT * FROM lagged
   WHERE y IS NOT NULL AND x1 IS NOT NULL AND x2 IS NOT NULL AND x3 IS NOT NULL
 ), train AS (SELECT * FROM basef WHERE t < tsplit),
-means AS (
-  SELECT series, avg(y) AS my, avg(x1) AS m1, avg(x2) AS m2, avg(x3) AS m3
-  FROM train GROUP BY series
-), stats AS (
-  SELECT t.series,
-    sum((x1 - m1) * (x1 - m1)) AS s11, sum((x1 - m1) * (x2 - m2)) AS s12,
-    sum((x1 - m1) * (x3 - m3)) AS s13, sum((x2 - m2) * (x2 - m2)) AS s22,
-    sum((x2 - m2) * (x3 - m3)) AS s23, sum((x3 - m3) * (x3 - m3)) AS s33,
-    sum((x1 - m1) * (y - my)) AS sy1, sum((x2 - m2) * (y - my)) AS sy2,
-    sum((x3 - m3) * (y - my)) AS sy3
-  FROM train t JOIN means USING (series) GROUP BY t.series
-), coefs AS (
-  SELECT s.series,
-    (sy1 * (s22 * s33 - s23 * s23) - s12 * (sy2 * s33 - s23 * sy3) + s13 * (sy2 * s23 - s22 * sy3))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b1,
-    (s11 * (sy2 * s33 - sy3 * s23) - sy1 * (s12 * s33 - s23 * s13) + s13 * (s12 * sy3 - sy2 * s13))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b2,
-    (s11 * (s22 * sy3 - s23 * sy2) - s12 * (s12 * sy3 - sy2 * s13) + sy1 * (s12 * s23 - s22 * s13))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b3,
-    m.my, m.m1, m.m2, m.m3
-  FROM stats s JOIN means m USING (series)
-), coefs2 AS (
-  SELECT series, b1, b2, b3, my - b1 * m1 - b2 * m2 - b3 * m3 AS b0 FROM coefs
-)"""
+${olsCtes(identity, "train", Seq("series"))}"""
 
   /** q62: mirrors Forecast.refitTrigger — q54's fold machinery with
     * cuts A/B evaluated on the shared final slice, plus qp7's PSI
@@ -1176,33 +1152,11 @@ means AS (
   def q62(fracA: Double = 0.7, fracB: Double = 0.85, nBins: Int = 10,
           thr: Double = 0.1): String = {
     val fits = Seq("A" -> "cutA", "B" -> "cutB").map { case (sfx, cut) =>
+      val ols = olsCtes(n => s"${n}_$sfx", s"train_$sfx", Seq("series"))
       s"""
 , train_$sfx AS (
   SELECT f.* FROM basef62 f JOIN cut62 c USING (series) WHERE f.t < c.$cut
-), means_$sfx AS (
-  SELECT series, avg(y) AS my, avg(x1) AS m1, avg(x2) AS m2, avg(x3) AS m3
-  FROM train_$sfx GROUP BY series
-), stats_$sfx AS (
-  SELECT t.series,
-    sum((x1 - m1) * (x1 - m1)) AS s11, sum((x1 - m1) * (x2 - m2)) AS s12,
-    sum((x1 - m1) * (x3 - m3)) AS s13, sum((x2 - m2) * (x2 - m2)) AS s22,
-    sum((x2 - m2) * (x3 - m3)) AS s23, sum((x3 - m3) * (x3 - m3)) AS s33,
-    sum((x1 - m1) * (y - my)) AS sy1, sum((x2 - m2) * (y - my)) AS sy2,
-    sum((x3 - m3) * (y - my)) AS sy3
-  FROM train_$sfx t JOIN means_$sfx USING (series) GROUP BY t.series
-), coefs_$sfx AS (
-  SELECT s.series,
-    (sy1 * (s22 * s33 - s23 * s23) - s12 * (sy2 * s33 - s23 * sy3) + s13 * (sy2 * s23 - s22 * sy3))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b1,
-    (s11 * (sy2 * s33 - sy3 * s23) - sy1 * (s12 * s33 - s23 * s13) + s13 * (s12 * sy3 - sy2 * s13))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b2,
-    (s11 * (s22 * sy3 - s23 * sy2) - s12 * (s12 * sy3 - sy2 * s13) + sy1 * (s12 * s23 - s22 * s13))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b3,
-    m.my, m.m1, m.m2, m.m3
-  FROM stats_$sfx s JOIN means_$sfx m USING (series)
-), coefs2_$sfx AS (
-  SELECT series, b1, b2, b3, my - b1 * m1 - b2 * m2 - b3 * m3 AS b0 FROM coefs_$sfx
-)"""
+), $ols"""
     }.mkString
     prefix + s"""
 , lagged62 AS (
@@ -1356,6 +1310,7 @@ FROM e60 WHERE $ok GROUP BY series"""
     */
   def q39(horizons: Seq[Int] = Seq(1, 6, 12, 24)): String = {
     val chains = horizons.map { h =>
+      val ols = olsCtes(n => s"${n}_$h", s"train_$h", Seq("series"))
       s"""
 , lagged_$h AS (
   SELECT f.series, f.t, f.v_filled AS y,
@@ -1369,30 +1324,7 @@ FROM e60 WHERE $ok GROUP BY series"""
   SELECT * FROM lagged_$h
   WHERE y IS NOT NULL AND x1 IS NOT NULL AND x2 IS NOT NULL AND x3 IS NOT NULL
 ), train_$h AS (SELECT * FROM basef_$h WHERE t < tsplit),
-means_$h AS (
-  SELECT series, avg(y) AS my, avg(x1) AS m1, avg(x2) AS m2, avg(x3) AS m3
-  FROM train_$h GROUP BY series
-), stats_$h AS (
-  SELECT t.series,
-    sum((x1 - m1) * (x1 - m1)) AS s11, sum((x1 - m1) * (x2 - m2)) AS s12,
-    sum((x1 - m1) * (x3 - m3)) AS s13, sum((x2 - m2) * (x2 - m2)) AS s22,
-    sum((x2 - m2) * (x3 - m3)) AS s23, sum((x3 - m3) * (x3 - m3)) AS s33,
-    sum((x1 - m1) * (y - my)) AS sy1, sum((x2 - m2) * (y - my)) AS sy2,
-    sum((x3 - m3) * (y - my)) AS sy3
-  FROM train_$h t JOIN means_$h USING (series) GROUP BY t.series
-), coefs_$h AS (
-  SELECT s.series,
-    (sy1 * (s22 * s33 - s23 * s23) - s12 * (sy2 * s33 - s23 * sy3) + s13 * (sy2 * s23 - s22 * sy3))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b1,
-    (s11 * (sy2 * s33 - sy3 * s23) - sy1 * (s12 * s33 - s23 * s13) + s13 * (s12 * sy3 - sy2 * s13))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b2,
-    (s11 * (s22 * sy3 - s23 * sy2) - s12 * (s12 * sy3 - sy2 * s13) + sy1 * (s12 * s23 - s22 * s13))
-      / (s11 * (s22 * s33 - s23 * s23) - s12 * (s12 * s33 - s23 * s13) + s13 * (s12 * s23 - s22 * s13)) AS b3,
-    m.my, m.m1, m.m2, m.m3
-  FROM stats_$h s JOIN means_$h m USING (series)
-), coefs2_$h AS (
-  SELECT series, b1, b2, b3, my - b1 * m1 - b2 * m2 - b3 * m3 AS b0 FROM coefs_$h
-), testf_$h AS (
+$ols, testf_$h AS (
   SELECT f.series, f.y, c.b0 + c.b1 * f.x1 + c.b2 * f.x2 + c.b3 * f.x3 AS p,
          c.b0, c.b1, c.b2, c.b3
   FROM basef_$h f JOIN coefs2_$h c USING (series) WHERE f.t >= f.tsplit

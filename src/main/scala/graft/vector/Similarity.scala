@@ -763,10 +763,15 @@ object Similarity {
         .as[(Long, Seq[Double])].collect().toSeq
       cent = spark.createDataset(next).toDF("cell", "cv")
     }
+    // one scan per vector: the nearest centroid's index, then its
+    // squared distance re-read over that centroid's slice (bit-equal to
+    // the scan's minimum)
     e.crossJoin(broadcast(packed(cent)))
+      .withColumn("j", expr("int(graft_argmin_dist2(cf, v))"))
       .select(
-        expr("element_at(cellIds, int(graft_argmin_dist2(cf, v)) + 1)").as("cell"),
-        floor(expr("graft_min_dist2(cf, v)") * 10000d + 0.5d).cast("long").as("d2q"))
+        expr("element_at(cellIds, j + 1)").as("cell"),
+        floor(expr("graft_l2(slice(cf, j * size(v) + 1, size(v)), v)") * 10000d + 0.5d)
+          .cast("long").as("d2q"))
       .groupBy("cell")
       .agg(count(lit(1)).as("n_vecs"), Num.r4(sum("d2q") / 10000d).as("inertia"))
   }

@@ -50,6 +50,22 @@ class ContractSpec extends AnyFunSuite {
     assert(builders === Seq("graft/Session.scala"))
   }
 
+  test("the 3-regressor Cramer solve is written once in Spark and once in the oracle") {
+    // timeseries.Ols is the one Spark least-squares solve and
+    // TsOracle.olsCtes its one SQL twin: a hand-written copy would have
+    // to repeat their exact floating-point operation sequence to keep
+    // bit parity. Unwrap col("s11_") / s("s11") references so Column
+    // code and SQL text match the same determinant pattern.
+    val det = """\bs11\w* \* \(s22\w* \* s33\w* - s23\w* \* s23\w*\)""".r
+    val dir = new java.io.File("src/main/scala/graft/timeseries")
+    val counts = dir.listFiles().toSeq.filter(_.getName.endsWith(".scala")).map { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .replaceAll("""\w+\("(\w+)"\)""", "$1")
+      f.getName -> det.findAllMatchIn(src).size
+    }.filter(_._2 > 0).toMap
+    assert(counts === Map("Ols.scala" -> 1, "TsOracle.scala" -> 1))
+  }
+
   test("query keys follow the short-prefix naming the bench JSON relies on") {
     // Bench truncates each name at the first '_' AND drops the uniform
     // leading 'q' for the driver's 2000-byte output window; the q-less

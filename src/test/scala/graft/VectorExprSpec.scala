@@ -31,6 +31,19 @@ class VectorExprSpec extends SparkSuite {
     val ext = new GraftExtensions()
     // structural smoke: applying to a fresh extensions object must not throw
     ext.apply(new org.apache.spark.sql.SparkSessionExtensions)
+    // a session built with the extension (on the same context) resolves
+    // every kernel name without VectorExprs.register
+    import org.apache.spark.sql.SparkSession
+    val base = spark // the suite's session owns the context the new session shares
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = try SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+      finally { SparkSession.setDefaultSession(base); SparkSession.setActiveSession(base) }
+    assert(s ne base, "the builder must build a new session, not reuse the suite's")
+    val missing = VectorExprs.Registrations.map(_._1)
+      .filterNot(s.sessionState.functionRegistry.functionExists)
+    assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
+    assert(s.sql("SELECT graft_dot(array(1d, 2d), array(3d, 4d))").head.getDouble(0) === 11.0)
   }
 
   test("graft_l2 equals the zip_with fold exactly") {
@@ -58,7 +71,7 @@ class VectorExprSpec extends SparkSuite {
     }
     val df = cases.toDF("bank", "p", "dim")
       .selectExpr("bank", "p", "dim",
-        "graft_min_dist2(bank, p) AS kmin", "graft_argmin_dist2(bank, p) AS kidx",
+        "graft_argmin_dist2(bank, p) AS kidx",
         // the single-pass route of Detect.bankScored: the argmin row's
         // distance re-read over its slice
         "graft_l2(slice(bank, int(graft_argmin_dist2(bank, p)) * dim + 1, dim), p) AS kslice")
@@ -71,11 +84,10 @@ class VectorExprSpec extends SparkSuite {
         b.zip(p).map { case (x, y) => (y - x) * (y - x) }.sum).toVector
       val bruteMin = d2s.min
       val bruteIdx = d2s.indexWhere(_ == bruteMin) // FIRST index on ties
-      assert(r.getAs[Double]("kmin") === bruteMin)
       assert(r.getAs[Long]("kidx") === bruteIdx.toLong)
       assert(java.lang.Double.doubleToRawLongBits(r.getAs[Double]("kslice")) ===
-        java.lang.Double.doubleToRawLongBits(r.getAs[Double]("kmin")),
-        "slice re-read must equal the scan's min bit-for-bit")
+        java.lang.Double.doubleToRawLongBits(bruteMin),
+        "slice re-read must equal the brute-force min bit-for-bit")
     }
   }
 
@@ -159,10 +171,10 @@ class VectorExprSpec extends SparkSuite {
     import spark.implicits._
     val df = Seq((Array.empty[Double], Array(1.0, 2.0)))
       .toDF("bank", "p")
-      .selectExpr("graft_min_dist2(bank, p) AS m", "graft_argmin_dist2(bank, p) AS i",
+      .selectExpr("graft_argmin_dist2(bank, p) AS i",
         "graft_l2(slice(bank, int(graft_argmin_dist2(bank, p)) * 2 + 1, 2), p) AS s")
       .collect()
-    assert(df.head.isNullAt(0) && df.head.isNullAt(1) && df.head.isNullAt(2))
+    assert(df.head.isNullAt(0) && df.head.isNullAt(1))
   }
 
   test("graft_sorted_inter equals size(array_intersect) on 300 random sorted sets") {
