@@ -226,15 +226,15 @@ object SparkEntry {
     "q08_patchify" -> Op((s, d) => TsQueries.q08Patchify(s, d), Sql(TsOracle.q08)),
     "q09_knn_score" -> Op((s, d) => graft.timeseries.Detect.knnScore(s, d), Sql(TsOracle.q09)),
     "q10_gaussian_score" -> Op((s, d) => graft.timeseries.Detect.gaussianScore(s, d), Sql(TsOracle.q10)),
-    // q11/q12 register the CAPPED reference-set path (the 100 TB
-    // default) — exact ≡ uncapped at every test scale (positions hold
-    // ≪ maxRef windows; DetectSpec asserts bit-equality), so the exact
-    // DuckDB oracles below remain the correctness anchor
+    // q11/q12 share Detect.knnRef, the one bank-kNN route, capped at
+    // Detect.MaxRef windows per position — exact ≡ uncapped at every
+    // test scale (positions hold ≪ MaxRef windows; DetectSpec asserts
+    // bit-equality), so the exact DuckDB oracles below are the anchor
     "q11_lof_weight" -> Op((s, d) => graft.timeseries.Detect.lofWeight(s, d), Sql(TsOracle.q11())),
     "q12_knn_dist_weight" -> Op((s, d) => graft.timeseries.Detect.nearestDistWeight(s, d), Sql(TsOracle.q12)),
     "q13_coreset" -> Op((s, d) => graft.timeseries.Coreset.coreset(s, d),
       NoOracle("greedy k-center selection has no SQL analogue",
-        "graft.DetectSpec", "coreset operator returns ~10% of denoised bank")),
+        "graft.DetectSpec", "q13 coreset: the farthest-first certificate bounds its radius (r <= 2·OPT)")),
     "q14_consec_runs" -> Op((s, d) => graft.timeseries.Postprocess.consecRuns(s, d), Sql(TsOracle.q14())),
     "q15_zscore_outliers" -> Op((s, d) => graft.timeseries.Postprocess.zscoreOutliers(s, d),
       Sql(TsOracle.q15())),

@@ -58,19 +58,8 @@ object Coreset {
 
   /** Denoised bank candidates: (id, pos, f0..f8) sorted by (id, pos). */
   private[graft] def keptBank(spark: SparkSession, sfDir: String,
-                              denoiseThr: Double): DataFrame = {
-    val (bank, _) = TsCore.bankAndTest(spark, sfDir)
-    val w = Detect.nearestDistWeight(spark, sfDir)
-      .withColumn("wgt", col("w_nearest") + 1.0)
-    // denoise cut from the distributed range-sort — no single-group
-    // percentile buffer over the bank-sized weight table
-    val thr = graft.util.Quantiles.exactLit(w, "wgt", 1.0 - denoiseThr)
-    val bid = bank.withColumn("id", concat_ws("#", col("series"), col("win")))
-    bid.join(w, Seq("id", "pos"))
-      .filter(col("wgt") <= thr)
-      .select((Seq("id", "pos").map(col) ++ Detect.FeatCols.map(col)): _*)
-      .orderBy("id", "pos")
-  }
+                              denoiseThr: Double): DataFrame =
+    Detect.keptBank(spark, sfDir, denoiseThr).drop("wgt").orderBy("id", "pos")
 
   /** Two-level greedy over a (id, pos, <dim feature cols>) frame:
     * per-partition local greedy down to `driverCap` candidates, then

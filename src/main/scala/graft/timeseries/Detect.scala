@@ -1,6 +1,6 @@
 package graft.timeseries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.util.{Num, StageCache}
@@ -17,14 +17,6 @@ import graft.util.{Num, StageCache}
   */
 object Detect {
   val FeatCols: Seq[String] = (0 to 8).map(i => s"f$i")
-
-  /** Squared L2 distance between two patch-feature rows (prefixed cols). */
-  private def dist2(l: String, r: String): Column =
-    FeatCols.map(f => (col(s"$l$f") - col(s"$r$f")) * (col(s"$l$f") - col(s"$r$f")))
-      .reduce(_ + _)
-
-  private def renamed(df: DataFrame, p: String): DataFrame =
-    df.columns.foldLeft(df)((d, c) => d.withColumnRenamed(c, s"$p$c"))
 
   /** q09: kNN (k=1) anomaly score — distance from each test patch to its
     * nearest bank patch; window score = max over patches (ref
@@ -139,24 +131,31 @@ object Detect {
           Num.r4(sqrt(form)).as("mdist"))
     }
 
+  /** Per-position cap on the q11/q12 kNN reference set: the neighbour
+    * candidates of a position are its first MaxRef window ids.
+    */
+  private[graft] val MaxRef: Int = 10000
+
   /** The capped reference side with the LOUD truncation guard: the
     * registered q11/q12 stay bit-identical to their exact-uncapped
     * DuckDB oracles ONLY while no position exceeds maxRef windows — if
     * a scale bump ever trips the cap, a parity break must point HERE,
-    * not at the pairwise logic. `counts` are the per-position bank
-    * counts of [[positionCounts]]; when none exceeds the cap the capped
-    * set IS the input and no roster rank-join is planned.
+    * not at the kNN kernel. One job collects the per-position bank
+    * counts (≤ |positions| longs reach the driver); when none exceeds
+    * the cap the capped set IS the input and no roster rank-join is
+    * planned.
     */
-  private def cappedRef(withId: DataFrame, maxRef: Int, counts: => Seq[Long]): DataFrame = {
-    val over = if (maxRef == Int.MaxValue) 0 else counts.count(_ > maxRef)
+  private def cappedRef(withId: DataFrame, maxRef: Int): DataFrame = {
+    val over = if (maxRef == Int.MaxValue) 0
+      else withId.groupBy("pos").count().collect().count(_.getLong(1) > maxRef)
     if (over == 0) withId
     else {
       Console.err.println(
-        s"[graft] pairwiseRef: cap maxRef=$maxRef TRUNCATES $over " +
+        s"[graft] q11/q12 kNN cap maxRef=$maxRef TRUNCATES $over " +
           "position(s) — capped result now diverges from the exact " +
-          "pairwise (and its oracle) by design")
-      // the candidate roster is the bank's own (pos, id) set — tiny
-      // relative to the pair stream; rank it, keep the first maxRef
+          "kNN (and its oracle) by design")
+      // the candidate roster is the bank's own (pos, id) set — rank it,
+      // keep the first maxRef
       val wRef = Window.partitionBy("pos").orderBy("id")
       val refIds = withId.select("pos", "id").distinct()
         .withColumn("rr", row_number().over(wRef)).filter(col("rr") <= maxRef)
@@ -165,81 +164,28 @@ object Detect {
     }
   }
 
-  /** Bank windows per patch position (one row per (window, pos), so
-    * this is also the position's roster size), collected in ONE job:
-    * ≤ |positions| longs reach the driver.
-    */
-  private def positionCounts(withId: DataFrame): Seq[Long] =
-    withId.groupBy("pos").count().collect().map(_.getLong(1)).toSeq
-
   private def withBankId(bank: DataFrame): DataFrame =
     bank.withColumn("id", concat_ws("#", col("series"), col("win")))
 
-  /** Pairwise distances against a CAPPED reference set: every patch is
-    * still scored, but the neighbour-candidate side is truncated to the
-    * deterministic first `maxRef` window ids per position BEFORE the
-    * pairwise join, bounding the per-position pair product at
-    * O(n·maxRef) in the plan itself (the b-side input shrinks — not a
-    * post-join filter over the quadratic stream) — the 100 TB contract
-    * for both q11 (LOF) and q12 (nearest-dist). With maxRef ≥ the
-    * position's window count the result is EXACTLY the uncapped
-    * pairwise (DetectSpec asserts bit-equality), so the oracle stays
-    * the exact mirror at test scales.
+  /** The k-trimmed neighbour stream (pos, id, nid, d) of every bank
+    * patch against its position's capped reference set — the one kNN
+    * route behind q11 (LOF) and q12 (nearest-dist). Each position's
+    * reference set packs into ONE broadcast row (ids sorted + row-major
+    * features, ≤ maxRef·9 doubles), every patch probes it in-row with
+    * the graft_knn kernel, and only the k winners materialize: the
+    * n·maxRef pair rows never exist. Bit-identical to a pairwise
+    * self-join trimmed by `row_number() OVER (PARTITION BY pos, id
+    * ORDER BY d+eps, nid) <= k` — same ascending-index distance fold,
+    * eps added to the sqrt before selection, UTF8 binary nid tie-break
+    * (DetectSpec keeps that reference and asserts equality). `maxRef`
+    * is the specs' seam on the cap.
     */
-  private[graft] def pairwiseRef(bank: DataFrame, maxRef: Int): DataFrame = {
-    val withId = withBankId(bank)
-    pairs(withId, cappedRef(withId, maxRef, positionCounts(withId)))
-  }
-
-  private def pairs(withId: DataFrame, ref: DataFrame): DataFrame = {
-    val a = renamed(withId, "a_")
-    val b = renamed(ref, "b_")
-    a.join(b, col("a_pos") === col("b_pos") && col("a_id") =!= col("b_id"))
-      .select(col("a_pos").as("pos"), col("a_id").as("id"), col("b_id").as("nid"),
-        sqrt(dist2("a_", "b_")).as("d"))
-  }
-
-  /** The k-trimmed neighbour stream (pos, id, nid, d) via the PACKED
-    * graft_knn kernel: each position's capped reference set packs into
-    * ONE broadcast row (ids sorted + row-major features, ≤ maxRef·9
-    * doubles), every patch probes it in-row, and only the k winners
-    * materialize. Bit-identical to trimming [[pairwiseRef]] with
-    * `row_number() OVER (PARTITION BY pos, id ORDER BY d+eps, nid) <= k`
-    * — same ascending-index distance fold, eps added to the sqrt before
-    * selection, UTF8 binary nid tie-break (DetectSpec asserts equality)
-    * — but the n·maxRef pair rows never exist: at sf1 this removed a
-    * 26M-row shuffle + window sort that was 60% of q11's wall time.
-    */
-  /** Packed-broadcast ceiling for [[knnRef]] (ADVICE r13): the packed
-    * table is |positions| rows of ≤ maxRef·9 doubles (~720 KB/row at
-    * maxRef=10000) — sized for the patch-bank geometry, but a caller
-    * whose position count grows could silently exceed executor/driver
-    * broadcast limits. One cheap per-position count bounds the exact
-    * packed payload up front; past the ceiling knnRef falls back
-    * (loudly) to the bit-identical pairwise+window-trim plan.
-    */
-  private[graft] val KnnBroadcastMaxBytes: Long = 1L << 30
-
-  private[graft] def knnRef(spark: SparkSession, bank: DataFrame, maxRef: Int,
-                            k: Int, eps: Double,
-                            maxBroadcastBytes: Long = KnnBroadcastMaxBytes): DataFrame = {
+  private[graft] def knnRef(spark: SparkSession, bank: DataFrame, k: Int, eps: Double,
+                            maxRef: Int = MaxRef): DataFrame = {
     graft.functions.VectorExprs.register(spark)
     val withId = withBankId(bank)
-    // one per-position count job feeds both guards: the exact packed
-    // payload Σ_pos min(|pos|, maxRef) features × 9 × 8 B, and the cap
-    val counts = positionCounts(withId)
-    val ref = cappedRef(withId, maxRef, counts)
-    val estBytes = counts.map(math.min(_, maxRef.toLong)).sum * FeatCols.length * 8L
-    if (estBytes > maxBroadcastBytes) {
-      System.err.println(s"[detect] knnRef packed table ~$estBytes B exceeds " +
-        s"$maxBroadcastBytes B — falling back to the pairwise+trim plan")
-      val trimW = Window.partitionBy("pos", "id").orderBy(col("d"), col("nid"))
-      return pairs(withId, ref)
-        .withColumn("d", col("d") + eps)
-        .withColumn("rn", row_number().over(trimW)).filter(col("rn") <= k)
-        .select("pos", "id", "nid", "d")
-    }
-    val packed = ref
+    // positions are t % 24, so the packed table is ≤ 24 × MaxRef × 9 × 8 B ≈ 17 MB
+    val packed = cappedRef(withId, maxRef)
       .select(col("pos"),
         struct(col("id"), array(FeatCols.map(col): _*).as("fs")).as("s"))
       .groupBy("pos").agg(array_sort(collect_list(col("s"))).as("ps"))
@@ -255,25 +201,20 @@ object Detect {
 
   /** q12: nearest-neighbour distance patch weight ("nearest" method, ref
     * softpatch.py _compute_nearest_distance: topk(2, smallest) over a
-    * self-inclusive distance matrix = 0 + d(nearest other)). The PUBLIC
-    * default (and the registered q12) runs the capped reference set —
-    * exact whenever positions hold ≤ maxRef windows (all test scales).
+    * self-inclusive distance matrix = 0 + d(nearest other)) over the
+    * capped reference set — exact whenever positions hold ≤ MaxRef
+    * windows (all test scales).
     */
-  def nearestDistWeight(spark: SparkSession, sfDir: String,
-                        maxRef: Int = 10000): DataFrame =
-    StageCache.cached(spark, sfDir, s"nnweight_$maxRef") {
+  def nearestDistWeight(spark: SparkSession, sfDir: String): DataFrame =
+    StageCache.cached(spark, sfDir, "nnweight") {
       val (bank, _) = TsCore.bankAndTest(spark, sfDir)
       // k=1, eps=0: the kernel's single winner IS min(raw d) — sqrt+0.0
       // is bit-identical to sqrt on IEEE doubles
-      knnRef(spark, bank, maxRef, k = 1, eps = 0.0)
+      knnRef(spark, bank, k = 1, eps = 0.0)
         .groupBy("pos", "id")
         .agg(Num.r4(min("d")).as("w_nearest"))
         .select(col("id"), col("pos"), col("w_nearest"))
     }
-
-  /** Exact (uncapped) q12 — the spec's small-N anchor. */
-  def nearestDistWeightExact(spark: SparkSession, sfDir: String): DataFrame =
-    nearestDistWeight(spark, sfDir, maxRef = Int.MaxValue)
 
   /** A weighted bank (id, pos, wgt, f0..f8) packed into ONE broadcastable
     * row: `bf` = features flattened sorted by (id, pos), `ws` = the
@@ -366,47 +307,29 @@ object Detect {
       .select((Seq("id", "pos", "wgt") ++ FeatCols).map(col): _*)
   }
 
-  /** Local Outlier Factor (k=6) per patch position over the bank
-    * (ref softpatch.py _compute_lof_gpu):
+  /** q11: Local Outlier Factor (k=6) per patch position over the bank
+    * (ref softpatch.py _compute_lof_gpu), on [[knnRef]]'s capped
+    * reference set: per-position pairwise LOF is O(n²) in
+    * windows-per-position — the quadratic term a 100 TB bank cannot
+    * pay. Whenever the position has ≤ MaxRef windows the cap is EXACTLY
+    * the uncapped LOF (DetectSpec asserts bit-equality), so the exact
+    * DuckDB oracle stays valid at every test scale. The reference adds
+    * 1e-6 to all distances before the top-k.
+    */
+  def lofWeight(spark: SparkSession, sfDir: String, k: Int = 6): DataFrame = {
+    val (bank, _) = TsCore.bankAndTest(spark, sfDir)
+    lofFrom(knnRef(spark, bank, k, eps = 1e-6), k)
+  }
+
+  /** LOF (id, pos, lof) from a k-trimmed neighbour stream (pos, id, nid, d):
     * kdist(a) = d to k-th NN; reach(a,b) = max(d(a,b), kdist(b));
     * lrd(a) = k / Σ_{b∈kNN(a)} reach(a,b); lof(a) = mean lrd(b)/lrd(a).
-    * The reference adds 1e-6 to all distances before the top-k.
-    *
-    * The PUBLIC default — and since r10 the REGISTERED q11 — is the
-    * CAPPED path (maxRef = 10000): per-position pairwise LOF is O(n²) in
-    * windows-per-position — the quadratic term a 100 TB bank cannot pay.
-    * Whenever the position has ≤ maxRef windows the cap is EXACTLY the
-    * uncapped LOF (DetectSpec asserts bit-equality), so the exact DuckDB
-    * oracle stays valid at every test scale; only beyond the cap does
-    * the reference set truncate. [[lofWeightExact]] remains the spec's
-    * small-N anchor.
     */
-  def lofWeight(spark: SparkSession, sfDir: String, k: Int = 6): DataFrame =
-    lofWeightCapped(spark, sfDir, k)
-
-  /** Exact (uncapped) LOF — the q11 oracle anchor; O(n²) per position,
-    * reserve for oracle parity and small banks.
-    */
-  def lofWeightExact(spark: SparkSession, sfDir: String, k: Int = 6): DataFrame =
-    lofWeightCapped(spark, sfDir, k, maxRef = Int.MaxValue)
-
-  /** LOF with a per-position reference cap — the 100 TB path. When the
-    * windows-per-position count makes the per-position pairwise
-    * quadratic too wide, the *reference* set (neighbour candidates) is
-    * capped to the first `maxRef` window ids per position
-    * (deterministic), while every patch is still scored. With
-    * maxRef ≥ bank size this is exactly the uncapped LOF (the oracle
-    * path); capped results are approximate but bounded O(n·maxRef).
-    */
-  def lofWeightCapped(spark: SparkSession, sfDir: String, k: Int = 6,
-                      maxRef: Int = 10000): DataFrame = {
-    val (bank, _) = TsCore.bankAndTest(spark, sfDir)
-    // the packed kernel emits the k-trimmed stream directly (d already
-    // +1e-6, the reference's pre-top-k epsilon); still checkpointed:
-    // kdist, lrd AND lof all read it — k·|bank| rows, linear in bank
-    // size, and the kernel scan runs once instead of three times.
-    val knn = knnRef(spark, bank, maxRef, k, eps = 1e-6)
-      .localCheckpoint(eager = false)
+  private[graft] def lofFrom(knnStream: DataFrame, k: Int): DataFrame = {
+    // checkpointed: kdist, lrd AND lof all read the stream — k·|bank|
+    // rows, linear in bank size, and the kernel scan runs once instead
+    // of three times
+    val knn = knnStream.localCheckpoint(eager = false)
     val kdist = knn.groupBy("pos", "id").agg(max("d").as("kdist"))
     // reach(a,b) = max(d(a,b), kdist(b)); lrd(a) = k / sum_b reach(a,b)
     val lrd = knn
@@ -414,12 +337,11 @@ object Detect {
         Seq("pos", "nid"))
       .groupBy("pos", "id")
       .agg((lit(k.toDouble) / sum(greatest(col("d"), col("kdist_b")))).as("lrd"))
-    val lof = knn
+    knn
       .join(lrd.select(col("pos"), col("id").as("nid"), col("lrd").as("lrd_b")), Seq("pos", "nid"))
       .groupBy("pos", "id")
       .agg((sum("lrd_b") / lit(k.toDouble)).as("sum_lrd_b"))
       .join(lrd, Seq("pos", "id"))
       .select(col("id"), col("pos"), Num.r4(col("sum_lrd_b") / col("lrd")).as("lof"))
-    lof
   }
 }

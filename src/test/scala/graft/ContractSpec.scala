@@ -66,6 +66,23 @@ class ContractSpec extends AnyFunSuite {
     assert(counts === Map("Ols.scala" -> 1, "TsOracle.scala" -> 1))
   }
 
+  test("q11/q12 have one bank-kNN route: no pairwise fallback or exact/capped forks") {
+    // Detect.knnRef's packed graft_knn scan is the only kNN route; the
+    // pairwise self-join lives on only as DetectSpec's reference
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val banned = Seq("pairwiseRef", "KnnBroadcastMaxBytes", "lofWeightExact",
+      "lofWeightCapped", "nearestDistWeightExact")
+    val selfJoin = """col\("a_id"\)\s*=!=\s*col\("b_id"\)""".r
+    val hits = files(new java.io.File("src/main/scala/graft"))
+      .filter(_.getName.endsWith(".scala")).flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        (banned.filter(src.contains) ++ selfJoin.findFirstIn(src).map(_ => "b_id self-join"))
+          .map(h => s"${f.getPath.stripPrefix("src/main/scala/")}: $h")
+      }
+    assert(hits.isEmpty, hits.mkString("; "))
+  }
+
   test("query keys follow the short-prefix naming the bench JSON relies on") {
     // Bench truncates each name at the first '_' AND drops the uniform
     // leading 'q' for the driver's 2000-byte output window; the q-less

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.timeseries._
 
@@ -39,11 +41,50 @@ class DetectSpec extends SparkSuite {
     assert(med > 0.8 && med < 1.5, s"median LOF $med")
   }
 
+  /** The kernel's bit-equality reference: the pairwise self-join of
+    * each position's patches against its first `maxRef` window ids
+    * (every (a, b ≠ a) pair, with its full distance).
+    */
+  private def pairwiseRef(bank: DataFrame, maxRef: Int): DataFrame = {
+    val withId = bank.withColumn("id", concat_ws("#", col("series"), col("win")))
+    val ref = withId
+      .withColumn("rr", row_number().over(Window.partitionBy("pos").orderBy("id")))
+      .filter(col("rr") <= maxRef).drop("rr")
+    pairs(withId, ref)
+  }
+
+  private def pairs(withId: DataFrame, ref: DataFrame): DataFrame = {
+    val a = renamed(withId, "a_")
+    val b = renamed(ref, "b_")
+    a.join(b, col("a_pos") === col("b_pos") && col("a_id") =!= col("b_id"))
+      .select(col("a_pos").as("pos"), col("a_id").as("id"), col("b_id").as("nid"),
+        sqrt(dist2("a_", "b_")).as("d"))
+  }
+
+  /** Squared L2 distance between two patch-feature rows (prefixed cols). */
+  private def dist2(l: String, r: String): Column =
+    Detect.FeatCols.map(f => (col(s"$l$f") - col(s"$r$f")) * (col(s"$l$f") - col(s"$r$f")))
+      .reduce(_ + _)
+
+  private def renamed(df: DataFrame, p: String): DataFrame =
+    df.columns.foldLeft(df)((d, c) => d.withColumnRenamed(c, s"$p$c"))
+
+  /** The reference trimmed to k: eps added, then row_number by (d, nid). */
+  private def trimmedRef(bank: DataFrame, maxRef: Int, k: Int, eps: Double): DataFrame =
+    pairwiseRef(bank, maxRef).withColumn("d", col("d") + eps)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("pos", "id").orderBy(col("d"), col("nid"))))
+      .filter(col("rn") <= k)
+      .select("pos", "id", "nid", "d")
+
   test("default (capped) LOF is bit-identical to exact LOF when maxRef >= n") {
-    // the public default caps the reference set at 10000; the local bank
-    // is far below that, so the default must EQUAL the uncapped oracle
-    // path bit-for-bit
-    val exact = Detect.lofWeightExact(spark, Sf01).withColumnRenamed("lof", "lof_exact")
+    // the default caps the reference set at MaxRef; the local bank is
+    // far below that, so the default must EQUAL the uncapped LOF
+    // bit-for-bit
+    val (bank, _) = TsCore.bankAndTest(spark, Sf01)
+    val exact = Detect.lofFrom(
+        Detect.knnRef(spark, bank, k = 6, eps = 1e-6, maxRef = Int.MaxValue), 6)
+      .withColumnRenamed("lof", "lof_exact")
     val default = Detect.lofWeight(spark, Sf01)
     val j = exact.join(default, Seq("id", "pos"))
     assert(j.count() === exact.count())
@@ -52,11 +93,12 @@ class DetectSpec extends SparkSuite {
   }
 
   test("default (capped) q12 nearest-dist is bit-identical to exact when maxRef >= n") {
-    // q12's registered default caps the reference set like q11's; the
-    // local bank is far below the cap, so it must EQUAL the uncapped
-    // oracle path bit-for-bit
-    val exact = Detect.nearestDistWeightExact(spark, Sf01)
-      .withColumnRenamed("w_nearest", "w_exact")
+    // q12 caps the reference set like q11; the local bank is far below
+    // the cap, so it must EQUAL the uncapped nearest distance (k=1: the
+    // one neighbour row per patch) bit-for-bit
+    val (bank, _) = TsCore.bankAndTest(spark, Sf01)
+    val exact = Detect.knnRef(spark, bank, k = 1, eps = 0.0, maxRef = Int.MaxValue)
+      .select(col("id"), col("pos"), graft.util.Num.r4(col("d")).as("w_exact"))
     val default = Detect.nearestDistWeight(spark, Sf01)
     val j = exact.join(default, Seq("id", "pos"))
     assert(j.count() === exact.count())
@@ -65,34 +107,17 @@ class DetectSpec extends SparkSuite {
   }
 
   test("packed graft_knn kernel is bit-identical to the pairwise window trim") {
-    import org.apache.spark.sql.expressions.Window
     val (bank, _) = TsCore.bankAndTest(spark, Sf01)
     for ((k, eps, maxRef) <- Seq((6, 1e-6, 10000), (1, 0.0, 10000), (6, 1e-6, 40))) {
       // the reference implementation: materialize the full pair stream,
       // add eps, window-trim to k by (d, nid) — exactly what q11/q12
       // shipped before the kernel
-      val pw = Detect.pairwiseRef(bank, maxRef).withColumn("d", col("d") + eps)
-      val wN = Window.partitionBy("pos", "id").orderBy(col("d"), col("nid"))
-      val want = pw.withColumn("rn", row_number().over(wN)).filter(col("rn") <= k)
-        .select("pos", "id", "nid", "d")
-      val got = Detect.knnRef(spark, bank, maxRef, k, eps)
+      val want = trimmedRef(bank, maxRef, k, eps)
+      val got = Detect.knnRef(spark, bank, k, eps, maxRef)
       assert(got.count() === want.count(), s"(k=$k eps=$eps maxRef=$maxRef)")
       assert(got.except(want).count() === 0 && want.except(got).count() === 0,
         s"kernel k-NN stream diverged from the window trim (k=$k eps=$eps maxRef=$maxRef)")
     }
-  }
-
-  test("knnRef broadcast guard: past the byte ceiling it falls back, bit-identical") {
-    // force the fallback with a 1-byte ceiling (ADVICE r13: a growing
-    // position count must not silently exceed broadcast limits) — the
-    // pairwise+trim plan must emit the exact kernel stream
-    val (bank, _) = TsCore.bankAndTest(spark, Sf01)
-    val kernel = Detect.knnRef(spark, bank, maxRef = 10000, k = 6, eps = 1e-6)
-    val fb = Detect.knnRef(spark, bank, maxRef = 10000, k = 6, eps = 1e-6,
-      maxBroadcastBytes = 1L)
-    assert(fb.count() === kernel.count())
-    assert(fb.except(kernel).count() === 0 && kernel.except(fb).count() === 0,
-      "guard fallback diverged from the packed kernel")
   }
 
   test("graft_knn planted exact ties: equal distances break on UTF8 nid order") {
@@ -114,18 +139,18 @@ class DetectSpec extends SparkSuite {
     assert(got.toSeq === Seq("aa#1", "bb#1", "mm#1"),
       s"tie-break must keep the smallest nids: ${got.toSeq}")
     // and the window-trim reference implementation agrees exactly
-    val pw = Detect.pairwiseRef(bank, Int.MaxValue).withColumn("d", col("d") + 1e-6)
-    val wN = org.apache.spark.sql.expressions.Window
-      .partitionBy("pos", "id").orderBy(col("d"), col("nid"))
-    val want = pw.withColumn("rn", row_number().over(wN)).filter(col("rn") <= 3)
+    val want = trimmedRef(bank, Int.MaxValue, 3, 1e-6)
       .filter(col("id") === "probe#1")
       .orderBy("d", "nid").collect().map(r => r.getString(2))
     assert(want.toSeq === got.toSeq)
   }
 
   test("capped LOF approximates uncapped and bounds the reference set") {
-    val full = Detect.lofWeightExact(spark, Sf01)
-    val capped = Detect.lofWeightCapped(spark, Sf01, maxRef = 40)
+    val (bank, _) = TsCore.bankAndTest(spark, Sf01)
+    def lof(maxRef: Int) =
+      Detect.lofFrom(Detect.knnRef(spark, bank, k = 6, eps = 1e-6, maxRef = maxRef), 6)
+    val full = lof(Int.MaxValue)
+    val capped = lof(40)
     assert(capped.count() === full.count(), "every patch still scored under the cap")
     val joined = full.withColumnRenamed("lof", "lof_full")
       .join(capped, Seq("id", "pos"))
@@ -151,6 +176,27 @@ class DetectSpec extends SparkSuite {
     val (bank, _) = TsCore.bankAndTest(spark, Sf01)
     val bn = bank.count()
     assert(n <= bn * 0.15 && n >= bn * 0.05, s"coreset $n of bank $bn")
+  }
+
+  test("q13 coreset: the farthest-first certificate bounds its radius (r <= 2·OPT)") {
+    // Sf01's kept bank is below driverCap, so q13 is ONE farthest-first
+    // (Gonzalez) pass over it. Each pick after the first was the kept
+    // point farthest from the earlier picks, so with p the kept point
+    // farthest from the selection S, r = d(p, S) is at most the minimum
+    // pairwise distance of S ∪ {p}: k+1 points pairwise ≥ r apart, two of
+    // which share an optimal center, so OPT ≥ r/2.
+    def key(r: org.apache.spark.sql.Row) = (r.getString(0), r.getLong(1))
+    val kept = Coreset.keptBank(spark, Sf01, 0.15).collect()
+    val feats = kept.map(r => key(r) -> (0 until 9).map(i => r.getDouble(2 + i)).toArray).toMap
+    def d(a: Array[Double], b: Array[Double]): Double =
+      math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
+    val sel = Coreset.coreset(spark, Sf01).collect().map(r => feats(key(r)))
+    assert(sel.length >= 2 && sel.length < feats.size, s"${sel.length} of ${feats.size}")
+    val (far, r) = feats.values.map(f => f -> sel.map(d(f, _)).min).maxBy(_._2)
+    val cert = sel :+ far
+    val minPair = (for (i <- cert.indices; j <- i + 1 until cert.length)
+      yield d(cert(i), cert(j))).min
+    assert(r <= minPair + 1e-9, s"coverage radius $r exceeds the certificate $minPair")
   }
 
   test("JL-projected coreset preserves k-center structure (~2-approx coverage radius)") {
