@@ -1,6 +1,6 @@
 package graft.timeseries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.util.{Num, StageCache}
@@ -13,7 +13,8 @@ import graft.util.{Num, StageCache}
   * coreset'd) is small relative to the scored stream and is broadcast;
   * scoring is a broadcast join + per-row min-reduce — the big side never
   * shuffles. The patch-weight ops partition by patch position, the
-  * reference's "batch per patch" axis.
+  * reference's "batch per patch" axis, and so does the Gaussian fit,
+  * whose 9×9 inverse runs in the plan — nothing reaches the driver.
   */
 object Detect {
   val FeatCols: Seq[String] = (0 to 8).map(i => s"f$i")
@@ -35,29 +36,6 @@ object Detect {
       .agg(Num.r4(max("pscore")).as("score"))
   }
 
-  /** Fixed-order Gauss-Jordan inverse (no pivoting — the regularized
-    * covariance is SPD, so the pivot a(k)(k) is always positive). Step
-    * k maps a'(k,j) = a(k,j)/p and a'(i,j) = a(i,j) − a(i,k)·a(k,j)/p
-    * — the EXACT expression the oracle's unrolled CTE chain evaluates,
-    * so driver-side and DuckDB inverses agree on identical inputs
-    * bit-for-bit (same IEEE operation sequence).
-    */
-  private[graft] def invertGaussJordan(sig: Array[Array[Double]]): Array[Array[Double]] = {
-    val n = sig.length
-    var a = Array.tabulate(n, 2 * n) { (i, j) =>
-      if (j < n) sig(i)(j) else if (j - n == i) 1.0 else 0.0
-    }
-    for (k <- 0 until n) {
-      val prev = a
-      val p = prev(k)(k)
-      a = Array.tabulate(n, 2 * n) { (i, j) =>
-        if (i == k) prev(k)(j) / p
-        else prev(i)(j) - prev(i)(k) * prev(k)(j) / p
-      }
-    }
-    Array.tabulate(n, n)((i, j) => a(i)(j + n))
-  }
-
   /** All (i, j) with i ≤ j — the upper-triangle traversal both engines
     * use for covariance columns and quadratic-form terms (TsOracle
     * references this same value so the orders can never diverge).
@@ -65,71 +43,49 @@ object Detect {
   private[timeseries] val UpperIdx: Seq[(Int, Int)] =
     for { i <- 0 to 8; j <- i to 8 } yield (i, j)
 
-  /** Per-patch-position full 9-dim Gaussian fit over the bank: means +
-    * sample covariance (+0.01·I regularization) via one single-pass
-    * groupBy (9 avg + 45 covar_samp sufficient statistics — fully
-    * distributed), then the tiny ≤24 position × 9×9 matrices are
-    * collected, inverted driver-side (scale-safe: the driver holds
-    * 24×81 doubles regardless of bank size) and broadcast back.
-    * (ref multi_variate_gaussian.py:15-84: torch _cov ddof=1 per patch
-    * position + 0.01·eye, then linalg.inv.)
-    */
-  private def gaussianInv(spark: SparkSession, bank: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    val meanAggs = (0 to 8).map(i => avg(s"f$i").as(s"m$i"))
-    val covAggs = UpperIdx.map { case (i, j) => covar_samp(col(s"f$i"), col(s"f$j")).as(s"c${i}_$j") }
-    val aggs = meanAggs ++ covAggs
-    val stats = bank.groupBy("pos").agg(aggs.head, aggs.tail: _*).collect()
-    val rows = stats.map { r =>
-      // covar_samp is NULL for a single-patch position (n−1 = 0); the
-      // oracle's CTE chain propagates those NULLs through to a NULL
-      // mdist, so mirror that with an all-null stats row instead of
-      // crashing the driver on getDouble(null).
-      val degenerate = (1 until r.length).exists(r.isNullAt)
-      if (degenerate)
-        Row.fromSeq(r.getLong(r.fieldIndex("pos")) +: Seq.fill(9 + UpperIdx.length)(null))
-      else {
-        val sig = Array.tabulate(9, 9) { (i, j) =>
-          val (a, b) = if (i <= j) (i, j) else (j, i)
-          r.getDouble(r.fieldIndex(s"c${a}_$b")) + (if (i == j) 0.01 else 0.0)
-        }
-        val inv = invertGaussJordan(sig)
-        Row.fromSeq(
-          r.getLong(r.fieldIndex("pos")) +:
-          ((0 to 8).map(i => r.getDouble(r.fieldIndex(s"m$i"))) ++
-           UpperIdx.map { case (i, j) => inv(i)(j) }))
-      }
-    }
-    val schema = StructType(
-      StructField("pos", LongType) +:
-      ((0 to 8).map(i => StructField(s"m$i", DoubleType)) ++
-       UpperIdx.map { case (i, j) => StructField(s"i${i}_$j", DoubleType) }))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
-  }
-
   /** q10: full 9-dim Mahalanobis distance of each test patch to the
     * per-position Gaussian fit on the bank (ref softpatch.py
-    * _compute_distance_with_gaussian + multi_variate_gaussian.py).
-    * Quadratic form unrolled over the upper triangle in fixed fold
-    * order (i00, i01·2, …, i88) — mirrored term-for-term in the oracle.
+    * _compute_distance_with_gaussian; multi_variate_gaussian.py:15-84:
+    * torch _cov ddof=1 per patch position + 0.01·eye, then linalg.inv).
+    * Cached: q29 (top patch), q50 (mask) and the pipeline consume the
+    * same heatmap.
     */
   def gaussianScore(spark: SparkSession, sfDir: String): DataFrame =
-    // cached: q10 is the owner, but q29 (top patch), q50 (mask) and the
-    // pipeline all consume the same heatmap — without the cache each
-    // re-runs the 45-covar fit + driver inversion + scoring join
-    graft.util.StageCache.cached(spark, sfDir, "gauss_mdist") {
-      val (bank, test) = TsCore.bankAndTest(spark, sfDir)
-      val g = gaussianInv(spark, bank)
-      val d = (0 to 8).map(i => col(s"f$i") - col(s"m$i"))
-      val form = UpperIdx.map { case (i, j) =>
-        if (i == j) d(i) * d(j) * col(s"i${i}_$j")
-        else lit(2.0) * d(i) * d(j) * col(s"i${i}_$j")
-      }.reduce(_ + _)
-      test.join(broadcast(g), "pos")
-        .select(col("series"), col("win"), col("pos"),
-          Num.r4(sqrt(form)).as("mdist"))
+    StageCache.cached(spark, sfDir, "gauss_mdist")(gaussianScoreBuild(spark, sfDir))
+
+  /** q10's plan before the cache, built without a job: one single-pass
+    * groupBy per position (9 avg + 45 covar_samp sufficient statistics),
+    * then `[Σ + 0.01·I | I]` through [[Ols.gaussJordan]] (no pivoting:
+    * the regularized covariance is SPD) and Σ⁻¹'s upper triangle read
+    * from the right block. A single-patch position's NULL covar_samp
+    * propagates to a NULL mdist, as in the oracle. The ≤24-row inverse
+    * broadcasts to the test patches; the quadratic form is unrolled in
+    * fixed fold order (i00, i01·2, …, i88), mirrored term-for-term in
+    * the oracle.
+    */
+  private[graft] def gaussianScoreBuild(spark: SparkSession, sfDir: String): DataFrame = {
+    val (bank, test) = TsCore.bankAndTest(spark, sfDir)
+    val aggs = (0 to 8).map(i => avg(s"f$i").as(s"m$i")) ++
+      UpperIdx.map { case (i, j) => covar_samp(col(s"f$i"), col(s"f$j")).as(s"c${i}_$j") }
+    def sig(i: Int, j: Int): Column = {
+      val c = col(s"c${math.min(i, j)}_${math.max(i, j)}")
+      if (i == j) c + 0.01 else c
     }
+    val means = (0 to 8).map(i => col(s"m$i"))
+    val aug = bank.groupBy("pos").agg(aggs.head, aggs.tail: _*)
+      .select(col("pos") +: means :+ array((0 to 8).map { i =>
+        array((0 to 8).map(sig(i, _)) ++ (0 to 8).map(j => lit(if (i == j) 1.0 else 0.0)): _*)
+      }: _*).as("a"): _*)
+    val g = Ols.gaussJordan(aug, "a", 9).select(col("pos") +: (means ++
+      UpperIdx.map { case (i, j) => col("a")(i)(j + 9).as(s"i${i}_$j") }): _*)
+    val d = (0 to 8).map(i => col(s"f$i") - col(s"m$i"))
+    val form = UpperIdx.map { case (i, j) =>
+      if (i == j) d(i) * d(j) * col(s"i${i}_$j")
+      else lit(2.0) * d(i) * d(j) * col(s"i${i}_$j")
+    }.reduce(_ + _)
+    test.join(broadcast(g), "pos")
+      .select(col("series"), col("win"), col("pos"), Num.r4(sqrt(form)).as("mdist"))
+  }
 
   /** Per-position cap on the q11/q12 kNN reference set: the neighbour
     * candidates of a position are its first MaxRef window ids.
@@ -268,15 +224,21 @@ object Detect {
     */
   def pipeline(spark: SparkSession, sfDir: String,
                denoiseThr: Double = 0.15, contamRate: Double = 0.1): DataFrame = {
-    // window scores materialize once (the threshold pass and the final
-    // select would otherwise each recompute the broadcast-kernel scan)
-    val winScores = StageCache.cached(spark, sfDir, s"q23ws_$denoiseThr") {
-      windowScores(spark, sfDir, denoiseThr)
-    }
-    val thrS = graft.util.Quantiles.exactLit(winScores, "score", 1.0 - contamRate)
+    val (winScores, thr) = scoreThreshold(spark, sfDir, denoiseThr, contamRate)
     winScores
       .select(col("series"), col("win"), Num.r4(col("score")).as("score"),
-        when(col("score") > thrS, 1).otherwise(0).as("pred"))
+        when(col("score") > thr.map(lit).getOrElse(lit(null).cast("double")), 1)
+          .otherwise(0).as("pred"))
+  }
+
+  /** q23's cached raw window scores and their (1−contam) quantile (None
+    * on empty input) — the one threshold [[pipeline]] flags with and
+    * ModelStore.save persists.
+    */
+  private[graft] def scoreThreshold(spark: SparkSession, sfDir: String, denoiseThr: Double,
+                                    contamRate: Double): (DataFrame, Option[Double]) = {
+    val ws = StageCache.cached(spark, sfDir, s"q23ws_$denoiseThr")(windowScores(spark, sfDir, denoiseThr))
+    (ws, graft.util.Quantiles.exactOne(ws, "score", 1.0 - contamRate))
   }
 
   /** q23's per-window scores (series, win, score) before the cache —

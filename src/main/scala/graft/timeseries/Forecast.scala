@@ -1031,14 +1031,12 @@ FROM pows"""
     *   x6      the 12-hour rolling mean of the immediately preceding
     *           points (the smoothed recent level a recurrent state
     *           carries)
-    * — ridge-solved per series. The 6×6 normal-equations solve runs as
-    * SIX UNROLLED Gauss–Jordan projection steps IN THE PLAN (chained
-    * narrow selects over the |series|-row stats frame; CollapseProject
-    * keeps the steps separate because pivots are multiply-referenced) —
-    * fully distributed, no driver matrix work, unlike q10's driver-side
-    * inversion which is only valid for its bounded ≤24-row case. The
-    * same machinery extends to any feature list (the spec's win
-    * criterion is what fixed this one).
+    * — ridge-solved per series. The 6×6 normal-equations solve is
+    * [[Ols.gaussJordan]] over the augmented `[S | sy]` array IN THE
+    * PLAN (six chained narrow selects over the |series|-row stats
+    * frame, the same elimination as q10's inverse) — fully distributed,
+    * no driver matrix work. The same machinery extends to any feature
+    * list (the spec's win criterion is what fixed this one).
     *
     * Calendar one-hot features (hour-of-day / day-of-week train
     * profiles) were evaluated and MEASURED OUT on this feed: their
@@ -1130,27 +1128,16 @@ FROM pows"""
       }) ++ (0 until p).map(i => q4sum(ctr(i) * (col("y") - col("my"))).as(s"sy$i"))
     val stats = Joins.dimJoin(train, means, Seq("series"), None)
       .groupBy("series").agg(scatterAggs.head, scatterAggs.tail: _*)
-    // augmented [S | sy] → six unrolled Gauss–Jordan steps (no pivoting:
-    // the ridge diagonal keeps pivots nonzero; fixed order = identical
-    // IEEE sequence in the oracle's g1..g6 CTE chain)
-    def aN(i: Int, j: Int) = s"a${i}_$j"
-    val init = stats.select(col("series") +:
-      (for { i <- 0 until p; j <- 0 to p } yield {
-        val c = if (j == p) col(s"sy$i")
-                else if (i <= j) col(s"s${i}_$j") else col(s"s${j}_$i")
-        c.as(aN(i, j))
-      }): _*)
-    val solved = (0 until p).foldLeft(init) { (cur, k) =>
-      cur.select(col("series") +:
-        (for { i <- 0 until p; j <- 0 to p } yield {
-          val e = if (i == k) col(aN(k, j)) / col(aN(k, k))
-                  else col(aN(i, j)) - col(aN(i, k)) * (col(aN(k, j)) / col(aN(k, k)))
-          e.as(aN(i, j))
-        }): _*)
-    }
+    // augmented [S | sy] → Ols.gaussJordan (no pivoting: the ridge
+    // diagonal keeps pivots nonzero); column p of the result is b1..b6
+    val aug = stats.select(col("series"), array((0 until p).map { i =>
+      array((0 to p).map { j =>
+        if (j == p) col(s"sy$i") else if (i <= j) col(s"s${i}_$j") else col(s"s${j}_$i")
+      }: _*)
+    }: _*).as("a"))
     Joins.dimJoin(
-        solved.select(col("series") +:
-          (0 until p).map(i => col(aN(i, p)).as(s"b${i + 1}")): _*),
+        Ols.gaussJordan(aug, "a", p).select(col("series") +:
+          (0 until p).map(i => col("a")(i)(p).as(s"b${i + 1}")): _*),
         means, Seq("series"), None)
       .withColumn("b0", col("my") -
         (1 to p).map(i => col(s"b$i") * col(s"m$i")).reduce(_ + _))

@@ -17,15 +17,16 @@ object ModelStore {
   /** Fit on the train split and persist all scoring artifacts. Both
     * quantile artifacts (denoise cut, score threshold) come from the
     * distributed range-sort (util.Quantiles) — nothing funnels the
-    * bank or the score stream into a one-reducer percentile buffer.
+    * bank or the score stream into a one-reducer percentile buffer. The
+    * threshold is the one Detect.pipeline flags with (over the raw
+    * window scores), so a served window gets its in-session `pred`.
     */
   def save(spark: SparkSession, sfDir: String, path: String,
            denoiseThr: Double = 0.15, contamRate: Double = 0.1): Unit = {
     import spark.implicits._
     Detect.keptBank(spark, sfDir, denoiseThr).write.mode("overwrite").parquet(s"$path/bank")
     TsCore.scaleBounds(spark, sfDir).write.mode("overwrite").parquet(s"$path/bounds")
-    val scores = Detect.pipeline(spark, sfDir, denoiseThr, contamRate)
-    Seq(graft.util.Quantiles.exactOne(scores, "score", 1.0 - contamRate))
+    Seq(Detect.scoreThreshold(spark, sfDir, denoiseThr, contamRate)._2)
       .toDF("threshold").write.mode("overwrite").parquet(s"$path/threshold")
   }
 

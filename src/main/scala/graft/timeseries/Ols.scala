@@ -17,8 +17,11 @@ import graft.util.Joins
   * conditional aggregate visits the same rows in the same scan order as
   * the filtered frame it replaces, so each fit is bit-identical to a
   * dedicated solve over its own rows.
+  *
+  * Wider systems — q10's 9×9 Gaussian inverse and q56's 6-feature ridge
+  * solve — go through the one in-plan [[gaussJordan]] elimination.
   */
-private[timeseries] object Ols {
+private[graft] object Ols {
 
   /** One model: its output columns end in `suffix` (`b0$suffix` …), `x`
     * names its three regressor columns (the target is `y`), and `ok`,
@@ -75,4 +78,24 @@ private[timeseries] object Ols {
     }
     Joins.dimJoin(stats, means, keys, None).select(keys.map(col) ++ coefCols: _*)
   }
+
+  /** Fixed-order Gauss-Jordan elimination on column `a`, an
+    * `array<array<double>>` holding an augmented n×(n+m) matrix per row —
+    * q10's `[Σ + 0.01·I | I]` (the right block becomes Σ⁻¹) and q56's
+    * `[S | sy]` (the last column becomes the coefficients). Step k maps
+    * row k to a(k,j)/a(k,k) and every other row to
+    * a(i,j) − a(i,k)·(a(k,j)/a(k,k)); there is no pivoting, so the
+    * callers' regularized diagonals keep a(k,k) nonzero. Each step is one
+    * select (CollapseProject keeps them apart: the pivot row is
+    * referenced many times), and TsOracle.gaussJordanCtes writes the same
+    * steps in DuckDB list form, so both engines agree bit-for-bit.
+    */
+  def gaussJordan(df: DataFrame, a: String, n: Int): DataFrame =
+    (0 until n).foldLeft(df) { (cur, k) =>
+      val akk = col(a)(k)(k)
+      cur.withColumn(a, transform(col(a), (r, i) => transform(r, (x, j) => {
+        val akj = col(a)(k)(j)
+        when(i === k, akj / akk).otherwise(x - r(k) * (akj / akk))
+      })))
+    }
 }

@@ -394,15 +394,29 @@ SELECT series, win, ${r4("max(pscore)")} AS score FROM scored GROUP BY series, w
     */
   private def upperIdx: Seq[(Int, Int)] = Detect.UpperIdx
 
-  /** q10: full 9-dim Mahalanobis, mirroring Detect.gaussianScore. The
-    * 9×9 inverse is computed by nine unrolled Gauss-Jordan CTE steps on
-    * a [9×18] augmented list matrix — the same fixed-order expression
-    * a'(i,j) = a(i,j) − a(i,k)·a(k,j)/a(k,k) (row k: a(k,j)/a(k,k)) the
-    * Scala driver evaluates, so both engines run the identical IEEE
-    * operation sequence.
+  /** Ols.gaussJordan's oracle twin: CTEs g1..gn, each one elimination
+    * step over the list-form augmented matrix `a` (n rows × `width`
+    * columns) of the CTE before it, starting at the caller's g0 and
+    * carrying `key`. Row k becomes a(k,j)/a(k,k), every other row
+    * a(i,j) − a(i,k)·(a(k,j)/a(k,k)) — the same fixed-order IEEE
+    * operation sequence, so both engines agree bit-for-bit.
     */
+  private def gaussJordanCtes(key: String, n: Int, width: Int): String =
+    (0 until n).map { k =>
+      val akj = s"a[${k + 1}][j+1]"
+      val akk = s"a[${k + 1}][${k + 1}]"
+      s""", g${k + 1} AS (
+  SELECT $key, list_transform(range($n), i -> list_transform(range($width), j ->
+    CASE WHEN i = $k THEN $akj / $akk
+         ELSE a[i+1][j+1] - a[i+1][${k + 1}] * ($akj / $akk) END)) AS a
+  FROM g$k
+)"""
+    }.mkString
+
   /** CTE chain computing the per-position 9-dim Gaussian inverse
-    * (gstats → g0 → … → g9 → ginv); shared by q10 and q29.
+    * (gstats → g0 → … → g9 → ginv), mirroring Detect.gaussianScore: the
+    * [Σ + 0.01·I | I] list matrix through [[gaussJordanCtes]]; shared
+    * by q10, q29 and q50.
     */
   private def gauss9Cte: String = {
     val means = (0 to 8).map(i => s"avg(f$i) AS m$i").mkString(", ")
@@ -416,14 +430,6 @@ SELECT series, win, ${r4("max(pscore)")} AS score FROM scored GROUP BY series, w
       val aug = (0 to 8).map(j => sig(i, j)) ++ (0 to 8).map(j => if (i == j) "1.0" else "0.0")
       aug.mkString("[", ", ", "]")
     }.mkString("[\n    ", ",\n    ", "]")
-    val steps = (0 until 9).map { k =>
-      s""", g${k + 1} AS (
-  SELECT pos, list_transform(range(9), i -> list_transform(range(18), j ->
-    CASE WHEN i = $k THEN a[${k + 1}][j+1] / a[${k + 1}][${k + 1}]
-         ELSE a[i+1][j+1] - a[i+1][${k + 1}] * a[${k + 1}][j+1] / a[${k + 1}][${k + 1}] END)) AS a
-  FROM g$k
-)"""
-    }.mkString
     val invCols = upperIdx.map { case (i, j) => s"a[${i + 1}][${j + 10}] AS i${i}_$j" }
       .mkString(",\n         ")
     s"""
@@ -434,7 +440,7 @@ SELECT series, win, ${r4("max(pscore)")} AS score FROM scored GROUP BY series, w
 ), g0 AS (
   SELECT pos, $g0 AS a
   FROM gstats
-)$steps, ginv AS (
+)${gaussJordanCtes("pos", 9, 18)}, ginv AS (
   SELECT g9.pos, ${(0 to 8).map(i => s"s.m$i").mkString(", ")},
          $invCols
   FROM g9 JOIN gstats s USING (pos)
@@ -450,6 +456,9 @@ SELECT series, win, ${r4("max(pscore)")} AS score FROM scored GROUP BY series, w
       if (i == j) term else s"2.0*$term"
     }.mkString(" + ")
 
+  /** q10: full 9-dim Mahalanobis, mirroring Detect.gaussianScoreBuild —
+    * both engines invert through the same elimination steps.
+    */
   def q10: String = prefix + gauss9Cte + s"""
 SELECT t.series, t.win, t.pos,
        ${r4(s"sqrt(${mdist9("t", "g")})")} AS mdist
@@ -701,9 +710,9 @@ FROM wexp e JOIN wcomplete USING (series, wid), t0w"""
     * region, each metric also mapped back to original units by (hi − lo).
     */
   /** q56: wide-context ridge forecaster — mirrors Forecast.featureForecast
-    * stage-for-stage: exact scaled-int means/scatter, six generated
-    * Gauss–Jordan CTE steps (g1..g6) running the identical IEEE sequence
-    * as the Spark projections, scaled-int error sums.
+    * stage-for-stage: exact scaled-int means/scatter, the `[S | sy]` list
+    * matrix through [[gaussJordanCtes]] (g1..g6, the identical IEEE
+    * sequence as Ols.gaussJordan), scaled-int error sums.
     */
   def q56(lambda: Double = 0.001, rollH: Int = 12): String = {
     val p = 6
@@ -718,20 +727,11 @@ FROM wexp e JOIN wcomplete USING (series, wid), t0w"""
       s"$e AS s${i}_$j"
     }) ++ (0 until p).map(i =>
       s"${q4sum(s"(${x(i)} - ${m(i)}) * (y - my)")} AS sy$i")).mkString(",\n    ")
-    val initCols = (for { i <- 0 until p; j <- 0 to p } yield {
-      val src = if (j == p) s"sy$i" else if (i <= j) s"s${i}_$j" else s"s${j}_$i"
-      s"$src AS a${i}_$j"
-    }).mkString(",\n    ")
-    val gj = (0 until p).map { k =>
-      val cols = (for { i <- 0 until p; j <- 0 to p } yield {
-        val e = if (i == k) s"a${k}_$j / a${k}_$k"
-                else s"a${i}_$j - a${i}_$k * (a${k}_$j / a${k}_$k)"
-        s"$e AS a${i}_$j"
-      }).mkString(",\n    ")
-      s""", g${k + 1} AS (
-  SELECT series, $cols FROM g$k
-)"""
-    }.mkString
+    val aug = (0 until p).map { i =>
+      (0 to p).map { j =>
+        if (j == p) s"sy$i" else if (i <= j) s"s${i}_$j" else s"s${j}_$i"
+      }.mkString("[", ", ", "]")
+    }.mkString("[\n    ", ",\n    ", "]")
     val b0expr = "my - (" + (1 to p).map(i => s"b$i * m$i").mkString(" + ") + ")"
     val predExpr = "b0 + (" + (1 to p).map(i => s"b$i * x$i").mkString(" + ") + ")"
     prefix + splitTCte + s"""
@@ -759,13 +759,13 @@ means56 AS (
   SELECT series, $meanCols
   FROM train56 GROUP BY series
 ), g0 AS (
-  SELECT series, $initCols FROM (
+  SELECT series, $aug AS a FROM (
     SELECT t.series, $scatterCols
     FROM train56 t JOIN means56 USING (series) GROUP BY t.series
   )
-)$gj
+)${gaussJordanCtes("series", p, p + 1)}
 , coefs56 AS (
-  SELECT g.series, ${(1 to p).map(i => s"g.a${i - 1}_$p AS b$i").mkString(", ")},
+  SELECT g.series, ${(1 to p).map(i => s"g.a[$i][${p + 1}] AS b$i").mkString(", ")},
          ${(0 until p).map(i => s"m.${m(i)}").mkString(", ")}, m.my
   FROM g$p g JOIN means56 m USING (series)
 ), coefs56b AS (

@@ -66,6 +66,28 @@ class ContractSpec extends AnyFunSuite {
     assert(counts === Map("Ols.scala" -> 1, "TsOracle.scala" -> 1))
   }
 
+  test("the Gauss-Jordan elimination step is written once in Spark and once in the oracle") {
+    // Ols.gaussJordan is the one Spark elimination (q10's inverse, q56's
+    // ridge solve) and TsOracle.gaussJordanCtes its one SQL twin. The
+    // step's other-row update is x − y·(p / q); squeeze the spaces out of
+    // ${…} splices and after commas so Column code and SQL text match the
+    // same pattern.
+    val step = """\S+ - \S+ \* \(\S+ / \S+\)""".r
+    val dir = new java.io.File("src/main/scala/graft/timeseries")
+    def read(f: java.io.File) = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val counts = dir.listFiles().toSeq.filter(_.getName.endsWith(".scala")).map { f =>
+      val src = """\$\{[^}]*\}""".r
+        .replaceAllIn(read(f), m => scala.util.matching.Regex.quoteReplacement(
+          m.matched.replaceAll("\\s", "")))
+        .replace(", ", ",")
+      f.getName -> step.findAllMatchIn(src).size
+    }.filter(_._2 > 0).toMap
+    assert(counts === Map("Ols.scala" -> 1, "TsOracle.scala" -> 1))
+    // q10's inverse runs in the plan: no driver-side copy, no round-trip
+    val detect = read(new java.io.File(dir, "Detect.scala"))
+    assert(Seq("invertGaussJordan", "createDataFrame").filter(detect.contains).isEmpty)
+  }
+
   test("q11/q12 have one bank-kNN route: no pairwise fallback or exact/capped forks") {
     // Detect.knnRef's packed graft_knn scan is the only kNN route; the
     // pairwise self-join lives on only as DetectSpec's reference

@@ -20,18 +20,43 @@ class DetectSpec extends SparkSuite {
   }
 
   test("gauss-jordan inverse: A·A⁻¹ = I on a random SPD matrix") {
+    import spark.implicits._
     val rnd = new scala.util.Random(11)
-    val b = Array.fill(9, 9)(rnd.nextDouble() - 0.5)
-    // A = BᵀB + 0.01 I is SPD like the regularized covariance
-    val a = Array.tabulate(9, 9) { (i, j) =>
-      (0 until 9).map(k => b(k)(i) * b(k)(j)).sum + (if (i == j) 0.01 else 0.0)
+    // BᵀB + d·I is SPD like the regularized covariance (d = 0.01) and
+    // q56's ridge normal equations (d = 0.001)
+    def spd(n: Int, d: Double): Array[Array[Double]] = {
+      val b = Array.fill(n, n)(rnd.nextDouble() - 0.5)
+      Array.tabulate(n, n) { (i, j) =>
+        (0 until n).map(k => b(k)(i) * b(k)(j)).sum + (if (i == j) d else 0.0)
+      }
     }
-    val inv = Detect.invertGaussJordan(a)
+    // Ols.gaussJordan over a one-row frame holding the augmented matrix
+    def eliminate(aug: Array[Array[Double]]): Seq[IndexedSeq[Double]] =
+      Ols.gaussJordan(Seq(Tuple1(aug.toSeq.map(_.toSeq))).toDF("a"), "a", aug.length)
+        .head().getSeq[collection.Seq[Double]](0).map(_.toIndexedSeq)
+    // q10's shape: [A | I] → [I | A⁻¹]
+    val a = spd(9, 0.01)
+    val out = eliminate(Array.tabulate(9, 18)((i, j) =>
+      if (j < 9) a(i)(j) else if (j - 9 == i) 1.0 else 0.0))
     for (i <- 0 until 9; j <- 0 until 9) {
-      val prod = (0 until 9).map(k => a(i)(k) * inv(k)(j)).sum
+      val prod = (0 until 9).map(k => a(i)(k) * out(k)(j + 9)).sum
       val expect = if (i == j) 1.0 else 0.0
       assert(math.abs(prod - expect) < 1e-8, s"($i,$j): $prod")
     }
+    // q56's shape: [S | b] (6×7) → the last column solves S·x = b
+    val s = spd(6, 0.001)
+    val rhs = Array.fill(6)(rnd.nextDouble() - 0.5)
+    val x = eliminate(Array.tabulate(6, 7)((i, j) => if (j < 6) s(i)(j) else rhs(i))).map(_(6))
+    for (i <- 0 until 6) {
+      val ax = (0 until 6).map(k => s(i)(k) * x(k)).sum
+      assert(math.abs(ax - rhs(i)) < 1e-8, s"row $i: $ax vs ${rhs(i)}")
+    }
+    // a single-patch position's NULL covar_samp propagates to NULLs (the
+    // oracle's behaviour) instead of failing the step's division
+    val withNull = spark.sql(
+      "SELECT array(array(CAST(NULL AS DOUBLE), 0.0, 1.0, 0.0), array(0.0, 1.0, 0.0, 1.0)) AS a")
+    assert(Ols.gaussJordan(withNull, "a", 2).head().getSeq[collection.Seq[java.lang.Double]](0)
+      .forall(_.forall(_ == null)))
   }
 
   test("lof weights hover around 1 for inliers") {

@@ -26,6 +26,23 @@ class ModelStoreSpec extends SparkSuite {
     assert(!p.contains("row_number"), "pairwise-join rank shape crept back")
   }
 
+  test("the persisted threshold equals the one q23 applies, bit-for-bit") {
+    val path = Files.createTempDirectory("graft-model-thr").toString
+    ModelStore.save(spark, Sf01, path)
+    val saved = ModelStore.threshold(spark, path).head().getDouble(0)
+    // q23 flags the RAW window scores above their (1 − contam) quantile,
+    // interpolated the way util.Quantiles (and DuckDB) interpolates
+    val raw = Detect.windowScores(spark, Sf01, denoiseThr = 0.15)
+      .select("score").collect().map(_.getDouble(0)).sorted
+    val r = (raw.length - 1) * (1.0 - 0.1)
+    val (lo, hi) = (math.floor(r).toInt, math.ceil(r).toInt)
+    val applied = if (lo == hi) raw(lo) else (1.0 - (r - lo)) * raw(lo) + (r - lo) * raw(hi)
+    assert(java.lang.Double.doubleToLongBits(saved) === java.lang.Double.doubleToLongBits(applied),
+      s"saved threshold $saved, q23 applies $applied")
+    assert(Detect.pipeline(spark, Sf01).filter(col("pred") === 1).count() ===
+      raw.count(_ > applied))
+  }
+
   test("forecast model save/load reproduces in-session predictions bit-for-bit") {
     import graft.timeseries.Forecast
     val path = Files.createTempDirectory("graft-fc").toString

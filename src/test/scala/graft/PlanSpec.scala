@@ -270,6 +270,49 @@ class PlanSpec extends SparkSuite {
     assert(joins <= 1, s"q50 re-grew its flag joins ($joins):\n${p.take(2000)}")
   }
 
+  test("q10 inverts in the plan: building it launches no job and scans no driver-made rows") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import graft.timeseries.{Detect, TsCore}
+    // the split's own builders may run jobs: build it before counting
+    val (bank, test) = TsCore.bankAndTest(spark, Sf01)
+    val sc = spark.sparkContext
+    val group = "planspec-q10-build"
+    val jobs = new ConcurrentLinkedQueue[Int]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.add(js.jobId)
+          case Some(g) if g == s"$group-drain" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    val q10 = try {
+      sc.setJobGroup(group, "build q10")
+      val df = Detect.gaussianScoreBuild(spark, Sf01)
+      df.queryExecution.executedPlan
+      // the bus delivers events in order: once this job's start arrives,
+      // every job the build launched has been seen
+      sc.setJobGroup(s"$group-drain", "drain the listener bus")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      df
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.isEmpty, s"building q10 launched jobs $jobs (a driver-side fit)")
+    // every RDD the plan scans is one of the cached bank/test stages —
+    // no createDataFrame round-trip of driver-computed rows
+    def rddScans(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    val extra = rddScans(q10) -- rddScans(bank) -- rddScans(test)
+    assert(extra.isEmpty, s"q10 scans driver-made RDDs $extra:\n${plan(q10).take(1500)}")
+  }
+
   test("bank scorers scan the packed bank once per patch — no graft_min_dist2 pass") {
     import graft.timeseries.{Detect, ModelStore}
     val dir = java.nio.file.Files.createTempDirectory("planspec-model").toString
