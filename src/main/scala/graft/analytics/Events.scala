@@ -460,9 +460,9 @@ object Events {
     * axis), the cut is a 2-scalar broadcast, the fitted model is a
     * ≤ |types|-row argmax (row_number over the |types|² count table —
     * BI-table sized regardless of input), and the eval is one hash agg
-    * over the test steps with the model attached by the size-aware
-    * dimJoin. A source unseen in training predicts NULL and scores 0 —
-    * reported, not dropped.
+    * over the test steps with the model attached by an unhinted left
+    * join (AQE picks broadcast or shuffle at run time). A source unseen
+    * in training predicts NULL and scores 0 — reported, not dropped.
     */
   def nextEventEval(spark: SparkSession, sfDir: String,
                     frac: Double = 0.7): DataFrame = {
@@ -487,7 +487,7 @@ object Events {
       .filter(col("rn") === 1)
       .select(col("src"), col("dst").as("pred_dst"))
     st.filter(col("dtsec") >= col("tcut"))
-      .transform(graft.util.Joins.dimJoin(_, model, Seq("src"), None, "left"))
+      .join(model, Seq("src"), "left")
       .groupBy("src", "pred_dst")
       .agg(count(lit(1)).as("n_test"),
         sum(when(col("dst") === col("pred_dst"), 1L).otherwise(0L)).as("n_correct"))

@@ -340,7 +340,7 @@ object ScoreStream {
     * StreamingSpec asserts full parity.
     *
     * The model joins as a broadcast stream-static table DELIBERATELY,
-    * unlike the batch twins' size-aware dimJoin: stream-static joins
+    * unlike the batch twins' unhinted per-series joins: stream-static joins
     * get no AQE re-plan, and an unhinted plan would re-sort the static
     * side every microbatch — a serving fleet pins its model in memory,
     * which is exactly what the broadcast expresses. A model too big to

@@ -6,7 +6,7 @@ package graft.text
   * with the shared floor(x·1e4+0.5)/1e4 form.
   */
 object DocOracle {
-  private def r4(e: String): String = s"floor(($e)*10000 + 0.5)/10000"
+  import graft.util.Num.{r4sql => r4}
 
   /** 32-bit hash identical to TextCore.strHash. */
   private def h(e: String): String = s"CAST('0x' || substr(md5($e), 1, 8) AS BIGINT)"

@@ -3,7 +3,7 @@ package graft.timeseries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.util.{Joins, Num, StageCache}
+import graft.util.{Num, StageCache}
 
 /** Load forecasting capability (reference: src/forecasting/ seq2seq GRU /
   * SCINet). Re-expressed Spark-first: a seasonal-naive baseline and a
@@ -29,7 +29,7 @@ object Forecast {
 
   /** q21/q58's shared seasonal-naive spine: (series, t, y, p, tsplit)
     * with p = the week-earlier value — one per-series lag pass + the
-    * size-aware boundary join. Both consumers derive from this ONE
+    * unhinted boundary join. Both consumers derive from this ONE
     * definition so the predictor can never silently desynchronize
     * between the error report and the conformal calibration.
     */
@@ -38,7 +38,7 @@ object Forecast {
     TsCore.filled(spark, sfDir)
       .select(col("series"), col("t"), col("v_filled").as("y"))
       .withColumn("p", lag("y", TsCore.WeekLag).over(w))
-      .transform(Joins.dimJoin(_, boundaryT(spark, sfDir), Seq("series"), None))
+      .join(boundaryT(spark, sfDir), "series")
   }
 
   /** q21: seasonal-naive forecast (pred = value one week earlier) over
@@ -70,7 +70,7 @@ object Forecast {
     */
   private[timeseries] def lagBase(spark: SparkSession, sfDir: String): DataFrame =
     withLags(spark, sfDir)
-      .transform(Joins.dimJoin(_, boundaryT(spark, sfDir), Seq("series"), None))
+      .join(boundaryT(spark, sfDir), "series")
       .filter(col("y").isNotNull && col("x1").isNotNull &&
               col("x2").isNotNull && col("x3").isNotNull)
 
@@ -105,7 +105,7 @@ object Forecast {
   private[timeseries] def olsSolve(base: DataFrame): DataFrame = {
     val coefs = olsFit(base.filter(col("t") < col("tsplit")))
     val test = base.filter(col("t") >= col("tsplit"))
-      .transform(Joins.dimJoin(_, coefs, Seq("series"), None))
+      .join(coefs, "series")
       .withColumn("p", col("b0") + col("b1") * col("x1") + col("b2") * col("x2") + col("b3") * col("x3"))
     test.groupBy("series").agg(
       count(lit(1)).as("n"),
@@ -143,7 +143,7 @@ object Forecast {
     val base = lagBase(spark, sfDir)
     val coefs = olsFit(base.filter(col("t") < col("tsplit")))
     val test = base.filter(col("t") >= col("tsplit"))
-      .transform(Joins.dimJoin(_, coefs, Seq("series"), None))
+      .join(coefs, "series")
       .filter(!isnan(col("b0"))) // degenerate fits drop (q60's guard)
       .withColumn("p_ols", col("b0") + col("b1") * col("x1") +
         col("b2") * col("x2") + col("b3") * col("x3"))
@@ -159,7 +159,7 @@ object Forecast {
     val smTerm = when(abs(col("p")) + abs(col("y")) === 0.0, 0L)
       .otherwise(floor(lit(2d) * abs(col("y") - col("p")) /
         (abs(col("p")) + abs(col("y"))) * 1000000d + 0.5d).cast("long"))
-    Joins.dimJoin(both, ybar, Seq("series"), None)
+    both.join(ybar, "series")
       .groupBy("series", "variant").agg(
         count(lit(1)).as("n"),
         sum(smTerm).as("ssm"),
@@ -202,7 +202,7 @@ object Forecast {
       TsCore.filled(spark, sfDir)
         .select(col("series"), col("t"), col("v_filled").as("y"))
         .select(Seq(col("series"), col("t"), col("y")) ++ lagCols: _*)
-        .transform(Joins.dimJoin(_, boundaryT(spark, sfDir), Seq("series"), None))
+        .join(boundaryT(spark, sfDir), "series")
     }
     // ALL horizons solve in THREE shared aggregation passes (the two
     // Ols passes, then test errors) with per-horizon when(ok_h, …)
@@ -224,9 +224,9 @@ object Forecast {
         avg(when(ok(h), abs(col("y") - p))).as(s"mae_$h"),
         sqrt(avg(when(ok(h), (col("y") - p) * (col("y") - p)))).as(s"rmse_$h"))
     }
-    val errs = Joins.dimJoin(test, coefs, Seq("series"), None)
+    val errs = test.join(coefs, "series")
       .groupBy("series").agg(errAggs.head, errAggs.tail: _*)
-    Joins.dimJoin(errs, coefs, Seq("series"), None)
+    errs.join(coefs, "series")
       .select(col("series"), explode(array(horizons.map { h =>
         struct(lit(h).as("horizon"), col(s"n_$h").as("n"),
           col(s"b0_$h").as("b0"), col(s"b1_$h").as("b1"),
@@ -293,20 +293,19 @@ object Forecast {
     * rescaled to original units via the saved q01/q99 bounds — min-max
     * scaling is affine, so absolute/squared errors rescale by (hi−lo)
     * (the additive lo cancels in differences). One window pass + one
-    * grouped agg per series; bounds broadcast.
+    * grouped agg per series; the bounds join with no static hint.
     */
   def rescaledMetrics(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("series").orderBy("t")
-    // bounds / split boundaries are |series|-scale frames → size-aware
-    // joins (Joins.dimJoin None path), not hard-coded broadcasts
-    val scaled = graft.util.Joins.dimJoin(TsCore.filled(spark, sfDir),
-        TsCore.scaleBounds(spark, sfDir), Seq("series"), None)
+    // bounds / split boundaries are |series|-scale frames → joins with
+    // no static hint (AQE picks the strategy at run time), not broadcasts
+    val scaled = TsCore.filled(spark, sfDir)
+      .join(TsCore.scaleBounds(spark, sfDir), "series")
       .select(col("series"), col("t"),
         Num.r4((col("v_filled") - col("lo")) / (col("hi") - col("lo"))).as("vs"),
         col("lo"), col("hi"))
-    val pred = graft.util.Joins.dimJoin(
-        scaled.withColumn("p", lag("vs", TsCore.WeekLag).over(w)),
-        boundaryT(spark, sfDir), Seq("series"), None)
+    val pred = scaled.withColumn("p", lag("vs", TsCore.WeekLag).over(w))
+      .join(boundaryT(spark, sfDir), "series")
       .filter(col("t") >= col("tsplit") && col("vs").isNotNull && col("p").isNotNull)
     // scaled-integer error sums (order-independent; vs is r4-quantized)
     val aeInt = floor(abs(col("vs") - col("p")) * 10000d + 0.5d).cast("long")
@@ -321,16 +320,6 @@ object Forecast {
         Num.r4(sqrt(col("sse") / 10000d / col("n")) * (col("hi") - col("lo"))).as("rmse_orig"))
   }
 
-  /** q48: classical additive decomposition — v = trend + seasonal +
-    * resid per point (the full STL-lite triple; q24 extracts only the
-    * seasonal profile). Trend is a centered (2·half+1)-point moving
-    * average built from RUNNING prefix sums (q33's engine-order-safe
-    * frame-mean trick — framed avgs differ across engines in ulps),
-    * emitted only where the frame holds a full complement of observed
-    * values; seasonal is the hour-of-day mean of the detrended signal
-    * via quantized-integer sums (order-free); resid is the remainder.
-    * Two window passes + one |series|×24-row broadcast join.
-    */
   /** q48/q59's shared per-point (trend, detr) base: the centered
     * (2·half+1)-point prefix-sum trend over the filled series, emitted
     * only where the frame holds a full complement. Session-cached —
@@ -357,12 +346,22 @@ object Forecast {
     }
   }
 
+  /** q48: classical additive decomposition — v = trend + seasonal +
+    * resid per point (the full STL-lite triple; q24 extracts only the
+    * seasonal profile). Trend is a centered (2·half+1)-point moving
+    * average built from RUNNING prefix sums (q33's engine-order-safe
+    * frame-mean trick — framed avgs differ across engines in ulps),
+    * emitted only where the frame holds a full complement of observed
+    * values; seasonal is the hour-of-day mean of the detrended signal
+    * via quantized-integer sums (order-free); resid is the remainder.
+    * Two window passes + one |series|×24-row broadcast join.
+    */
   def decompose(spark: SparkSession, sfDir: String, half: Int = 12): DataFrame = {
     val base = decomposeBase(spark, sfDir, half)
     val seas = base.groupBy(col("series"), (col("t") % TsCore.DaySize).as("pos"))
       .agg((Num.sumQ4(col("detr")) / count(lit(1))).as("seasonal"))
     base.withColumn("pos", col("t") % TsCore.DaySize)
-      .transform(Joins.dimJoin(_, seas, Seq("series", "pos"), None))
+      .join(seas, Seq("series", "pos"))
       .select(col("series"), col("t"), Num.r4(col("trend")).as("trend"),
         Num.r4(col("seasonal")).as("seasonal"),
         Num.r4(col("detr") - col("seasonal")).as("resid"))
@@ -403,7 +402,7 @@ object Forecast {
     */
   def seasonalProfile(spark: SparkSession, sfDir: String): DataFrame = {
     val train = TsCore.dayWindows(spark, sfDir)
-      .transform(Joins.dimJoin(_, TsCore.splitBoundary(spark, sfDir), Seq("series"), None))
+      .join(TsCore.splitBoundary(spark, sfDir), "series")
       .filter(col("win") < col("mwin"))
     // means over r4-quantized v via integer sums: quantized inputs put
     // Σ/n exactly on rounding boundaries ~1/n of the time, where a raw
@@ -412,7 +411,7 @@ object Forecast {
       .agg((Num.sumQ4(col("v")) / count(lit(1))).as("mu"))
     train.groupBy("series", "pos")
       .agg((Num.sumQ4(col("v")) / count(lit(1))).as("posmean"))
-      .transform(Joins.dimJoin(_, overall, Seq("series"), None))
+      .join(overall, "series")
       .select(col("series"), col("pos"), Num.r4(col("posmean") - col("mu")).as("seasonal"))
   }
 
@@ -444,7 +443,7 @@ object Forecast {
     val aeInt = floor(abs(col("v") - col("p")) * 10000d + 0.5d).cast("long")
     val seInt = floor((col("v") - col("p")) * (col("v") - col("p")) * 10000d + 0.5d).cast("long")
     all.join(pred, Seq("series", "variant", "t"))
-      .transform(Joins.dimJoin(_, boundt, Seq("series"), None))
+      .join(boundt, "series")
       .filter(col("t") >= col("tsplit"))
       .groupBy("series", "variant")
       .agg(count(lit(1)).as("n"), sum(aeInt).as("sae"), sum(seInt).as("sse"))
@@ -470,10 +469,8 @@ object Forecast {
                             maskSize: Int = 8, lambda: Double = 0.01): DataFrame = {
     val n = TsCore.DaySize
     val inj = TsCore.injected(spark, sfDir)
-    val preds = Joins.dimJoin(
-        Impute.imputePoints(spark, sfDir, maskSize, onlyTestSplit = false),
-        Impute.imputerCoefs(spark, sfDir, maskSize, lambda),
-        Seq("series", "o"), None, "left")
+    val preds = Impute.imputePoints(spark, sfDir, maskSize, onlyTestSplit = false)
+      .join(Impute.imputerCoefs(spark, sfDir, maskSize, lambda), Seq("series", "o"), "left")
       .withColumn("p", Impute.imputePred)
       .select(col("series"), col("win"), col("pos"),
         coalesce(Num.r4(col("p")), Num.r4(col("xs"))).as("v_fill"))
@@ -496,7 +493,7 @@ object Forecast {
     val aeInt = floor(abs(col("v") - col("p")) * 10000d + 0.5d).cast("long")
     val seInt = floor((col("v") - col("p")) * (col("v") - col("p")) * 10000d + 0.5d).cast("long")
     all.join(pred, Seq("series", "variant", "t"))
-      .transform(Joins.dimJoin(_, boundt, Seq("series"), None))
+      .join(boundt, "series")
       .filter(col("t") >= col("tsplit"))
       .groupBy("series", "variant")
       .agg(count(lit(1)).as("n"), sum(aeInt).as("sae"), sum(seInt).as("sse"))
@@ -585,7 +582,7 @@ object Forecast {
     */
   private def decomposeForecastFrom(spark: SparkSession, sfDir: String,
                                     base: DataFrame): DataFrame = {
-    val b = Joins.dimJoin(base, boundaryT(spark, sfDir), Seq("series"), None)
+    val b = base.join(boundaryT(spark, sfDir), "series")
     // train-only seasonal profile of the detrended signal (q48's dseas
     // restricted to t < tsplit): quantized-int means, order-free
     val seasTr = b.filter(col("t") < col("tsplit"))
@@ -601,7 +598,7 @@ object Forecast {
       .join(trLag, Seq("series", "t"))
       .join(yLag, Seq("series", "t"))
       .withColumn("pos", col("t") % TsCore.DaySize)
-      .transform(Joins.dimJoin(_, seasTr, Seq("series", "pos"), None))
+      .join(seasTr, Seq("series", "pos"))
       .select(col("series"), col("v_filled").as("y"),
         (col("tr_lag") + col("seas")).as("p_dec"), col("p_dir"))
       .localCheckpoint(eager = false)
@@ -664,9 +661,9 @@ object Forecast {
     val base = TsCore.filled(spark, sfDir)
       .select(col("series"), col("t"), col("v_filled").as("y"))
       .select(Seq(col("series"), col("t"), col("y")) ++ lagCols: _*)
-      .transform(Joins.dimJoin(_, boundaryT(spark, sfDir), Seq("series"), None))
+      .join(boundaryT(spark, sfDir), "series")
       .filter(col("t") >= col("tsplit"))
-      .transform(Joins.dimJoin(_, coefs, Seq("series"), None))
+      .join(coefs, "series")
     // unroll the decode loop: same left-assoc fold order as the oracle
     def pred(h: Int): Column = {
       var p: Column = col(s"l$h")
@@ -697,11 +694,6 @@ object Forecast {
         Num.r4(sqrt(col("s.sse") / 10000d / col("s.n"))).as("rmse"))
   }
 
-  /** q32: autocorrelation function at the forecasting-relevant lags
-    * (1 = persistence, 24 = daily, 168 = weekly): Pearson correlation of
-    * the series with its lagged self, one window pass + one agg per lag,
-    * all lags in a single plan (union of conditional frames).
-    */
   /** q35: multi-horizon persistence backtest — forecast error of the
     * h-step persistence baseline (pred[t] = v[t−h]) over the test
     * region, per (series, horizon). The error-vs-horizon curve is the
@@ -712,10 +704,8 @@ object Forecast {
   def horizonBacktest(spark: SparkSession, sfDir: String,
                       horizons: Seq[Int] = Seq(1, 6, 12, 24)): DataFrame = {
     val w = Window.partitionBy("series").orderBy("t")
-    val f = Joins.dimJoin(TsCore.filled(spark, sfDir),
-      TsCore.splitBoundary(spark, sfDir)
-        .select(col("series"), (col("mwin") * TsCore.DaySize).as("tsplit")),
-      Seq("series"), None)
+    val f = TsCore.filled(spark, sfDir).join(TsCore.splitBoundary(spark, sfDir)
+      .select(col("series"), (col("mwin") * TsCore.DaySize).as("tsplit")), "series")
     horizons.map { h =>
       // scaled-integer error sums: order-independent, exactly
       // deterministic (inputs are r4-quantized upstream)
@@ -754,7 +744,7 @@ object Forecast {
         floor(col("v_filled") * 10000d + 0.5d).cast("long").as("vq"))
     val mu = vq.groupBy("series")
       .agg(floor(sum("vq") / count(lit(1)) + 0.5d).cast("long").as("mu"))
-    val dv = Joins.dimJoin(vq, mu, Seq("series"), None)
+    val dv = vq.join(mu, "series")
       .withColumn("dq", col("vq") - col("mu"))
     val pows = periods.map { p =>
       val ph = (col("t") % p).cast("int") + 1
@@ -830,8 +820,8 @@ FROM pows"""
     * same scan order as the filtered frame it replaces, so every
     * sufficient statistic, coefficient and error is bit-identical to
     * the per-fold solve. The
-    * |series|-scale boundary/mean/coefficient frames join through
-    * [[graft.util.Joins.dimJoin]]'s size-aware (None) path — at
+    * |series|-scale boundary/mean/coefficient frames join with no
+    * static hint, so AQE picks broadcast or shuffle at run time — at
     * millions of meters they are tens of MB and must not be
     * unconditionally broadcast.
     */
@@ -853,7 +843,7 @@ FROM pows"""
     // three agg passes below otherwise each re-derive the per-series
     // window sort — 4 lag passes where one suffices
     val withB = StageCache.cached(spark, sfDir, s"q54lags_${fracs.mkString("_")}") {
-      graft.util.Joins.dimJoin(base, bnds.drop("t0", "t1"), Seq("series"), None)
+      base.join(bnds.drop("t0", "t1"), "series")
     }
     def trainOk(i: Int) = col("t") < col(s"cut$i")
     def testOk(i: Int) = col("t") >= col(s"cut$i") && col("t") < col(s"cut${i + 1}")
@@ -870,7 +860,7 @@ FROM pows"""
         avg(when(testOk(i), abs(col("y") - p))).as(s"mae_$i"),
         sqrt(avg(when(testOk(i), (col("y") - p) * (col("y") - p)))).as(s"rmse_$i"))
     }
-    val errs = graft.util.Joins.dimJoin(withB, coefs, Seq("series"), None)
+    val errs = withB.join(coefs, "series")
       .groupBy("series").agg(errAggs.head, errAggs.tail: _*)
     errs.select(col("series"), explode(array(fracs.indices.map { i =>
         struct(lit(i).as("fold"), col(s"n_$i").as("n"), col(s"b0_$i").as("b0"),
@@ -884,28 +874,6 @@ FROM pows"""
         Num.r4(col("s.mae")).as("mae"), Num.r4(col("s.rmse")).as("rmse"))
   }
 
-  /** q62: DRIFT-TRIGGERED REFIT AUDIT — the model-maintenance loop a
-    * deployed forecaster runs (the operational complement of q54's
-    * backtest; drift-gated retraining is the standard MLOps policy,
-    * public): per series,
-    *
-    *   1. PSI between the value distribution before and after the
-    *      train cut (qp7's smoothed 10-bin formula on the same
-    *      1e-6-int term grid) — the "has the world moved" signal;
-    *   2. the STALE model (q22's 3-lag OLS trained before cutA) vs a
-    *      REFRESHED refit (trained before cutB, i.e. including the
-    *      post-deployment data) evaluated on the SAME final slice
-    *      [cutB, end) — the "would retraining have helped" answer.
-    *
-    * Output: (series, psi, drifted, n, mae_stale, mae_refit) — the
-    * table a maintenance job turns into refit decisions.
-    *
-    * Scale shape: one lag pass; BOTH fits are conditional sufficient-
-    * statistics aggs in the same two passes (q54's fold discipline —
-    * no per-model scan); the PSI chain is one filled pass + a
-    * |series|×nBins agg; everything joins per series via the
-    * size-aware dimJoin.
-    */
   /** q62's cached lag+cut frame: lags straight off the filled spine —
     * NOT lagBase: its q22-semantic boundary join (complete-window
     * split) would empty the frame on sparse feeds where no day window
@@ -926,7 +894,7 @@ FROM pows"""
       (col("t0") + floor((col("t1") - col("t0") + 1) * fracA).cast("long")).as("cutA"),
       (col("t0") + floor((col("t1") - col("t0") + 1) * fracB).cast("long")).as("cutB"))
     StageCache.cached(spark, sfDir, s"q62lags_${fracA}_$fracB") {
-      graft.util.Joins.dimJoin(base, cuts, Seq("series"), None)
+      base.join(cuts, "series")
     }
   }
 
@@ -942,10 +910,8 @@ FROM pows"""
                                    fracA: Double = 0.7, fracB: Double = 0.85): DataFrame =
     StageCache.cached(spark, sfDir, s"q62art_${fracA}_$fracB") {
       val withB = refitLags(spark, sfDir, fracA, fracB)
-      graft.util.Joins.dimJoin(
-        withB.select("series", "cutA", "cutB").distinct(),
-        condOlsCoefs(withB, Seq("cutA", "cutB"), c => col("t") < col(c)),
-        Seq("series"), None)
+      withB.select("series", "cutA", "cutB").distinct()
+        .join(condOlsCoefs(withB, Seq("cutA", "cutB"), c => col("t") < col(c)), "series")
     }
 
   /** The stale/refreshed prediction off a refitArtifact-joined row —
@@ -970,7 +936,7 @@ FROM pows"""
     val cuts = refitLags(spark, sfDir, fracA, fracB)
       .select("series", "cutA").distinct()
     val pts = TsCore.filled(spark, sfDir).filter(col("v_filled").isNotNull)
-      .transform(graft.util.Joins.dimJoin(_, cuts, Seq("series"), None))
+      .join(cuts, "series")
       .withColumn("mn", min("v_filled").over(wp))
       .withColumn("mx", max("v_filled").over(wp))
       .withColumn("bin", when(col("mx") === col("mn"), 0L).otherwise(
@@ -982,6 +948,28 @@ FROM pows"""
       .agg(max("mn").as("mn"), (max("mx").as("mx") +: binAggs): _*)
   }
 
+  /** q62: DRIFT-TRIGGERED REFIT AUDIT — the model-maintenance loop a
+    * deployed forecaster runs (the operational complement of q54's
+    * backtest; drift-gated retraining is the standard MLOps policy,
+    * public): per series,
+    *
+    *   1. PSI between the value distribution before and after the
+    *      train cut (qp7's smoothed 10-bin formula on the same
+    *      1e-6-int term grid) — the "has the world moved" signal;
+    *   2. the STALE model (q22's 3-lag OLS trained before cutA) vs a
+    *      REFRESHED refit (trained before cutB, i.e. including the
+    *      post-deployment data) evaluated on the SAME final slice
+    *      [cutB, end) — the "would retraining have helped" answer.
+    *
+    * Output: (series, psi, drifted, n, mae_stale, mae_refit) — the
+    * table a maintenance job turns into refit decisions.
+    *
+    * Scale shape: one lag pass; BOTH fits are conditional sufficient-
+    * statistics aggs in the same two passes (q54's fold discipline —
+    * no per-model scan); the PSI chain is one filled pass + a
+    * |series|×nBins agg; everything joins per series with no static
+    * hint (AQE picks broadcast or shuffle at run time).
+    */
   def refitTrigger(spark: SparkSession, sfDir: String, fracA: Double = 0.7,
                    fracB: Double = 0.85, nBins: Int = 10,
                    thr: Double = 0.1): DataFrame = {
@@ -992,7 +980,7 @@ FROM pows"""
     val coefs = refitArtifact(spark, sfDir, fracA, fracB).drop("cutA", "cutB")
     def p(c: String) = refitPred(c)
     val evalOk = col("t") >= col("cutB")
-    val errs = graft.util.Joins.dimJoin(withB, coefs, Seq("series"), None)
+    val errs = withB.join(coefs, "series")
       .groupBy("series").agg(
         sum(when(evalOk, 1L)).as("n"),
         // b0s ride along (constant per series) for the null guard below
@@ -1011,54 +999,16 @@ FROM pows"""
     // `cuts` here would rebuild the whole lag pass for the PSI branch
     // (PlanSpec gates this)
     val pts = TsCore.filled(spark, sfDir).filter(col("v_filled").isNotNull)
-      .transform(graft.util.Joins.dimJoin(_,
-        withB.select("series", "cutA").distinct(), Seq("series"), None))
+      .join(withB.select("series", "cutA").distinct(), "series")
     val psi = TsQueries.psiOf(pts, when(col("t") < col("cutA"), 0).otherwise(1), nBins)
       .select("series", "psi")
-    graft.util.Joins.dimJoin(errs, psi, Seq("series"), None)
+    errs.join(psi, "series")
       .select(col("series"), col("psi"),
         when(col("psi") > thr, 1).otherwise(0).as("drifted"), col("n"),
         Num.r4(col("mae_stale")).as("mae_stale"),
         Num.r4(col("mae_refit")).as("mae_refit"))
   }
 
-  /** q56: wide-context ridge forecaster — the closed-form stand-in for
-    * the reference's sequence forecasters (seq2seq GRU wrapper.py:129,
-    * SCINet.py): their encoders consume the WHOLE input window, where
-    * q22 sees exactly 3 lags. q56 widens the context to SIX features —
-    *   x1..x3  short-range lags 1, 2, 3 (the encoder's local context),
-    *   x4, x5  the seasonal lags 24, 168,
-    *   x6      the 12-hour rolling mean of the immediately preceding
-    *           points (the smoothed recent level a recurrent state
-    *           carries)
-    * — ridge-solved per series. The 6×6 normal-equations solve is
-    * [[Ols.gaussJordan]] over the augmented `[S | sy]` array IN THE
-    * PLAN (six chained narrow selects over the |series|-row stats
-    * frame, the same elimination as q10's inverse) — fully distributed,
-    * no driver matrix work. The same machinery extends to any feature
-    * list (the spec's win criterion is what fixed this one).
-    *
-    * Calendar one-hot features (hour-of-day / day-of-week train
-    * profiles) were evaluated and MEASURED OUT on this feed: their
-    * train-split correlation (~0.25) equals the sampling-noise floor
-    * (σ/√(n/24)) and collapses to ~0 on the test split, so they only
-    * add overfit variance — a real meter feed with true daily shape
-    * would add them back as two more dimJoin'd profile aggregates.
-    *
-    * Determinism by construction: every mean is an exact scaled-int
-    * sum over r4-quantized inputs; every scatter/error term quantizes
-    * to the 1e-4 grid before an integer accumulation (order-free in
-    * both engines); the Gauss–Jordan steps then run the identical IEEE
-    * sequence on identical doubles. Bound: per-series Σ|term|·1e4 must
-    * stay < 2^63 (holds to ~10⁶ points/series at load magnitudes; at
-    * larger n switch the accumulator to 1e-2 scale).
-    *
-    * Scale shape: ONE per-series window pass builds all six features
-    * (the rolling mean is an exact int frame-sum over the gapless
-    * spine); one sufficient-statistics agg; six |series|-row
-    * projections; one test error agg. |series|-scale frames join via
-    * the size-aware dimJoin path.
-    */
   /** q56's feature frame (series, t, y, x1..x6, tsplit) — one cached
     * per-series window pass; shared by the solver, the metrics output,
     * and the ModelStore/streaming apply paths.
@@ -1082,7 +1032,7 @@ FROM pows"""
         .withColumn("x6", when(count("yq").over(wRoll) === rollH,
           sum("yq").over(wRoll) / 10000d / rollH))
         .drop("yq")
-      Joins.dimJoin(f, boundaryT(spark, sfDir), Seq("series"), None)
+      f.join(boundaryT(spark, sfDir), "series")
         .filter(col("y").isNotNull && col("x1").isNotNull &&
           col("x2").isNotNull && col("x3").isNotNull && col("x4").isNotNull &&
           col("x5").isNotNull && col("x6").isNotNull)
@@ -1093,8 +1043,8 @@ FROM pows"""
     * train split — the artifact ModelStore persists. The apply
     * expression [[featurePred]] over these exact doubles is what makes
     * saved-model scoring bit-identical to the in-session fit.
-    */
-  /** Session-cached for the same reason as Impute.imputerCoefs: the
+    *
+    * Session-cached for the same reason as Impute.imputerCoefs: the
     * fitted model is ONE realization per session — raw-double stat
     * sums are partition-order-sensitive in the last ulp, so save and
     * serve must read the same materialization.
@@ -1120,13 +1070,12 @@ FROM pows"""
     // exact scatter: each centered term quantizes to the 1e-4 grid and
     // accumulates as int64 — order-free in both engines
     def ctr(i: Int) = col(x(i)) - col(m(i))
-    def q4sum(c: Column) = sum(floor(c * 10000d + 0.5d).cast("long")) / 10000d
     val scatterAggs =
       (for { i <- 0 until p; j <- i until p } yield {
-        val s = q4sum(ctr(i) * ctr(j))
+        val s = Num.sumQ4(ctr(i) * ctr(j))
         (if (i == j) s + lambda else s).as(s"s${i}_$j")
-      }) ++ (0 until p).map(i => q4sum(ctr(i) * (col("y") - col("my"))).as(s"sy$i"))
-    val stats = Joins.dimJoin(train, means, Seq("series"), None)
+      }) ++ (0 until p).map(i => Num.sumQ4(ctr(i) * (col("y") - col("my"))).as(s"sy$i"))
+    val stats = train.join(means, "series")
       .groupBy("series").agg(scatterAggs.head, scatterAggs.tail: _*)
     // augmented [S | sy] → Ols.gaussJordan (no pivoting: the ridge
     // diagonal keeps pivots nonzero); column p of the result is b1..b6
@@ -1135,10 +1084,9 @@ FROM pows"""
         if (j == p) col(s"sy$i") else if (i <= j) col(s"s${i}_$j") else col(s"s${j}_$i")
       }: _*)
     }: _*).as("a"))
-    Joins.dimJoin(
-        Ols.gaussJordan(aug, "a", p).select(col("series") +:
-          (0 until p).map(i => col("a")(i)(p).as(s"b${i + 1}")): _*),
-        means, Seq("series"), None)
+    Ols.gaussJordan(aug, "a", p)
+      .select(col("series") +: (0 until p).map(i => col("a")(i)(p).as(s"b${i + 1}")): _*)
+      .join(means, "series")
       .withColumn("b0", col("my") -
         (1 to p).map(i => col(s"b$i") * col(s"m$i")).reduce(_ + _))
       .select(col("series") +: (0 to p).map(i => col(s"b$i")): _*)
@@ -1150,13 +1098,50 @@ FROM pows"""
   private[graft] def featurePred: Column =
     col("b0") + (1 to 6).map(i => col(s"b$i") * col(s"x$i")).reduce(_ + _)
 
+  /** q56: wide-context ridge forecaster — the closed-form stand-in for
+    * the reference's sequence forecasters (seq2seq GRU wrapper.py:129,
+    * SCINet.py): their encoders consume the WHOLE input window, where
+    * q22 sees exactly 3 lags. q56 widens the context to SIX features —
+    *   x1..x3  short-range lags 1, 2, 3 (the encoder's local context),
+    *   x4, x5  the seasonal lags 24, 168,
+    *   x6      the 12-hour rolling mean of the immediately preceding
+    *           points (the smoothed recent level a recurrent state
+    *           carries)
+    * — ridge-solved per series. The 6×6 normal-equations solve is
+    * [[Ols.gaussJordan]] over the augmented `[S | sy]` array IN THE
+    * PLAN (six chained narrow selects over the |series|-row stats
+    * frame, the same elimination as q10's inverse) — fully distributed,
+    * no driver matrix work. The same machinery extends to any feature
+    * list (the spec's win criterion is what fixed this one).
+    *
+    * Calendar one-hot features (hour-of-day / day-of-week train
+    * profiles) were evaluated and MEASURED OUT on this feed: their
+    * train-split correlation (~0.25) equals the sampling-noise floor
+    * (σ/√(n/24)) and collapses to ~0 on the test split, so they only
+    * add overfit variance — a real meter feed with true daily shape
+    * would add them back as two more joined profile aggregates.
+    *
+    * Determinism by construction: every mean is an exact scaled-int
+    * sum over r4-quantized inputs; every scatter/error term quantizes
+    * to the 1e-4 grid before an integer accumulation (order-free in
+    * both engines); the Gauss–Jordan steps then run the identical IEEE
+    * sequence on identical doubles. Bound: per-series Σ|term|·1e4 must
+    * stay < 2^63 (holds to ~10⁶ points/series at load magnitudes; at
+    * larger n switch the accumulator to 1e-2 scale).
+    *
+    * Scale shape: ONE per-series window pass builds all six features
+    * (the rolling mean is an exact int frame-sum over the gapless
+    * spine); one sufficient-statistics agg; six |series|-row
+    * projections; one test error agg. |series|-scale frames join with
+    * no static hint (AQE picks broadcast or shuffle at run time).
+    */
   def featureForecast(spark: SparkSession, sfDir: String,
                       lambda: Double = 0.001, rollH: Int = 12): DataFrame = {
     val p = 6
     val base = featureBase(spark, sfDir, rollH)
     val coefs = featureCoefs(spark, sfDir, lambda, rollH)
     val test = base.filter(col("t") >= col("tsplit"))
-    val scored = Joins.dimJoin(test, coefs, Seq("series"), None)
+    val scored = test.join(coefs, "series")
       .withColumn("p", featurePred)
     // scaled-int error sums (q21's discipline): order-free exact
     val aeInt = floor(abs(col("y") - col("p")) * 10000d + 0.5d).cast("long")
@@ -1217,6 +1202,11 @@ FROM pows"""
         Num.r4(col("y")).as("actual"))
   }
 
+  /** q32: autocorrelation function at the forecasting-relevant lags
+    * (1 = persistence, 24 = daily, 168 = weekly): Pearson correlation of
+    * the series with its lagged self, one window pass + one agg per lag,
+    * all lags in a single plan (union of conditional frames).
+    */
   def acf(spark: SparkSession, sfDir: String, lags: Seq[Int] = Seq(1, 24, 168)): DataFrame = {
     val w = Window.partitionBy("series").orderBy("t")
     val f = TsCore.filled(spark, sfDir).select(col("series"), col("t"), col("v_filled"))
@@ -1259,6 +1249,17 @@ FROM pows"""
       .select(col("series"), col("ncal").as("n_cal"), col("arq").as("qhatq"))
   }
 
+  /** The conformal TEST split with its per-series q̂ attached — ONE
+    * definition of "the band on the held-out region" shared by q58's
+    * coverage report and q63's proper-scoring report, so the scored
+    * bands can never drift from the calibrated ones.
+    */
+  private def conformalTest(spark: SparkSession, sfDir: String,
+                            alpha: Double): DataFrame =
+    conformalResiduals(spark, sfDir)
+      .filter(col("t") >= col("tsplit"))
+      .join(conformalQhat(spark, sfDir, alpha), "series")
+
   /** q58: split-conformal prediction intervals over the seasonal-naive
     * forecaster (q21) — the distribution-free uncertainty layer the
     * reference's point forecasts lack (its forecasting/ stack reports
@@ -1280,19 +1281,9 @@ FROM pows"""
     * Scale shape: one per-series lag pass (q21's spine), one bounded
     * per-series rank window over the ~WeekLag calibration rows, one
     * test-split aggregation. The |series|-scale boundary and q̂ frames
-    * join through dimJoin's size-aware path.
+    * join with no static hint (AQE picks broadcast or shuffle at run
+    * time).
     */
-  /** The conformal TEST split with its per-series q̂ attached — ONE
-    * definition of "the band on the held-out region" shared by q58's
-    * coverage report and q63's proper-scoring report, so the scored
-    * bands can never drift from the calibrated ones.
-    */
-  private def conformalTest(spark: SparkSession, sfDir: String,
-                            alpha: Double): DataFrame =
-    conformalResiduals(spark, sfDir)
-      .filter(col("t") >= col("tsplit"))
-      .transform(Joins.dimJoin(_, conformalQhat(spark, sfDir, alpha), Seq("series"), None))
-
   def conformalIntervals(spark: SparkSession, sfDir: String,
                          alpha: Double = 0.1): DataFrame = {
     conformalTest(spark, sfDir, alpha)

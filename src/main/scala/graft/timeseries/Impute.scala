@@ -20,15 +20,6 @@ object Impute {
       .select(col("series"), (col("win") * TsCore.DaySize + col("pos")).as("t"),
         col("win"), col("pos"), col("v_anom"), col("is_anom"))
 
-  /** q44: masked-span training pairs for the denoising autoencoder
-    * (ref anomaly_imputation/dataset_ai.py:15-25: each window gets ONE
-    * random zero-masked span of `maskSize`, yielding (clean, masked,
-    * mask) triples). The mask position is a deterministic LCG draw per
-    * (series, win) — same key family as the anomaly injector, salt 8 —
-    * over [0, daySize − maskSize − 1), mirroring the reference's
-    * randint bound. Map-side after the shared complete-window stage;
-    * partition key (series, win).
-    */
   /** The per-window mask-start draw — ONE definition shared by q44's
     * triples (maskedPairs) and q55's training chain (imputerCoefs) so
     * the training set can never silently de-synchronize from the
@@ -44,6 +35,15 @@ object Impute {
         floor(TsCore.lcg(col("key"), 8) * hi).cast("long").as("mi"))
   }
 
+  /** q44: masked-span training pairs for the denoising autoencoder
+    * (ref anomaly_imputation/dataset_ai.py:15-25: each window gets ONE
+    * random zero-masked span of `maskSize`, yielding (clean, masked,
+    * mask) triples). The mask position is a deterministic LCG draw per
+    * (series, win) — same key family as the anomaly injector, salt 8 —
+    * over [0, daySize − maskSize − 1), mirroring the reference's
+    * randint bound. Map-side after the shared complete-window stage;
+    * partition key (series, win).
+    */
   def maskedPairs(spark: SparkSession, sfDir: String, maskSize: Int = 8): DataFrame = {
     val mi = maskIndex(spark, sfDir, maskSize)
     TsCore.dayWindows(spark, sfDir)
@@ -54,47 +54,14 @@ object Impute {
         when(col("mask") === 0, lit(0.0)).otherwise(col("v")).as("v_masked"))
   }
 
-  /** q55: LEARNED masked-span imputer — the closed-form counterpart of
-    * the reference's denoising autoencoder (anomaly_imputation/
-    * autoencoder.py:61-117 trains a bi-LSTM AE on masked windows built
-    * by dataset_ai.py; main.py applies it to flagged spans). The AE's
-    * capability — learn, from (clean, masked) training pairs, how to
-    * reconstruct a masked span from its context — is re-expressed as a
-    * per-(series, span-offset) RIDGE regression on three context
-    * features, TRAINED on q44's masked triples and APPLIED to the
-    * injected anomaly spans of the test split:
-    *
-    *   features  xl = window value just before the span,
-    *             xr = window value just after it,
-    *             xs = same-position value from the nearest clean week
-    *                  (previous, else next — q19's walk),
-    *   model     per (series, offset-within-span): y ~ b0+b1·xl+b2·xr+b3·xs,
-    *             centered normal equations with `lambda` added to the
-    *             scatter diagonal (ridge ⇒ always nonsingular; a
-    *             single-row group degrades gracefully to b=0, b0=ȳ),
-    *             solved by q22's Cramer expressions.
-    *
-    * Spans longer than the training mask reuse the last trained offset
-    * (the AE reconstructs arbitrary spans for the same reason: the
-    * decoder sees only context + position). Output: per series, test-
-    * split MAE/RMSE of the learned imputer vs the seasonal fill ON THE
-    * SAME POINTS — the spec asserts learned ≤ seasonal corpus-wide.
-    *
-    * Scale shape: training rows are one row per masked grid point (no
-    * fan-out); the solve is ONE sufficient-statistics aggregation keyed
-    * (series, offset) — ≤ maskSize·|series| model rows out — and every
-    * |series|-scale frame joins through Joins.dimJoin's size-aware
-    * path. The week-neighbor lookups are exact equi-joins on
-    * (series, win±7, pos), never range joins.
-    */
   /** q55's trained model: per (series, offset) RAW b0..b3 from the
     * masked-triple training chain — the artifact ModelStore persists
     * (the reference checkpoints its trained AE the same way,
     * anomaly_imputation/main.py). The apply expression [[imputePred]]
     * over these exact doubles makes saved-model imputation
     * bit-identical to the in-session fit.
-    */
-  /** Session-cached: the FIT is one materialization per session — every
+    *
+    * Session-cached: the FIT is one materialization per session — every
     * consumer (q55's apply, q57's eval, ModelStore.saveImputer, the
     * spec's live path) reads the SAME realized coefficients. Without
     * this, the raw-double sufficient-statistics sums re-run per
@@ -113,7 +80,6 @@ object Impute {
   private def imputerCoefsBuild(spark: SparkSession, sfDir: String,
                                 maskSize: Int, lambda: Double): DataFrame = {
     require(lambda > 0, s"lambda=$lambda: ridge needs a positive diagonal")
-    import graft.util.Joins
     val bound = TsCore.splitBoundary(spark, sfDir)
     val wa = Window.partitionBy("series", "win")
 
@@ -121,11 +87,10 @@ object Impute {
     val mi = maskIndex(spark, sfDir, maskSize)
     val dw = TsCore.dayWindows(spark, sfDir)
     val seas = dw.select(col("series"), col("win").as("swin"), col("pos"), col("v").as("sv"))
-    val trainRows = Joins.dimJoin(
-        dw.join(mi, Seq("series", "win"))
-          .withColumn("xl", max(when(col("pos") === col("mi") - 1, col("v"))).over(wa))
-          .withColumn("xr", max(when(col("pos") === col("mi") + maskSize, col("v"))).over(wa)),
-        bound, Seq("series"), None)
+    val trainRows = dw.join(mi, Seq("series", "win"))
+      .withColumn("xl", max(when(col("pos") === col("mi") - 1, col("v"))).over(wa))
+      .withColumn("xr", max(when(col("pos") === col("mi") + maskSize, col("v"))).over(wa))
+      .join(bound, "series")
       .filter(col("win") < col("mwin") && col("mi") >= 1 &&
         col("pos") >= col("mi") && col("pos") < col("mi") + maskSize)
       .withColumn("wprev", col("win") - 7)
@@ -157,7 +122,6 @@ object Impute {
   private[graft] def imputePoints(spark: SparkSession, sfDir: String,
                                   maskSize: Int = 8,
                                   onlyTestSplit: Boolean = true): DataFrame = {
-    import graft.util.Joins
     val bound = TsCore.splitBoundary(spark, sfDir)
     val wa = Window.partitionBy("series", "win")
     // ---- application: injected anomaly spans of the test split ----
@@ -165,11 +129,10 @@ object Impute {
     val prm = TsCore.injectParams(spark, sfDir).select("series", "win", "apos", "alen")
     val cleanv = inj.filter(col("is_anom") === 0)
       .select(col("series"), col("win").as("swin"), col("pos"), col("v_anom").as("cv"))
-    Joins.dimJoin(
-        inj.join(prm, Seq("series", "win"))
-          .withColumn("xl", max(when(col("pos") === col("apos") - 1, col("v_anom"))).over(wa))
-          .withColumn("xr", max(when(col("pos") === col("apos") + col("alen"), col("v_anom"))).over(wa)),
-        bound, Seq("series"), None)
+    inj.join(prm, Seq("series", "win"))
+      .withColumn("xl", max(when(col("pos") === col("apos") - 1, col("v_anom"))).over(wa))
+      .withColumn("xr", max(when(col("pos") === col("apos") + col("alen"), col("v_anom"))).over(wa))
+      .join(bound, "series")
       .filter(if (onlyTestSplit) col("is_anom") === 1 && col("win") >= col("mwin")
               else col("is_anom") === 1)
       .withColumn("o", least(col("pos") - col("apos"), lit(maskSize - 1L)))
@@ -183,12 +146,44 @@ object Impute {
       .filter(col("xs").isNotNull)
   }
 
+  /** q55: LEARNED masked-span imputer — the closed-form counterpart of
+    * the reference's denoising autoencoder (anomaly_imputation/
+    * autoencoder.py:61-117 trains a bi-LSTM AE on masked windows built
+    * by dataset_ai.py; main.py applies it to flagged spans). The AE's
+    * capability — learn, from (clean, masked) training pairs, how to
+    * reconstruct a masked span from its context — is re-expressed as a
+    * per-(series, span-offset) RIDGE regression on three context
+    * features, TRAINED on q44's masked triples and APPLIED to the
+    * injected anomaly spans of the test split:
+    *
+    *   features  xl = window value just before the span,
+    *             xr = window value just after it,
+    *             xs = same-position value from the nearest clean week
+    *                  (previous, else next — q19's walk),
+    *   model     per (series, offset-within-span): y ~ b0+b1·xl+b2·xr+b3·xs,
+    *             centered normal equations with `lambda` added to the
+    *             scatter diagonal (ridge ⇒ always nonsingular; a
+    *             single-row group degrades gracefully to b=0, b0=ȳ),
+    *             solved by q22's Cramer expressions.
+    *
+    * Spans longer than the training mask reuse the last trained offset
+    * (the AE reconstructs arbitrary spans for the same reason: the
+    * decoder sees only context + position). Output: per series, test-
+    * split MAE/RMSE of the learned imputer vs the seasonal fill ON THE
+    * SAME POINTS — the spec asserts learned ≤ seasonal corpus-wide.
+    *
+    * Scale shape: training rows are one row per masked grid point (no
+    * fan-out); the solve is ONE sufficient-statistics aggregation keyed
+    * (series, offset) — ≤ maskSize·|series| model rows out — and every
+    * |series|-scale frame joins with no static hint (AQE picks
+    * broadcast or shuffle at run time). The week-neighbor lookups are
+    * exact equi-joins on (series, win±7, pos), never range joins.
+    */
   def learnedImpute(spark: SparkSession, sfDir: String, maskSize: Int = 8,
                     lambda: Double = 0.01): DataFrame = {
-    import graft.util.Joins
     val coefs = imputerCoefs(spark, sfDir, maskSize, lambda)
     val pts = imputePoints(spark, sfDir, maskSize)
-    val scored = Joins.dimJoin(pts, coefs, Seq("series", "o"), None)
+    val scored = pts.join(coefs, Seq("series", "o"))
       .withColumn("p", imputePred)
     // per-row errors quantized to the 1e-4 grid BEFORE the sum (q64's
     // discipline): avg() over raw doubles is partition-order-sensitive

@@ -11,13 +11,6 @@ import graft.util.Num
   */
 object Intervals {
 
-  /** q31: range join — grid points falling inside (padded) anomaly
-    * intervals. Intervals come from gaps-and-islands over the injected
-    * flags; the join is bucketed: intervals explode to the coarse
-    * day-buckets they span and match points by (series, bucket) equi-key
-    * first, then the t-range predicate — shuffle O(intervals × span/24 +
-    * points), never the quadratic inequality join a naive plan picks.
-    */
   /** Padded anomaly intervals from gaps-and-islands over the injected
     * flags — the shared interval source of q31 (range join) and q46
     * (episode merge). (series, t_lo) is unique: runs within a window are
@@ -35,6 +28,13 @@ object Intervals {
       .select("series", "t_lo", "t_hi")
   }
 
+  /** q31: range join — grid points falling inside (padded) anomaly
+    * intervals. Intervals come from gaps-and-islands over the injected
+    * flags; the join is bucketed: intervals explode to the coarse
+    * day-buckets they span and match points by (series, bucket) equi-key
+    * first, then the t-range predicate — shuffle O(intervals × span/24 +
+    * points), never the quadratic inequality join a naive plan picks.
+    */
   def rangeJoin(spark: SparkSession, sfDir: String, pad: Int = 2): DataFrame = {
     val n = TsCore.DaySize
     val iv = anomIntervals(spark, sfDir, pad)
@@ -87,8 +87,7 @@ object Intervals {
     */
   def seasonalResidual(spark: SparkSession, sfDir: String, thr: Double = 3.0): DataFrame = {
     val train = TsCore.dayWindows(spark, sfDir)
-      .transform(graft.util.Joins.dimJoin(_, TsCore.splitBoundary(spark, sfDir),
-        Seq("series"), None))
+      .join(TsCore.splitBoundary(spark, sfDir), "series")
       .filter(col("win") < col("mwin"))
     // quantized-integer mean (see seasonalProfile): avg over r4 inputs
     // lands on rounding boundaries ~1/n of the time
@@ -97,8 +96,8 @@ object Intervals {
     val sdr = train.join(prof, Seq("series", "pos"))
       .groupBy("series").agg(stddev_samp(col("v") - col("posmean")).as("sdr"))
     TsCore.dayWindows(spark, sfDir)
-      .transform(graft.util.Joins.dimJoin(_, prof, Seq("series", "pos"), None))
-      .transform(graft.util.Joins.dimJoin(_, sdr, Seq("series"), None))
+      .join(prof, Seq("series", "pos"))
+      .join(sdr, "series")
       .withColumn("resid_z", (col("v") - col("posmean")) / col("sdr"))
       .filter(col("resid_z") > thr || col("resid_z") < -thr)
       .select(col("series"), col("win"), col("pos"), Num.r4(col("resid_z")).as("resid_z"))

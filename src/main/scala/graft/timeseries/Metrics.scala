@@ -122,9 +122,6 @@ object Metrics {
         when(col("tp") + col("fn") === 0, 0.0).otherwise(col("tp") / (col("tp") + col("fn")))))
   }
 
-  /** q17: AUROC via the rank-sum (Mann–Whitney U) identity with average
-    * ranks for ties — exactly sklearn's roc_auc_score, one shuffle.
-    */
   /** q51: point-adjust evaluation (Xu et al. 2018 "Unsupervised Anomaly
     * Detection via VAE", §4.2 — the de-facto TS-AD scoring rule the
     * reference's pointwise metrics predate): if ANY point inside a true
@@ -170,6 +167,9 @@ object Metrics {
           Num.r4(col("tp") * 2 / (col("tp") * 2 + col("fp") + col("fn")))))
   }
 
+  /** q17: AUROC via the rank-sum (Mann–Whitney U) identity with average
+    * ranks for ties — exactly sklearn's roc_auc_score, one shuffle.
+    */
   def auroc(spark: SparkSession, sfDir: String): DataFrame = {
     val sg = scoredWithGt(spark, sfDir)
     val ranked = sg

@@ -4,7 +4,7 @@ import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.regression.{GBTRegressor, LinearRegression}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.{Joins, Num}
+import graft.util.Num
 
 /** q26: MLlib pipeline forecast — the same lag-feature regression as the
   * closed-form q22, but trained through spark.ml (VectorAssembler +
@@ -74,39 +74,6 @@ object MllibForecast {
       Num.r4(col("mae")).as("mae"), Num.r4(col("rmse")).as("rmse"))
   }
 
-  /** q61: genuinely NONLINEAR learned forecaster via MLlib —
-    * GBTRegressor on q56's wide-context feature frame (short lags,
-    * seasonal lags, rolling level) plus hour-of-day, the tree-ensemble
-    * stand-in for the reference's nonlinear deep forecasters
-    * (forecasting/SCINet/train_SCINet.py, seq2seq/wrapper.py — both
-    * learn nonlinear maps from lag windows to the target; the
-    * charter's "MLlib pipelines" line).
-    *
-    * ONE GLOBAL model, not a per-series driver loop: cross-series
-    * comparability comes from standardizing y and every lag feature by
-    * the series' TRAIN mean/std (z-space), so a single distributed GBT
-    * fit learns the shared seasonal shape — the exact formulation that
-    * scales to millions of series, since MLlib's tree boosting is
-    * driver-coordinated but data-distributed (each split search is a
-    * treeAggregate over the training partitions; no per-series
-    * iteration). Predictions map back through the broadcast per-series
-    * stats; per-series test MAE/RMSE shares q22's eval frame, so the
-    * spec's "beats the linear model corpus-wide" gate is apples to
-    * apples.
-    *
-    * Rows-only (a NoOracle entry in SparkEntry.ops, next to q13/q26):
-    * a boosted ensemble's split search has no SQL analogue. Deterministic seed;
-    * ForecastImputeSpec gates the quality claim (beats q22's linear
-    * MAE corpus-wide). Depth-2 trees × 20 rounds measured best here:
-    * the feed is quasi-linear with a low SNR, so deeper trees only buy
-    * variance (depth 5 loses to the linear model by ~8%), and the
-    * maxIter sweep {15,20,25,30} at BOTH test scales has 20 beating 30
-    * on weighted MAE (sf0.01: 25731 vs 25752; sf0.1: 8056 vs 8073 —
-    * late rounds chase noise) while cutting a third off the fit's
-    * serial driver-coordinated boosting rounds, the engine's single
-    * most expensive bench line. Shallow boosting acts as a regularized
-    * additive fit and edges out both q22 and the 6-feature ridge.
-    */
   /** Per-series train mean/std — the standardization half of the q61
     * artifact. Session-cached (the model-as-artifact discipline):
     * ModelStore.saveGbt and every in-session consumer read the SAME
@@ -131,7 +98,7 @@ object MllibForecast {
     // tsplit, the streaming serve path carries the event time instead
     val passthrough = Seq("series", "t", "tsplit", "ts", "y")
       .filter(base.columns.contains).map(col)
-    Joins.dimJoin(base, stats, Seq("series"), None)
+    base.join(stats, "series")
       .filter(col("sy") > 0)
       .withColumn("zy", (col("y") - col("my")) / col("sy"))
       .withColumn("hod", (col("t") % TsCore.DaySize).cast("double"))
@@ -191,6 +158,39 @@ object MllibForecast {
       .select(keep.map(col): _*)
   }
 
+  /** q61: genuinely NONLINEAR learned forecaster via MLlib —
+    * GBTRegressor on q56's wide-context feature frame (short lags,
+    * seasonal lags, rolling level) plus hour-of-day, the tree-ensemble
+    * stand-in for the reference's nonlinear deep forecasters
+    * (forecasting/SCINet/train_SCINet.py, seq2seq/wrapper.py — both
+    * learn nonlinear maps from lag windows to the target; the
+    * charter's "MLlib pipelines" line).
+    *
+    * ONE GLOBAL model, not a per-series driver loop: cross-series
+    * comparability comes from standardizing y and every lag feature by
+    * the series' TRAIN mean/std (z-space), so a single distributed GBT
+    * fit learns the shared seasonal shape — the exact formulation that
+    * scales to millions of series, since MLlib's tree boosting is
+    * driver-coordinated but data-distributed (each split search is a
+    * treeAggregate over the training partitions; no per-series
+    * iteration). Predictions map back through the broadcast per-series
+    * stats; per-series test MAE/RMSE shares q22's eval frame, so the
+    * spec's "beats the linear model corpus-wide" gate is apples to
+    * apples.
+    *
+    * Rows-only (a NoOracle entry in SparkEntry.ops, next to q13/q26):
+    * a boosted ensemble's split search has no SQL analogue. Deterministic seed;
+    * ForecastImputeSpec gates the quality claim (beats q22's linear
+    * MAE corpus-wide). Depth-2 trees × 20 rounds measured best here:
+    * the feed is quasi-linear with a low SNR, so deeper trees only buy
+    * variance (depth 5 loses to the linear model by ~8%), and the
+    * maxIter sweep {15,20,25,30} at BOTH test scales has 20 beating 30
+    * on weighted MAE (sf0.01: 25731 vs 25752; sf0.1: 8056 vs 8073 —
+    * late rounds chase noise) while cutting a third off the fit's
+    * serial driver-coordinated boosting rounds, the engine's single
+    * most expensive bench line. Shallow boosting acts as a regularized
+    * additive fit and edges out both q22 and the 6-feature ridge.
+    */
   def gbtForecast(spark: SparkSession, sfDir: String,
                   maxIter: Int = 20, maxDepth: Int = 2,
                   seed: Long = 42L): DataFrame = {

@@ -7,10 +7,10 @@ import graft.util.Num
 
 /** Detection-model persistence (reference: softpatch.py save_to_path /
   * load_from_path + common.py NearestNeighbourScorer.save/load): the
-  * fitted "model" is data — the denoised+coreset'd memory bank with its
-  * soft weights, the scaling bounds, and the score threshold — stored
-  * as parquet so any session (batch or streaming) can reload and score
-  * without refitting.
+  * fitted "model" is data — the denoised memory bank (Detect.keptBank;
+  * not coreset'd) with its soft weights, the scaling bounds, and the
+  * score threshold — stored as parquet so any session (batch or
+  * streaming) can reload and score without refitting.
   */
 object ModelStore {
 
@@ -63,7 +63,7 @@ object ModelStore {
     * apply expression. Batch twin of streaming.forecastStream.
     */
   def loadAndForecast(spark: SparkSession, path: String, feats: DataFrame): DataFrame =
-    graft.util.Joins.dimJoin(feats, forecastCoefs(spark, path), Seq("series"), None)
+    feats.join(forecastCoefs(spark, path), "series")
       .withColumn("p", Forecast.featurePred)
       .drop((0 to 6).map(i => s"b$i"): _*)
 
@@ -86,7 +86,7 @@ object ModelStore {
     * (series, o, xl, xr, xs, …) — no refit.
     */
   def loadAndImpute(spark: SparkSession, path: String, pts: DataFrame): DataFrame =
-    graft.util.Joins.dimJoin(pts, imputerCoefs(spark, path), Seq("series", "o"), None)
+    pts.join(imputerCoefs(spark, path), Seq("series", "o"))
       .withColumn("v_imp", Impute.imputePred)
       .drop("b0", "b1", "b2", "b3")
 
@@ -113,7 +113,7 @@ object ModelStore {
     * ranked on, so the flag is integer-exact.
     */
   def loadAndFlag(spark: SparkSession, path: String, pts: DataFrame): DataFrame =
-    graft.util.Joins.dimJoin(pts, conformalBounds(spark, path), Seq("series"), None)
+    pts.join(conformalBounds(spark, path), "series")
       .withColumn("lo", col("p") - col("qhatq") / 10000d)
       .withColumn("hi", col("p") + col("qhatq") / 10000d)
       .withColumn("out_of_band",
@@ -121,14 +121,6 @@ object ModelStore {
           .otherwise(0))
       .drop("n_cal", "qhatq")
 
-  /** SQ8 vector-index persistence — the ANN-family lifecycle: quantize
-    * the collection in batch (qv11's per-dim uint8 grid), persist grid
-    * params (one row) + codes (one byte/dim/vector — the compressed
-    * collection), and serve top-k lookups against the reconstruction,
-    * bit-identical to the in-session quantizer (sq8ReconFrom shares
-    * the exact grid arithmetic). The packed one-row form
-    * [[sq8Packed]] is what the streaming scorer broadcasts.
-    */
   /** BM25 lexical-index persistence — qv18's postings with their
     * denormalized corpus stats, the artifact bm25ScoreStream serves
     * from. At 100 TB this table is tok-bucketed so the serving join
@@ -163,6 +155,14 @@ object ModelStore {
   def bpeMergeRules(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/bpe_merges")
 
+  /** SQ8 vector-index persistence — the ANN-family lifecycle: quantize
+    * the collection in batch (qv11's per-dim uint8 grid), persist grid
+    * params (one row) + codes (one byte/dim/vector — the compressed
+    * collection), and serve top-k lookups against the reconstruction,
+    * bit-identical to the in-session quantizer (sq8ReconFrom shares
+    * the exact grid arithmetic). The packed one-row form
+    * [[sq8Packed]] is what the streaming scorer broadcasts.
+    */
   def saveSq8Index(spark: SparkSession, sfDir: String, path: String): Unit = {
     val (params, codes) = graft.vector.Similarity.sq8IndexFrames(spark, sfDir)
     params.write.mode("overwrite").parquet(s"$path/sq8params")
@@ -430,8 +430,7 @@ object ModelStore {
     */
   def loadAndRefitScore(spark: SparkSession, path: String,
                         feats: DataFrame): DataFrame =
-    graft.util.Joins.dimJoin(feats,
-        refitModels(spark, path).drop("cutA", "cutB"), Seq("series"), None)
+    feats.join(refitModels(spark, path).drop("cutA", "cutB"), "series")
       .withColumn("p_stale", Forecast.refitPred("cutA"))
       .withColumn("p_refit", Forecast.refitPred("cutB"))
       .drop(Seq("cutA", "cutB").flatMap(c => (0 to 3).map(i => s"b${i}_$c")): _*)

@@ -2,7 +2,6 @@ package graft.timeseries
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.util.Joins
 
 /** The one grouped least-squares solve behind every closed-form linear
   * model — q22/q26/q60/q64's lag forecaster, q39's per-horizon models,
@@ -31,9 +30,10 @@ private[graft] object Ols {
 
   /** Per group of `keys`: the keys, then `b1`, `b2`, `b3`, `b0` of each
     * fit, raw (callers round). The plan is a means aggregation, a
-    * [[graft.util.Joins.dimJoin]], the scatter aggregation, a second
-    * dimJoin and the coefficient select. `lambda > 0` adds the ridge
-    * diagonal to s11, s22 and s33.
+    * join back onto the rows, the scatter aggregation, a second join
+    * and the coefficient select. Both joins carry no static hint: AQE
+    * picks broadcast or shuffle from the runtime size of the means.
+    * `lambda > 0` adds the ridge diagonal to s11, s22 and s33.
     */
   def fit(df: DataFrame, keys: Seq[String], fits: Seq[Fit], lambda: Double = 0.0): DataFrame = {
     def guard(f: Fit, e: Column): Column = f.ok.fold(e)(when(_, e))
@@ -57,7 +57,7 @@ private[graft] object Ols {
         c(x1, "m1", "y", "my").as(n("sy1")), c(x2, "m2", "y", "my").as(n("sy2")),
         c(x3, "m3", "y", "my").as(n("sy3")))
     }
-    val stats = Joins.dimJoin(df, means, keys, None)
+    val stats = df.join(means, keys)
       .groupBy(keys.head, keys.tail: _*).agg(statAggs.head, statAggs.tail: _*)
     val coefCols = fits.flatMap { f =>
       def s(n: String) = col(n + f.suffix)
@@ -76,7 +76,7 @@ private[graft] object Ols {
       Seq(b1.as(s"b1${f.suffix}"), b2.as(s"b2${f.suffix}"), b3.as(s"b3${f.suffix}"),
         (s("my") - b1 * s("m1") - b2 * s("m2") - b3 * s("m3")).as(s"b0${f.suffix}"))
     }
-    Joins.dimJoin(stats, means, keys, None).select(keys.map(col) ++ coefCols: _*)
+    stats.join(means, keys).select(keys.map(col) ++ coefCols: _*)
   }
 
   /** Fixed-order Gauss-Jordan elimination on column `a`, an

@@ -15,8 +15,7 @@ object PointwiseMetrics {
   def pointwiseMetrics(spark: SparkSession, sfDir: String,
                        patchSize: Int = TsCore.FeatPatch): DataFrame = {
     val base = TsCore.scaled(spark, sfDir)
-      .transform(graft.util.Joins.dimJoin(_, TsCore.splitBoundary(spark, sfDir),
-        Seq("series"), None))
+      .join(TsCore.splitBoundary(spark, sfDir), "series")
       .filter(col("win") >= col("mwin"))
       .select("series", "win", "pos", "is_anom")
     val consec = Postprocess.consecRuns(spark, sfDir)

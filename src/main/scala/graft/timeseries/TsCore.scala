@@ -3,7 +3,7 @@ package graft.timeseries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.util.{Joins, Num, StageCache, Tables}
+import graft.util.{Num, StageCache, Tables}
 
 /** Shared time-series processing chain, re-expressing the reference's
   * data pipeline (reference: src/data_processing/process_aemo.py,
@@ -143,12 +143,6 @@ object TsCore {
   def lcgScalar(key: Long, salt: Int): Double =
     ((LcgA * (key * 1000 + salt) + LcgC) % LcgM).toDouble / LcgM
 
-  /** Injection parameters per (series, win) — re-expression of
-    * synth_anomaly.py SynthLoadAnomaly.inject_anomaly with LCG draws:
-    * contaminate 40% of windows; type ~ (.3,.3,.2,.2); positions/lengths
-    * per reference's randint ranges for n=24; softstart/extreme 50/50;
-    * r ~ U(0.01, 3.99).
-    */
   /** Per-(series, win) deterministic LCG key (sidx·100 + win) — the
     * draw base shared by the anomaly injector (q05) and the masked-pair
     * builder (q44); the oracle's `keys` CTE mirrors it.
@@ -165,10 +159,16 @@ object TsCore {
     val wins = dayWindows(spark, sfDir).select("series", "win").distinct()
     val sidx = wins.select("series").distinct()
       .withColumn("sidx", dense_rank().over(Window.orderBy("series")) - 1)
-    Joins.dimJoin(wins, sidx, Seq("series"), None)
+    wins.join(sidx, "series")
       .select(col("series"), col("win"), (col("sidx") * 100L + col("win")).as("key"))
   }
 
+  /** Injection parameters per (series, win) — re-expression of
+    * synth_anomaly.py SynthLoadAnomaly.inject_anomaly with LCG draws:
+    * contaminate 40% of windows; type ~ (.3,.3,.2,.2); positions/lengths
+    * per reference's randint ranges for n=24; softstart/extreme 50/50;
+    * r ~ U(0.01, 3.99).
+    */
   def injectParams(spark: SparkSession, sfDir: String): DataFrame = {
     // not checkpointed: single consumer (injected)
     val wins = winKeys(spark, sfDir)
@@ -247,7 +247,7 @@ object TsCore {
   def scaled(spark: SparkSession, sfDir: String): DataFrame =
     StageCache.cached(spark, sfDir, "scaled") {
       injected(spark, sfDir)
-        .transform(Joins.dimJoin(_, scaleBounds(spark, sfDir), Seq("series"), None))
+        .join(scaleBounds(spark, sfDir), "series")
         .withColumn("vs", Num.r4((col("v_anom") - col("lo")) / (col("hi") - col("lo"))))
         .select("series", "win", "pos", "vs", "is_anom")
     }
@@ -306,7 +306,7 @@ object TsCore {
     */
   def bankAndTest(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     def p = patches(spark, sfDir)
-      .transform(Joins.dimJoin(_, splitBoundary(spark, sfDir), Seq("series"), None))
+      .join(splitBoundary(spark, sfDir), "series")
     (StageCache.cached(spark, sfDir, "bank") { p.filter(col("win") < col("mwin")).drop("mwin") },
      StageCache.cached(spark, sfDir, "test") { p.filter(col("win") >= col("mwin")).drop("mwin") })
   }

@@ -6,6 +6,7 @@ package graft.timeseries
   */
 object TsOracle {
   import TsCore._
+  import graft.util.Num.{r4sql => r4, sumQ4sql}
 
   /** LCG uniform in [0,1) — must match TsCore.lcg exactly. */
   private def lcg(salt: Int): String =
@@ -156,8 +157,6 @@ testp AS (
   SELECT p.* FROM patches p JOIN boundary b USING (series) WHERE p.win >= b.mwin
 )
 """
-
-  private def r4(e: String): String = s"floor(($e)*10000 + 0.5)/10000"
 
   /** Squared L2 over f0..f8 with fixed left-to-right addition order —
     * must match Detect.dist2's fold order for bit parity.
@@ -705,10 +704,6 @@ SELECT e.series, e.wid, e.t - e.wid * $DaySize AS seq, e.t,
   strftime(make_timestamp((t0w.t0 + (e.wid + $nDays) * $DaySize - 1) * 3600 * 1000000), '%Y-%m-%d %H:%M:%S') AS label
 FROM wexp e JOIN wcomplete USING (series, wid), t0w"""
 
-  /** q42: inverse-scaling metric rescale mirroring Forecast.rescaledMetrics —
-    * week-lag persistence errors on the min-max-scaled series over the test
-    * region, each metric also mapped back to original units by (hi − lo).
-    */
   /** q56: wide-context ridge forecaster — mirrors Forecast.featureForecast
     * stage-for-stage: exact scaled-int means/scatter, the `[S | sy]` list
     * matrix through [[gaussJordanCtes]] (g1..g6, the identical IEEE
@@ -718,15 +713,14 @@ FROM wexp e JOIN wcomplete USING (series, wid), t0w"""
     val p = 6
     def x(i: Int) = s"x${i + 1}"
     def m(i: Int) = s"m${i + 1}"
-    def q4sum(e: String) = s"sum(CAST(floor(($e)*10000 + 0.5) AS BIGINT)) / 10000.0"
-    val meanCols = (s"${q4sum("y")} / count(*) AS my" +:
-      (0 until p).map(i => s"${q4sum(x(i))} / count(*) AS ${m(i)}")).mkString(",\n         ")
+    val meanCols = (s"${sumQ4sql("y")} / count(*) AS my" +:
+      (0 until p).map(i => s"${sumQ4sql(x(i))} / count(*) AS ${m(i)}")).mkString(",\n         ")
     val scatterCols = ((for { i <- 0 until p; j <- i until p } yield {
-      val s = q4sum(s"(${x(i)} - ${m(i)}) * (${x(j)} - ${m(j)})")
+      val s = sumQ4sql(s"(${x(i)} - ${m(i)}) * (${x(j)} - ${m(j)})")
       val e = if (i == j) s"$s + $lambda" else s
       s"$e AS s${i}_$j"
     }) ++ (0 until p).map(i =>
-      s"${q4sum(s"(${x(i)} - ${m(i)}) * (y - my)")} AS sy$i")).mkString(",\n    ")
+      s"${sumQ4sql(s"(${x(i)} - ${m(i)}) * (y - my)")} AS sy$i")).mkString(",\n    ")
     val aug = (0 until p).map { i =>
       (0 to p).map { j =>
         if (j == p) s"sy$i" else if (i <= j) s"s${i}_$j" else s"s${j}_$i"
@@ -782,6 +776,10 @@ SELECT series, count(*) AS n,
 FROM scored56 GROUP BY series"""
   }
 
+  /** q42: inverse-scaling metric rescale mirroring Forecast.rescaledMetrics —
+    * week-lag persistence errors on the min-max-scaled series over the test
+    * region, each metric also mapped back to original units by (hi − lo).
+    */
   def q42: String = prefix + splitTCte + s"""
 , svs AS (
   SELECT f.series, f.t,

@@ -36,13 +36,12 @@ object TsQueries {
   }
 
   /** q04: the per-series q01/q99 bounds frame scales with |series|
-    * (millions of meters at 100 TB) — size-aware join, not a hard-coded
-    * broadcast (see [[graft.util.Joins.dimJoin]]).
+    * (millions of meters at 100 TB) — it joins with no static hint, so
+    * AQE picks broadcast or shuffle from its runtime size.
     */
   def q04QuantileScale(spark: SparkSession, sfDir: String): DataFrame =
-    graft.util.Joins.dimJoin(
-      TsCore.filled(spark, sfDir).filter(col("v_filled").isNotNull),
-      TsCore.scaleBounds(spark, sfDir), Seq("series"), None)
+    TsCore.filled(spark, sfDir).filter(col("v_filled").isNotNull)
+      .join(TsCore.scaleBounds(spark, sfDir), "series")
       .select(col("series"), col("t"),
         Num.r4((col("v_filled") - col("lo")) / (col("hi") - col("lo"))).as("vs"))
 

@@ -59,12 +59,19 @@ object StageCache extends AdaptiveSparkPlanHelper {
       // LogicalRDD instead of re-embedding the whole upstream tree —
       // without this, multi-self-join queries (pipeline, LOF) blow up
       // Catalyst plan size (explainString OOMs before any task runs).
-      // LAZY (eager = false): the first consumer's job computes and
-      // persists the stage inline instead of each stage launching its
-      // own materialization job — one scheduler round-trip per stage
-      // saved, same total compute, and the plan is a flat LogicalRDD
-      // either way. On a cluster this would be a reliable checkpoint /
-      // staged table.
+      // LAZY (eager = false): no count job materializes the stage; the
+      // first consumer's job computes and persists its partitions
+      // inline. Under AQE, building the checkpoint still runs every
+      // shuffle and broadcast stage of the staged plan while the
+      // DataFrame is being built — only the final result job is
+      // deferred. Measured with a SparkListener at sf0.01 (local[4]):
+      // building the uncached Detect.gaussianScoreBuild launches 0 jobs,
+      // the lazy cached Detect.gaussianScore launches 2 (its aggregate
+      // shuffle and its broadcast), and localCheckpoint(eager = true)
+      // launches 3. So laziness saves one job per stage, not the
+      // stage's upstream work; the plan is a flat LogicalRDD either
+      // way. On a cluster this would be a reliable checkpoint / staged
+      // table.
       //
       // The entry also pins the build plan's SQL metrics. The first
       // consumer's stages compute the stage's partitions in parallel;

@@ -105,6 +105,25 @@ class ContractSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("; "))
   }
 
+  test("joins are plain Dataset.join calls and the oracles quantize through Num") {
+    // a join forwards straight to Dataset.join (AQE sizes it at run
+    // time); the dead salted aggregation stays deleted; the oracles
+    // quantize through Num.r4sql / Num.sumQ4sql
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    def read(f: java.io.File) = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val sources = files(new java.io.File("src"))
+      .filter(f => f.getName.endsWith(".scala") && f.getName != "ContractSpec.scala")
+    val hits = sources.flatMap { f =>
+      val src = read(f)
+      val banned = Seq("dimJoin", "util.Joins", "saltedStats", "def q4sum(") ++
+        (if (Set("TsOracle.scala", "DocOracle.scala")(f.getName)) Seq("def r4(") else Nil)
+      banned.filter(src.contains).map(h => s"${f.getPath}: $h")
+    }
+    assert(sources.size > 1)
+    assert(hits.isEmpty, hits.mkString("; "))
+  }
+
   test("query keys follow the short-prefix naming the bench JSON relies on") {
     // Bench truncates each name at the first '_' AND drops the uniform
     // leading 'q' for the driver's 2000-byte output window; the q-less

@@ -50,8 +50,7 @@ class ModelStoreSpec extends SparkSuite {
     val base = Forecast.featureBase(spark, Sf01).filter(col("t") >= col("tsplit"))
     val reloaded = ModelStore.loadAndForecast(spark, path, base)
       .select(col("series"), col("t"), col("p").as("pr"))
-    val live = graft.util.Joins.dimJoin(base,
-        Forecast.featureCoefs(spark, Sf01), Seq("series"), None)
+    val live = base.join(Forecast.featureCoefs(spark, Sf01), "series")
       .withColumn("p", Forecast.featurePred)
       .select(col("series"), col("t"), col("p").as("pl"))
     val j = reloaded.join(live, Seq("series", "t")).cache()
@@ -89,8 +88,7 @@ class ModelStoreSpec extends SparkSuite {
     val pts = Impute.imputePoints(spark, Sf01)
     val reloaded = ModelStore.loadAndImpute(spark, path, pts)
       .select(col("series"), col("win"), col("pos"), col("v_imp"))
-    val live = graft.util.Joins.dimJoin(pts,
-        Impute.imputerCoefs(spark, Sf01), Seq("series", "o"), None)
+    val live = pts.join(Impute.imputerCoefs(spark, Sf01), Seq("series", "o"))
       .withColumn("p", Impute.imputePred)
       .select(col("series"), col("win"), col("pos"), col("p"))
     val j = reloaded.join(live, Seq("series", "win", "pos")).cache()

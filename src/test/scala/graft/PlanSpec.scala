@@ -186,8 +186,8 @@ class PlanSpec extends SparkSuite {
     // q54 (r9 conditional-agg collapse): the lag window lives in the
     // shared cached stage — the query plan itself derives NO lag pass —
     // and the |series|-scale mean/coef joins carry no hard-coded
-    // broadcast hint (size-aware dimJoin None path; AQE picks the
-    // strategy from runtime bytes)
+    // broadcast hint (a plain join; AQE picks the strategy from
+    // runtime bytes)
     val d54 = graft.timeseries.Forecast.refitBacktest(spark, Sf01)
     val p54 = plan(d54)
     assert(!p54.contains("lag(y"),
@@ -369,8 +369,8 @@ class PlanSpec extends SparkSuite {
     assert(!p10.contains("BroadcastNestedLoopJoin") && !p10.contains("CartesianProduct"),
       s"qe10 must stay a window pass:\n${p10.take(1200)}")
     // q49: trig tables are literals — no Generate (explode) fan-out; the
-    // |series|-row means frame joins via the size-aware dimJoin path
-    // (no static broadcast hint — AQE's runtime gate picks the strategy)
+    // |series|-row means frame joins with no static broadcast hint
+    // (AQE's runtime gate picks the strategy)
     val d49 = graft.timeseries.Forecast.periodogram(spark, Sf01)
     val p49 = plan(d49)
     assert(!p49.contains("Generate"), s"q49 must not explode:\n${p49.take(1200)}")
@@ -403,24 +403,15 @@ class PlanSpec extends SparkSuite {
     assert(p10.contains("partial_sum"), s"qp10 must partial-agg:\n${p10.take(1000)}")
   }
 
-  test("Joins.dimJoin: bounded dims broadcast statically; data-scaled dims carry no hint") {
-    import graft.util.Joins
+  test("per-series joins carry no broadcast hint and shuffle when the size gate forbids one") {
     val big = Tables.lineitem(spark, Sf01).select(col("l_orderkey"), col("l_quantity"))
     val dim = Tables.orders(spark, Sf01)
       .select(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
-    // structurally bounded → unconditional broadcast hint in the plan
-    val bounded = Joins.dimJoin(big, dim, Seq("l_orderkey"), Some(1000L))
-    assert(bounded.queryExecution.optimizedPlan.toString.contains("strategy=broadcast"),
-      "bounded dims must broadcast statically")
     // data-scaled → NO static hint: the planner + AQE size-gate decide
-    val scaled = Joins.dimJoin(big, dim, Seq("l_orderkey"), None)
+    val scaled = big.join(dim, "l_orderkey")
     assert(!scaled.queryExecution.optimizedPlan.toString.contains("strategy=broadcast"),
       "data-scaled dims must not carry a broadcast hint")
-    // a bound above BroadcastRowBound is a contract violation, not a fallback
-    intercept[IllegalArgumentException] {
-      Joins.dimJoin(big, dim, Seq("l_orderkey"), Some(Joins.BroadcastRowBound + 1))
-    }
-    // q04/q42 route their |series|-scale bounds through the None path
+    // q04/q42 join their |series|-scale bounds the same way
     for ((nm, df) <- Seq(
       "q04" -> graft.timeseries.TsQueries.q04QuantileScale(spark, Sf01),
       "q42" -> graft.timeseries.Forecast.rescaledMetrics(spark, Sf01))) {
@@ -429,9 +420,8 @@ class PlanSpec extends SparkSuite {
     }
     // the 100 TB side of the policy: when the size gate says the dim is
     // too big to ship (threshold disabled simulates a million-meter
-    // frame), the None path becomes a SHUFFLE join — no OOM-bound
-    // broadcast anywhere — while the bounded path still broadcasts by
-    // contract
+    // frame), the join becomes a SHUFFLE join — no OOM-bound broadcast
+    // anywhere
     val thrKey = "spark.sql.autoBroadcastJoinThreshold"
     val aqeThrKey = "spark.sql.adaptive.autoBroadcastJoinThreshold"
     val saved = spark.conf.getOption(thrKey)
@@ -439,17 +429,13 @@ class PlanSpec extends SparkSuite {
     try {
       spark.conf.set(thrKey, "-1")
       spark.conf.set(aqeThrKey, "-1")
-      val big2 = Joins.dimJoin(big, dim, Seq("l_orderkey"), None)
+      val big2 = big.join(dim, "l_orderkey")
       big2.collect()
       val p = plan(big2)
       assert(!p.contains("BroadcastHashJoin"),
-        s"None path must not broadcast when the size gate forbids it:\n${p.take(900)}")
+        s"an unhinted join must not broadcast when the size gate forbids it:\n${p.take(900)}")
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-        s"None path must fall back to a shuffle join:\n${p.take(900)}")
-      val bounded2 = Joins.dimJoin(big, dim, Seq("l_orderkey"), Some(1000L))
-      assert(plan(bounded2).contains("BroadcastHashJoin") ||
-        plan(bounded2).contains("BroadcastExchange"),
-        "bounded path broadcasts by contract regardless of the threshold")
+        s"an unhinted join must fall back to a shuffle join:\n${p.take(900)}")
     } finally {
       saved.fold(spark.conf.unset(thrKey))(v => spark.conf.set(thrKey, v))
       savedAqe.fold(spark.conf.unset(aqeThrKey))(v => spark.conf.set(aqeThrKey, v))

@@ -1,28 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.timeseries.Metrics
-import graft.util.Skew
 
 class SkewAurocSpec extends SparkSuite {
-
-  test("salted aggregation matches direct aggregation") {
-    val ev = spark.read.parquet(s"$Sf001/events.parquet")
-    val direct = ev.groupBy("event_type")
-      .agg(sum("value").as("sum_v"), count("value").as("n"),
-        min("value").as("min_v"), max("value").as("max_v"))
-      .collect().map(r => r.getString(0) ->
-        (r.getDouble(1), r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
-    val salted = Skew.saltedStats(ev, Seq("event_type"), "value").collect()
-    assert(salted.length === direct.size)
-    salted.foreach { r =>
-      val (s, n, mn, mx) = direct(r.getString(0))
-      assert(r.getLong(r.fieldIndex("n")) === n)
-      assert(math.abs(r.getDouble(r.fieldIndex("sum_v")) - s) < 1e-6 * math.abs(s))
-      assert(r.getDouble(r.fieldIndex("min_v")) === mn)
-      assert(r.getDouble(r.fieldIndex("max_v")) === mx)
-    }
-  }
 
   test("approximate auroc is within the 1/bins histogram error of exact q17") {
     val bins = 1000
