@@ -437,8 +437,8 @@ object ScoreStream {
         greatest(lit(0L), least(
           floor((col("y") - col("mn")) / (col("mx") - col("mn")) * nBins),
           lit(nBins - 1L)))))
-      .withColumn("aes", floor(abs(col("y") - col("p_stale")) * 10000d + 0.5d).cast("long"))
-      .withColumn("aer", floor(abs(col("y") - col("p_refit")) * 10000d + 0.5d).cast("long"))
+      .withColumn("aes", graft.util.Num.absErrQ4(col("y"), col("p_stale")))
+      .withColumn("aer", graft.util.Num.absErrQ4(col("y"), col("p_refit")))
     val binAggs = (0 until nBins).map(b =>
       sum(when(col("bin") === b, 1L).otherwise(0L)).as(s"n$b"))
     val aggs = binAggs ++ Seq(
@@ -460,8 +460,8 @@ object ScoreStream {
     joined.select(col("window.start").as("w_start"), col("series"),
       psi.as("psi"), when(psi > thr, 1).otherwise(0).as("drifted"),
       col("n_live"), col("n_eval"),
-      graft.util.Num.r4(col("saes") / 10000d / col("n_eval")).as("mae_stale"),
-      graft.util.Num.r4(col("saer") / 10000d / col("n_eval")).as("mae_refit"))
+      graft.util.Num.maeQ4(col("saes"), col("n_eval")).as("mae_stale"),
+      graft.util.Num.maeQ4(col("saer"), col("n_eval")).as("mae_refit"))
   }
 
   /** Streaming span imputer — the serving half of the saved q55 model
@@ -491,9 +491,9 @@ object ScoreStream {
     * the distribution-free in-flight anomaly band, valid for any
     * upstream point forecaster. Stateless broadcast stream-static join
     * (the deliberate serving-model shape — see forecastStream); the
-    * residual quantizes to the SAME 1e-4 int grid the calibration
-    * ranked on, so flags are bit-identical to ModelStore.loadAndFlag
-    * (StreamingSpec parity).
+    * residual quantizes through Num.absErrQ4, the definition the
+    * calibration ranked, so flags are bit-identical to
+    * ModelStore.loadAndFlag (StreamingSpec parity).
     */
   def conformalStream(spark: SparkSession, modelPath: String,
                       pts: DataFrame): DataFrame = {
@@ -503,7 +503,7 @@ object ScoreStream {
       .select(col("series"), col("ts"), col("y"), col("p"),
         (col("p") - col("qhatq") / 10000d).as("lo"),
         (col("p") + col("qhatq") / 10000d).as("hi"),
-        when(floor(abs(col("y") - col("p")) * 10000d + 0.5d).cast("long") > col("qhatq"), 1)
+        when(graft.util.Num.absErrQ4(col("y"), col("p")) > col("qhatq"), 1)
           .otherwise(0).as("out_of_band"))
   }
 

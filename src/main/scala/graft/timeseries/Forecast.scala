@@ -47,21 +47,16 @@ object Forecast {
   def seasonalNaive(spark: SparkSession, sfDir: String): DataFrame = {
     val pred = snSpine(spark, sfDir)
       .filter(col("t") >= col("tsplit") && col("y").isNotNull && col("p").isNotNull)
-    // y/p are r4-quantized upstream → per-element errors are
-    // bit-identical in both engines; scaled-integer sums make the
-    // aggregates order-independent (raw avg() flips the 4th decimal
-    // when the partition-order float sum lands on an r4 boundary)
-    val aeInt = floor(abs(col("y") - col("p")) * 10000d + 0.5d).cast("long")
-    val seInt = floor((col("y") - col("p")) * (col("y") - col("p")) * 10000d + 0.5d).cast("long")
     val apeInt = when(col("y") =!= 0.0,
       floor(abs(col("y") - col("p")) / abs(col("y")) * 10000d + 0.5d).cast("long"))
     pred.groupBy("series").agg(
       count(lit(1)).as("n"),
-      sum(aeInt).as("sae"), sum(seInt).as("sse"),
+      sum(Num.absErrQ4(col("y"), col("p"))).as("sae"),
+      sum(Num.sqErrQ4(col("y"), col("p"))).as("sse"),
       sum(apeInt).as("sape"), count(apeInt).as("nape"))
       .select(col("series"), col("n"),
-        Num.r4(col("sae") / 10000d / col("n")).as("mae"),
-        Num.r4(sqrt(col("sse") / 10000d / col("n"))).as("rmse"),
+        Num.maeQ4(col("sae"), col("n")).as("mae"),
+        Num.rmseQ4(col("sse"), col("n")).as("rmse"),
         Num.r4(col("sape") / 10000d / col("nape")).as("mape"))
   }
 
@@ -163,14 +158,14 @@ object Forecast {
       .groupBy("series", "variant").agg(
         count(lit(1)).as("n"),
         sum(smTerm).as("ssm"),
-        sum(floor(abs(col("y") - col("p")) * 10000d + 0.5d).cast("long")).as("sae"),
-        sum(floor((col("y") - col("p")) * (col("y") - col("p")) * 10000d + 0.5d).cast("long")).as("sse"),
+        sum(Num.absErrQ4(col("y"), col("p"))).as("sae"),
+        sum(Num.sqErrQ4(col("y"), col("p"))).as("sse"),
         sum(floor((col("y") - yb) * (col("y") - yb) * 10000d + 0.5d).cast("long")).as("ssy"))
       .select(col("series"), col("variant"), col("n"),
         Num.r4(col("ssm") / 1000000d / col("n") * 100d).as("smape"),
-        Num.r4(col("sae") / 10000d / col("n")).as("mae"),
-        Num.r4(col("sse") / 10000d / col("n")).as("mse"),
-        Num.r4(sqrt(col("sse") / 10000d / col("n"))).as("rmse"),
+        Num.maeQ4(col("sae"), col("n")).as("mae"),
+        Num.r4(Num.meanQ4(col("sse"), col("n"))).as("mse"),
+        Num.rmseQ4(col("sse"), col("n")).as("rmse"),
         when(col("ssy") === 0L, lit(null).cast("double"))
           .otherwise(Num.r4(lit(1d) - col("sse").cast("double") / col("ssy"))).as("r2"))
   }
@@ -307,17 +302,16 @@ object Forecast {
     val pred = scaled.withColumn("p", lag("vs", TsCore.WeekLag).over(w))
       .join(boundaryT(spark, sfDir), "series")
       .filter(col("t") >= col("tsplit") && col("vs").isNotNull && col("p").isNotNull)
-    // scaled-integer error sums (order-independent; vs is r4-quantized)
-    val aeInt = floor(abs(col("vs") - col("p")) * 10000d + 0.5d).cast("long")
-    val seInt = floor((col("vs") - col("p")) * (col("vs") - col("p")) * 10000d + 0.5d).cast("long")
     pred.groupBy("series").agg(
-        count(lit(1)).as("n"), sum(aeInt).as("sae"), sum(seInt).as("sse"),
+        count(lit(1)).as("n"),
+        sum(Num.absErrQ4(col("vs"), col("p"))).as("sae"),
+        sum(Num.sqErrQ4(col("vs"), col("p"))).as("sse"),
         max("lo").as("lo"), max("hi").as("hi"))
       .select(col("series"), col("n"),
-        Num.r4(col("sae") / 10000d / col("n")).as("mae_scaled"),
-        Num.r4(sqrt(col("sse") / 10000d / col("n"))).as("rmse_scaled"),
-        Num.r4(col("sae") / 10000d / col("n") * (col("hi") - col("lo"))).as("mae_orig"),
-        Num.r4(sqrt(col("sse") / 10000d / col("n")) * (col("hi") - col("lo"))).as("rmse_orig"))
+        Num.maeQ4(col("sae"), col("n")).as("mae_scaled"),
+        Num.rmseQ4(col("sse"), col("n")).as("rmse_scaled"),
+        Num.r4(Num.meanQ4(col("sae"), col("n")) * (col("hi") - col("lo"))).as("mae_orig"),
+        Num.r4(sqrt(Num.meanQ4(col("sse"), col("n"))) * (col("hi") - col("lo"))).as("rmse_orig"))
   }
 
   /** q48/q59's shared per-point (trend, detr) base: the centered
@@ -419,9 +413,7 @@ object Forecast {
     * forecast quality on contaminated vs anomaly-cleaned data) —
     * seasonal-naive error per (series, variant) over the test region,
     * where 'contam' is the injected series and 'cleaned' is the
-    * linear-imputed repair. The week-lag predictor aligns by an exact
-    * (series, t−168) self-join (window-drop gaps make row-lag wrong),
-    * and the whole comparison is two grouped passes over the union.
+    * linear-imputed repair, scored by [[weekLagImpact]].
     */
   def cleaningImpact(spark: SparkSession, sfDir: String): DataFrame = {
     val n = TsCore.DaySize
@@ -430,26 +422,29 @@ object Forecast {
         col("v_anom").as("v"), lit("contam").as("variant"))
     val cleaned = Impute.imputeLinear(spark, sfDir)
       .select(col("series"), col("t"), col("v_imp").as("v"), lit("cleaned").as("variant"))
-    val all = contam.unionByName(cleaned)
+    weekLagImpact(spark, sfDir, contam.unionByName(cleaned))
+  }
+
+  /** q38/q57's shared evaluation of (series, t, v, variant) points: the
+    * week-lag predictor of each point is its own variant's value at
+    * t−168, aligned by an exact (series, variant, t) self-join
+    * (window-drop gaps make row-lag wrong); the test-region errors
+    * reduce to MAE/RMSE per (series, variant) in one grouped pass.
+    */
+  private def weekLagImpact(spark: SparkSession, sfDir: String,
+                            all: DataFrame): DataFrame = {
     val pred = all.select(col("series"), col("variant"),
       (col("t") + TsCore.WeekLag).as("t"), col("v").as("p"))
-    val boundt = TsCore.splitBoundary(spark, sfDir)
-      .select(col("series"), (col("mwin") * n).as("tsplit"))
-    // v and p are r4-quantized upstream → bit-identical per element in
-    // both engines. Summing per-element errors as SCALED INTEGERS makes
-    // the aggregate order-independent and therefore exactly
-    // deterministic — a raw avg() flips the 4th decimal run-to-run when
-    // the partition-order float sum lands on an r4 boundary.
-    val aeInt = floor(abs(col("v") - col("p")) * 10000d + 0.5d).cast("long")
-    val seInt = floor((col("v") - col("p")) * (col("v") - col("p")) * 10000d + 0.5d).cast("long")
     all.join(pred, Seq("series", "variant", "t"))
-      .join(boundt, "series")
+      .join(boundaryT(spark, sfDir), "series")
       .filter(col("t") >= col("tsplit"))
       .groupBy("series", "variant")
-      .agg(count(lit(1)).as("n"), sum(aeInt).as("sae"), sum(seInt).as("sse"))
+      .agg(count(lit(1)).as("n"),
+        sum(Num.absErrQ4(col("v"), col("p"))).as("sae"),
+        sum(Num.sqErrQ4(col("v"), col("p"))).as("sse"))
       .select(col("series"), col("variant"), col("n"),
-        Num.r4(col("sae") / 10000d / col("n")).as("mae"),
-        Num.r4(sqrt(col("sse") / 10000d / col("n"))).as("rmse"))
+        Num.maeQ4(col("sae"), col("n")).as("mae"),
+        Num.rmseQ4(col("sse"), col("n")).as("rmse"))
   }
 
   /** q57: the reference pipeline's HEADLINE experiment (pipeline.py —
@@ -462,8 +457,7 @@ object Forecast {
     * the end-to-end chain the reference exists for: process → inject →
     * flag → TRAINED imputation → forecast comparison, with the learned
     * stage in the loop. Scale shape: q55's one-agg ridge solve + one
-    * (series, win, pos) assembly join + q38's exact (series, t−168)
-    * self-join eval; scaled-int error sums keep the rollup order-free.
+    * (series, win, pos) assembly join + q38's [[weekLagImpact]].
     */
   def learnedCleaningImpact(spark: SparkSession, sfDir: String,
                             maskSize: Int = 8, lambda: Double = 0.01): DataFrame = {
@@ -484,22 +478,7 @@ object Forecast {
         col("v_anom").as("v"), lit("contam").as("variant"))
     val linear = Impute.imputeLinear(spark, sfDir)
       .select(col("series"), col("t"), col("v_imp").as("v"), lit("linear").as("variant"))
-    val all = contam.unionByName(linear).unionByName(learned)
-    val pred = all.select(col("series"), col("variant"),
-      (col("t") + TsCore.WeekLag).as("t"), col("v").as("p"))
-    val boundt = TsCore.splitBoundary(spark, sfDir)
-      .select(col("series"), (col("mwin") * n).as("tsplit"))
-    // scaled-int error sums (q38's discipline): order-free exact
-    val aeInt = floor(abs(col("v") - col("p")) * 10000d + 0.5d).cast("long")
-    val seInt = floor((col("v") - col("p")) * (col("v") - col("p")) * 10000d + 0.5d).cast("long")
-    all.join(pred, Seq("series", "variant", "t"))
-      .join(boundt, "series")
-      .filter(col("t") >= col("tsplit"))
-      .groupBy("series", "variant")
-      .agg(count(lit(1)).as("n"), sum(aeInt).as("sae"), sum(seInt).as("sse"))
-      .select(col("series"), col("variant"), col("n"),
-        Num.r4(col("sae") / 10000d / col("n")).as("mae"),
-        Num.r4(sqrt(col("sse") / 10000d / col("n"))).as("rmse"))
+    weekLagImpact(spark, sfDir, contam.unionByName(linear).unionByName(learned))
   }
 
   /** q59: DECOMPOSE-THEN-FORECAST — the reference's dedicated
@@ -533,7 +512,7 @@ object Forecast {
     * Scale shape: q48's shared prefix-sum trend base (one per-series
     * window pass, session-cached), a |series|×24 train-profile
     * broadcast, two exact (series, t−168) self-joins (window-drop gaps
-    * make row-lag wrong — q38's discipline), scaled-int error sums.
+    * make row-lag wrong — q38's discipline), Num's forecast-error reducer.
     */
   def decomposeForecast(spark: SparkSession, sfDir: String,
                         half: Int = 12): DataFrame =
@@ -606,14 +585,13 @@ object Forecast {
         col("y"), col("p_dec").as("p"))
       .unionByName(ev.select(col("series"), lit("direct").as("variant"),
         col("y"), col("p_dir").as("p")))
-    // scaled-int error sums (q38's discipline): order-free exact
-    val aeInt = floor(abs(col("y") - col("p")) * 10000d + 0.5d).cast("long")
-    val seInt = floor((col("y") - col("p")) * (col("y") - col("p")) * 10000d + 0.5d).cast("long")
     both.groupBy("series", "variant")
-      .agg(count(lit(1)).as("n"), sum(aeInt).as("sae"), sum(seInt).as("sse"))
+      .agg(count(lit(1)).as("n"),
+        sum(Num.absErrQ4(col("y"), col("p"))).as("sae"),
+        sum(Num.sqErrQ4(col("y"), col("p"))).as("sse"))
       .select(col("series"), col("variant"), col("n"),
-        Num.r4(col("sae") / 10000d / col("n")).as("mae"),
-        Num.r4(sqrt(col("sse") / 10000d / col("n"))).as("rmse"))
+        Num.maeQ4(col("sae"), col("n")).as("mae"),
+        Num.rmseQ4(col("sse"), col("n")).as("rmse"))
   }
 
   /** q60's lag offsets for horizon h: the recursion's own feed (h) plus
@@ -680,8 +658,8 @@ object Forecast {
       val p = pred(h)
       Seq(
         sum(when(ok(h), 1L)).as(s"n_$h"),
-        sum(when(ok(h), floor(abs(col("y") - p) * 10000d + 0.5d).cast("long"))).as(s"sae_$h"),
-        sum(when(ok(h), floor((col("y") - p) * (col("y") - p) * 10000d + 0.5d).cast("long"))).as(s"sse_$h"))
+        sum(when(ok(h), Num.absErrQ4(col("y"), p))).as(s"sae_$h"),
+        sum(when(ok(h), Num.sqErrQ4(col("y"), p))).as(s"sse_$h"))
     }
     base.groupBy("series").agg(aggs.head, aggs.tail: _*)
       .select(col("series"), explode(array(horizons.map { h =>
@@ -690,8 +668,8 @@ object Forecast {
       }: _*)).as("s"))
       .filter(col("s.n") > 0)
       .select(col("series"), col("s.horizon").as("horizon"), col("s.n").as("n"),
-        Num.r4(col("s.sae") / 10000d / col("s.n")).as("mae"),
-        Num.r4(sqrt(col("s.sse") / 10000d / col("s.n"))).as("rmse"))
+        Num.maeQ4(col("s.sae"), col("s.n")).as("mae"),
+        Num.rmseQ4(col("s.sse"), col("s.n")).as("rmse"))
   }
 
   /** q35: multi-horizon persistence backtest — forecast error of the
@@ -707,17 +685,15 @@ object Forecast {
     val f = TsCore.filled(spark, sfDir).join(TsCore.splitBoundary(spark, sfDir)
       .select(col("series"), (col("mwin") * TsCore.DaySize).as("tsplit")), "series")
     horizons.map { h =>
-      // scaled-integer error sums: order-independent, exactly
-      // deterministic (inputs are r4-quantized upstream)
-      val aeInt = floor(abs(col("v_filled") - col("p")) * 10000d + 0.5d).cast("long")
-      val seInt = floor((col("v_filled") - col("p")) * (col("v_filled") - col("p")) * 10000d + 0.5d).cast("long")
       f.withColumn("p", lag("v_filled", h).over(w))
         .filter(col("t") >= col("tsplit") && col("v_filled").isNotNull && col("p").isNotNull)
         .groupBy("series")
-        .agg(count(lit(1)).as("n"), sum(aeInt).as("sae"), sum(seInt).as("sse"))
+        .agg(count(lit(1)).as("n"),
+          sum(Num.absErrQ4(col("v_filled"), col("p"))).as("sae"),
+          sum(Num.sqErrQ4(col("v_filled"), col("p"))).as("sse"))
         .select(col("series"), lit(h).as("horizon"), col("n"),
-          Num.r4(col("sae") / 10000d / col("n")).as("mae"),
-          Num.r4(sqrt(col("sse") / 10000d / col("n"))).as("rmse"))
+          Num.maeQ4(col("sae"), col("n")).as("mae"),
+          Num.rmseQ4(col("sse"), col("n")).as("rmse"))
     }.reduce(_ unionByName _)
   }
 
@@ -1143,17 +1119,15 @@ FROM pows"""
     val test = base.filter(col("t") >= col("tsplit"))
     val scored = test.join(coefs, "series")
       .withColumn("p", featurePred)
-    // scaled-int error sums (q21's discipline): order-free exact
-    val aeInt = floor(abs(col("y") - col("p")) * 10000d + 0.5d).cast("long")
-    val seInt = floor((col("y") - col("p")) * (col("y") - col("p")) * 10000d + 0.5d).cast("long")
     val errAggs = (count(lit(1)).as("n") +:
       (0 to p).map(i => max(col(s"b$i")).as(s"b$i"))) ++
-      Seq(sum(aeInt).as("sae"), sum(seInt).as("sse"))
+      Seq(sum(Num.absErrQ4(col("y"), col("p"))).as("sae"),
+        sum(Num.sqErrQ4(col("y"), col("p"))).as("sse"))
     scored.groupBy("series").agg(errAggs.head, errAggs.tail: _*)
       .select(col("series") +: col("n") +:
         ((0 to p).map(i => Num.r4(col(s"b$i")).as(s"b$i")) ++ Seq(
-          Num.r4(col("sae") / 10000d / col("n")).as("mae"),
-          Num.r4(sqrt(col("sse") / 10000d / col("n"))).as("rmse"))): _*)
+          Num.maeQ4(col("sae"), col("n")).as("mae"),
+          Num.rmseQ4(col("sse"), col("n")).as("rmse"))): _*)
   }
 
   /** q53: hierarchical forecast reconciliation (Hyndman FPP3 ch. 11,
@@ -1229,7 +1203,7 @@ FROM pows"""
       snSpine(spark, sfDir)
         .filter(col("y").isNotNull && col("p").isNotNull)
         .withColumn("tcal", col("tsplit") - lit(TsCore.WeekLag))
-        .withColumn("arq", floor(abs(col("y") - col("p")) * 10000d + 0.5d).cast("long"))
+        .withColumn("arq", Num.absErrQ4(col("y"), col("p")))
     }
 
   /** The per-series conformal half-width: (series, n_cal, qhatq) with

@@ -185,24 +185,16 @@ object Impute {
     val pts = imputePoints(spark, sfDir, maskSize)
     val scored = pts.join(coefs, Seq("series", "o"))
       .withColumn("p", imputePred)
-    // per-row errors quantized to the 1e-4 grid BEFORE the sum (q64's
-    // discipline): avg() over raw doubles is partition-order-sensitive
-    // in the last ulp, and the sf1 soak caught exactly that — one
-    // series' mae_seasonal tipping the r4 half-boundary against the
-    // oracle's different summation order. Integer sums are order-free.
-    def qabs(c: org.apache.spark.sql.Column) =
-      sum(floor(abs(col("v_orig") - c) * 10000d + 0.5d).cast("long"))
-    def qsq(c: org.apache.spark.sql.Column) =
-      sum(floor((col("v_orig") - c) * (col("v_orig") - c) * 10000d + 0.5d).cast("long"))
+    val y = col("v_orig")
     scored.groupBy("series").agg(
       count(lit(1)).as("n"),
-      qabs(col("p")).as("sae_l"), qsq(col("p")).as("sse_l"),
-      qabs(col("xs")).as("sae_s"), qsq(col("xs")).as("sse_s"))
+      sum(Num.absErrQ4(y, col("p"))).as("sae_l"), sum(Num.sqErrQ4(y, col("p"))).as("sse_l"),
+      sum(Num.absErrQ4(y, col("xs"))).as("sae_s"), sum(Num.sqErrQ4(y, col("xs"))).as("sse_s"))
       .select(col("series"), col("n"),
-        Num.r4(col("sae_l") / 10000d / col("n")).as("mae_learned"),
-        Num.r4(sqrt(col("sse_l") / 10000d / col("n"))).as("rmse_learned"),
-        Num.r4(col("sae_s") / 10000d / col("n")).as("mae_seasonal"),
-        Num.r4(sqrt(col("sse_s") / 10000d / col("n"))).as("rmse_seasonal"))
+        Num.maeQ4(col("sae_l"), col("n")).as("mae_learned"),
+        Num.rmseQ4(col("sse_l"), col("n")).as("rmse_learned"),
+        Num.maeQ4(col("sae_s"), col("n")).as("mae_seasonal"),
+        Num.rmseQ4(col("sse_s"), col("n")).as("rmse_seasonal"))
   }
 
   /** q18: linear interpolation across flagged spans — for each flagged

@@ -1,6 +1,6 @@
 package graft.timeseries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.util.{Num, StageCache}
@@ -31,22 +31,32 @@ object Metrics {
     // as a plan literal — not a single-group percentile() whose buffer
     // holds every window score on one reducer
     val thr = graft.util.Quantiles.exactLit(sg, "score", 1.0 - contamRate)
-    sg.select(thr.as("thr"), col("score"), col("gt"))
+    withF1(sg.select(thr.as("thr"), col("score"), col("gt"))
       .withColumn("pred", when(col("score") > col("thr"), 1).otherwise(0))
-      .agg(
-        sum(when(col("pred") === 0 && col("gt") === 0, 1).otherwise(0)).as("tn"),
-        sum(when(col("pred") === 1 && col("gt") === 0, 1).otherwise(0)).as("fp"),
-        sum(when(col("pred") === 0 && col("gt") === 1, 1).otherwise(0)).as("fn"),
-        sum(when(col("pred") === 1 && col("gt") === 1, 1).otherwise(0)).as("tp"),
-        Num.r4(max("thr")).as("thr"))
-      .withColumn("precision", Num.r4(
-        when(col("tp") + col("fp") === 0, 0.0).otherwise(col("tp") / (col("tp") + col("fp")))))
-      .withColumn("recall", Num.r4(
-        when(col("tp") + col("fn") === 0, 0.0).otherwise(col("tp") / (col("tp") + col("fn")))))
-      .withColumn("f1", Num.r4(
-        when(col("precision") + col("recall") === 0.0, 0.0)
-          .otherwise(lit(2.0) * col("precision") * col("recall") / (col("precision") + col("recall")))))
+      .agg(confusionCells.head, (confusionCells.tail :+ Num.r4(max("thr")).as("thr")): _*))
   }
+
+  /** The tn/fp/fn/tp cells of 0/1 `pred` vs `gt` columns — q16, q25. */
+  private[timeseries] def confusionCells: Seq[Column] = Seq(
+    sum(when(col("pred") === 0 && col("gt") === 0, 1).otherwise(0)).as("tn"),
+    sum(when(col("pred") === 1 && col("gt") === 0, 1).otherwise(0)).as("fp"),
+    sum(when(col("pred") === 0 && col("gt") === 1, 1).otherwise(0)).as("fn"),
+    sum(when(col("pred") === 1 && col("gt") === 1, 1).otherwise(0)).as("tp"))
+
+  /** precision / recall from tp/fp/fn columns, 0.0 on an empty
+    * denominator — q16, q25, q27 (q51's point-adjust keeps NULL there).
+    */
+  private def withPrecisionRecall(cm: DataFrame): DataFrame = cm
+    .withColumn("precision", Num.r4(
+      when(col("tp") + col("fp") === 0, 0.0).otherwise(col("tp") / (col("tp") + col("fp")))))
+    .withColumn("recall", Num.r4(
+      when(col("tp") + col("fn") === 0, 0.0).otherwise(col("tp") / (col("tp") + col("fn")))))
+
+  /** [[withPrecisionRecall]] plus their harmonic mean f1 — q16, q25. */
+  private[timeseries] def withF1(cm: DataFrame): DataFrame = withPrecisionRecall(cm)
+    .withColumn("f1", Num.r4(
+      when(col("precision") + col("recall") === 0.0, 0.0)
+        .otherwise(lit(2.0) * col("precision") * col("recall") / (col("precision") + col("recall")))))
 
   /** Histogram-approximate AUROC — the 100 TB path. The exact AUROC
     * (q17) ranks every score in one global window; at billions of scored
@@ -109,17 +119,13 @@ object Metrics {
           sum(when(pred === 1 && col("gt") === 0, 1).otherwise(0)).as(s"fp_$i"),
           sum(when(pred === 0 && col("gt") === 1, 1).otherwise(0)).as(s"fn_$i"))
       }: _*)
-    cells.select(explode(array(rates.zipWithIndex.map { case (r, i) =>
-        struct(lit(r).as("contam"), Num.r4(lit(thrMap(1.0 - r).getOrElse(Double.NaN))).as("thr"),
-          coalesce(col(s"tp_$i"), lit(0L)).as("tp"),
-          coalesce(col(s"fp_$i"), lit(0L)).as("fp"),
-          coalesce(col(s"fn_$i"), lit(0L)).as("fn"))
-      }: _*)).as("s"))
-      .select("s.contam", "s.thr", "s.tp", "s.fp", "s.fn")
-      .withColumn("precision", Num.r4(
-        when(col("tp") + col("fp") === 0, 0.0).otherwise(col("tp") / (col("tp") + col("fp")))))
-      .withColumn("recall", Num.r4(
-        when(col("tp") + col("fn") === 0, 0.0).otherwise(col("tp") / (col("tp") + col("fn")))))
+    withPrecisionRecall(cells.select(explode(array(rates.zipWithIndex.map { case (r, i) =>
+      struct(lit(r).as("contam"), Num.r4(lit(thrMap(1.0 - r).getOrElse(Double.NaN))).as("thr"),
+        coalesce(col(s"tp_$i"), lit(0L)).as("tp"),
+        coalesce(col(s"fp_$i"), lit(0L)).as("fp"),
+        coalesce(col(s"fn_$i"), lit(0L)).as("fn"))
+    }: _*)).as("s"))
+      .select("s.contam", "s.thr", "s.tp", "s.fp", "s.fn"))
   }
 
   /** q51: point-adjust evaluation (Xu et al. 2018 "Unsupervised Anomaly

@@ -109,15 +109,15 @@ object ModelStore {
 
   /** Apply a SAVED conformal calibration to scored points
     * (series, …, y, p): interval bounds + the outside-interval flag.
-    * The residual quantizes to the SAME 1e-4 grid the calibration
-    * ranked on, so the flag is integer-exact.
+    * The residual quantizes through [[Num.absErrQ4]], the
+    * definition the calibration ranked, so the flag is integer-exact.
     */
   def loadAndFlag(spark: SparkSession, path: String, pts: DataFrame): DataFrame =
     pts.join(conformalBounds(spark, path), "series")
       .withColumn("lo", col("p") - col("qhatq") / 10000d)
       .withColumn("hi", col("p") + col("qhatq") / 10000d)
       .withColumn("out_of_band",
-        when(floor(abs(col("y") - col("p")) * 10000d + 0.5d).cast("long") > col("qhatq"), 1)
+        when(Num.absErrQ4(col("y"), col("p")) > col("qhatq"), 1)
           .otherwise(0))
       .drop("n_cal", "qhatq")
 

@@ -2,7 +2,6 @@ package graft.timeseries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.Num
 
 /** q25: patched point-wise retrieval metrics (reference: metrics.py
   * compute_pointwise_retrieval_metrics): predicted point flags — the
@@ -32,17 +31,6 @@ object PointwiseMetrics {
       .withColumn("patch", floor(col("pos") / patchSize))
       .groupBy("series", "win", "patch")
       .agg(max("pred_pt").as("pred"), max("is_anom").as("gt"))
-    patched.agg(
-        sum(when(col("pred") === 0 && col("gt") === 0, 1).otherwise(0)).as("tn"),
-        sum(when(col("pred") === 1 && col("gt") === 0, 1).otherwise(0)).as("fp"),
-        sum(when(col("pred") === 0 && col("gt") === 1, 1).otherwise(0)).as("fn"),
-        sum(when(col("pred") === 1 && col("gt") === 1, 1).otherwise(0)).as("tp"))
-      .withColumn("precision", Num.r4(
-        when(col("tp") + col("fp") === 0, 0.0).otherwise(col("tp") / (col("tp") + col("fp")))))
-      .withColumn("recall", Num.r4(
-        when(col("tp") + col("fn") === 0, 0.0).otherwise(col("tp") / (col("tp") + col("fn")))))
-      .withColumn("f1", Num.r4(
-        when(col("precision") + col("recall") === 0.0, 0.0)
-          .otherwise(lit(2.0) * col("precision") * col("recall") / (col("precision") + col("recall")))))
+    Metrics.withF1(patched.agg(Metrics.confusionCells.head, Metrics.confusionCells.tail: _*))
   }
 }

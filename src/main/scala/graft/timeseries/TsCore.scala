@@ -28,7 +28,6 @@ object TsCore {
   val WeekLag = 168         // 7 * 24, seasonal fill lag (ref process_aemo.py:64-66)
   val Alpha = 0.2           // EWMA alpha (ref feature_extractor.py moving_average)
   val FeatPatch = 8         // non-overlapping std patch (ref main.py --feat_patch_size)
-  val PatchSize = 3         // overlapping patch window (ref softpatch.py patchsize=3)
   val TrainFrac = 0.7       // ad train/test split (ref process_aemo.py --ad_split_ratio)
   val DayContamRate = 0.4   // fraction of windows contaminated (ref --day_contam_rate)
   val QLo = 0.01            // scaling quantiles (ref process_aemo.py:178-180)

@@ -6,7 +6,15 @@ package graft.timeseries
   */
 object TsOracle {
   import TsCore._
-  import graft.util.Num.{r4sql => r4, sumQ4sql}
+  import graft.util.Num.{r4sql => r4, sumQ4sql, absErrQ4sql, sqErrQ4sql, meanQ4sql,
+    maeQ4sql, rmseQ4sql}
+
+  /** The `mae`/`rmse` select items of Num's forecast-error reducer over
+    * the grouped rows' (y, p) pairs.
+    */
+  private def maeRmse(y: String, p: String, sfx: String = ""): String =
+    s"""${maeQ4sql(s"sum(${absErrQ4sql(y, p)})", "count(*)")} AS mae$sfx,
+  ${rmseQ4sql(s"sum(${sqErrQ4sql(y, p)})", "count(*)")} AS rmse$sfx"""
 
   /** LCG uniform in [0,1) — must match TsCore.lcg exactly. */
   private def lcg(salt: Int): String =
@@ -328,19 +336,18 @@ JOIN (
   FROM appts t JOIN rcoefs2 c USING (series, o)
 )
 SELECT series, count(*) AS n,
-  ${r4("sum(CAST(floor(abs(v_orig - p)*10000 + 0.5) AS BIGINT))/10000.0/count(*)")} AS mae_learned,
-  ${r4("sqrt(sum(CAST(floor((v_orig - p)*(v_orig - p)*10000 + 0.5) AS BIGINT))/10000.0/count(*))")} AS rmse_learned,
-  ${r4("sum(CAST(floor(abs(v_orig - xs)*10000 + 0.5) AS BIGINT))/10000.0/count(*)")} AS mae_seasonal,
-  ${r4("sqrt(sum(CAST(floor((v_orig - xs)*(v_orig - xs)*10000 + 0.5) AS BIGINT))/10000.0/count(*))")} AS rmse_seasonal
+  ${maeRmse("v_orig", "p", "_learned")},
+  ${maeRmse("v_orig", "xs", "_seasonal")}
 FROM preds GROUP BY series"""
 
   /** q57: the reference pipeline's headline experiment run with the
     * LEARNED imputer — mirrors Forecast.learnedCleaningImpact: three
-    * variants (contam / linear / learned) through q38's week-lag
-    * forecast evaluation.
+    * variants (contam / linear / learned) through q38's
+    * [[weekLagImpactSql]].
     */
   def q57(maskSize: Int = 8, lambda: Double = 0.01): String =
-    prefix + imputeLinearCte + imputerTrainCtes(maskSize, lambda) + imputerAppCtes + s"""
+    prefix + imputeLinearCte + splitTCte + imputerTrainCtes(maskSize, lambda) +
+      imputerAppCtes + s"""
 , appts57 AS (
   SELECT a.series, a.win, a.pos,
          least(a.pos - a.apos, ${maskSize - 1}) AS o,
@@ -366,15 +373,7 @@ FROM preds GROUP BY series"""
 ), linear57 AS (SELECT series, t, v_imp AS v, 'linear' AS variant FROM imp),
 allv57 AS (
   SELECT * FROM contam57 UNION ALL SELECT * FROM linear57 UNION ALL SELECT * FROM learnedv
-), boundt57 AS (SELECT series, mwin * ${TsCore.DaySize} AS tsplit FROM boundary)
-SELECT a.series, a.variant, count(*) AS n,
-  ${r4("sum(CAST(floor(abs(a.v - p.v)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*)")} AS mae,
-  ${r4("sqrt(sum(CAST(floor((a.v - p.v)*(a.v - p.v)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))")} AS rmse
-FROM allv57 a
-JOIN allv57 p ON p.series = a.series AND p.variant = a.variant AND p.t = a.t - $WeekLag
-JOIN boundt57 b ON b.series = a.series
-WHERE a.t >= b.tsplit
-GROUP BY a.series, a.variant"""
+)""" + weekLagImpactSql("allv57")
 
   def q06: String = prefix + "SELECT series, win, pos, ewma FROM feats"
 
@@ -631,22 +630,37 @@ FROM (SELECT series, win, pos, vs,
 
   def q16(contamRate: Double = 0.1): String = prefix + scoredGtCte + s"""
 , thr AS (SELECT quantile_cont(score, ${1.0 - contamRate}) AS thr FROM sg),
-pr AS (SELECT sg.*, thr.thr, CASE WHEN score > thr.thr THEN 1 ELSE 0 END AS pred FROM sg, thr),
-cm AS (
+pr AS (SELECT sg.*, thr.thr, CASE WHEN score > thr.thr THEN 1 ELSE 0 END AS pred FROM sg, thr)""" +
+    confusionTail("pr", withThr = true)
+
+  /** precision / recall select items over tp/fp/fn (0.0 on an empty
+    * denominator) — q16, q25, q27; mirrors Metrics.withPrecisionRecall.
+    */
+  private val precisionRecall: String =
+    s"""${r4("CASE WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END")} AS precision,
+  ${r4("CASE WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END")} AS recall"""
+
+  /** q16/q25's confusion-matrix tail over a (pred, gt) CTE `src`:
+    * tn/fp/fn/tp (+ q16's threshold) → precision/recall/f1 — mirrors
+    * Metrics.confusionCells + Metrics.withF1.
+    */
+  private def confusionTail(src: String, withThr: Boolean): String = {
+    val (thrAgg, thrCol) = if (withThr) (s",\n         ${r4("max(thr)")} AS thr", " thr,") else ("", "")
+    s"""
+, cm AS (
   SELECT CAST(sum(CASE WHEN pred = 0 AND gt = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn,
          CAST(sum(CASE WHEN pred = 1 AND gt = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
          CAST(sum(CASE WHEN pred = 0 AND gt = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-         CAST(sum(CASE WHEN pred = 1 AND gt = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-         ${r4("max(thr)")} AS thr
-  FROM pr
+         CAST(sum(CASE WHEN pred = 1 AND gt = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp$thrAgg
+  FROM $src
 ), pm AS (
-  SELECT *, ${r4("CASE WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END")} AS precision,
-            ${r4("CASE WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END")} AS recall
+  SELECT *, $precisionRecall
   FROM cm
 )
-SELECT tn, fp, fn, tp, thr, precision, recall,
+SELECT tn, fp, fn, tp,$thrCol precision, recall,
        ${r4("CASE WHEN precision + recall = 0.0 THEN 0.0 ELSE 2.0 * precision * recall / (precision + recall) END")} AS f1
 FROM pm"""
+  }
 
   def q17: String = prefix + scoredGtCte + s"""
 , ranked AS (
@@ -707,7 +721,7 @@ FROM wexp e JOIN wcomplete USING (series, wid), t0w"""
   /** q56: wide-context ridge forecaster — mirrors Forecast.featureForecast
     * stage-for-stage: exact scaled-int means/scatter, the `[S | sy]` list
     * matrix through [[gaussJordanCtes]] (g1..g6, the identical IEEE
-    * sequence as Ols.gaussJordan), scaled-int error sums.
+    * sequence as Ols.gaussJordan), Num's forecast-error reducer.
     */
   def q56(lambda: Double = 0.001, rollH: Int = 12): String = {
     val p = 6
@@ -771,8 +785,7 @@ means56 AS (
 )
 SELECT series, count(*) AS n,
   ${(0 to p).map(i => s"${r4(s"max(b$i)")} AS b$i").mkString(",\n  ")},
-  ${r4("sum(CAST(floor(abs(y - p)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*)")} AS mae,
-  ${r4("sqrt(sum(CAST(floor((y - p) * (y - p)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))")} AS rmse
+  ${maeRmse("y", "p")}
 FROM scored56 GROUP BY series"""
   }
 
@@ -793,17 +806,17 @@ FROM scored56 GROUP BY series"""
   FROM svs s JOIN boundt bt USING (series)
 ), sagg AS (
   SELECT series, count(*) AS n,
-         sum(CAST(floor(abs(vs - p)*10000 + 0.5) AS BIGINT)) AS sae,
-         sum(CAST(floor((vs - p)*(vs - p)*10000 + 0.5) AS BIGINT)) AS sse,
+         sum(${absErrQ4sql("vs", "p")}) AS sae,
+         sum(${sqErrQ4sql("vs", "p")}) AS sse,
          max(lo) AS lo, max(hi) AS hi
   FROM spred WHERE t >= tsplit AND vs IS NOT NULL AND p IS NOT NULL
   GROUP BY series
 )
 SELECT series, n,
-  ${r4("sae / 10000.0 / n")} AS mae_scaled,
-  ${r4("sqrt(sse / 10000.0 / n)")} AS rmse_scaled,
-  ${r4("sae / 10000.0 / n * (hi - lo)")} AS mae_orig,
-  ${r4("sqrt(sse / 10000.0 / n) * (hi - lo)")} AS rmse_orig
+  ${maeQ4sql("sae", "n")} AS mae_scaled,
+  ${rmseQ4sql("sse", "n")} AS rmse_scaled,
+  ${r4(s"${meanQ4sql("sae", "n")} * (hi - lo)")} AS mae_orig,
+  ${r4(s"sqrt(${meanQ4sql("sse", "n")}) * (hi - lo)")} AS rmse_orig
 FROM sagg"""
 
   def q27(rates: Seq[Double] = Seq(0.05, 0.1, 0.2)): String = prefix + scoredGtCte + s"""
@@ -822,8 +835,7 @@ FROM sagg"""
   FROM pr GROUP BY contam
 )
 SELECT contam, thr, tp, fp, fn,
-  ${r4("CASE WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END")} AS precision,
-  ${r4("CASE WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END")} AS recall
+  $precisionRecall
 FROM cm"""
 
   def q28: String = prefix + s"""
@@ -908,17 +920,22 @@ FROM ws, thrs"""
     * as seasonal-naive error per series on the contaminated series vs
     * the anomaly-imputed one, over the test region.
     */
-  def q38: String = prefix + imputeLinearCte + s"""
+  def q38: String = prefix + imputeLinearCte + splitTCte + s"""
 , contamv AS (SELECT series, t, v_anom AS v, 'contam' AS variant FROM flg),
 cleanv AS (SELECT series, t, v_imp AS v, 'cleaned' AS variant FROM imp),
-allv AS (SELECT * FROM contamv UNION ALL SELECT * FROM cleanv),
-boundt38 AS (SELECT series, mwin * $DaySize AS tsplit FROM boundary)
+allv AS (SELECT * FROM contamv UNION ALL SELECT * FROM cleanv)""" + weekLagImpactSql("allv")
+
+  /** q38/q57's shared evaluation — mirrors Forecast.weekLagImpact: each
+    * point of the (series, t, v, variant) CTE `allv` is predicted by its
+    * own variant's value at t−168 (exact self-join), scored over the
+    * test region per (series, variant). Needs [[splitTCte]]'s `boundt`.
+    */
+  private def weekLagImpactSql(allv: String): String = s"""
 SELECT a.series, a.variant, count(*) AS n,
-  ${r4("sum(CAST(floor(abs(a.v - p.v)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*)")} AS mae,
-  ${r4("sqrt(sum(CAST(floor((a.v - p.v)*(a.v - p.v)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))")} AS rmse
-FROM allv a
-JOIN allv p ON p.series = a.series AND p.variant = a.variant AND p.t = a.t - $WeekLag
-JOIN boundt38 b ON b.series = a.series
+  ${maeRmse("a.v", "p.v")}
+FROM $allv a
+JOIN $allv p ON p.series = a.series AND p.variant = a.variant AND p.t = a.t - $WeekLag
+JOIN boundt b ON b.series = a.series
 WHERE a.t >= b.tsplit
 GROUP BY a.series, a.variant"""
 
@@ -977,8 +994,7 @@ GROUP BY a.series, a.win, a.pos"""
   FROM filled f JOIN boundt b USING (series)
 )
 SELECT series, count(*) AS n,
-  ${r4("sum(CAST(floor(abs(y - p)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*)")} AS mae,
-  ${r4("sqrt(sum(CAST(floor((y - p)*(y - p)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))")} AS rmse,
+  ${maeRmse("y", "p")},
   ${r4("sum(CASE WHEN y <> 0.0 THEN CAST(floor(abs(y - p) / abs(y)*10000 + 0.5) AS BIGINT) END) / 10000.0 / count(CASE WHEN y <> 0.0 THEN 1 END)")} AS mape
 FROM sn WHERE t >= tsplit AND y IS NOT NULL AND p IS NOT NULL
 GROUP BY series"""
@@ -997,7 +1013,7 @@ GROUP BY series"""
   FROM filled f JOIN boundt b USING (series)
 ), ar58 AS (
   SELECT series, t, y, p, tsplit, tcal,
-         CAST(floor(abs(y - p)*10000 + 0.5) AS BIGINT) AS arq
+         ${absErrQ4sql("y", "p")} AS arq
   FROM sn58 WHERE y IS NOT NULL AND p IS NOT NULL
 ), cal58 AS (
   SELECT series, t, arq, count(*) OVER (PARTITION BY series) AS ncal,
@@ -1252,23 +1268,23 @@ FROM testf GROUP BY series"""
   SELECT b.series, b.variant, count(*) AS n,
     sum(CASE WHEN abs(b.p) + abs(b.y) = 0 THEN CAST(0 AS BIGINT)
          ELSE CAST(floor(2 * abs(b.y - b.p) / (abs(b.p) + abs(b.y)) * 1000000 + 0.5) AS BIGINT) END) AS ssm,
-    sum(CAST(floor(abs(b.y - b.p) * 10000 + 0.5) AS BIGINT)) AS sae,
-    sum(CAST(floor((b.y - b.p) * (b.y - b.p) * 10000 + 0.5) AS BIGINT)) AS sse,
+    sum(${absErrQ4sql("b.y", "b.p")}) AS sae,
+    sum(${sqErrQ4sql("b.y", "b.p")}) AS sse,
     sum(CAST(floor((b.y - yb.syq / 10000.0 / yb.ny) * (b.y - yb.syq / 10000.0 / yb.ny) * 10000 + 0.5) AS BIGINT)) AS ssy
   FROM both64 b JOIN ybar64 yb USING (series)
   GROUP BY b.series, b.variant
 )
 SELECT series, variant, n,
   ${r4("ssm / 1000000.0 / n * 100")} AS smape,
-  ${r4("sae / 10000.0 / n")} AS mae,
-  ${r4("sse / 10000.0 / n")} AS mse,
-  ${r4("sqrt(sse / 10000.0 / n)")} AS rmse,
+  ${maeQ4sql("sae", "n")} AS mae,
+  ${r4(meanQ4sql("sse", "n"))} AS mse,
+  ${rmseQ4sql("sse", "n")} AS rmse,
   CASE WHEN ssy = 0 THEN NULL ELSE ${r4("1 - CAST(sse AS DOUBLE) / ssy")} END AS r2
 FROM agg64"""
 
   /** q60: mirrors Forecast.recursiveForecast — q22's coefficient chain
     * + one lag CTE over the dense spine + the SAME left-assoc unrolled
-    * recurrence per horizon + scaled-int error sums.
+    * recurrence per horizon + Num's forecast-error reducer.
     */
   def q60(horizons: Seq[Int] = Seq(1, 6, 12, 24)): String = {
     import TsCore.{DaySize, WeekLag}
@@ -1285,8 +1301,7 @@ FROM agg64"""
         Forecast.recursiveOffsets(h).map(i => s"l$i IS NOT NULL")).mkString(" AND ")
       val p = predSql(h)
       s"""SELECT series, $h AS horizon, count(*) AS n,
-  ${r4(s"sum(CAST(floor(abs(y - $p)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*)")} AS mae,
-  ${r4(s"sqrt(sum(CAST(floor((y - $p)*(y - $p)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))")} AS rmse
+  ${maeRmse("y", p)}
 FROM e60 WHERE $ok GROUP BY series"""
     }.mkString("\nUNION ALL\n")
     prefix + splitTCte + q22CoefCtes + s"""
@@ -1382,20 +1397,7 @@ GROUP BY t.series, t.pos"""
   SELECT series, win, CAST(floor(pos / $patchSize) AS BIGINT) AS patch,
          max(pred_pt) AS pred, max(is_anom) AS gt
   FROM flagged GROUP BY series, win, CAST(floor(pos / $patchSize) AS BIGINT)
-), cm AS (
-  SELECT CAST(sum(CASE WHEN pred = 0 AND gt = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-         CAST(sum(CASE WHEN pred = 1 AND gt = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-         CAST(sum(CASE WHEN pred = 0 AND gt = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-         CAST(sum(CASE WHEN pred = 1 AND gt = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp
-  FROM patched
-), pm AS (
-  SELECT *, ${r4("CASE WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END")} AS precision,
-            ${r4("CASE WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END")} AS recall
-  FROM cm
-)
-SELECT tn, fp, fn, tp, precision, recall,
-       ${r4("CASE WHEN precision + recall = 0.0 THEN 0.0 ELSE 2.0 * precision * recall / (precision + recall) END")} AS f1
-FROM pm"""
+)""" + confusionTail("patched", withThr = false)
 
   def q31(pad: Int = 2): String = prefix + s"""
 , ivruns AS (
@@ -1570,7 +1572,7 @@ FROM g"""
 
   /** q59: mirrors Forecast.decomposeForecast — q48's trend CTEs +
     * train-only seasonal profile + two exact (series, t−168)
-    * self-joins + scaled-int error sums.
+    * self-joins + Num's forecast-error reducer.
     */
   def q59(half: Int = 12): String = decomposeForecastSql(half, trailing = false)
 
@@ -1625,8 +1627,7 @@ FROM g"""
   SELECT series, 'direct' AS variant, y, p_dir AS p FROM ev59
 )
 SELECT series, variant, count(*) AS n,
-  ${r4("sum(CAST(floor(abs(y - p)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*)")} AS mae,
-  ${r4("sqrt(sum(CAST(floor((y - p)*(y - p)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))")} AS rmse
+  ${maeRmse("y", "p")}
 FROM un59 GROUP BY series, variant"""
   }
 
@@ -1735,8 +1736,7 @@ lag35 AS (
 )
 ${horizons.map(h =>
     s"""SELECT series, $h AS horizon, count(*) AS n,
-  ${r4(s"sum(CAST(floor(abs(v_filled - p$h)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*)")} AS mae,
-  ${r4(s"sqrt(sum(CAST(floor((v_filled - p$h)*(v_filled - p$h)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))")} AS rmse
+  ${maeRmse("v_filled", s"p$h")}
 FROM lag35 WHERE t >= tsplit AND v_filled IS NOT NULL AND p$h IS NOT NULL GROUP BY series""")
     .mkString("\nUNION ALL ")}"""
 

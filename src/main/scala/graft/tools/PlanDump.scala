@@ -38,15 +38,6 @@ object PlanDump {
         graft.vector.Similarity.bm25PostingsPlan(spark, sfDir))
       case "_qp2_exact_build" => Some(
         graft.analytics.Events.approxDistinctExactPlan(spark, sfDir))
-      case "_qp2_exact_build_unioned" => Some {
-        // the pre-r19 exact pass (4 unioned single-column scans) — kept
-        // here only as the before-evidence for the single-scan rewrite
-        import org.apache.spark.sql.functions.{col, lit}
-        val cols = Seq("l_partkey", "l_suppkey", "l_quantity", "l_extendedprice")
-        val li = graft.util.Tables.lineitem(spark, sfDir).select(cols.map(col): _*)
-        cols.map(c => li.select(lit(c).as("column_name"), col(c).cast("double").as("v")))
-          .reduce(_ unionByName _).distinct().groupBy("column_name").count()
-      }
       case _ => None
     }
     names.foreach { name =>

@@ -1,7 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.floor
+import org.apache.spark.sql.functions.{abs, floor, sqrt}
 
 /** Engine-agnostic 4-dp quantization. `round()` semantics differ between
   * Spark (BigDecimal HALF_UP on the decimal expansion) and DuckDB
@@ -30,6 +30,44 @@ object Num {
     */
   def sumQ4sql(e: String): String =
     s"sum(CAST(floor(($e)*10000 + 0.5) AS BIGINT)) / 10000.0"
+
+  /** The forecast-error reducer — every forecaster's MAE/RMSE (q21,
+    * q35, q38, q42, q55–q60, q64, q65, the saved conformal band and the
+    * streaming scorers). Per row, the absolute and squared residual
+    * quantize to the 1e-4 grid as int64 ([[absErrQ4]], [[sqErrQ4]]);
+    * per group those sum exactly, and [[maeQ4]] / [[rmseQ4]] read the
+    * sums back as r4(s / 1e4 / n) and r4(√(s / 1e4 / n)). With y and p
+    * on the r4 grid upstream each term is bit-identical in both
+    * engines, and the integer sum is order-free: a raw avg() over
+    * doubles depends on partition order and flips the 4th decimal when
+    * the float sum lands on an r4 boundary (the sf1 soak caught one
+    * series' q55 MAE doing exactly that). The conformal calibration
+    * ranks [[absErrQ4]] residuals, so a served band flag compares on the
+    * same grid. Keep Σ|term|·1e4 < 2^63 per group.
+    */
+  def absErrQ4(y: Column, p: Column): Column = floor(abs(y - p) * 10000d + 0.5d).cast("long")
+
+  def sqErrQ4(y: Column, p: Column): Column = floor((y - p) * (y - p) * 10000d + 0.5d).cast("long")
+
+  /** The unrounded mean s / 1e4 / n of a quantized error sum. */
+  def meanQ4(s: Column, n: Column): Column = s / 10000d / n
+
+  def maeQ4(sae: Column, n: Column): Column = r4(meanQ4(sae, n))
+
+  def rmseQ4(sse: Column, n: Column): Column = r4(sqrt(meanQ4(sse, n)))
+
+  /** SQL forms of the forecast-error reducer — must mirror absErrQ4 …
+    * rmseQ4 exactly (BIGINT terms, the same division order).
+    */
+  def absErrQ4sql(y: String, p: String): String = s"CAST(floor(abs($y - $p)*10000 + 0.5) AS BIGINT)"
+
+  def sqErrQ4sql(y: String, p: String): String = s"CAST(floor(($y - $p)*($y - $p)*10000 + 0.5) AS BIGINT)"
+
+  def meanQ4sql(s: String, n: String): String = s"$s / 10000.0 / $n"
+
+  def maeQ4sql(sae: String, n: String): String = r4sql(meanQ4sql(sae, n))
+
+  def rmseQ4sql(sse: String, n: String): String = r4sql(s"sqrt(${meanQ4sql(sse, n)})")
 
   /** Deterministic hashed uniform in [−0.5, 0.5): Knuth multiplicative
     * hash of an integer key, scaled. Pure int64 arithmetic with the

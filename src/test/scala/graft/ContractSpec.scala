@@ -124,6 +124,26 @@ class ContractSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("; "))
   }
 
+  test("the forecast-error residual is quantized once in Spark and once in the oracle") {
+    // Num.absErrQ4 / absErrQ4sql are the one definition of the 1e-4-grid
+    // absolute residual every MAE and conformal rank reduces: any other
+    // abs(a - b) * 10000 under src/main is a hand-written copy. One level
+    // of nested parens covers col("y") - col("p") in Column code.
+    val arg = """(?:[^()]|\([^()]*\))*"""
+    val shape = ("""abs\(""" + arg + " - " + arg + """\)\s*\*\s*10000(d?)""").r
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val hits = files(new java.io.File("src/main/scala/graft"))
+      .filter(_.getName.endsWith(".scala")).flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        shape.findAllMatchIn(src).map { m =>
+          (f.getPath.stripPrefix("src/main/scala/"), if (m.group(1) == "d") "spark" else "sql")
+        }
+      }
+    assert(hits.groupBy(identity).map { case (k, v) => k -> v.size } ===
+      Map(("graft/util/Num.scala", "spark") -> 1, ("graft/util/Num.scala", "sql") -> 1))
+  }
+
   test("query keys follow the short-prefix naming the bench JSON relies on") {
     // Bench truncates each name at the first '_' AND drops the uniform
     // leading 'q' for the driver's 2000-byte output window; the q-less

@@ -74,6 +74,22 @@ class ForecastImputeSpec extends SparkSuite {
     piv.unpersist(); d.unpersist()
   }
 
+  test("q57's contam/linear rows are exactly q38's contam/cleaned rows") {
+    // both score their variants through one week-lag evaluation over the
+    // same injected series and the same linear repair, so the shared
+    // variants must agree bit for bit (n, mae and rmse)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("series", "variant", "n", "mae", "rmse").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
+        .sortBy(r => (r._1, r._2)).toSeq
+    val q38 = rows(Forecast.cleaningImpact(spark, Sf01)
+      .withColumn("variant", when(col("variant") === "cleaned", "linear").otherwise(col("variant"))))
+    val q57 = rows(Forecast.learnedCleaningImpact(spark, Sf01)
+      .filter(col("variant") =!= "learned"))
+    assert(q38.nonEmpty && q38.map(_._2).toSet === Set("contam", "linear"))
+    assert(q57 === q38)
+  }
+
   test("q59: decompose-then-forecast beats the direct seasonal-naive corpus-wide") {
     // the SCINet_decompose rationale: forecasting components separately
     // drops the week-old residual noise the direct y(t-168) predictor
