@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.analytics.Relational
 import graft.timeseries.{TsOracle, TsQueries}
+import graft.util.Num.{meanQ4sql, q4sql, r4sql, sumQ4sql}
 
 /** Driver contract — see SURVEY.md §2 for the inventory. Every
   * implemented operator registers ONE `ops` entry: its builder and its
@@ -98,8 +99,8 @@ object SparkEntry {
     * re-points qa2's star join at the skewed committed facts).
     */
   private val Qa2Sql =
-    """SELECT r_name, n_name,
-       floor((sum(CAST(floor((l_extendedprice * (1.0 - l_discount))*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS revenue,
+    s"""SELECT r_name, n_name,
+       ${r4sql(sumQ4sql("l_extendedprice * (1.0 - l_discount)"))} AS revenue,
        count(*) AS n_items
        FROM lineitem
        JOIN orders   ON l_orderkey = o_orderkey
@@ -108,7 +109,7 @@ object SparkEntry {
        JOIN region   ON n_regionkey = r_regionkey
        GROUP BY r_name, n_name"""
 
-  private val Qp5Sql = """
+  private val Qp5Sql = s"""
       WITH ev AS (
         SELECT user_id FROM events
       ), counts AS (
@@ -117,8 +118,8 @@ object SparkEntry {
         SELECT CAST(sum(cnt) AS BIGINT) AS total, count(*) AS n_keys FROM counts
       )
       SELECT user_id, cnt,
-             floor((cnt * 1.0 / total)*10000 + 0.5)/10000 AS pct,
-             floor((cnt * 1.0 * n_keys / total)*10000 + 0.5)/10000 AS skew
+             ${r4sql("cnt * 1.0 / total")} AS pct,
+             ${r4sql("cnt * 1.0 * n_keys / total")} AS skew
       FROM (SELECT * FROM counts ORDER BY cnt DESC, user_id LIMIT 10), totals"""
 
   private val Qe15Sql = """
@@ -175,7 +176,7 @@ object SparkEntry {
       SELECT type_a, type_b, n_a, n_b, n_both,
              n_a + n_b - n_both AS n_either,
              CASE WHEN n_a + n_b - n_both <> 0
-                  THEN floor(CAST(n_both AS DOUBLE) / (n_a + n_b - n_both) * 10000 + 0.5) / 10000
+                  THEN ${r4sql("CAST(n_both AS DOUBLE) / (n_a + n_b - n_both)")}
              END AS jaccard
       FROM prs"""
   }
@@ -196,23 +197,23 @@ object SparkEntry {
   // so an entry that reads a later val would capture null
   val ops: Map[String, Op] = Map(
     "qa1_pricing_summary" -> Op((s, d) => Relational.pricingSummary(s, d), Sql(
-      """SELECT l_returnflag, l_linestatus,
-         floor((sum(CAST(floor((l_quantity)*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS sum_qty,
-         floor((sum(CAST(floor((l_extendedprice)*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS sum_base_price,
-         floor((sum(CAST(floor((l_extendedprice * (1.0 - l_discount))*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS sum_disc_price,
-         floor((sum(CAST(floor((l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax))*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS sum_charge,
-         floor((sum(CAST(floor((l_quantity)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))*10000 + 0.5)/10000 AS avg_qty,
-         floor((sum(CAST(floor((l_extendedprice)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))*10000 + 0.5)/10000 AS avg_price,
-         floor((sum(CAST(floor((l_discount)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))*10000 + 0.5)/10000 AS avg_disc,
+      s"""SELECT l_returnflag, l_linestatus,
+         ${r4sql(sumQ4sql("l_quantity"))} AS sum_qty,
+         ${r4sql(sumQ4sql("l_extendedprice"))} AS sum_base_price,
+         ${r4sql(sumQ4sql("l_extendedprice * (1.0 - l_discount)"))} AS sum_disc_price,
+         ${r4sql(sumQ4sql("l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)"))} AS sum_charge,
+         ${r4sql(s"${sumQ4sql("l_quantity")} / count(*)")} AS avg_qty,
+         ${r4sql(s"${sumQ4sql("l_extendedprice")} / count(*)")} AS avg_price,
+         ${r4sql(s"${sumQ4sql("l_discount")} / count(*)")} AS avg_disc,
          count(*) AS count_order
          FROM lineitem GROUP BY l_returnflag, l_linestatus""")),
     "qa2_revenue_join" -> Op((s, d) => Relational.revenueByNation(s, d), Sql(Qa2Sql)),
     "qa3_top_n" -> Op((s, d) => Relational.topCustomersPerSegment(s, d), Sql(
-      """SELECT c_mktsegment, rnk, c_custkey, c_name, total_spend FROM (
+      s"""SELECT c_mktsegment, rnk, c_custkey, c_name, total_spend FROM (
            SELECT c_mktsegment, c_custkey, c_name,
-                  floor((sum(CAST(floor((o_totalprice)*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS total_spend,
+                  ${r4sql(sumQ4sql("o_totalprice"))} AS total_spend,
                   row_number() OVER (PARTITION BY c_mktsegment
-                                     ORDER BY floor((sum(CAST(floor((o_totalprice)*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 DESC, c_custkey) AS rnk
+                                     ORDER BY ${r4sql(sumQ4sql("o_totalprice"))} DESC, c_custkey) AS rnk
            FROM orders JOIN customer ON o_custkey = c_custkey
            GROUP BY c_mktsegment, c_custkey, c_name
          ) WHERE rnk <= 3""")),
@@ -277,9 +278,9 @@ object SparkEntry {
     "q28_window_labels" -> Op((s, d) => TsQueries.q28WindowLabels(s, d), Sql(TsOracle.q28)),
     "q29_highest_patch" -> Op((s, d) => graft.timeseries.Postprocess.highestPatchFlags(s, d),
       Sql(TsOracle.q29())),
-    "qa4_rollup" -> Op((s, d) => Relational.revenueRollup(s, d), Sql("""
+    "qa4_rollup" -> Op((s, d) => Relational.revenueRollup(s, d), Sql(s"""
       SELECT coalesce(l_returnflag, 'ALL') AS rf, coalesce(l_linestatus, 'ALL') AS ls,
-             floor((sum(CAST(floor((l_extendedprice * (1.0 - l_discount))*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS revenue,
+             ${r4sql(sumQ4sql("l_extendedprice * (1.0 - l_discount)"))} AS revenue,
              count(*) AS n
       FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""")),
     "qa5_semi_join" -> Op((s, d) => Relational.bigSpenderSegments(s, d), Sql("""
@@ -288,21 +289,21 @@ object SparkEntry {
       WHERE EXISTS (SELECT 1 FROM orders
                     WHERE o_custkey = c_custkey AND o_totalprice > 100000.0)
       GROUP BY c_mktsegment""")),
-    "qa6_running_window" -> Op((s, d) => Relational.runningRevenue(s, d), Sql("""
+    "qa6_running_window" -> Op((s, d) => Relational.runningRevenue(s, d), Sql(s"""
       SELECT l_suppkey, l_orderkey, l_linenumber,
              CAST(floor(epoch(l_shipdate)) AS BIGINT) AS ship_epoch,
-             floor((sum(l_extendedprice * (1.0 - l_discount))
+             ${r4sql("""sum(l_extendedprice * (1.0 - l_discount))
                     OVER (PARTITION BY l_suppkey
                           ORDER BY l_shipdate, l_orderkey, l_linenumber,
                                    l_extendedprice, l_discount
-                          ROWS UNBOUNDED PRECEDING))*10000 + 0.5)/10000 AS running_rev
+                          ROWS UNBOUNDED PRECEDING)""")} AS running_rev
       FROM lineitem""")),
-    "qt5_json_extract" -> Op((s, d) => graft.text.TextOps.jsonExtract(s, d), Sql("""
+    "qt5_json_extract" -> Op((s, d) => graft.text.TextOps.jsonExtract(s, d), Sql(s"""
       SELECT event_type, count(k) AS n,
-             floor((avg(k))*10000 + 0.5)/10000 AS avg_k,
+             ${r4sql("avg(k)")} AS avg_k,
              min(k) AS min_k, max(k) AS max_k
       FROM (SELECT event_type,
-                   CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
+                   CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
             FROM events)
       GROUP BY event_type""")),
     "qt6_top_bigrams" -> Op((s, d) => graft.text.TextOps.topBigrams(s, d), Sql("""
@@ -347,27 +348,27 @@ object SparkEntry {
       UNION ALL SELECT 2, 'view', (SELECT count(*) FROM s2)
       UNION ALL SELECT 3, 'click', (SELECT count(*) FROM s3)
       UNION ALL SELECT 4, 'purchase', (SELECT count(*) FROM s4)""")),
-    "qp1_profile" -> Op((s, d) => graft.analytics.Events.profile(s, d), Sql(("""
+    "qp1_profile" -> Op((s, d) => graft.analytics.Events.profile(s, d), Sql((s"""
       SELECT 'l_quantity' AS column_name,
              CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
              count(DISTINCT l_quantity) AS n_distinct,
-             floor((min(l_quantity))*10000 + 0.5)/10000 AS min_v,
-             floor((max(l_quantity))*10000 + 0.5)/10000 AS max_v FROM lineitem
+             ${r4sql("min(l_quantity)")} AS min_v,
+             ${r4sql("max(l_quantity)")} AS max_v FROM lineitem
       UNION ALL SELECT 'l_extendedprice',
              CAST(sum(CASE WHEN l_extendedprice IS NULL THEN 1 ELSE 0 END) AS BIGINT),
              count(DISTINCT l_extendedprice),
-             floor((min(l_extendedprice))*10000 + 0.5)/10000,
-             floor((max(l_extendedprice))*10000 + 0.5)/10000 FROM lineitem
+             ${r4sql("min(l_extendedprice)")},
+             ${r4sql("max(l_extendedprice)")} FROM lineitem
       UNION ALL SELECT 'l_discount',
              CAST(sum(CASE WHEN l_discount IS NULL THEN 1 ELSE 0 END) AS BIGINT),
              count(DISTINCT l_discount),
-             floor((min(l_discount))*10000 + 0.5)/10000,
-             floor((max(l_discount))*10000 + 0.5)/10000 FROM lineitem
+             ${r4sql("min(l_discount)")},
+             ${r4sql("max(l_discount)")} FROM lineitem
       UNION ALL SELECT 'l_tax',
              CAST(sum(CASE WHEN l_tax IS NULL THEN 1 ELSE 0 END) AS BIGINT),
              count(DISTINCT l_tax),
-             floor((min(l_tax))*10000 + 0.5)/10000,
-             floor((max(l_tax))*10000 + 0.5)/10000 FROM lineitem"""))),
+             ${r4sql("min(l_tax)")},
+             ${r4sql("max(l_tax)")} FROM lineitem"""))),
     "qe3_retention" -> Op((s, d) => graft.analytics.Events.retention(s, d), Sql("""
       WITH ev AS (
         SELECT user_id,
@@ -378,7 +379,7 @@ object SparkEntry {
              count(DISTINCT e.user_id) AS n_users
       FROM ev e JOIN coh c USING (user_id)
       GROUP BY c.cohort_week, e.week - c.cohort_week""")),
-    "qe4_asof_join" -> Op((s, d) => graft.analytics.Events.asofJoin(s, d), Sql("""
+    "qe4_asof_join" -> Op((s, d) => graft.analytics.Events.asofJoin(s, d), Sql(s"""
       WITH ev AS (
         SELECT event_id, user_id, event_type,
                CAST(floor(epoch(ts)) AS BIGINT) AS tsec, value FROM events
@@ -392,7 +393,7 @@ object SparkEntry {
       ), a AS (SELECT user_id, event_id, tsec FROM ev WHERE event_type = 'purchase')
       SELECT a.user_id, a.event_id, a.tsec, b.view_event_id, b.view_tsec,
              a.tsec - b.view_tsec AS gap_s,
-             floor((b.view_value)*10000 + 0.5)/10000 AS view_value
+             ${r4sql("b.view_value")} AS view_value
       FROM a ASOF LEFT JOIN b ON a.user_id = b.user_id AND a.tsec > b.view_tsec""")),
     "qp2_approx_distinct" -> Op((s, d) => graft.analytics.Events.approxDistinct(s, d), Sql("""
       SELECT 'l_partkey' AS column_name, count(DISTINCT l_partkey) AS n_exact,
@@ -400,13 +401,13 @@ object SparkEntry {
       UNION ALL SELECT 'l_suppkey', count(DISTINCT l_suppkey), 1 FROM lineitem
       UNION ALL SELECT 'l_quantity', count(DISTINCT l_quantity), 1 FROM lineitem
       UNION ALL SELECT 'l_extendedprice', count(DISTINCT l_extendedprice), 1 FROM lineitem""")),
-    "qa8_latest_row" -> Op((s, d) => Relational.latestRow(s, d), Sql("""
+    "qa8_latest_row" -> Op((s, d) => Relational.latestRow(s, d), Sql(s"""
       WITH ev AS (
         SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS tsec,
                event_type, value FROM events
       )
       SELECT user_id, event_id, tsec, event_type,
-             floor((value)*10000 + 0.5)/10000 AS value
+             ${r4sql("value")} AS value
       FROM (SELECT *, row_number() OVER (PARTITION BY user_id
                                          ORDER BY tsec DESC, event_id DESC) AS rn FROM ev)
       WHERE rn = 1""")),
@@ -415,25 +416,25 @@ object SparkEntry {
     "q33_level_shift" -> Op((s, d) => graft.timeseries.Intervals.levelShift(s, d), Sql(TsOracle.q33())),
     "q34_mad_outliers" -> Op((s, d) => graft.timeseries.Intervals.madOutliers(s, d), Sql(TsOracle.q34())),
     "qt7_tfidf" -> Op((s, d) => graft.text.TextOps.tfidf(s, d), Sql(graft.text.DocOracle.qt7())),
-    "qa9_cube" -> Op((s, d) => Relational.revenueCube(s, d), Sql("""
+    "qa9_cube" -> Op((s, d) => Relational.revenueCube(s, d), Sql(s"""
       SELECT coalesce(l_returnflag, 'ALL') AS rf, coalesce(l_linestatus, 'ALL') AS ls,
-             floor((sum(CAST(floor((l_extendedprice * (1.0 - l_discount))*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS revenue,
+             ${r4sql(sumQ4sql("l_extendedprice * (1.0 - l_discount)"))} AS revenue,
              count(*) AS n
       FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""")),
-    "qp3_approx_quantile" -> Op((s, d) => graft.analytics.Events.approxQuantiles(s, d), Sql("""
+    "qp3_approx_quantile" -> Op((s, d) => graft.analytics.Events.approxQuantiles(s, d), Sql(s"""
       SELECT 'l_quantity' AS column_name, CAST(0.25 AS DOUBLE) AS q,
-             floor((quantile_cont(l_quantity, 0.25))*10000 + 0.5)/10000 AS exact_q,
+             ${r4sql("quantile_cont(l_quantity, 0.25)")} AS exact_q,
              CAST(1 AS INT) AS approx_ok FROM lineitem
       UNION ALL SELECT 'l_quantity', CAST(0.5 AS DOUBLE),
-             floor((quantile_cont(l_quantity, 0.5))*10000 + 0.5)/10000, 1 FROM lineitem
+             ${r4sql("quantile_cont(l_quantity, 0.5)")}, 1 FROM lineitem
       UNION ALL SELECT 'l_quantity', CAST(0.75 AS DOUBLE),
-             floor((quantile_cont(l_quantity, 0.75))*10000 + 0.5)/10000, 1 FROM lineitem
+             ${r4sql("quantile_cont(l_quantity, 0.75)")}, 1 FROM lineitem
       UNION ALL SELECT 'l_extendedprice', CAST(0.25 AS DOUBLE),
-             floor((quantile_cont(l_extendedprice, 0.25))*10000 + 0.5)/10000, 1 FROM lineitem
+             ${r4sql("quantile_cont(l_extendedprice, 0.25)")}, 1 FROM lineitem
       UNION ALL SELECT 'l_extendedprice', CAST(0.5 AS DOUBLE),
-             floor((quantile_cont(l_extendedprice, 0.5))*10000 + 0.5)/10000, 1 FROM lineitem
+             ${r4sql("quantile_cont(l_extendedprice, 0.5)")}, 1 FROM lineitem
       UNION ALL SELECT 'l_extendedprice', CAST(0.75 AS DOUBLE),
-             floor((quantile_cont(l_extendedprice, 0.75))*10000 + 0.5)/10000, 1 FROM lineitem""")),
+             ${r4sql("quantile_cont(l_extendedprice, 0.75)")}, 1 FROM lineitem""")),
     "qd7_dedup_stats" -> Op((s, d) => graft.text.Dedup.dupStats(s, d), Sql(graft.text.DocOracle.qd7())),
     "q35_horizon_backtest" -> Op((s, d) => graft.timeseries.Forecast.horizonBacktest(s, d),
       Sql(TsOracle.q35())),
@@ -475,15 +476,15 @@ object SparkEntry {
              count(*) FILTER (WHERE slot = 4) AS h4,
              count(*) FILTER (WHERE slot = 5) AS h5
       FROM ev GROUP BY event_type""")),
-    "qp4_group_quantiles" -> Op((s, d) => graft.analytics.Events.groupQuantiles(s, d), Sql("""
+    "qp4_group_quantiles" -> Op((s, d) => graft.analytics.Events.groupQuantiles(s, d), Sql(s"""
       SELECT event_type, CAST(0.25 AS DOUBLE) AS q,
-             floor((quantile_cont(value, 0.25))*10000 + 0.5)/10000 AS v FROM events GROUP BY event_type
+             ${r4sql("quantile_cont(value, 0.25)")} AS v FROM events GROUP BY event_type
       UNION ALL SELECT event_type, CAST(0.5 AS DOUBLE),
-             floor((quantile_cont(value, 0.5))*10000 + 0.5)/10000 FROM events GROUP BY event_type
+             ${r4sql("quantile_cont(value, 0.5)")} FROM events GROUP BY event_type
       UNION ALL SELECT event_type, CAST(0.75 AS DOUBLE),
-             floor((quantile_cont(value, 0.75))*10000 + 0.5)/10000 FROM events GROUP BY event_type
+             ${r4sql("quantile_cont(value, 0.75)")} FROM events GROUP BY event_type
       UNION ALL SELECT event_type, CAST(0.95 AS DOUBLE),
-             floor((quantile_cont(value, 0.95))*10000 + 0.5)/10000 FROM events GROUP BY event_type""")),
+             ${r4sql("quantile_cont(value, 0.95)")} FROM events GROUP BY event_type""")),
     "q36_xcorr" -> Op((s, d) => graft.timeseries.Intervals.crossCorr(s, d), Sql(TsOracle.q36())),
     "q37_seasonal_residual" -> Op((s, d) => graft.timeseries.Intervals.seasonalResidual(s, d),
       Sql(TsOracle.q37())),
@@ -665,27 +666,27 @@ object SparkEntry {
       Sql(graft.text.DocOracle.qt10())),
     "qd10_bloom_dedup" -> Op((s, d) => graft.text.Dedup.bloomIncrementalDedup(s, d),
       Sql(graft.text.DocOracle.qd10)),
-    "qa14_incremental_agg" -> Op((s, d) => Relational.incrementalAgg(s, d), Sql("""
+    "qa14_incremental_agg" -> Op((s, d) => Relational.incrementalAgg(s, d), Sql(s"""
       SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-             sum(CAST(floor((l_quantity)*10000 + 0.5) AS BIGINT)) / 10000.0 AS sum_qty,
-             sum(CAST(floor((l_extendedprice*(1-l_discount))*10000 + 0.5) AS BIGINT)) / 10000.0 AS revenue,
-             floor((sum(CAST(floor((l_quantity)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*))*10000 + 0.5)/10000 AS avg_qty
+             ${sumQ4sql("l_quantity")} AS sum_qty,
+             ${sumQ4sql("l_extendedprice*(1-l_discount)")} AS revenue,
+             ${r4sql(s"${sumQ4sql("l_quantity")} / count(*)")} AS avg_qty
       FROM lineitem GROUP BY l_returnflag, l_linestatus""")),
     "qa15_zorder" -> Op((s, d) => Relational.zorderLayout(s, d), Sql(Relational.zorderOracle())),
-    "qa16_merge_upsert" -> Op((s, d) => Relational.mergeUpsert(s, d), Sql("""
+    "qa16_merge_upsert" -> Op((s, d) => Relational.mergeUpsert(s, d), Sql(s"""
       WITH base AS (
         SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
         FROM orders WHERE o_orderkey % 7 != 0
       ), delta AS (
         SELECT o_orderkey AS d_orderkey, o_custkey AS d_custkey,
                CASE WHEN o_orderkey % 9 = 0 THEN 'D' ELSE 'U' END AS op,
-               floor(o_totalprice*1.05*10000 + 0.5)/10000 AS d_price
+               ${r4sql("o_totalprice*1.05")} AS d_price
         FROM orders WHERE o_orderkey % 3 = 0
       )
       SELECT coalesce(o_orderkey, d_orderkey) AS orderkey,
              coalesce(o_custkey, d_custkey) AS custkey,
              CASE WHEN op = 'U' THEN d_price
-                  ELSE floor(o_totalprice*10000 + 0.5)/10000 END AS price,
+                  ELSE ${r4sql("o_totalprice")} END AS price,
              CASE WHEN op = 'U' THEN 'R' ELSE o_orderstatus END AS status,
              CASE WHEN o_orderkey IS NULL THEN 'insert'
                   WHEN op = 'U' THEN 'update' ELSE 'keep' END AS action
@@ -772,7 +773,7 @@ object SparkEntry {
       Sql(graft.text.DocOracle.qt25(rounds = 64))),
     "qt29_bpe_encode64" -> Op((s, d) => graft.text.TextOps.bpeEncodeLocal(s, d),
       Sql(graft.text.DocOracle.qt26(rounds = 64))),
-    "qc4_budget_plan" -> Op((s, d) => graft.text.TextOps.budgetPlan(s, d), Sql("""
+    "qc4_budget_plan" -> Op((s, d) => graft.text.TextOps.budgetPlan(s, d), Sql(s"""
       WITH tk AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
       ), nt AS (
@@ -796,11 +797,11 @@ object SparkEntry {
                           CAST(CAST(floor(tot / 2.0) AS BIGINT) AS DOUBLE)) AS BIGINT) AS target_toks
         FROM sh, z
       )
-      SELECT source, floor(w_raw * 10000 + 0.5)/10000 AS w_mix,
+      SELECT source, ${r4sql("w_raw")} AS w_mix,
              target_toks, n_tok AS avail_toks,
              least(n_tok, target_toks) AS alloc_toks,
              CASE WHEN target_toks > 0 THEN
-               floor((least(n_tok, target_toks) * 1.0 / target_toks)*10000 + 0.5)/10000
+               ${r4sql("least(n_tok, target_toks) * 1.0 / target_toks")}
              END AS fill,
              CASE WHEN least(n_tok, target_toks) < target_toks THEN 1 ELSE 0 END AS binding
       FROM plan4""")),
@@ -835,7 +836,7 @@ object SparkEntry {
       SELECT path, n_users FROM c ORDER BY n_users DESC, path LIMIT 10""")),
     "qp5_skew_profile" -> Op((s, d) => graft.analytics.Events.skewProfile(s, d), Sql(Qp5Sql)),
     "qt11_pack_shards" -> Op((s, d) => graft.text.TextOps.packShards(s, d), Sql(graft.text.DocOracle.qt11())),
-    "qe6_transitions" -> Op((s, d) => graft.analytics.Events.transitions(s, d), Sql("""
+    "qe6_transitions" -> Op((s, d) => graft.analytics.Events.transitions(s, d), Sql(s"""
       WITH ev AS (
         SELECT event_id, user_id, event_type,
                CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events
@@ -847,9 +848,9 @@ object SparkEntry {
         SELECT src, dst, count(*) AS n FROM st WHERE dst IS NOT NULL GROUP BY src, dst
       )
       SELECT src, dst, n,
-             floor((n * 1.0 / sum(n) OVER (PARTITION BY src))*10000 + 0.5)/10000 AS p
+             ${r4sql("n * 1.0 / sum(n) OVER (PARTITION BY src)")} AS p
       FROM cnt""")),
-    "qe16_next_event" -> Op((s, d) => graft.analytics.Events.nextEventEval(s, d), Sql("""
+    "qe16_next_event" -> Op((s, d) => graft.analytics.Events.nextEventEval(s, d), Sql(s"""
       WITH ev AS (
         SELECT event_id, user_id, event_type,
                CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events
@@ -872,11 +873,11 @@ object SparkEntry {
       )
       SELECT s.src, m.pred_dst, count(*) AS n_test,
              CAST(sum(CASE WHEN s.dst = m.pred_dst THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
-             floor((CAST(sum(CASE WHEN s.dst = m.pred_dst THEN 1 ELSE 0 END) AS BIGINT) * 1.0 / count(*))*10000 + 0.5)/10000 AS acc
+             ${r4sql("CAST(sum(CASE WHEN s.dst = m.pred_dst THEN 1 ELSE 0 END) AS BIGINT) * 1.0 / count(*)")} AS acc
       FROM st s CROSS JOIN rng LEFT JOIN model m USING (src)
       WHERE s.dtsec >= rng.tcut
       GROUP BY s.src, m.pred_dst""")),
-    "qe17_cuped" -> Op((s, d) => graft.analytics.Events.cuped(s, d), Sql("""
+    "qe17_cuped" -> Op((s, d) => graft.analytics.Events.cuped(s, d), Sql(s"""
       WITH ev AS (
         SELECT user_id, event_type,
                CAST(floor(epoch(ts)) AS BIGINT) AS tsec, value FROM events
@@ -884,19 +885,19 @@ object SparkEntry {
         SELECT CAST(floor((min(tsec) + max(tsec)) / 2.0) AS BIGINT) AS tmid FROM ev
       ), u AS (
         SELECT event_type, user_id, user_id % 2 AS arm,
-          sum(CASE WHEN tsec < b.tmid THEN CAST(floor(value*10000 + 0.5) AS BIGINT) ELSE 0 END) AS xq,
-          sum(CASE WHEN tsec >= b.tmid THEN CAST(floor(value*10000 + 0.5) AS BIGINT) ELSE 0 END) AS yq
+          sum(CASE WHEN tsec < b.tmid THEN ${q4sql("value")} ELSE 0 END) AS xq,
+          sum(CASE WHEN tsec >= b.tmid THEN ${q4sql("value")} ELSE 0 END) AS yq
         FROM ev, b GROUP BY event_type, user_id
       ), m AS (
         SELECT event_type, count(*) AS n,
-               sum(xq) / 10000.0 / count(*) AS mx,
-               sum(yq) / 10000.0 / count(*) AS my
+               ${meanQ4sql("sum(xq)", "count(*)")} AS mx,
+               ${meanQ4sql("sum(yq)", "count(*)")} AS my
         FROM u GROUP BY event_type
       ), s AS (
         SELECT u.event_type, max(m.n) AS n,
-          sum(CAST(floor((u.xq/10000.0 - m.mx)*(u.xq/10000.0 - m.mx)*10000 + 0.5) AS BIGINT)) AS sxx,
-          sum(CAST(floor((u.xq/10000.0 - m.mx)*(u.yq/10000.0 - m.my)*10000 + 0.5) AS BIGINT)) AS sxy,
-          sum(CAST(floor((u.yq/10000.0 - m.my)*(u.yq/10000.0 - m.my)*10000 + 0.5) AS BIGINT)) AS syy,
+          sum(${q4sql("(u.xq/10000.0 - m.mx)*(u.xq/10000.0 - m.mx)")}) AS sxx,
+          sum(${q4sql("(u.xq/10000.0 - m.mx)*(u.yq/10000.0 - m.my)")}) AS sxy,
+          sum(${q4sql("(u.yq/10000.0 - m.my)*(u.yq/10000.0 - m.my)")}) AS syy,
           sum(CASE WHEN u.arm = 1 THEN 1 ELSE 0 END) AS n1,
           sum(CASE WHEN u.arm = 0 THEN u.xq ELSE 0 END) AS x0q,
           sum(CASE WHEN u.arm = 1 THEN u.xq ELSE 0 END) AS x1q,
@@ -905,17 +906,17 @@ object SparkEntry {
         FROM u JOIN m USING (event_type) GROUP BY u.event_type
       )
       SELECT event_type, CAST(n AS BIGINT) AS n, CAST(n1 AS BIGINT) AS n1,
-        floor((y1q/10000.0/n1 - y0q/10000.0/(n - n1))*10000 + 0.5)/10000 AS effect_raw,
-        floor(((y1q/10000.0/n1 - y0q/10000.0/(n - n1)) -
+        ${r4sql("y1q/10000.0/n1 - y0q/10000.0/(n - n1)")} AS effect_raw,
+        ${r4sql("""(y1q/10000.0/n1 - y0q/10000.0/(n - n1)) -
                (CASE WHEN sxx > 0 THEN sxy / CAST(sxx AS DOUBLE) END) *
-               (x1q/10000.0/n1 - x0q/10000.0/(n - n1)))*10000 + 0.5)/10000 AS effect_cuped,
-        floor((CASE WHEN sxx > 0 THEN sxy / CAST(sxx AS DOUBLE) END)*10000 + 0.5)/10000 AS theta,
+               (x1q/10000.0/n1 - x0q/10000.0/(n - n1))""")} AS effect_cuped,
+        ${r4sql("CASE WHEN sxx > 0 THEN sxy / CAST(sxx AS DOUBLE) END")} AS theta,
         CASE WHEN sxx > 0 AND syy > 0 THEN
-          floor((least(CAST(1 AS DOUBLE), CAST(sxy AS DOUBLE) * CAST(sxy AS DOUBLE) /
-                 (CAST(sxx AS DOUBLE) * CAST(syy AS DOUBLE))))*10000 + 0.5)/10000
+          ${r4sql("""least(CAST(1 AS DOUBLE), CAST(sxy AS DOUBLE) * CAST(sxy AS DOUBLE) /
+                 (CAST(sxx AS DOUBLE) * CAST(syy AS DOUBLE)))""")}
         END AS var_reduction
       FROM s WHERE n1 > 0 AND n - n1 > 0""")),
-    "qp11_expectations" -> Op((s, d) => graft.analytics.Events.expectations(s, d), Sql("""
+    "qp11_expectations" -> Op((s, d) => graft.analytics.Events.expectations(s, d), Sql(s"""
       WITH r AS (
         SELECT count(*) AS n,
           sum(CASE WHEN l_returnflag IS NOT NULL THEN 1 ELSE 0 END) AS c1,
@@ -937,15 +938,15 @@ object SparkEntry {
         FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o
         ON l.l_orderkey = o.o_orderkey
       ), allc AS (
-        SELECT 'complete_returnflag' AS check_name, floor((c1 * 1.0 / n)*10000 + 0.5)/10000 AS metric, 1.0 AS threshold FROM r
-        UNION ALL SELECT 'nonnegative_quantity', floor((c2 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
-        UNION ALL SELECT 'range_discount', floor((c3 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
-        UNION ALL SELECT 'members_returnflag', floor((c4 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
-        UNION ALL SELECT 'positive_price', floor((c5 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
-        UNION ALL SELECT 'quantity_le_40', floor((c6 * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM r
-        UNION ALL SELECT 'mostly_quantity_le_45', floor((c7 * 1.0 / n)*10000 + 0.5)/10000, 0.85 FROM r
-        UNION ALL SELECT 'unique_pk', floor((d * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM u
-        UNION ALL SELECT 'ref_orders', floor((h * 1.0 / n)*10000 + 0.5)/10000, 1.0 FROM f
+        SELECT 'complete_returnflag' AS check_name, ${r4sql("c1 * 1.0 / n")} AS metric, 1.0 AS threshold FROM r
+        UNION ALL SELECT 'nonnegative_quantity', ${r4sql("c2 * 1.0 / n")}, 1.0 FROM r
+        UNION ALL SELECT 'range_discount', ${r4sql("c3 * 1.0 / n")}, 1.0 FROM r
+        UNION ALL SELECT 'members_returnflag', ${r4sql("c4 * 1.0 / n")}, 1.0 FROM r
+        UNION ALL SELECT 'positive_price', ${r4sql("c5 * 1.0 / n")}, 1.0 FROM r
+        UNION ALL SELECT 'quantity_le_40', ${r4sql("c6 * 1.0 / n")}, 1.0 FROM r
+        UNION ALL SELECT 'mostly_quantity_le_45', ${r4sql("c7 * 1.0 / n")}, 0.85 FROM r
+        UNION ALL SELECT 'unique_pk', ${r4sql("d * 1.0 / n")}, 1.0 FROM u
+        UNION ALL SELECT 'ref_orders', ${r4sql("h * 1.0 / n")}, 1.0 FROM f
       )
       SELECT check_name, metric, threshold,
              CASE WHEN metric >= threshold THEN 1 ELSE 0 END AS passed
@@ -974,11 +975,11 @@ object SparkEntry {
       val sc = colScales.toMap
       val pairs = cols.combinations(2).map { case Seq(a, b) => (a, b) }.toSeq
       def ctr(c: String) = s"((l.$c - m.m_$c) * ${sc(c)})"
-      def cq(e: String) = s"sum(CAST(floor(($e)*10000 + 0.5) AS BIGINT))"
+      def cq(e: String) = s"sum(${q4sql(e)})"
       s"""
       WITH m AS (
         SELECT count(*) AS n,
-          ${cols.map(c => s"sum(CAST(floor($c*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*) AS m_$c").mkString(",\n          ")}
+          ${cols.map(c => s"${sumQ4sql(c)} / count(*) AS m_$c").mkString(",\n          ")}
         FROM lineitem
       ), s AS (
         SELECT max(m.n) AS n,
@@ -989,7 +990,7 @@ object SparkEntry {
       ${pairs.map { case (a, b) =>
         s"""SELECT '$a' AS col_a, '$b' AS col_b, CAST(n AS BIGINT) AS n,
           CASE WHEN s_$a > 0 AND s_$b > 0 THEN
-            floor((s_${a}_$b / sqrt(CAST(s_$a AS DOUBLE) * CAST(s_$b AS DOUBLE)))*10000 + 0.5)/10000
+            ${r4sql(s"s_${a}_$b / sqrt(CAST(s_$a AS DOUBLE) * CAST(s_$b AS DOUBLE))")}
           END AS corr FROM s"""
       }.mkString("\n      UNION ALL ")}"""
     })),
@@ -999,7 +1000,7 @@ object SparkEntry {
       s"""
       WITH o AS (
         SELECT o_custkey, CAST(o_orderdate AS DATE) AS od,
-               CAST(floor(o_totalprice*10000 + 0.5) AS BIGINT) AS price_q4
+               ${q4sql("o_totalprice")} AS price_q4
         FROM orders
       ), mx AS (SELECT max(od) AS md FROM o),
       per AS (
@@ -1013,7 +1014,7 @@ object SparkEntry {
         FROM per
       ), scored AS (
         SELECT o_custkey, recency_d, frequency,
-          floor((mon_q4/10000.0)*10000 + 0.5)/10000 AS monetary,
+          ${r4sql("mon_q4/10000.0")} AS monetary,
           6 - (1 + ${bkt("recency_d", "rb")}) AS r_score,
           1 + ${bkt("frequency", "fb")} AS f_score,
           1 + ${bkt("mon_q4", "mb")} AS m_score
@@ -1023,7 +1024,7 @@ object SparkEntry {
              r_score*100 + f_score*10 + m_score AS rfm
       FROM scored"""
     })),
-    "qe10_attribution" -> Op((s, d) => graft.analytics.Events.attribution(s, d), Sql("""
+    "qe10_attribution" -> Op((s, d) => graft.analytics.Events.attribution(s, d), Sql(s"""
       WITH ev AS (
         SELECT event_id, user_id, event_type,
                CAST(floor(epoch(ts)) AS BIGINT) AS tsec, value FROM events
@@ -1045,8 +1046,8 @@ object SparkEntry {
         FROM j
       )
       SELECT channel, count(*) AS n_conv,
-             floor((sum(CAST(floor(value*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS revenue,
-             floor((CAST(sum(gap_s) AS DOUBLE) / count(*))*10000 + 0.5)/10000 AS avg_gap_s
+             ${r4sql(sumQ4sql("value"))} AS revenue,
+             ${r4sql("CAST(sum(gap_s) AS DOUBLE) / count(*)")} AS avg_gap_s
       FROM c GROUP BY 1""")),
     "qt16_char_entropy" -> Op((s, d) => graft.text.TextOps.charEntropy(s, d),
       Sql(graft.text.DocOracle.qt16())),
@@ -1071,7 +1072,7 @@ object SparkEntry {
              CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
              min(doc_id) AS first_doc, max(doc_id) AS last_doc
       FROM c GROUP BY 1, 2""")),
-    "qm5_modality_stats" -> Op((s, d) => graft.multimodal.BinaryMeta.modalityStats(s, d), Sql("""
+    "qm5_modality_stats" -> Op((s, d) => graft.multimodal.BinaryMeta.modalityStats(s, d), Sql(s"""
       WITH m AS (
         SELECT 'text/' || lang AS media_type, text,
                CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
@@ -1079,14 +1080,14 @@ object SparkEntry {
       ), s AS (
         SELECT media_type, CAST(count(*) AS BIGINT) AS n_items,
                CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
-               floor(avg(n_bytes)*10000 + 0.5)/10000 AS mean_bytes,
+               ${r4sql("avg(n_bytes)")} AS mean_bytes,
                CAST(count(DISTINCT text) AS BIGINT) AS n_distinct
         FROM m GROUP BY 1
       )
       SELECT media_type, n_items, total_bytes, mean_bytes, n_distinct,
-             floor(CAST(n_items - n_distinct AS DOUBLE) / n_items * 10000 + 0.5)/10000 AS dup_rate
+             ${r4sql("CAST(n_items - n_distinct AS DOUBLE) / n_items")} AS dup_rate
       FROM s""")),
-    "qm6_modal_coverage" -> Op((s, d) => graft.multimodal.BinaryMeta.modalCoverage(s, d), Sql("""
+    "qm6_modal_coverage" -> Op((s, d) => graft.multimodal.BinaryMeta.modalCoverage(s, d), Sql(s"""
       WITH m AS (
         SELECT doc_id, 'text/' || lang AS media_type,
                CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
@@ -1102,10 +1103,10 @@ object SparkEntry {
         CAST(sum(CASE WHEN n_bytes IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_missing_payload,
         CAST(sum(CASE WHEN dim IS NOT NULL AND dim <> 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_dim_mismatch,
         CAST(sum(CASE WHEN n_bytes IS NOT NULL AND dim = 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_complete,
-        floor(CAST(sum(CASE WHEN n_bytes IS NOT NULL AND dim = 64 THEN 1 ELSE 0 END) AS DOUBLE)
-              / count(*) * 10000 + 0.5)/10000 AS pct_complete
+        ${r4sql("""CAST(sum(CASE WHEN n_bytes IS NOT NULL AND dim = 64 THEN 1 ELSE 0 END) AS DOUBLE)
+              / count(*)""")} AS pct_complete
       FROM j GROUP BY 1""")),
-    "qt20_mix_weights" -> Op((s, d) => graft.text.TextOps.mixWeights(s, d), Sql("""
+    "qt20_mix_weights" -> Op((s, d) => graft.text.TextOps.mixWeights(s, d), Sql(s"""
       WITH tk AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
       ), nt AS (
@@ -1122,17 +1123,17 @@ object SparkEntry {
         FROM per, tot
       ), z AS (SELECT CAST(sum(pa_q) AS BIGINT) AS z FROM sh)
       SELECT source, n_docs, n_tok,
-             floor(p_nat * 10000 + 0.5)/10000 AS p_nat,
-             floor(CAST(pa_q AS DOUBLE) / z * 10000 + 0.5)/10000 AS w_mix,
+             ${r4sql("p_nat")} AS p_nat,
+             ${r4sql("CAST(pa_q AS DOUBLE) / z")} AS w_mix,
              CASE WHEN p_nat > 0
-                  THEN floor((CAST(pa_q AS DOUBLE) / z) / p_nat * 10000 + 0.5)/10000
+                  THEN ${r4sql("(CAST(pa_q AS DOUBLE) / z) / p_nat")}
              END AS oversample
       FROM sh, z""")),
     "qp9_histogram" -> Op((s, d) => graft.analytics.Events.histProfile(s, d), Sql({
       def sub(c: String) = s"""
       SELECT '$c' AS column_name, bin,
-             floor((mn + (mx - mn) * bin / 16)*10000 + 0.5)/10000 AS lo,
-             floor((mn + (mx - mn) * (bin + 1) / 16)*10000 + 0.5)/10000 AS hi,
+             ${r4sql("mn + (mx - mn) * bin / 16")} AS lo,
+             ${r4sql("mn + (mx - mn) * (bin + 1) / 16")} AS hi,
              count(*) AS n
       FROM (
         SELECT CASE WHEN mx = mn THEN 0
@@ -1143,9 +1144,9 @@ object SparkEntry {
       Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
         .map(sub).mkString("\n      UNION ALL\n")
     })),
-    "qa17_grouping_sets" -> Op((s, d) => Relational.groupingSets(s, d), Sql("""
+    "qa17_grouping_sets" -> Op((s, d) => Relational.groupingSets(s, d), Sql(s"""
       SELECT coalesce(l_returnflag, 'ALL') AS rf, coalesce(l_linestatus, 'ALL') AS ls,
-             floor((sum(CAST(floor((l_extendedprice * (1.0 - l_discount))*10000 + 0.5) AS BIGINT)) / 10000.0)*10000 + 0.5)/10000 AS revenue,
+             ${r4sql(sumQ4sql("l_extendedprice * (1.0 - l_discount)"))} AS revenue,
              count(*) AS n
       FROM lineitem
       GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())""")),
@@ -1153,7 +1154,7 @@ object SparkEntry {
       Sql(graft.text.DocOracle.qv9())),
     "q50_anomaly_mask" -> Op((s, d) => graft.timeseries.Postprocess.anomalyMask(s, d),
       Sql(graft.timeseries.TsOracle.q50())),
-    "qe11_cohort_ltv" -> Op((s, d) => graft.analytics.Events.cohortLtv(s, d), Sql("""
+    "qe11_cohort_ltv" -> Op((s, d) => graft.analytics.Events.cohortLtv(s, d), Sql(s"""
       WITH ev AS (
         SELECT user_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS tsec, value
         FROM events
@@ -1169,13 +1170,13 @@ object SparkEntry {
         FROM ev e JOIN firsts f USING (user_id) WHERE e.event_type = 'purchase'
       ), roll AS (
         SELECT cohort_week, age_weeks, count(DISTINCT user_id) AS n_active,
-               CAST(sum(CAST(floor(value*10000 + 0.5) AS BIGINT)) AS BIGINT) AS rev_q4
+               CAST(sum(${q4sql("value")}) AS BIGINT) AS rev_q4
         FROM p GROUP BY cohort_week, age_weeks
       )
       SELECT r.cohort_week, r.age_weeks, s.cohort_size, r.n_active,
-             floor((r.rev_q4 / 10000.0)*10000 + 0.5)/10000 AS revenue,
-             floor(((sum(r.rev_q4) OVER (PARTITION BY r.cohort_week ORDER BY r.age_weeks
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) / 10000.0)*10000 + 0.5)/10000 AS cum_revenue
+             ${r4sql("r.rev_q4 / 10000.0")} AS revenue,
+             ${r4sql("""(sum(r.rev_q4) OVER (PARTITION BY r.cohort_week ORDER BY r.age_weeks
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) / 10000.0""")} AS cum_revenue
       FROM roll r JOIN sizes s USING (cohort_week)""")),
     "qp10_quality_audit" -> Op((s, d) => graft.analytics.Events.qualityAudit(s, d), Sql({
       def sub(t: String, c: String) = s"""
@@ -1203,7 +1204,7 @@ object SparkEntry {
       Sql(graft.timeseries.TsOracle.q53)),
     "q54_refit_backtest" -> Op((s, d) => graft.timeseries.Forecast.refitBacktest(s, d),
       Sql(graft.timeseries.TsOracle.q54())),
-    "qe12_survival" -> Op((s, d) => graft.analytics.Events.survival(s, d), Sql("""
+    "qe12_survival" -> Op((s, d) => graft.analytics.Events.survival(s, d), Sql(s"""
       WITH ev AS (
         SELECT user_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events
       ), mx AS (SELECT max(tsec) AS tmax FROM ev),
@@ -1240,8 +1241,8 @@ object SparkEntry {
       SELECT d AS day, n_risk, d_conv, d_cens,
              CASE WHEN max(died) OVER (ORDER BY d
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1 THEN 0.0
-                  ELSE floor((exp(sum(lq) OVER (ORDER BY d
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / 1000000.0))*10000 + 0.5)/10000
+                  ELSE ${r4sql("""exp(sum(lq) OVER (ORDER BY d
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / 1000000.0)""")}
              END AS surv
       FROM lg""")),
     "qe13_audience_overlap" -> Op((s, d) => graft.analytics.Events.audienceOverlap(s, d), Sql(Qe13Sql)),
@@ -1255,7 +1256,7 @@ object SparkEntry {
       fan AS (SELECT day + i AS day, user_id FROM pairs, unnest(range(0, ${graft.analytics.Events.DauMauWindow})) AS u(i)),
       mau AS (SELECT day, CAST(count(DISTINCT user_id) AS BIGINT) AS mau FROM fan GROUP BY day)
       SELECT d.day, d.dau, m.mau,
-             floor((CAST(d.dau AS DOUBLE) / m.mau)*10000 + 0.5)/10000 AS stickiness
+             ${r4sql("CAST(d.dau AS DOUBLE) / m.mau")} AS stickiness
       FROM dau d JOIN mau m USING (day)""")),
     "qe15_burst_rate" -> Op((s, d) => graft.analytics.Events.burstRate(s, d), Sql(Qe15Sql)),
     "qp6_completeness" -> Op((s, d) => TsQueries.qp6Completeness(s, d), Sql(TsOracle.qp6)),

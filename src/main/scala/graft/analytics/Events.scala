@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.util.Tables
+import graft.util.{Num, Tables}
 
 /** Event-stream analytics over the per-user axis — the dimension that
   * grows with data volume (users scale with sf; the time range does
@@ -30,7 +30,6 @@ object Events {
     */
   def asofJoin(spark: SparkSession, sfDir: String,
                aType: String = "purchase", bType: String = "view"): DataFrame = {
-    import graft.util.Num
     val ev = epochSec(spark, sfDir)
     val wB = Window.partitionBy("user_id", "tsec").orderBy(col("event_id").desc)
     val b = ev.filter(col("event_type") === bType)
@@ -107,7 +106,7 @@ object Events {
       .groupBy("day").agg(countDistinct("user_id").as("mau"))
     dau.join(mau, "day")
       .select(col("day"), col("dau"), col("mau"),
-        graft.util.Num.r4(col("dau").cast("double") / col("mau")).as("stickiness"))
+        Num.r4(col("dau").cast("double") / col("mau")).as("stickiness"))
   }
 
   /** qe15: burst-rate audit — per user, the PEAK event count in any
@@ -229,7 +228,6 @@ object Events {
     */
   def groupQuantiles(spark: SparkSession, sfDir: String,
                      qs: Seq[Double] = Seq(0.25, 0.5, 0.75, 0.95)): DataFrame = {
-    import graft.util.Num
     val agg = Tables.events(spark, sfDir)
       .groupBy("event_type")
       .agg(expr(s"percentile(value, array(${qs.mkString(",")}))").as("qv"))
@@ -274,7 +272,7 @@ object Events {
         val e = exact(c)(q).getOrElse(Double.NaN)
         val a = ap.map(_(i)).getOrElse(Double.NaN)
         val ok = if (math.abs(a - e) <= math.abs(e) * tol + 1.0) 1 else 0
-        (c, q, math.floor(e * 10000d + 0.5d) / 10000d, ok)
+        (c, q, Num.r4(e), ok)
       }
     }
     rows.toDF("column_name", "q", "exact_q", "approx_ok")
@@ -302,7 +300,6 @@ object Events {
     * per-column re-scan; the lake-health primitive).
     */
   def profile(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.util.Num
     val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
     val li = Tables.lineitem(spark, sfDir).select(cols.map(col): _*)
     val aggs = cols.flatMap { c =>
@@ -420,7 +417,6 @@ object Events {
     */
   def skewProfile(spark: SparkSession, sfDir: String, topN: Int = 10): DataFrame = {
     require(topN >= 1, s"topN=$topN")
-    import graft.util.Num
     val counts = epochSec(spark, sfDir).groupBy("user_id").agg(count(lit(1)).as("cnt"))
     val totals = counts.agg(sum("cnt").as("total"), count(lit(1)).as("n_keys"))
     counts.orderBy(col("cnt").desc, col("user_id")).limit(topN)
@@ -438,7 +434,6 @@ object Events {
     * a driver or BI layer can hold regardless of input size.
     */
   def transitions(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.util.Num
     val w = Window.partitionBy("user_id").orderBy("tsec", "event_id")
     val steps = epochSec(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("tsec"), col("event_type").as("src"))
@@ -466,7 +461,6 @@ object Events {
     */
   def nextEventEval(spark: SparkSession, sfDir: String,
                     frac: Double = 0.7): DataFrame = {
-    import graft.util.Num
     require(frac > 0 && frac < 1, s"frac=$frac")
     val w = Window.partitionBy("user_id").orderBy("tsec", "event_id")
     // checkpointed: the cut scalar, the model fit and the eval all read
@@ -512,7 +506,6 @@ object Events {
     * two scans touches data.
     */
   def corrMatrix(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.util.Num
     val colScales = Seq("l_quantity" -> 1.0, "l_extendedprice" -> 0.001,
       "l_discount" -> 100.0, "l_tax" -> 100.0)
     val cols = colScales.map(_._1)
@@ -523,11 +516,10 @@ object Events {
       cols.map(c => (Num.sumQ4(col(c)) / count(lit(1))).as(s"m_$c")): _*)
     val pairs = cols.combinations(2).map { case Seq(a, b) => (a, b) }.toSeq
     def ctr(c: String): Column = (col(c) - col(s"m_$c")) * scale(c)
-    def cq(x: Column): Column = sum(floor(x * 10000d + 0.5d).cast("long"))
     val sums = li.crossJoin(broadcast(means)).agg(
       max("n").as("n"),
-      cols.map(c => cq(ctr(c) * ctr(c)).as(s"s_$c")) ++
-        pairs.map { case (a, b) => cq(ctr(a) * ctr(b)).as(s"s_${a}_$b") }: _*)
+      cols.map(c => sum(Num.q4(ctr(c) * ctr(c))).as(s"s_$c")) ++
+        pairs.map { case (a, b) => sum(Num.q4(ctr(a) * ctr(b))).as(s"s_${a}_$b") }: _*)
     val stacked = pairs.map { case (a, b) =>
       struct(lit(a).as("col_a"), lit(b).as("col_b"), col("n"),
         when(col(s"s_$a") > 0 && col(s"s_$b") > 0,
@@ -550,7 +542,6 @@ object Events {
     * accumulates as quantized int64 so the running sums are exact.
     */
   def cohortLtv(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.util.Num
     val week = 604800L
     val ev = epochSec(spark, sfDir)
     val firsts = ev.groupBy("user_id")
@@ -561,7 +552,7 @@ object Events {
       .withColumn("age_weeks", (floor(col("tsec") / week).cast("long") - col("cohort_week")))
     val roll = purchases.groupBy("cohort_week", "age_weeks")
       .agg(countDistinct("user_id").as("n_active"),
-        sum(floor(col("value") * 10000d + 0.5d).cast("long")).as("rev_q4"))
+        sum(Num.q4(col("value"))).as("rev_q4"))
     val w = Window.partitionBy("cohort_week").orderBy("age_weeks")
       .rowsBetween(Window.unboundedPreceding, 0)
     roll.withColumn("cum_q4", sum("rev_q4").over(w))
@@ -583,7 +574,6 @@ object Events {
     * running windows never touch the event stream.
     */
   def survival(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.util.Num
     val day = 86400L
     val ev = epochSec(spark, sfDir)
     val maxT = ev.agg(max("tsec").as("tmax"))
@@ -635,7 +625,6 @@ object Events {
     * constant columns collapse to bin 0.
     */
   def histProfile(spark: SparkSession, sfDir: String, nBins: Int = 16): DataFrame = {
-    import graft.util.Num
     require(nBins >= 1 && nBins <= 1000, s"nBins=$nBins")
     val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
     val li = Tables.lineitem(spark, sfDir).select(cols.map(col): _*)
@@ -769,11 +758,10 @@ object Events {
       // zero guard: a pair of event types absent from the data has
       // n_either = 0 — emit null (DuckDB's double division would diverge)
       .withColumn("jaccard",
-        when(col("n_either") =!= 0, graft.util.Num.r4(col("n_both") / col("n_either"))))
+        when(col("n_either") =!= 0, Num.r4(col("n_both") / col("n_either"))))
   }
 
   def attribution(spark: SparkSession, sfDir: String, lookbackS: Long = 3600L): DataFrame = {
-    import graft.util.Num
     require(lookbackS >= 1, s"lookbackS=$lookbackS")
     val ev = epochSec(spark, sfDir)
     val wT = Window.partitionBy("user_id", "tsec").orderBy(col("event_id").desc)
@@ -816,10 +804,9 @@ object Events {
     * Recency is inverted (recent ⇒ 5) as RFM convention dictates.
     */
   def rfm(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.util.Num
     val o = Tables.orders(spark, sfDir)
       .select(col("o_custkey"), to_date(col("o_orderdate")).as("od"),
-        floor(col("o_totalprice") * 10000d + 0.5d).cast("long").as("price_q4"))
+        Num.q4(col("o_totalprice")).as("price_q4"))
     val mx = o.agg(max("od").as("md"))
     val per = o.groupBy("o_custkey")
       .agg(max("od").as("last_d"), count(lit(1)).as("frequency"),
@@ -882,7 +869,6 @@ object Events {
     * batch passes none).
     */
   private[graft] def rowCheckFrame(rows: DataFrame, grp: Seq[Column] = Nil): DataFrame = {
-    import graft.util.Num
     val agg = (if (grp.isEmpty) rows.groupBy() else rows.groupBy(grp: _*))
       .agg(count(lit(1)).as("n"),
         RowChecks.map { case (nm, ind, _) =>
@@ -897,7 +883,6 @@ object Events {
   }
 
   def expectations(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.util.Num
     val li = Tables.lineitem(spark, sfDir)
     val rowOut = rowCheckFrame(li)
     // distinct over a STRUCT of the key parts: struct(a, b) is non-null
@@ -960,28 +945,26 @@ object Events {
     */
   private[graft] def cupedFrom(ev: DataFrame,
                                cache: DataFrame => DataFrame = identity): DataFrame = {
-    import graft.util.Num
     val bounds = ev.agg(
       floor((min("tsec") + max("tsec")) / 2.0).cast("long").as("tmid"))
-    def q4(c: Column): Column = floor(c * 10000d + 0.5d).cast("long")
     val usr = cache(
       ev.crossJoin(broadcast(bounds))
         .groupBy("event_type", "user_id")
         .agg(
-          sum(when(col("tsec") < col("tmid"), q4(col("value"))).otherwise(0L)).as("xq"),
-          sum(when(col("tsec") >= col("tmid"), q4(col("value"))).otherwise(0L)).as("yq"))
+          sum(when(col("tsec") < col("tmid"), Num.q4(col("value"))).otherwise(0L)).as("xq"),
+          sum(when(col("tsec") >= col("tmid"), Num.q4(col("value"))).otherwise(0L)).as("yq"))
         .withColumn("arm", (col("user_id") % 2).cast("int")))
     val m = usr.groupBy("event_type").agg(
       count(lit(1)).as("n"),
-      (sum("xq") / 10000.0 / count(lit(1))).as("mx"),
-      (sum("yq") / 10000.0 / count(lit(1))).as("my"))
+      Num.meanQ4(sum("xq"), count(lit(1))).as("mx"),
+      Num.meanQ4(sum("yq"), count(lit(1))).as("my"))
     val ctrX = col("xq") / 10000d - col("mx")
     val ctrY = col("yq") / 10000d - col("my")
     val s = usr.join(broadcast(m), "event_type")
       .groupBy("event_type")
       .agg(max("n").as("n"),
-        sum(q4(ctrX * ctrX)).as("sxx"), sum(q4(ctrX * ctrY)).as("sxy"),
-        sum(q4(ctrY * ctrY)).as("syy"),
+        sum(Num.q4(ctrX * ctrX)).as("sxx"), sum(Num.q4(ctrX * ctrY)).as("sxy"),
+        sum(Num.q4(ctrY * ctrY)).as("syy"),
         sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"),
         sum(when(col("arm") === 0, col("xq")).otherwise(0L)).as("x0q"),
         sum(when(col("arm") === 1, col("xq")).otherwise(0L)).as("x1q"),

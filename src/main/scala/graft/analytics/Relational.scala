@@ -198,9 +198,8 @@ object Relational {
   def incrementalAgg(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir).select(
       col("l_returnflag"), col("l_linestatus"), col("l_orderkey"),
-      floor(col("l_quantity") * 10000d + 0.5d).cast("long").as("q4"),
-      floor((col("l_extendedprice") * (lit(1.0) - col("l_discount"))) * 10000d + 0.5d)
-        .cast("long").as("p4"))
+      Num.q4(col("l_quantity")).as("q4"),
+      Num.q4(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("p4"))
     def state(df: DataFrame): DataFrame =
       df.groupBy("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"), sum("q4").as("sq4"), sum("p4").as("sp4"))

@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.Tables
+import graft.util.{Num, Tables}
 
 /** Multimodal column plumbing: opaque `binary` payloads + typed
   * metadata, processed in partition-local batches — the Spark-side shape
@@ -75,7 +75,7 @@ object BinaryMeta {
     }
     def moment(k: Int): Double =
       if (bytes.isEmpty) 0.0
-      else math.floor(q(k) / 1e8 / bytes.length * 10000d + 0.5d) / 10000d
+      else Num.r4(q(k) / 1e8 / bytes.length)
     MediaFeatures(docId, bytes.length, s, moment(1), moment(2), moment(3), moment(4))
   }
 
@@ -295,10 +295,10 @@ object BinaryMeta {
       SELECT d.doc_id, $side AS width, CAST(d.h AS INT) AS height,
              CAST($side * d.h AS INT) AS n_pixels,
              coalesce(s.bsum, 0) AS byte_sum,
-             floor(coalesce(s.q1, 0)/1e8/($side * d.h)*10000 + 0.5)/10000 AS f0,
-             floor(coalesce(s.q2, 0)/1e8/($side * d.h)*10000 + 0.5)/10000 AS f1,
-             floor(coalesce(s.q3, 0)/1e8/($side * d.h)*10000 + 0.5)/10000 AS f2,
-             floor(coalesce(s.q4, 0)/1e8/($side * d.h)*10000 + 0.5)/10000 AS f3
+             ${Num.r4sql(s"coalesce(s.q1, 0)/1e8/($side * d.h)")} AS f0,
+             ${Num.r4sql(s"coalesce(s.q2, 0)/1e8/($side * d.h)")} AS f1,
+             ${Num.r4sql(s"coalesce(s.q3, 0)/1e8/($side * d.h)")} AS f2,
+             ${Num.r4sql(s"coalesce(s.q4, 0)/1e8/($side * d.h)")} AS f3
       FROM dims d LEFT JOIN sums s USING (doc_id)"""
   }
 
@@ -327,10 +327,10 @@ object BinaryMeta {
       )
       SELECT m.doc_id, CAST(m.len AS INT) AS n_bytes,
              coalesce(s.bsum, 0) AS byte_sum,
-             CASE WHEN m.len = 0 THEN 0.0 ELSE floor(s.q1/1e8/m.len*10000 + 0.5)/10000 END AS f0,
-             CASE WHEN m.len = 0 THEN 0.0 ELSE floor(s.q2/1e8/m.len*10000 + 0.5)/10000 END AS f1,
-             CASE WHEN m.len = 0 THEN 0.0 ELSE floor(s.q3/1e8/m.len*10000 + 0.5)/10000 END AS f2,
-             CASE WHEN m.len = 0 THEN 0.0 ELSE floor(s.q4/1e8/m.len*10000 + 0.5)/10000 END AS f3
+             CASE WHEN m.len = 0 THEN 0.0 ELSE ${Num.r4sql("s.q1/1e8/m.len")} END AS f0,
+             CASE WHEN m.len = 0 THEN 0.0 ELSE ${Num.r4sql("s.q2/1e8/m.len")} END AS f1,
+             CASE WHEN m.len = 0 THEN 0.0 ELSE ${Num.r4sql("s.q3/1e8/m.len")} END AS f2,
+             CASE WHEN m.len = 0 THEN 0.0 ELSE ${Num.r4sql("s.q4/1e8/m.len")} END AS f3
       FROM m LEFT JOIN sums s USING (doc_id)"""
   }
 
@@ -385,10 +385,10 @@ object BinaryMeta {
       .groupBy("media_type")
       .agg(count(lit(1)).as("n_items"),
         sum("n_bytes").as("total_bytes"),
-        graft.util.Num.r4(avg("n_bytes")).as("mean_bytes"),
+        Num.r4(avg("n_bytes")).as("mean_bytes"),
         countDistinct(md5(col("payload"))).as("n_distinct"))
       .withColumn("dup_rate",
-        graft.util.Num.r4((col("n_items") - col("n_distinct")) / col("n_items")))
+        Num.r4((col("n_items") - col("n_distinct")) / col("n_items")))
 
   /** qm6: paired-modality coverage audit — the completeness gate a
     * multimodal training pipeline runs before a single batch is drawn:
@@ -404,7 +404,6 @@ object BinaryMeta {
     * rationale).
     */
   def modalCoverage(spark: SparkSession, sfDir: String, expectDim: Int = 64): DataFrame = {
-    import graft.util.Num
     val media = mediaTable(spark, sfDir).toDF()
       .select(col("doc_id"), col("media_type"),
         octet_length(col("payload")).cast("long").as("n_bytes"))
@@ -612,7 +611,7 @@ object BinaryMeta {
       .join(nf.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("nf", "nf_a"), "doc_a")
       .join(nf.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("nf", "nf_b"), "doc_b")
       .select(col("doc_a"), col("doc_b"), col("n_shared"),
-        graft.util.Num.r4(col("n_shared") / (col("nf_a") + col("nf_b") - col("n_shared")))
+        Num.r4(col("n_shared") / (col("nf_a") + col("nf_b") - col("n_shared")))
           .as("sim"))
   }
 
@@ -729,7 +728,7 @@ object BinaryMeta {
                    maxDf: Long = 50L, minShared: Long = 1L): String =
     framePairsCteSql(frameSize, k, maxDf) + s"""
       SELECT p.doc_a, p.doc_b, p.n_shared,
-             floor((CAST(p.n_shared AS DOUBLE) / (na.nf + nb.nf - p.n_shared))*10000 + 0.5)/10000 AS sim
+             ${Num.r4sql("CAST(p.n_shared AS DOUBLE) / (na.nf + nb.nf - p.n_shared)")} AS sim
       FROM pairs p
       JOIN nf na ON na.doc_id = p.doc_a
       JOIN nf nb ON nb.doc_id = p.doc_b

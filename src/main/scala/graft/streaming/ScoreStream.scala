@@ -595,7 +595,7 @@ object ScoreStream {
       .select(col("window.start").as("win_start"), col("qid"),
         posexplode(col("topk")).as(Seq("p", "s")))
       .select(col("win_start"), col("qid"), col("s.id").as("vec_id"),
-        (floor(col("s.cos") * 10000d + 0.5d) / 10000d).as("cos"),
+        graft.util.Num.r4(col("s.cos")).as("cos"),
         (col("p") + 1).cast("int").as("rnk"))
   }
 

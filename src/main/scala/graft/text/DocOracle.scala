@@ -3,10 +3,10 @@ package graft.text
 /** DuckDB oracle SQL for the document (dedup/text/vector) operators,
   * mirroring Dedup/TextOps/Similarity stage-for-stage. Hashes are
   * md5-prefix based so both engines agree exactly; floats are quantized
-  * with the shared floor(x·1e4+0.5)/1e4 form.
+  * through `Num`'s SQL forms of the 1e-4 grid.
   */
 object DocOracle {
-  import graft.util.Num.{r4sql => r4}
+  import graft.util.Num.{q4sql, r4sql => r4}
 
   /** 32-bit hash identical to TextCore.strHash. */
   private def h(e: String): String = s"CAST('0x' || substr(md5($e), 1, 8) AS BIGINT)"
@@ -937,7 +937,7 @@ SELECT qid, vec_id, ${r4("dot")} AS dot, rnk FROM ranked WHERE rnk <= $k"""
   FROM vecs ORDER BY vec_id LIMIT $nCells
 ), c0 AS (SELECT cell, v AS cv FROM seeds)""" + rounds +
       assign("afin", s"c$iters",
-        s", CAST(floor(${d2("e.v", "c.cv")}*10000 + 0.5) AS BIGINT) AS d2q",
+        s", ${q4sql(d2("e.v", "c.cv"))} AS d2q",
         ", d2q") + s"""
 SELECT cell, count(*) AS n_vecs,
        ${r4("sum(d2q) / 10000.0")} AS inertia
@@ -1381,7 +1381,7 @@ tkl AS (SELECT t.doc_id, t.tok, d.lang FROM toks t JOIN dl d USING (doc_id)),
 ucnt AS (SELECT lang, tok, count(*) AS cnt FROM tkl GROUP BY lang, tok),
 utot AS (SELECT lang, CAST(sum(cnt) AS BIGINT) AS tot FROM ucnt GROUP BY lang),
 ulm AS (
-  SELECT c.lang, c.tok, CAST(floor(ln(c.cnt / t.tot)*10000 + 0.5) AS BIGINT) AS lpq
+  SELECT c.lang, c.tok, ${q4sql("ln(c.cnt / t.tot)")} AS lpq
   FROM ucnt c JOIN utot t USING (lang)
 ), pd AS (
   SELECT k.doc_id, count(*) AS n_tok, CAST(sum(m.lpq) AS BIGINT) AS slp
@@ -1408,7 +1408,7 @@ ucnt AS (SELECT lang, w2, CAST(sum(cb) AS BIGINT) AS c2 FROM bcnt GROUP BY lang,
 tot AS (SELECT lang, CAST(sum(c2) AS BIGINT) AS nb FROM ucnt GROUP BY lang),
 lm AS (
   SELECT b.lang, b.w1, b.w2,
-         CAST(floor(ln($lambda * (b.cb / c.cw) + ${1.0 - lambda} * (u.c2 / t.nb))*10000 + 0.5) AS BIGINT) AS lpq
+         ${q4sql(s"ln($lambda * (b.cb / c.cw) + ${1.0 - lambda} * (u.c2 / t.nb))")} AS lpq
   FROM bcnt b JOIN wcnt c USING (lang, w1) JOIN ucnt u USING (lang, w2) JOIN tot t USING (lang)
 ), pd AS (
   SELECT g.doc_id, count(*) AS n_bg, CAST(sum(m.lpq) AS BIGINT) AS slp

@@ -47,11 +47,13 @@ object TextCore {
     * single-row-group files whose scan cannot split.
     */
   def tokens(spark: SparkSession, sfDir: String): DataFrame =
-    graft.util.StageCache.cached(spark, sfDir, "tokens") {
-      Tables.spread(Tables.documents(spark, sfDir), "doc_id")
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("i", "tok")))
-        .filter(col("tok") =!= "")
-    }
+    graft.util.StageCache.cached(spark, sfDir, "tokens")(tokensPlan(spark, sfDir))
+
+  /** The uncached [[tokens]] plan (the dev mains dump and profile it). */
+  private[graft] def tokensPlan(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.spread(Tables.documents(spark, sfDir), "doc_id")
+      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("i", "tok")))
+      .filter(col("tok") =!= "")
 
   /** (doc_id, i, sh) — word n-gram shingles; `i` is the leading token's
     * raw split index (posexplode numbering, empties counted).

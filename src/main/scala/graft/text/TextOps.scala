@@ -347,7 +347,7 @@ object TextOps {
     val cnts = tk.groupBy("lang", "tok").agg(count(lit(1)).as("cnt"))
     val tots = cnts.groupBy("lang").agg(sum("cnt").as("tot"))
     val lm = cnts.join(tots, "lang")
-      .withColumn("lpq", floor(log(col("cnt") / col("tot")) * 10000d + 0.5d).cast("long"))
+      .withColumn("lpq", Num.q4(log(col("cnt") / col("tot"))))
       .select("lang", "tok", "lpq")
     val perDoc = tk.join(broadcast(lm), Seq("lang", "tok"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_tok"), sum("lpq").as("slp"))
@@ -418,9 +418,8 @@ object TextOps {
     val tot = ucnt.groupBy("lang").agg(sum("c2").as("nb"))
     val lm = bcnt.join(wcnt, Seq("lang", "w1")).join(ucnt, Seq("lang", "w2"))
       .join(tot, "lang")
-      .withColumn("lpq", floor(
-        log(lit(lambda) * (col("cb") / col("cw")) +
-            lit(1.0 - lambda) * (col("c2") / col("nb"))) * 10000d + 0.5d).cast("long"))
+      .withColumn("lpq", Num.q4(
+        log(lit(lambda) * (col("cb") / col("cw")) + lit(1.0 - lambda) * (col("c2") / col("nb")))))
       .select("lang", "w1", "w2", "lpq")
     val perDoc = bgs.join(broadcast(lm), Seq("lang", "w1", "w2"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_bg"), sum("lpq").as("slp"))

@@ -48,7 +48,7 @@ object Forecast {
     val pred = snSpine(spark, sfDir)
       .filter(col("t") >= col("tsplit") && col("y").isNotNull && col("p").isNotNull)
     val apeInt = when(col("y") =!= 0.0,
-      floor(abs(col("y") - col("p")) / abs(col("y")) * 10000d + 0.5d).cast("long"))
+      Num.q4(abs(col("y") - col("p")) / abs(col("y"))))
     pred.groupBy("series").agg(
       count(lit(1)).as("n"),
       sum(Num.absErrQ4(col("y"), col("p"))).as("sae"),
@@ -144,7 +144,7 @@ object Forecast {
         col("b2") * col("x2") + col("b3") * col("x3"))
       .localCheckpoint(eager = false) // ybar + both variant branches
     val ybar = test.groupBy("series").agg(
-      sum(floor(col("y") * 10000d + 0.5d).cast("long")).as("syq"),
+      sum(Num.q4(col("y"))).as("syq"),
       count(lit(1)).as("ny"))
     val both = test.select(col("series"), lit("ols").as("variant"),
         col("y"), col("p_ols").as("p"))
@@ -160,7 +160,7 @@ object Forecast {
         sum(smTerm).as("ssm"),
         sum(Num.absErrQ4(col("y"), col("p"))).as("sae"),
         sum(Num.sqErrQ4(col("y"), col("p"))).as("sse"),
-        sum(floor((col("y") - yb) * (col("y") - yb) * 10000d + 0.5d).cast("long")).as("ssy"))
+        sum(Num.q4((col("y") - yb) * (col("y") - yb))).as("ssy"))
       .select(col("series"), col("variant"), col("n"),
         Num.r4(col("ssm") / 1000000d / col("n") * 100d).as("smape"),
         Num.maeQ4(col("sae"), col("n")).as("mae"),
@@ -375,8 +375,8 @@ object Forecast {
       .withColumn("tr", Num.r4(col("trend") + col("resid")))
       .withColumn("sr", Num.r4(col("seasonal") + col("resid")))
     def sq(c: String) = Seq(
-      sum(floor(col(c) * 10000d + 0.5d).cast("long")).as(s"sx_$c"),
-      sum(floor(col(c) * col(c) * 10000d + 0.5d).cast("long")).as(s"sxx_$c"))
+      sum(Num.q4(col(c))).as(s"sx_$c"),
+      sum(Num.q4(col(c) * col(c))).as(s"sxx_$c"))
     val aggs = count(lit(1)).as("n") +: (sq("r") ++ sq("tr") ++ sq("sr"))
     val g = d.groupBy("series").agg(aggs.head, aggs.tail: _*)
     def varOf(c: String): Column =
@@ -713,19 +713,17 @@ object Forecast {
   def periodogram(spark: SparkSession, sfDir: String,
                   periods: Seq[Int] = Seq(6, 8, 12, 24, 84, 168)): DataFrame = {
     require(periods.nonEmpty && periods.forall(_ >= 2), s"periods=$periods")
-    def trig(p: Int, f: Double => Double): Seq[Long] =
-      (0 until p).map(k => math.floor(f(2.0 * math.Pi * k / p) * 10000d + 0.5d).toLong)
     val vq = TsCore.filled(spark, sfDir).filter(col("v_filled").isNotNull)
       .select(col("series"), col("t"),
-        floor(col("v_filled") * 10000d + 0.5d).cast("long").as("vq"))
+        Num.q4(col("v_filled")).as("vq"))
     val mu = vq.groupBy("series")
       .agg(floor(sum("vq") / count(lit(1)) + 0.5d).cast("long").as("mu"))
     val dv = vq.join(mu, "series")
       .withColumn("dq", col("vq") - col("mu"))
     val pows = periods.map { p =>
       val ph = (col("t") % p).cast("int") + 1
-      val tc = element_at(typedLit(trig(p, math.cos)), ph)
-      val ts = element_at(typedLit(trig(p, math.sin)), ph)
+      val tc = element_at(typedLit(trigQ4(p, math.cos)), ph)
+      val ts = element_at(typedLit(trigQ4(p, math.sin)), ph)
       dv.groupBy("series")
         .agg(count(lit(1)).as("n"),
           (sum(col("dq") * tc) / 100000000d).as("sc"),
@@ -739,22 +737,23 @@ object Forecast {
       when(row_number().over(w) === 1, 1).otherwise(0))
   }
 
+  /** q49's cos/sin table over one period, quantized on the driver. */
+  private def trigQ4(p: Int, f: Double => Double): Seq[Long] =
+    (0 until p).map(k => Num.q4(f(2.0 * math.Pi * k / p)))
+
   /** Mirrors [[periodogram]] for the DuckDB oracle — same driver trig
     * tables, same scaled-int accumulation.
     */
   def periodogramOracle(periods: Seq[Int] = Seq(6, 8, 12, 24, 84, 168)): String = {
-    def trig(p: Int, f: Double => Double): String =
-      (0 until p).map(k => math.floor(f(2.0 * math.Pi * k / p) * 10000d + 0.5d).toLong)
-        .mkString("[", ", ", "]")
     val per = periods.map { p =>
       s"""SELECT series, $p AS period, count(*) AS n,
-         CAST(sum(dq * (${trig(p, math.cos)}[CAST(t % $p AS INT) + 1])) AS DOUBLE)/100000000 AS sc,
-         CAST(sum(dq * (${trig(p, math.sin)}[CAST(t % $p AS INT) + 1])) AS DOUBLE)/100000000 AS ss
+         CAST(sum(dq * (${trigQ4(p, math.cos).mkString("[", ", ", "]")}[CAST(t % $p AS INT) + 1])) AS DOUBLE)/100000000 AS sc,
+         CAST(sum(dq * (${trigQ4(p, math.sin).mkString("[", ", ", "]")}[CAST(t % $p AS INT) + 1])) AS DOUBLE)/100000000 AS ss
   FROM dv GROUP BY series"""
     }.mkString("\n  UNION ALL\n  ")
     TsOracle.prefix + s""",
 vq AS (
-  SELECT series, t, CAST(floor(v_filled*10000 + 0.5) AS BIGINT) AS vq
+  SELECT series, t, ${Num.q4sql("v_filled")} AS vq
   FROM filled WHERE v_filled IS NOT NULL
 ), muq AS (
   SELECT series, CAST(floor(sum(vq) / count(*) + 0.5) AS BIGINT) AS mu FROM vq GROUP BY series
@@ -762,7 +761,7 @@ vq AS (
   SELECT v.series, v.t, v.vq - m.mu AS dq FROM vq v JOIN muq m USING (series)
 ), pows AS (
   SELECT series, period, n,
-         floor(((sc*sc + ss*ss) / (n*n))*10000 + 0.5)/10000 AS power
+         ${Num.r4sql("(sc*sc + ss*ss) / (n*n)")} AS power
   FROM ($per)
 )
 SELECT series, period, n, power,
@@ -997,7 +996,7 @@ FROM pows"""
     StageCache.cached(spark, sfDir, s"q56base_$rollH") {
       val f = TsCore.filled(spark, sfDir)
         .select(col("series"), col("t"), col("v_filled").as("y"))
-        .withColumn("yq", floor(col("y") * 10000d + 0.5d).cast("long"))
+        .withColumn("yq", Num.q4(col("y")))
         .withColumn("x1", lag("y", 1).over(w))
         .withColumn("x2", lag("y", 2).over(w))
         .withColumn("x3", lag("y", 3).over(w))
@@ -1157,9 +1156,9 @@ FROM pows"""
     val base = f
       .withColumn("p", lag("y", TsCore.WeekLag).over(w))
       .filter(col("y").isNotNull && col("p").isNotNull)
-      .withColumn("pq", floor(col("p") * 10000d + 0.5d).cast("long"))
+      .withColumn("pq", Num.q4(col("p")))
     val tot = f.filter(col("y").isNotNull)
-      .groupBy("t").agg(sum(floor(col("y") * 10000d + 0.5d).cast("long")).as("ytq"))
+      .groupBy("t").agg(sum(Num.q4(col("y"))).as("ytq"))
     val totfc = tot.select((col("t") + TsCore.DaySize).as("t"), col("ytq").as("tfq"))
     // Σ base over series as a whole-partition window on t: one exchange,
     // no self-join re-deriving the lag subtree (the plan showed the lag
@@ -1299,15 +1298,14 @@ FROM pows"""
       when(col("y") > col("hi"), (col("y") - col("hi")) * over).otherwise(0.0)
     def pin(tau: Double, q: Column): Column =
       when(col("y") >= q, (col("y") - q) * tau).otherwise((q - col("y")) * (1 - tau))
-    def q4(c: Column) = floor(c * 10000d + 0.5d).cast("long")
     test.groupBy("series", "qhatq")
       .agg(count(lit(1)).as("n_test"),
-        sum(q4(wink)).as("sw"),
-        sum(q4(pin(tl, col("lo")))).as("sl"),
-        sum(q4(pin(tu, col("hi")))).as("su"))
+        sum(Num.q4(wink)).as("sw"),
+        sum(Num.q4(pin(tl, col("lo")))).as("sl"),
+        sum(Num.q4(pin(tu, col("hi")))).as("su"))
       .select(col("series"), col("n_test"), (col("qhatq") / 10000d).as("qhat"),
-        Num.r4(col("sw") / 10000d / col("n_test")).as("winkler"),
-        Num.r4(col("sl") / 10000d / col("n_test")).as("pinball_lo"),
-        Num.r4(col("su") / 10000d / col("n_test")).as("pinball_hi"))
+        Num.r4(Num.meanQ4(col("sw"), col("n_test"))).as("winkler"),
+        Num.r4(Num.meanQ4(col("sl"), col("n_test"))).as("pinball_lo"),
+        Num.r4(Num.meanQ4(col("su"), col("n_test"))).as("pinball_hi"))
   }
 }

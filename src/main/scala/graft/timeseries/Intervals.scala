@@ -145,10 +145,8 @@ object Intervals {
     val wc = ws.rowsBetween(Window.unboundedPreceding, 0)
     TsCore.filled(spark, sfDir).filter(col("v_filled").isNotNull)
       .withColumn("n", count(lit(1)).over(wp))
-      .withColumn("mu",
-        sum(floor(col("v_filled") * 10000d + 0.5d).cast("long")).over(wp) / 10000d / col("n"))
-      .withColumn("m2",
-        sum(floor(col("v_filled") * col("v_filled") * 10000d + 0.5d).cast("long")).over(wp) / 10000d)
+      .withColumn("mu", Num.meanQ4(sum(Num.q4(col("v_filled"))).over(wp), col("n")))
+      .withColumn("m2", sum(Num.q4(col("v_filled") * col("v_filled"))).over(wp) / 10000d)
       .filter(col("n") > 1)
       .withColumn("sd", sqrt(greatest(lit(0.0),
         (col("m2") - col("n") * col("mu") * col("mu")) / (col("n") - 1))))

@@ -6,7 +6,7 @@ package graft.timeseries
   */
 object TsOracle {
   import TsCore._
-  import graft.util.Num.{r4sql => r4, sumQ4sql, absErrQ4sql, sqErrQ4sql, meanQ4sql,
+  import graft.util.Num.{r4sql => r4, q4sql, sumQ4sql, absErrQ4sql, sqErrQ4sql, meanQ4sql,
     maeQ4sql, rmseQ4sql}
 
   /** The `mae`/`rmse` select items of Num's forecast-error reducer over
@@ -25,7 +25,7 @@ WITH ev AS MATERIALIZED (
   SELECT event_type AS series, CAST(floor(epoch(ts)/3600) AS BIGINT) AS hr, value FROM events
 ), t0 AS (SELECT min(hr) AS t0 FROM ev),
 grid AS MATERIALIZED (
-  SELECT series, hr - t0 AS t, count(*) AS n, floor((avg(value))*10000 + 0.5)/10000 AS v
+  SELECT series, hr - t0 AS t, count(*) AS n, ${r4("avg(value)")} AS v
   FROM ev, t0 GROUP BY series, hr - t0
 ),
 tmax AS (SELECT max(t) AS tmax FROM grid),
@@ -108,8 +108,8 @@ aug AS (
   WINDOW wa AS (PARTITION BY d.series, d.win)
 ),
 inject AS (
-  SELECT series, win, pos, floor((v)*10000 + 0.5)/10000 AS v_orig,
-    floor((CASE
+  SELECT series, win, pos, ${r4("v")} AS v_orig,
+    ${r4("""CASE
       WHEN NOT contam THEN v
       WHEN atype = 1 AND pos = apos THEN -pref_at
       WHEN atype = 1 AND pos > apos AND pos < apos + alen - 1 THEN 0.0
@@ -121,7 +121,7 @@ inject AS (
       WHEN atype = 2 AND NOT flag5 AND pos = apos + alen - 1 THEN cum_end - pref_at
       WHEN atype = 3 AND pos = apos THEN CASE WHEN flag5 THEN -pref_at ELSE -rf * vprev END
       WHEN atype = 4 AND pos = apos THEN CASE WHEN flag5 THEN pref_at ELSE rf * vprev END
-      ELSE v END)*10000 + 0.5)/10000 AS v_anom,
+      ELSE v END""")} AS v_anom,
     CASE WHEN contam AND ((atype <= 2 AND pos >= apos AND pos < apos + alen)
                           OR (atype >= 3 AND pos = apos)) THEN 1 ELSE 0 END AS is_anom
   FROM aug
@@ -132,16 +132,16 @@ bounds AS (
 ),
 scaled AS (
   SELECT i.series, i.win, i.pos,
-         floor(((i.v_anom - b.lo) / (b.hi - b.lo))*10000 + 0.5)/10000 AS vs, i.is_anom
+         ${r4("(i.v_anom - b.lo) / (b.hi - b.lo)")} AS vs, i.is_anom
   FROM inject i JOIN bounds b USING (series)
 ),
 feats AS (
   SELECT series, win, pos, vs,
-    floor((stddev_samp(vs) OVER (PARTITION BY series, win, CAST(floor(pos / $FeatPatch) AS BIGINT)))*10000 + 0.5)/10000 AS pstd,
-    floor((pow(${1 - Alpha}, pos) * (
+    ${r4(s"stddev_samp(vs) OVER (PARTITION BY series, win, CAST(floor(pos / $FeatPatch) AS BIGINT))")} AS pstd,
+    ${r4(s"""pow(${1 - Alpha}, pos) * (
       first_value(vs) OVER wseq +
       sum(CASE WHEN pos = 0 THEN 0.0 ELSE $Alpha * vs * pow(${1 - Alpha}, -pos) END)
-        OVER (PARTITION BY series, win ORDER BY pos ROWS UNBOUNDED PRECEDING)))*10000 + 0.5)/10000 AS ewma,
+        OVER (PARTITION BY series, win ORDER BY pos ROWS UNBOUNDED PRECEDING))""")} AS ewma,
     is_anom
   FROM scaled
   WINDOW wseq AS (PARTITION BY series, win ORDER BY pos)
@@ -218,7 +218,7 @@ testp AS (
 
   def q01: String = prefix + "SELECT series, t, n, v FROM grid"
 
-  def q02: String = prefix + "SELECT series, t, floor((v_filled)*10000 + 0.5)/10000 AS v_filled, src FROM filled"
+  def q02: String = prefix + s"SELECT series, t, ${r4("v_filled")} AS v_filled, src FROM filled"
 
   def q43(blocked: Seq[(Long, Long)] = Seq((2L, 4L), (9L, 10L))): String = {
     val blockedSql = blocked
@@ -231,7 +231,7 @@ testp AS (
   SELECT series, d FROM daysrc GROUP BY series, d
   HAVING sum(CASE WHEN src = 'obs' THEN 1 ELSE 0 END) = 0
 ), blocked AS ($blockedSql)
-SELECT series, t, floor((v_filled)*10000 + 0.5)/10000 AS v_filled, src
+SELECT series, t, ${r4("v_filled")} AS v_filled, src
 FROM daysrc ds
 WHERE NOT EXISTS (SELECT 1 FROM blocked b WHERE b.d = ds.d)
   AND NOT EXISTS (SELECT 1 FROM emptydays e WHERE e.series = ds.series AND e.d = ds.d)
@@ -245,9 +245,9 @@ WHERE NOT EXISTS (SELECT 1 FROM blocked b WHERE b.d = ds.d)
   FROM filled
 ), swindows AS (
   SELECT series, swin, count(v) AS nv, count(*) AS np,
-         floor((sum(CAST(floor((v)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(v))*10000 + 0.5)/10000 AS mean_v,
-         floor((stddev_samp(v))*10000 + 0.5)/10000 AS std_v,
-         floor((min(v))*10000 + 0.5)/10000 AS min_v, floor((max(v))*10000 + 0.5)/10000 AS max_v
+         ${r4(s"${sumQ4sql("v")} / count(v)")} AS mean_v,
+         ${r4("stddev_samp(v)")} AS std_v,
+         ${r4("min(v)")} AS min_v, ${r4("max(v)")} AS max_v
   FROM memb
   WHERE t >= swin * $stride AND t < swin * $stride + $size AND swin >= 0
   GROUP BY series, swin
@@ -255,8 +255,8 @@ WHERE NOT EXISTS (SELECT 1 FROM blocked b WHERE b.d = ds.d)
 SELECT series, swin, mean_v, std_v, min_v, max_v
 FROM swindows WHERE nv = $size AND np = $size"""
 
-  def q04: String = prefix + """
-SELECT f.series, f.t, floor(((f.v_filled - b.lo) / (b.hi - b.lo))*10000 + 0.5)/10000 AS vs
+  def q04: String = prefix + s"""
+SELECT f.series, f.t, ${r4("(f.v_filled - b.lo) / (b.hi - b.lo)")} AS vs
 FROM filled f JOIN bounds b USING (series) WHERE f.v_filled IS NOT NULL"""
 
   def q05: String = prefix + "SELECT series, win, pos, v_orig, v_anom, is_anom FROM inject"
@@ -711,7 +711,7 @@ FROM cum"""
   HAVING count(*) = ${nDays * DaySize} AND count(v_filled) = ${nDays * DaySize}
 ), t0w AS (SELECT min(hr) AS t0 FROM ev)
 SELECT e.series, e.wid, e.t - e.wid * $DaySize AS seq, e.t,
-  floor((e.v_filled)*10000 + 0.5)/10000 AS v,
+  ${r4("e.v_filled")} AS v,
   CASE WHEN e.t - e.wid * $DaySize < ${(nDays - 1) * DaySize} THEN 'input' ELSE 'horizon' END AS part,
   strftime(make_timestamp((t0w.t0 + e.wid * $DaySize) * 3600 * 1000000), '%Y-%m-%d %H:%M:%S')
   || ' - ' ||
@@ -750,8 +750,8 @@ FROM wexp e JOIN wcomplete USING (series, wid), t0w"""
          lag(f.v_filled, 3) OVER w AS x3,
          lag(f.v_filled, ${TsCore.DaySize}) OVER w AS x4,
          lag(f.v_filled, ${TsCore.WeekLag}) OVER w AS x5,
-         CASE WHEN count(CAST(floor(f.v_filled*10000 + 0.5) AS BIGINT)) OVER wr = $rollH
-              THEN sum(CAST(floor(f.v_filled*10000 + 0.5) AS BIGINT)) OVER wr / 10000.0 / $rollH
+         CASE WHEN count(${q4sql("f.v_filled")}) OVER wr = $rollH
+              THEN sum(${q4sql("f.v_filled")}) OVER wr / 10000.0 / $rollH
          END AS x6,
          b.tsplit
   FROM filled f JOIN boundt b USING (series)
@@ -796,7 +796,7 @@ FROM scored56 GROUP BY series"""
   def q42: String = prefix + splitTCte + s"""
 , svs AS (
   SELECT f.series, f.t,
-         floor(((f.v_filled - b.lo) / (b.hi - b.lo))*10000 + 0.5)/10000 AS vs,
+         ${r4("(f.v_filled - b.lo) / (b.hi - b.lo)")} AS vs,
          b.lo, b.hi
   FROM filled f JOIN bounds b USING (series)
 ), spred AS (
@@ -995,7 +995,7 @@ GROUP BY a.series, a.win, a.pos"""
 )
 SELECT series, count(*) AS n,
   ${maeRmse("y", "p")},
-  ${r4("sum(CASE WHEN y <> 0.0 THEN CAST(floor(abs(y - p) / abs(y)*10000 + 0.5) AS BIGINT) END) / 10000.0 / count(CASE WHEN y <> 0.0 THEN 1 END)")} AS mape
+  ${r4(s"sum(CASE WHEN y <> 0.0 THEN ${q4sql("abs(y - p) / abs(y)")} END) / 10000.0 / count(CASE WHEN y <> 0.0 THEN 1 END)")} AS mape
 FROM sn WHERE t >= tsplit AND y IS NOT NULL AND p IS NOT NULL
 GROUP BY series"""
 
@@ -1060,9 +1060,9 @@ GROUP BY t.series, q.n_cal, q.qhatq"""
   FROM t63
 )
 SELECT series, count(*) AS n_test, qhatq / 10000.0 AS qhat,
-  ${r4("sum(CAST(floor(wink*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*)")} AS winkler,
-  ${r4("sum(CAST(floor(pl*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*)")} AS pinball_lo,
-  ${r4("sum(CAST(floor(pu*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*)")} AS pinball_hi
+  ${r4(s"${sumQ4sql("wink")} / count(*)")} AS winkler,
+  ${r4(s"${sumQ4sql("pl")} / count(*)")} AS pinball_lo,
+  ${r4(s"${sumQ4sql("pu")} / count(*)")} AS pinball_hi
 FROM sc63 GROUP BY series, qhatq"""
   }
 
@@ -1076,10 +1076,10 @@ FROM sc63 GROUP BY series, qhatq"""
          lag(v_filled, ${TsCore.WeekLag}) OVER (PARTITION BY series ORDER BY t) AS p
   FROM filled
 ), rbase AS (
-  SELECT series, t, y, CAST(floor(p*10000 + 0.5) AS BIGINT) AS pq
+  SELECT series, t, y, ${q4sql("p")} AS pq
   FROM wk WHERE y IS NOT NULL AND p IS NOT NULL
 ), rtot AS (
-  SELECT t, sum(CAST(floor(v_filled*10000 + 0.5) AS BIGINT)) AS ytq
+  SELECT t, sum(${q4sql("v_filled")}) AS ytq
   FROM filled WHERE v_filled IS NOT NULL GROUP BY t
 ), rtotfc AS (
   SELECT t + ${TsCore.DaySize} AS t, ytq AS tfq FROM rtot
@@ -1257,7 +1257,7 @@ FROM testf GROUP BY series"""
   FROM basef f JOIN coefs2 c USING (series)
   WHERE f.t >= f.tsplit AND NOT isnan(c.b0)
 ), ybar64 AS (
-  SELECT series, sum(CAST(floor(y * 10000 + 0.5) AS BIGINT)) AS syq,
+  SELECT series, sum(${q4sql("y")}) AS syq,
          count(*) AS ny
   FROM testsc GROUP BY series
 ), both64 AS (
@@ -1270,7 +1270,7 @@ FROM testf GROUP BY series"""
          ELSE CAST(floor(2 * abs(b.y - b.p) / (abs(b.p) + abs(b.y)) * 1000000 + 0.5) AS BIGINT) END) AS ssm,
     sum(${absErrQ4sql("b.y", "b.p")}) AS sae,
     sum(${sqErrQ4sql("b.y", "b.p")}) AS sse,
-    sum(CAST(floor((b.y - yb.syq / 10000.0 / yb.ny) * (b.y - yb.syq / 10000.0 / yb.ny) * 10000 + 0.5) AS BIGINT)) AS ssy
+    sum(${q4sql("(b.y - yb.syq / 10000.0 / yb.ny) * (b.y - yb.syq / 10000.0 / yb.ny)")}) AS ssy
   FROM both64 b JOIN ybar64 yb USING (series)
   GROUP BY b.series, b.variant
 )
@@ -1356,11 +1356,11 @@ FROM testf_$h GROUP BY series"""
 , trainw AS (
   SELECT d.* FROM daywin d JOIN boundary b USING (series) WHERE d.win < b.mwin
 ), overallm AS (
-  SELECT series, sum(CAST(floor((v)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*) AS mu
+  SELECT series, ${sumQ4sql("v")} / count(*) AS mu
   FROM trainw GROUP BY series
 )
 SELECT t.series, t.pos,
-  ${r4("sum(CAST(floor((t.v)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*) - max(o.mu)")} AS seasonal
+  ${r4(s"${sumQ4sql("t.v")} / count(*) - max(o.mu)")} AS seasonal
 FROM trainw t JOIN overallm o USING (series)
 GROUP BY t.series, t.pos"""
 
@@ -1410,7 +1410,7 @@ GROUP BY t.series, t.pos"""
   FROM ivruns GROUP BY series, win, rid
 )
 SELECT i.series, i.t_lo, i.t_hi, count(*) AS n_pts,
-       ${r4("sum(CAST(floor((f.v_filled)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*)")} AS avg_v
+       ${r4(s"${sumQ4sql("f.v_filled")} / count(*)")} AS avg_v
 FROM iv i JOIN filled f ON f.series = i.series AND f.t >= i.t_lo AND f.t <= i.t_hi
 WHERE f.v_filled IS NOT NULL
 GROUP BY i.series, i.t_lo, i.t_hi"""
@@ -1515,7 +1515,7 @@ FROM drterm GROUP BY series"""
   FROM dfrm WHERE v_filled IS NOT NULL AND fn = $w
 ), dseas AS (
   SELECT series, t % $DaySize AS pos,
-    sum(CAST(floor(detr*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*) AS seasonal
+    ${sumQ4sql("detr")} / count(*) AS seasonal
   FROM dbase GROUP BY series, t % $DaySize
 )
 SELECT b.series, b.t, ${r4("b.trend")} AS trend, ${r4("s.seasonal")} AS seasonal,
@@ -1529,8 +1529,8 @@ FROM dbase b JOIN dseas s ON b.series = s.series AND b.t % $DaySize = s.pos"""
   def q52(half: Int = 12): String = {
     val w = 2 * half + 1
     def sq(c: String) = s"""
-         CAST(sum(CAST(floor($c*10000 + 0.5) AS BIGINT)) AS BIGINT) AS sx_$c,
-         CAST(sum(CAST(floor($c*$c*10000 + 0.5) AS BIGINT)) AS BIGINT) AS sxx_$c"""
+         CAST(sum(${q4sql(c)}) AS BIGINT) AS sx_$c,
+         CAST(sum(${q4sql(s"$c*$c")}) AS BIGINT) AS sxx_$c"""
     def varOf(c: String) =
       s"(sxx_$c / 10000.0 - (sx_$c / 10000.0) * (sx_$c / 10000.0) / n) / (n - 1)"
     def str(d: String) =
@@ -1552,15 +1552,15 @@ FROM dbase b JOIN dseas s ON b.series = s.series AND b.t % $DaySize = s.pos"""
   FROM dfrm WHERE v_filled IS NOT NULL AND fn = $w
 ), dseas AS (
   SELECT series, t % $DaySize AS pos,
-    sum(CAST(floor(detr*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*) AS seasonal
+    ${sumQ4sql("detr")} / count(*) AS seasonal
   FROM dbase GROUP BY series, t % $DaySize
 ), comp0 AS (
   SELECT b.series, ${r4("b.detr - s.seasonal")} AS r,
          ${r4("b.trend")} AS tq, ${r4("s.seasonal")} AS sq0
   FROM dbase b JOIN dseas s ON b.series = s.series AND b.t % $DaySize = s.pos
 ), comp AS (
-  SELECT series, r, floor((tq + r)*10000 + 0.5)/10000 AS tr,
-         floor((sq0 + r)*10000 + 0.5)/10000 AS sr
+  SELECT series, r, ${r4("tq + r")} AS tr,
+         ${r4("sq0 + r")} AS sr
   FROM comp0
 ), g AS (
   SELECT series, count(*) AS n, ${sq("r")}, ${sq("tr")}, ${sq("sr")}
@@ -1608,7 +1608,7 @@ FROM g"""
   FROM dbase d JOIN boundt bo USING (series)
 ), seas59 AS (
   SELECT series, t % $DaySize AS pos,
-    sum(CAST(floor(detr*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*) AS seas
+    ${sumQ4sql("detr")} / count(*) AS seas
   FROM b59 WHERE t < tsplit GROUP BY series, t % $DaySize
 ), trlag59 AS (
   SELECT series, t + ${TsCore.WeekLag} AS t, trend AS tr_lag FROM dbase
@@ -1649,8 +1649,8 @@ FROM lagd WHERE v_filled IS NOT NULL AND v$l IS NOT NULL GROUP BY series""")
   def q45(k: Double = 0.5, h: Double = 5.0): String = prefix + s"""
 , cstats AS (
   SELECT series, count(*) AS n,
-    sum(CAST(floor(v_filled*10000 + 0.5) AS BIGINT)) AS s1,
-    sum(CAST(floor(v_filled*v_filled*10000 + 0.5) AS BIGINT)) AS s2
+    sum(${q4sql("v_filled")}) AS s1,
+    sum(${q4sql("v_filled*v_filled")}) AS s2
   FROM filled WHERE v_filled IS NOT NULL GROUP BY series
 ), cparams AS (
   SELECT series, n, s1 / 10000.0 / n AS mu,
@@ -1744,7 +1744,7 @@ FROM lag35 WHERE t >= tsplit AND v_filled IS NOT NULL AND p$h IS NOT NULL GROUP 
 , trainw37 AS (
   SELECT d.* FROM daywin d JOIN boundary b USING (series) WHERE d.win < b.mwin
 ), prof37 AS (
-  SELECT series, pos, sum(CAST(floor((v)*10000 + 0.5) AS BIGINT)) / 10000.0 / count(*) AS posmean
+  SELECT series, pos, ${sumQ4sql("v")} / count(*) AS posmean
   FROM trainw37 GROUP BY series, pos
 ), sdr37 AS (
   SELECT t.series, stddev_samp(t.v - p.posmean) AS sdr
@@ -1774,8 +1774,6 @@ FROM wm w JOIN madt m USING (series, win)
 WHERE m.mad > 0.0 AND ((w.vs - w.med) / (m.mad * 1.4826) > $thr
                        OR (w.vs - w.med) / (m.mad * 1.4826) < -$thr)"""
 
-  def q08: String = prefix +
-    "SELECT series, win, pos, floor((f0)*10000 + 0.5)/10000 AS f0, floor((f1)*10000 + 0.5)/10000 AS f1, floor((f2)*10000 + 0.5)/10000 AS f2, " +
-    "floor((f3)*10000 + 0.5)/10000 AS f3, floor((f4)*10000 + 0.5)/10000 AS f4, floor((f5)*10000 + 0.5)/10000 AS f5, " +
-    "floor((f6)*10000 + 0.5)/10000 AS f6, floor((f7)*10000 + 0.5)/10000 AS f7, floor((f8)*10000 + 0.5)/10000 AS f8 FROM patches"
+  def q08: String = prefix + "SELECT series, win, pos, " +
+    (0 until 9).map(i => s"${r4(s"f$i")} AS f$i").mkString(", ") + " FROM patches"
 }

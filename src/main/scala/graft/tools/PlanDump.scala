@@ -1,6 +1,9 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.text.TextCore
+import graft.util.Tables
 
 /** Optimization-round evidence tool: dump `.explain("formatted")` for the
   * named queries to plans/<tag>/<query>_<suffix>.txt (the judge checks
@@ -20,30 +23,9 @@ object PlanDump {
     val spark = graft.Session.create()
     val dir = Paths.get(s"plans/$tag")
     Files.createDirectories(dir)
-    // pseudo-entries for session-cached stage BUILDS whose plans the
-    // registered queries hide behind localCheckpoint LogicalRDDs
-    def stagePlans(n: String): Option[org.apache.spark.sql.DataFrame] = n match {
-      case "_tokens_build" => Some(
-        graft.util.Tables.spread(graft.util.Tables.documents(spark, sfDir), "doc_id")
-          .select(org.apache.spark.sql.functions.col("doc_id"),
-            org.apache.spark.sql.functions.posexplode(
-              org.apache.spark.sql.functions.split(
-                org.apache.spark.sql.functions.col("text"), " ")).as(Seq("i", "tok")))
-          .filter(org.apache.spark.sql.functions.col("tok") =!= ""))
-      case "_shingles3_narrow" => Some(graft.text.TextCore.shinglesNarrow(
-        graft.util.Tables.spread(graft.util.Tables.documents(spark, sfDir), "doc_id"), 3))
-      case "_shingles3_windowed" => Some(graft.text.TextCore.shinglesWindowed(
-        graft.text.TextCore.tokens(spark, sfDir), 3))
-      case "_bm25post_build" => Some(
-        graft.vector.Similarity.bm25PostingsPlan(spark, sfDir))
-      case "_qp2_exact_build" => Some(
-        graft.analytics.Events.approxDistinctExactPlan(spark, sfDir))
-      case _ => None
-    }
     names.foreach { name =>
       try {
-        val df = stagePlans(name).getOrElse(
-          graft.SparkEntry.queries(name)(spark, sfDir))
+        val df = plan(spark, sfDir, name)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         // literal sketches (inlined bloom filters) dump hundreds of KB of
@@ -59,4 +41,21 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** Pseudo-entries for session-cached stage BUILDS whose plans the
+    * registered queries hide behind localCheckpoint LogicalRDDs.
+    */
+  private[graft] def stagePlans(spark: SparkSession, sfDir: String): Map[String, () => DataFrame] = {
+    def docs = Tables.spread(Tables.documents(spark, sfDir), "doc_id")
+    Map(
+      "_tokens_build" -> (() => TextCore.tokensPlan(spark, sfDir)),
+      "_shingles3_narrow" -> (() => TextCore.shinglesNarrow(docs, 3)),
+      "_shingles3_windowed" -> (() => TextCore.shinglesWindowed(TextCore.tokensPlan(spark, sfDir), 3)),
+      "_bm25post_build" -> (() => graft.vector.Similarity.bm25PostingsPlan(spark, sfDir)),
+      "_qp2_exact_build" -> (() => graft.analytics.Events.approxDistinctExactPlan(spark, sfDir)))
+  }
+
+  /** A [[stagePlans]] pseudo-entry or a registered query, by name. */
+  private[graft] def plan(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    stagePlans(spark, sfDir).get(name).map(_()).getOrElse(graft.SparkEntry.queries(name)(spark, sfDir))
 }

@@ -6,6 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, S
   * bench's timed action and print a per-stage table — wall time, task
   * time, shuffle read/write bytes, records — plus job count. The
   * empirical half of guide §1 without the UI.
+  * `query` is a registered key or a PlanDump pseudo-entry (`_tokens_build`, …).
   * Usage: tools/run_main.sh graft.tools.StageProf <query> [sfDir] [cores] [reps]
   */
 object StageProf {
@@ -38,19 +39,7 @@ object StageProf {
     for (rep <- 1 to reps; name <- nameList) {
       stages.clear(); jobs = 0
       val t0 = System.nanoTime()
-      import org.apache.spark.sql.functions.{posexplode, split}
-      def docs = graft.util.Tables.spread(
-        graft.util.Tables.documents(spark, sfDir), "doc_id")
-      def toks = docs
-        .select(org.apache.spark.sql.functions.col("doc_id"),
-          posexplode(split(org.apache.spark.sql.functions.col("text"), " ")).as(Seq("i", "tok")))
-        .filter(org.apache.spark.sql.functions.col("tok") =!= "")
-      val df = name match {
-        case "_sh3_narrow" => graft.text.TextCore.shinglesNarrow(docs, 3)
-        case "_sh3_windowed" => graft.text.TextCore.shinglesWindowed(toks, 3)
-        case "_tokens" => toks
-        case _ => graft.SparkEntry.queries(name)(spark, sfDir)
-      }
+      val df = PlanDump.plan(spark, sfDir, name)
       import org.apache.spark.sql.functions.{col, xxhash64}
       df.select(xxhash64(df.columns.map(col): _*).as("h")).agg(Map("h" -> "max")).count()
       val tot = (System.nanoTime() - t0) / 1e9

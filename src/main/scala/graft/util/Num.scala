@@ -3,17 +3,35 @@ package graft.util
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{abs, floor, sqrt}
 
-/** Engine-agnostic 4-dp quantization. `round()` semantics differ between
-  * Spark (BigDecimal HALF_UP on the decimal expansion) and DuckDB
-  * (multiply + C round), which flips the last digit when a value lands on
-  * a .00005 boundary. floor(x*1e4 + 0.5)/1e4 runs the identical IEEE ops
-  * in both engines, so identical inputs give identical outputs.
+/** Engine-agnostic 4-dp quantization — the ONE definition of the 1e-4
+  * grid for both engines: every Spark column, DuckDB oracle text and
+  * driver-side scalar that lands a value on the grid calls a form here.
+  * `round()` semantics differ between Spark (BigDecimal HALF_UP on the
+  * decimal expansion) and DuckDB (multiply + C round), which flips the
+  * last digit when a value lands on a .00005 boundary. floor(x*1e4 +
+  * 0.5)/1e4 runs the identical IEEE ops in both engines, so identical
+  * inputs give identical outputs. [[r4]] lands a value on the grid as a
+  * double, [[q4]] as an exact int64 (the operand of order-free sums).
   */
 object Num {
   def r4(c: Column): Column = floor(c * 10000d + 0.5d) / 10000d
 
+  def q4(c: Column): Column = floor(c * 10000d + 0.5d).cast("long")
+
+  /** Driver-side r4 and q4: bit-identical to `r4(lit(x))` / `q4(lit(x))`
+    * for every finite |x| < 9e14 (a NaN stays NaN here).
+    */
+  def r4(x: Double): Double = gridFloor(x) / 10000d
+
+  def q4(x: Double): Long = gridFloor(x).toLong
+
+  private def gridFloor(x: Double): Double = math.floor(x * 10000d + 0.5d)
+
   /** SQL form for the DuckDB oracle — must mirror r4 exactly. */
   def r4sql(e: String): String = s"floor(($e)*10000 + 0.5)/10000"
+
+  /** SQL form for the DuckDB oracle — must mirror q4 exactly. */
+  def q4sql(e: String): String = s"CAST(floor(($e)*10000 + 0.5) AS BIGINT)"
 
   /** Order-independent float sum: quantize each element to the 1e-4
     * grid, accumulate as exact integers, scale back. A raw float
@@ -23,13 +41,13 @@ object Num {
     * (fixed-point money arithmetic, in effect). Keep |Σ|·1e4 < 2^63.
     */
   def sumQ4(c: Column): Column =
-    org.apache.spark.sql.functions.sum(floor(c * 10000d + 0.5d).cast("long")) / 10000d
+    org.apache.spark.sql.functions.sum(q4(c)) / 10000d
 
   /** SQL form for the DuckDB oracle — must mirror sumQ4 exactly
     * (the BIGINT cast also defuses DuckDB's SUM→HUGEINT widening).
     */
   def sumQ4sql(e: String): String =
-    s"sum(CAST(floor(($e)*10000 + 0.5) AS BIGINT)) / 10000.0"
+    s"sum(${q4sql(e)}) / 10000.0"
 
   /** The forecast-error reducer — every forecaster's MAE/RMSE (q21,
     * q35, q38, q42, q55–q60, q64, q65, the saved conformal band and the

@@ -770,8 +770,7 @@ object Similarity {
       .withColumn("j", expr("int(graft_argmin_dist2(cf, v))"))
       .select(
         expr("element_at(cellIds, j + 1)").as("cell"),
-        floor(expr("graft_l2(slice(cf, j * size(v) + 1, size(v)), v)") * 10000d + 0.5d)
-          .cast("long").as("d2q"))
+        Num.q4(expr("graft_l2(slice(cf, j * size(v) + 1, size(v)), v)")).as("d2q"))
       .groupBy("cell")
       .agg(count(lit(1)).as("n_vecs"), Num.r4(sum("d2q") / 10000d).as("inertia"))
   }
@@ -1026,13 +1025,12 @@ object Similarity {
     val e = vecs(spark, sfDir)
     var assign = cellAssignment(spark, sfDir, nCells)
       .select(col("vec_id"), col("cell").cast("long").as("cell"))
-    def r4(x: Double): Double = math.floor(x * 10000d + 0.5d) / 10000d
     var round = 0
     while (round <= maxRounds) {
       val counts = assign.groupBy("cell").agg(count(lit(1)).as("n")).collect()
         .map(r => r.getLong(0) -> r.getLong(1))
       val total = counts.map(_._2).sum.toDouble
-      val hotIds = counts.filter { case (_, n) => r4(n * nCells / total) > hotFactor }
+      val hotIds = counts.filter { case (_, n) => Num.r4(n * nCells / total) > hotFactor }
         .map(_._1).sorted
       if (hotIds.isEmpty) return assign
       if (round == maxRounds)

@@ -144,6 +144,32 @@ class ContractSpec extends AnyFunSuite {
       Map(("graft/util/Num.scala", "spark") -> 1, ("graft/util/Num.scala", "sql") -> 1))
   }
 
+  test("the 1e-4 grid step is written only in util/Num.scala") {
+    // Num's r4/q4 (Column, SQL and Double forms) are the one definition
+    // of floor(x·1e4 + 0.5) in both engines. The one exception is
+    // Relational.groupingSets' Spark-SQL text: it needs D-suffixed
+    // literals (Spark parses a bare 10000.0 as DECIMAL), which no Num
+    // SQL form (DuckDB text) reproduces.
+    val column = """10000d\s*\+\s*0\.5d""".r
+    val sql = """\*\s*10000(?:\.0+)?D?\s*\+\s*0\.5""".r
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val hits = files(new java.io.File("src/main/scala/graft"))
+      .filter(_.getName.endsWith(".scala")).flatMap { f =>
+        val path = f.getPath.stripPrefix("src/main/scala/")
+        val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        src.split("\n").toSeq.zipWithIndex.collect {
+          case (l, i) if path != "graft/util/Num.scala" &&
+              (column.findFirstIn(l).nonEmpty || sql.findFirstIn(l).nonEmpty) =>
+            s"$path:${i + 1}: ${l.trim}"
+        }
+      }
+    val (groupingSets, copies) = hits.partition(h =>
+      h.startsWith("graft/analytics/Relational.scala:") && h.contains("*10000.0D + 0.5D"))
+    if (copies.nonEmpty) fail(s"${copies.size} lines hand-write the step:\n${copies.mkString("\n")}")
+    assert(groupingSets.size === 1)
+  }
+
   test("query keys follow the short-prefix naming the bench JSON relies on") {
     // Bench truncates each name at the first '_' AND drops the uniform
     // leading 'q' for the driver's 2000-byte output window; the q-less

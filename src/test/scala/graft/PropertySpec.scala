@@ -1,13 +1,14 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
+import org.apache.spark.sql.functions.{array, col, expr, lit}
 import graft.timeseries.Coreset
+import graft.util.Num
 
 /** Property-style checks (seeded random instances) for the driver-side
   * numeric kernels.
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends SparkSuite {
 
   test("greedy coreset: distinct indices, correct size, valid range (100 random instances)") {
     val rnd = new Random(42)
@@ -62,6 +63,34 @@ class PropertySpec extends AnyFunSuite {
     // the float sum genuinely flips bits under permutation on this data —
     // the property is not vacuous
     assert(floatOrderSensitive > 0, "expected raw double sums to be order-sensitive")
+  }
+
+  test("Num's Double, Column and SQL forms of r4/q4 return the same bits (305 values)") {
+    // random doubles across magnitudes, negatives, and decimals sitting
+    // exactly on a .00005 boundary, where a round() would disagree; the
+    // SQL text runs through Spark's parser over a double column, as it
+    // runs through DuckDB's over the oracle's
+    val rnd = new Random(14)
+    val xs = Seq.fill(100)((rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(9))) ++
+      Seq.fill(100)(-rnd.nextDouble() * 1000) ++
+      Seq.fill(100)((rnd.nextInt(2000001) - 1000000) * 10 + 5).map(_ / 1e5) ++
+      Seq(0.0, -0.0, 0.00005, -0.00005, 2.49995)
+    import spark.implicits._
+    val byCol = xs.toDF("x").select(col("x"), Num.r4(col("x")), expr(Num.r4sql("x")),
+      Num.q4(col("x")), expr(Num.q4sql("x"))).collect()
+    val byLit = spark.range(1).select(array(xs.map(x => Num.r4(lit(x))): _*),
+      array(xs.map(x => Num.q4(lit(x))): _*)).head()
+    val litR4 = byLit.getSeq[Double](0)
+    val litQ4 = byLit.getSeq[Long](1)
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    assert(byCol.length === xs.size)
+    byCol.zipWithIndex.foreach { case (r, i) =>
+      val x = r.getDouble(0)
+      assert(bits(x) === bits(xs(i)))
+      val r4 = Num.r4(x)
+      assert(Seq(r.getDouble(1), r.getDouble(2), litR4(i)).map(bits) === Seq.fill(3)(bits(r4)), s"r4($x)")
+      assert(Seq(r.getLong(3), r.getLong(4), litQ4(i)) === Seq.fill(3)(Num.q4(x)), s"q4($x)")
+    }
   }
 
   test("LCG draws are deterministic, in [0,1), and salt-separated") {
