@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.analytics.Relational
 import graft.timeseries.{TsOracle, TsQueries}
-import graft.util.Num.{meanQ4sql, q4sql, r4sql, sumQ4sql}
+import graft.util.Num.{fromQ6sql, meanQ4sql, q4sql, q6sql, r4sql, sumQ4sql}
 
 /** Driver contract — see SURVEY.md §2 for the inventory. Every
   * implemented operator registers ONE `ops` entry: its builder and its
@@ -786,7 +786,7 @@ object SparkEntry {
       sh AS (
         SELECT source, n_docs, n_tok, tot,
                CAST(n_tok AS DOUBLE) / tot AS p_nat,
-               CAST(floor(pow(CAST(n_tok AS DOUBLE) / tot, 0.7) * 1000000 + 0.5) AS BIGINT) AS pa_q
+               ${q6sql("pow(CAST(n_tok AS DOUBLE) / tot, 0.7)")} AS pa_q
         FROM per, tot
       ), z AS (SELECT CAST(sum(pa_q) AS BIGINT) AS z FROM sh),
       plan4 AS (
@@ -1119,7 +1119,7 @@ object SparkEntry {
       sh AS (
         SELECT source, n_docs, n_tok,
                CAST(n_tok AS DOUBLE) / tot AS p_nat,
-               CAST(floor(pow(CAST(n_tok AS DOUBLE) / tot, 0.7) * 1000000 + 0.5) AS BIGINT) AS pa_q
+               ${q6sql("pow(CAST(n_tok AS DOUBLE) / tot, 0.7)")} AS pa_q
         FROM per, tot
       ), z AS (SELECT CAST(sum(pa_q) AS BIGINT) AS z FROM sh)
       SELECT source, n_docs, n_tok,
@@ -1233,7 +1233,7 @@ object SparkEntry {
       ), lg AS (
         SELECT d, d_conv, d_cens, CAST(n_risk AS BIGINT) AS n_risk,
                CASE WHEN d_conv > 0 AND d_conv < n_risk
-                    THEN CAST(floor(ln(1.0 - d_conv / CAST(n_risk AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)
+                    THEN ${q6sql("ln(1.0 - d_conv / CAST(n_risk AS DOUBLE))")}
                     ELSE 0 END AS lq,
                CASE WHEN d_conv = n_risk THEN 1 ELSE 0 END AS died
         FROM risk
@@ -1241,8 +1241,8 @@ object SparkEntry {
       SELECT d AS day, n_risk, d_conv, d_cens,
              CASE WHEN max(died) OVER (ORDER BY d
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1 THEN 0.0
-                  ELSE ${r4sql("""exp(sum(lq) OVER (ORDER BY d
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / 1000000.0)""")}
+                  ELSE ${r4sql(s"exp(${fromQ6sql("""sum(lq) OVER (ORDER BY d
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""")})")}
              END AS surv
       FROM lg""")),
     "qe13_audience_overlap" -> Op((s, d) => graft.analytics.Events.audienceOverlap(s, d), Sql(Qe13Sql)),

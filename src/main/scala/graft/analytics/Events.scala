@@ -605,11 +605,10 @@ object Events {
       // d_conv == n_risk means S hits exactly 0 (log undefined): carry a
       // "died out" flag through the cumulative window instead
       .withColumn("lq", when(col("d_conv") > 0 && col("d_conv") < col("n_risk"),
-        floor(log(lit(1.0) - col("d_conv") / col("n_risk")) * 1000000d + 0.5d).cast("long"))
-        .otherwise(0L))
+        Num.q6(log(lit(1.0) - col("d_conv") / col("n_risk")))).otherwise(0L))
       .withColumn("dead", max((col("d_conv") === col("n_risk")).cast("int")).over(wc))
       .withColumn("surv", when(col("dead") === 1, lit(0.0))
-        .otherwise(Num.r4(exp(sum("lq").over(wc) / 1000000d))))
+        .otherwise(Num.r4(exp(Num.fromQ6(sum("lq").over(wc))))))
       .select(col("d").as("day"), col("n_risk"), col("d_conv"), col("d_cens"), col("surv"))
   }
 

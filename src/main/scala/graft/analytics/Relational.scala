@@ -387,13 +387,10 @@ FROM zt GROUP BY 1"""
     Tables.lineitem(spark, sfDir)
       .select("l_returnflag", "l_linestatus", "l_extendedprice", "l_discount")
       .createOrReplaceTempView("lineitem_gs")
-    // double-suffixed literals: Spark SQL parses bare `10000.0` as
-    // DECIMAL, which would make the division decimal-typed (the
-    // DataFrame API's lit(10000.0) is a double)
     spark.sql(s"""
       SELECT coalesce(l_returnflag, 'ALL') AS rf,
              coalesce(l_linestatus, 'ALL') AS ls,
-             floor((sum(CAST(floor((l_extendedprice * (1.0D - l_discount))*10000.0D + 0.5D) AS BIGINT)) / 10000.0D)*10000.0D + 0.5D)/10000.0D AS revenue,
+             ${Num.r4expr(Num.sumQ4expr("l_extendedprice * (1.0D - l_discount)"))} AS revenue,
              count(*) AS n
       FROM lineitem_gs
       GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())""")

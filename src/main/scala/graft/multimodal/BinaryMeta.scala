@@ -44,16 +44,16 @@ object BinaryMeta {
       .as[MediaRow]
   }
 
-  /** Per-byte moment contributions floor((b/255)^k · 1e8 + 0.5) for
-    * k = 1..4 — 256-entry tables precomputed ONCE on the driver (q49's
-    * trig-table discipline: libm's pow never crosses an engine
-    * boundary). The moment sums are exact int64, so the fake decode is
+  /** Per-byte moment contributions (b/255)^k on the 1e-8 grid
+    * ([[Num.q8]]) for k = 1..4 — 256-entry tables precomputed ONCE on
+    * the driver (q49's trig-table discipline: libm's pow never crosses
+    * an engine boundary). The moment sums are exact int64, so the fake decode is
     * order-free and byte-for-byte mirrorable in SQL.
     */
   private[multimodal] val BytePow: Array[Array[Long]] =
     Array.tabulate(5, 256) { (k, b) =>
       if (k == 0) 0L
-      else math.floor(math.pow(b / 255.0, k.toDouble) * 1e8 + 0.5).toLong
+      else Num.q8(math.pow(b / 255.0, k.toDouble))
     }
 
   /** The SHARED featurize kernel: byte count, byte sum and the first
@@ -75,7 +75,7 @@ object BinaryMeta {
     }
     def moment(k: Int): Double =
       if (bytes.isEmpty) 0.0
-      else Num.r4(q(k) / 1e8 / bytes.length)
+      else Num.r4(Num.fromQ8(q(k)) / bytes.length)
     MediaFeatures(docId, bytes.length, s, moment(1), moment(2), moment(3), moment(4))
   }
 
@@ -295,10 +295,10 @@ object BinaryMeta {
       SELECT d.doc_id, $side AS width, CAST(d.h AS INT) AS height,
              CAST($side * d.h AS INT) AS n_pixels,
              coalesce(s.bsum, 0) AS byte_sum,
-             ${Num.r4sql(s"coalesce(s.q1, 0)/1e8/($side * d.h)")} AS f0,
-             ${Num.r4sql(s"coalesce(s.q2, 0)/1e8/($side * d.h)")} AS f1,
-             ${Num.r4sql(s"coalesce(s.q3, 0)/1e8/($side * d.h)")} AS f2,
-             ${Num.r4sql(s"coalesce(s.q4, 0)/1e8/($side * d.h)")} AS f3
+             ${Num.r4sql(s"${Num.fromQ8sql("coalesce(s.q1, 0)")}/($side * d.h)")} AS f0,
+             ${Num.r4sql(s"${Num.fromQ8sql("coalesce(s.q2, 0)")}/($side * d.h)")} AS f1,
+             ${Num.r4sql(s"${Num.fromQ8sql("coalesce(s.q3, 0)")}/($side * d.h)")} AS f2,
+             ${Num.r4sql(s"${Num.fromQ8sql("coalesce(s.q4, 0)")}/($side * d.h)")} AS f3
       FROM dims d LEFT JOIN sums s USING (doc_id)"""
   }
 
@@ -327,10 +327,10 @@ object BinaryMeta {
       )
       SELECT m.doc_id, CAST(m.len AS INT) AS n_bytes,
              coalesce(s.bsum, 0) AS byte_sum,
-             CASE WHEN m.len = 0 THEN 0.0 ELSE ${Num.r4sql("s.q1/1e8/m.len")} END AS f0,
-             CASE WHEN m.len = 0 THEN 0.0 ELSE ${Num.r4sql("s.q2/1e8/m.len")} END AS f1,
-             CASE WHEN m.len = 0 THEN 0.0 ELSE ${Num.r4sql("s.q3/1e8/m.len")} END AS f2,
-             CASE WHEN m.len = 0 THEN 0.0 ELSE ${Num.r4sql("s.q4/1e8/m.len")} END AS f3
+             CASE WHEN m.len = 0 THEN 0.0 ELSE ${Num.r4sql(s"${Num.fromQ8sql("s.q1")}/m.len")} END AS f0,
+             CASE WHEN m.len = 0 THEN 0.0 ELSE ${Num.r4sql(s"${Num.fromQ8sql("s.q2")}/m.len")} END AS f1,
+             CASE WHEN m.len = 0 THEN 0.0 ELSE ${Num.r4sql(s"${Num.fromQ8sql("s.q3")}/m.len")} END AS f2,
+             CASE WHEN m.len = 0 THEN 0.0 ELSE ${Num.r4sql(s"${Num.fromQ8sql("s.q4")}/m.len")} END AS f3
       FROM m LEFT JOIN sums s USING (doc_id)"""
   }
 

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Num
 
 /** Structured Streaming scoring path — the streaming twin of the batch
   * detection pipeline (SURVEY §2.G): events stream in, get bucketed into
@@ -139,28 +140,39 @@ object ScoreStream {
                   windowDur: String = "1 hour",
                   watermark: String = "2 hours"): DataFrame = {
     require(nBins >= 2, s"nBins=$nBins")
+    val (joined, nLive, psi) =
+      windowPsi(points.withWatermark("ts", watermark), "value", baseline, nBins, windowDur, Nil)
+    joined.select(col("window.start").as("w_start"), col("series"),
+      nLive.as("n_live"), psi.as("psi"))
+  }
+
+  /** The one PSI fold of [[driftStream]] and [[refitStream]] (see
+    * driftStream): the clamped bins' counts ride in ONE window
+    * aggregation with the caller's `aggs`. Returns the baseline-joined
+    * window rows, the live count Σ n_b and the PSI column.
+    */
+  private def windowPsi(rows: DataFrame, value: String, baseline: DataFrame, nBins: Int,
+                        windowDur: String, aggs: Seq[Column]): (DataFrame, Column, Column) = {
     val sm = 0.5
-    val ev = points.withWatermark("ts", watermark)
+    val binned = rows
       .join(broadcast(baseline.select("series", "mn", "mx")), "series")
       .withColumn("bin", when(col("mx") === col("mn"), 0L).otherwise(
         greatest(lit(0L), least(
-          floor((col("value") - col("mn")) / (col("mx") - col("mn")) * nBins),
+          floor((col(value) - col("mn")) / (col("mx") - col("mn")) * nBins),
           lit(nBins - 1L)))))
     val binAggs = (0 until nBins).map(b =>
-      sum(when(col("bin") === b, 1L).otherwise(0L)).as(s"n$b"))
-    val live = ev.groupBy(window(col("ts"), windowDur), col("series"))
+      sum(when(col("bin") === b, 1L).otherwise(0L)).as(s"n$b")) ++ aggs
+    val joined = binned.groupBy(window(col("ts"), windowDur), col("series"))
       .agg(binAggs.head, binAggs.tail: _*)
-    val joined = live.join(broadcast(baseline), "series")
+      .join(broadcast(baseline), "series")
     val tot0 = (0 until nBins).map(b => col(s"c$b")).reduce(_ + _)
     val tot1 = (0 until nBins).map(b => col(s"n$b")).reduce(_ + _)
     val terms = (0 until nBins).map { b =>
       val p = (col(s"c$b") + sm) / (tot0 + sm * nBins)
       val q = (col(s"n$b") + sm) / (tot1 + sm * nBins)
-      when(col(s"c$b") + col(s"n$b") > 0,
-        floor((p - q) * log(p / q) * 1000000d + 0.5d).cast("long")).otherwise(0L)
+      when(col(s"c$b") + col(s"n$b") > 0, Num.q6((p - q) * log(p / q))).otherwise(0L)
     }.reduce(_ + _)
-    joined.select(col("window.start").as("w_start"), col("series"),
-      tot1.as("n_live"), graft.util.Num.r4(terms / 1000000d).as("psi"))
+    (joined, tot1, Num.r4(Num.fromQ6(terms)))
   }
 
   /** Streaming incremental near-dup dedup — the streaming twin of batch
@@ -232,7 +244,6 @@ object ScoreStream {
     */
   private def qualitySignals(docs: DataFrame, minTok: Long, minStopRatio: Double,
                              maxDupFrac: Double, maxTopFrac: Double): DataFrame = {
-    import graft.util.Num
     val stop = graft.text.TextOps.Stopwords("en")
     docs
       .withColumn("toks", filter(split(col("text"), " "), t => t =!= ""))
@@ -276,7 +287,6 @@ object ScoreStream {
   def dsirStream(spark: SparkSession, modelPath: String,
                  docs: DataFrame): DataFrame = {
     import graft.timeseries.ModelStore
-    import graft.util.Num
     val rows = ModelStore.dsirLogRatios(spark, modelPath).orderBy("b").collect()
     // the scorer indexes by ARRAY POSITION and takes features mod
     // m.length, so the saved table must be the dense 0..n-1 bucket grid:
@@ -300,7 +310,7 @@ object ScoreStream {
         (acc, f) -> acc + lr[cast(${graft.text.TextCore.strHashExpr("f")} % $nB as int)])"""))
       .select(col("doc_id"), col("source"), col("ts"),
         size(col("feats")).cast("long").as("n_feat"),
-        Num.r4(col("slr") / 1000000d).as("log_w"),
+        Num.r4(Num.fromQ6(col("slr"))).as("log_w"),
         when(col("slr") > 0, 1L).otherwise(0L).as("selected"))
   }
 
@@ -432,36 +442,16 @@ object ScoreStream {
     require(nBins >= 2, s"nBins=$nBins")
     val baseline = ModelStore.refitBaseline(spark, modelPath)
     val scored = refitScoreStream(spark, modelPath, feats.withWatermark("ts", watermark))
-      .join(broadcast(baseline.select("series", "mn", "mx")), "series")
-      .withColumn("bin", when(col("mx") === col("mn"), 0L).otherwise(
-        greatest(lit(0L), least(
-          floor((col("y") - col("mn")) / (col("mx") - col("mn")) * nBins),
-          lit(nBins - 1L)))))
-      .withColumn("aes", graft.util.Num.absErrQ4(col("y"), col("p_stale")))
-      .withColumn("aer", graft.util.Num.absErrQ4(col("y"), col("p_refit")))
-    val binAggs = (0 until nBins).map(b =>
-      sum(when(col("bin") === b, 1L).otherwise(0L)).as(s"n$b"))
-    val aggs = binAggs ++ Seq(
+      .withColumn("aes", Num.absErrQ4(col("y"), col("p_stale")))
+      .withColumn("aer", Num.absErrQ4(col("y"), col("p_refit")))
+    val (joined, _, psi) = windowPsi(scored, "y", baseline, nBins, windowDur, Seq(
       count(lit(1)).as("n_live"), count(col("aes")).as("n_eval"),
-      sum("aes").as("saes"), sum("aer").as("saer"))
-    val live = scored.groupBy(window(col("ts"), windowDur), col("series"))
-      .agg(aggs.head, aggs.tail: _*)
-    val joined = live.join(broadcast(baseline), "series")
-    val sm = 0.5
-    val tot0 = (0 until nBins).map(b => col(s"c$b")).reduce(_ + _)
-    val tot1 = (0 until nBins).map(b => col(s"n$b")).reduce(_ + _)
-    val terms = (0 until nBins).map { b =>
-      val p = (col(s"c$b") + sm) / (tot0 + sm * nBins)
-      val q = (col(s"n$b") + sm) / (tot1 + sm * nBins)
-      when(col(s"c$b") + col(s"n$b") > 0,
-        floor((p - q) * log(p / q) * 1000000d + 0.5d).cast("long")).otherwise(0L)
-    }.reduce(_ + _)
-    val psi = graft.util.Num.r4(terms / 1000000d)
+      sum("aes").as("saes"), sum("aer").as("saer")))
     joined.select(col("window.start").as("w_start"), col("series"),
       psi.as("psi"), when(psi > thr, 1).otherwise(0).as("drifted"),
       col("n_live"), col("n_eval"),
-      graft.util.Num.maeQ4(col("saes"), col("n_eval")).as("mae_stale"),
-      graft.util.Num.maeQ4(col("saer"), col("n_eval")).as("mae_refit"))
+      Num.maeQ4(col("saes"), col("n_eval")).as("mae_stale"),
+      Num.maeQ4(col("saer"), col("n_eval")).as("mae_refit"))
   }
 
   /** Streaming span imputer — the serving half of the saved q55 model
@@ -503,7 +493,7 @@ object ScoreStream {
       .select(col("series"), col("ts"), col("y"), col("p"),
         (col("p") - col("qhatq") / 10000d).as("lo"),
         (col("p") + col("qhatq") / 10000d).as("hi"),
-        when(graft.util.Num.absErrQ4(col("y"), col("p")) > col("qhatq"), 1)
+        when(Num.absErrQ4(col("y"), col("p")) > col("qhatq"), 1)
           .otherwise(0).as("out_of_band"))
   }
 
@@ -536,7 +526,7 @@ object ScoreStream {
           s"s -> s.vid != qid)), 1, $k)"))
       .select(col("qid"), col("ts"), posexplode(col("topk")).as(Seq("p", "s")))
       .select(col("qid"), col("ts"), col("s.vid").as("vec_id"),
-        graft.util.Num.r4(col("s.d2")).as("ad2"), (col("p") + 1).cast("int").as("rnk"))
+        Num.r4(col("s.d2")).as("ad2"), (col("p") + 1).cast("int").as("rnk"))
   }
 
   /** Streaming IVF retrieval over a SAVED index — the celled sibling of
@@ -595,7 +585,7 @@ object ScoreStream {
       .select(col("window.start").as("win_start"), col("qid"),
         posexplode(col("topk")).as(Seq("p", "s")))
       .select(col("win_start"), col("qid"), col("s.id").as("vec_id"),
-        graft.util.Num.r4(col("s.cos")).as("cos"),
+        Num.r4(col("s.cos")).as("cos"),
         (col("p") + 1).cast("int").as("rnk"))
   }
 
@@ -704,6 +694,10 @@ object ScoreStream {
     val b = Similarity.Bm25B
     val oneMb = 1 - Similarity.Bm25B
     val rrfK = Similarity.RrfK
+    val bm25Term = s"""ln(1.0D + (n_docs - df + 0.5D) / (df + 0.5D))
+      * ((element_at(tfs, i+1) * ${k1p1}D) /
+         (element_at(tfs, i+1) + ${k1}D * (${oneMb}D + ${b}D *
+           (element_at(dlens, i+1) / avgdlen))))"""
     val wmq = queries.withWatermark("ts", watermark)
     val post = ModelStore.bm25PostingsPacked(spark, modelPath, fallbackMaxDfShare)
     // the shared candidate-entry shape: lex rows carry scl (int64 BM25
@@ -714,12 +708,7 @@ object ScoreStream {
       .select(col("qid"), col("ts"), expr(
         s"""filter(transform(doc_ids, (d, i) -> named_struct(
               'id', d,
-              'scl', CAST(floor(
-                ln(1.0D + (n_docs - df + 0.5D) / (df + 0.5D))
-                * ((element_at(tfs, i+1) * ${k1p1}D) /
-                   (element_at(tfs, i+1) + ${k1}D * (${oneMb}D + ${b}D *
-                     (element_at(dlens, i+1) / avgdlen))))
-                * 1000000D + 0.5D) AS BIGINT),
+              'scl', ${Num.q6expr(bm25Term)},
               'scd', CAST(NULL AS DOUBLE))),
             e -> e.id != qid)""").as("entries"))
     val cents = ModelStore.ivfCentroidsPacked(spark, modelPath)
@@ -805,7 +794,7 @@ object ScoreStream {
       .select(col("win_start"), col("qid"), col("s.id").as("doc_id"),
         col("s.lr").cast("int").as("lex_rank"),
         col("s.vr").cast("int").as("vec_rank"),
-        (floor(col("s.rrf") * 1000000d + 0.5d) / 1000000d).as("rrf"),
+        Num.r6(col("s.rrf")).as("rrf"),
         (col("p") + 1).cast("int").as("rnk"))
   }
 
@@ -931,7 +920,7 @@ object ScoreStream {
         expr("aggregate(transform(toks, t -> length(t)), " +
           "CAST(0 AS BIGINT), (a, x) -> a + CAST(x AS BIGINT))").as("n_char"))
       .select(col("doc_id"), col("ts"), col("n_tok"), col("n_subword"),
-        graft.util.Num.r4(col("n_subword") / col("n_char")).as("subword_per_char"))
+        Num.r4(col("n_subword") / col("n_char")).as("subword_per_char"))
   }
 
   /** Streaming twin of the BATCH detection scorer, wired to a
@@ -959,7 +948,7 @@ object ScoreStream {
       .agg(max("pscore").as("score"))
       .crossJoin(broadcast(thr))
       .select(col("series"), col("win"),
-        graft.util.Num.r4(col("score")).as("score"),
+        Num.r4(col("score")).as("score"),
         when(col("score") > col("threshold"), 1).otherwise(0).as("pred"))
   }
 

@@ -473,7 +473,7 @@ object Dedup {
         // the next round makes (contrib join + carry-through) share it
         .localCheckpoint(eager = false)
     }
-    pr.select(col("doc_id"), col("deg"), (col("prq") / 100000000d).as("pr"))
+    pr.select(col("doc_id"), col("deg"), Num.fromQ8(col("prq")).as("pr"))
   }
 
   /** The CC loop over an explicit symmetric edge list (doc_a, doc_b) —

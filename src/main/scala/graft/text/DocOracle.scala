@@ -3,10 +3,10 @@ package graft.text
 /** DuckDB oracle SQL for the document (dedup/text/vector) operators,
   * mirroring Dedup/TextOps/Similarity stage-for-stage. Hashes are
   * md5-prefix based so both engines agree exactly; floats are quantized
-  * through `Num`'s SQL forms of the 1e-4 grid.
+  * through `Num`'s SQL forms of the 1e-4, 1e-6 and 1e-8 grids.
   */
 object DocOracle {
-  import graft.util.Num.{q4sql, r4sql => r4}
+  import graft.util.Num.{fromQ6sql, fromQ8sql, q4sql, q6sql, r4sql => r4, r6sql}
 
   /** 32-bit hash identical to TextCore.strHash. */
   private def h(e: String): String = s"CAST('0x' || substr(md5($e), 1, 8) AS BIGINT)"
@@ -477,7 +477,7 @@ pr0 AS MATERIALIZED (
            iters: Int = 3, damping: Double = 0.85): String =
     toksCte + shinglesCte(3, "sh3") + lshEdgesCte(nPerm, bandRows) +
       prRoundsCte(iters, damping) + s"""
-SELECT doc_id, deg, prq / 100000000.0 AS pr FROM pr$iters"""
+SELECT doc_id, deg, ${fromQ8sql("prq")} AS pr FROM pr$iters"""
 
   /** Mirrors Dedup.canonical — qd6's recursive labels + qd14's rank
     * rounds over the one shared edges CTE, per-cluster top-1.
@@ -487,7 +487,7 @@ SELECT doc_id, deg, prq / 100000000.0 AS pr FROM pr$iters"""
     val base = toksCte + shinglesCte(3, "sh3") + lshEdgesCte(nPerm, bandRows) + ccCte +
       prRoundsCte(iters, damping) + s""",
 members AS (
-  SELECT l.cluster_id, l.doc_id, p.prq / 100000000.0 AS pr, d.n_chars
+  SELECT l.cluster_id, l.doc_id, ${fromQ8sql("p.prq")} AS pr, d.n_chars
   FROM lab l JOIN pr$iters p USING (doc_id) JOIN documents d USING (doc_id)
 )
 SELECT cluster_id, doc_id AS canonical_doc, sz AS cluster_size, pr AS canonical_pr
@@ -531,12 +531,12 @@ SELECT vec_a, vec_b, ${r4("cos")} AS cos FROM pairs WHERE cos >= $thr"""
     */
   def qv8(minCos: Double = 0.2): String = vecsCte + s"""
 , comps AS (
-  SELECT label, i AS pos, CAST(floor(v[i]*1000000 + 0.5) AS BIGINT) AS xq
+  SELECT label, i AS pos, ${q6sql("v[i]")} AS xq
   FROM vecs, range(1, 65) t(i)
 ), cent AS (
   SELECT label, list(c ORDER BY pos) AS cv
   FROM (
-    SELECT label, pos, floor(sum(xq) / count(*) + 0.5) / 1000000.0 AS c
+    SELECT label, pos, ${fromQ6sql("floor(sum(xq) / count(*) + 0.5)")} AS c
     FROM comps GROUP BY label, pos
   ) GROUP BY label
 ), centn AS (
@@ -556,10 +556,10 @@ FROM scored"""
   def qv9(minCos: Double = 0.98): String = vecsCte + s"""
 , comps AS (
   SELECT label, CAST(vec_id % 2 AS INT) AS half, i AS pos,
-         CAST(floor(v[i]*1000000 + 0.5) AS BIGINT) AS xq
+         ${q6sql("v[i]")} AS xq
   FROM vecs, range(1, 65) t(i)
 ), cc AS (
-  SELECT label, half, pos, floor(sum(xq) / count(*) + 0.5) / 1000000.0 AS c,
+  SELECT label, half, pos, ${fromQ6sql("floor(sum(xq) / count(*) + 0.5)")} AS c,
          count(*) AS ng
   FROM comps GROUP BY label, half, pos
 ), cent AS (
@@ -923,7 +923,7 @@ SELECT qid, vec_id, ${r4("dot")} AS dot, rnk FROM ranked WHERE rnk <= $k"""
     def cent(a: String, c: String): String = s"""
 , ${c}c AS (
   SELECT cell, i AS pos,
-         floor(sum(CAST(floor(v[i]*1000000 + 0.5) AS BIGINT)) / count(*) + 0.5) / 1000000.0 AS c
+         ${fromQ6sql(s"floor(sum(${q6sql("v[i]")}) / count(*) + 0.5)")} AS c
   FROM $a, range(1, 65) t(i) GROUP BY cell, i
 ), $c AS (
   SELECT cell, list(c ORDER BY pos) AS cv FROM ${c}c GROUP BY cell
@@ -985,8 +985,7 @@ SELECT qid, vec_id, ${r4("cos")} AS cos, rnk FROM ranked WHERE rnk <= $k"""
   SELECT list(mn ORDER BY pos) AS mn, list(s ORDER BY pos) AS sc FROM scp
 ), rec AS (
   SELECT vec_id, list_transform(range(1, 65), d ->
-    floor((qz.mn[d] + least(255.0, greatest(0.0, floor((v[d] - qz.mn[d]) / qz.sc[d] + 0.5)))
-           * qz.sc[d]) * 1000000 + 0.5) / 1000000.0) AS rv
+    ${r6sql("qz.mn[d] + least(255.0, greatest(0.0, floor((v[d] - qz.mn[d]) / qz.sc[d] + 0.5))) * qz.sc[d]")}) AS rv
   FROM vecs, qz
 ), q AS (SELECT vec_id AS qid, v AS av FROM vecs
          WHERE vec_id % 100 = 0 AND vec_id < ${100L * maxQueries}),
@@ -1129,7 +1128,7 @@ FROM exact e LEFT JOIN ivfk i ON i.qid = e.qid AND i.vec_id = e.vec_id""")
 SELECT qid,
        CAST(sum(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
        ${r4(s"CAST(sum(rel * (CASE rnk $discCase ELSE 0 END)) AS BIGINT) / $idcg")} AS ndcg,
-       ${r4("max(CASE WHEN rel > 0 THEN 1000000 // rnk ELSE 0 END) / 1000000.0")} AS rr
+       ${r4(fromQ6sql("max(CASE WHEN rel > 0 THEN 1000000 // rnk ELSE 0 END)"))} AS rr
 FROM scored19 GROUP BY qid""")
   }
 
@@ -1714,7 +1713,7 @@ FROM r$k"""
     val other = s"n_chars - (${ks.mkString(" + ")})"
     val all = ks :+ "ko"
     def termQ(k: String) =
-      s"CASE WHEN $k > 0 THEN CAST(floor(-($k / CAST(n_chars AS DOUBLE)) * log2($k / CAST(n_chars AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) ELSE 0 END"
+      s"CASE WHEN $k > 0 THEN ${q6sql(s"-($k / CAST(n_chars AS DOUBLE)) * log2($k / CAST(n_chars AS DOUBLE))")} ELSE 0 END"
     s"""
 WITH c0 AS (
   SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars, ${counts.mkString(",\n         ")}
@@ -1722,8 +1721,8 @@ WITH c0 AS (
 ), c1 AS (SELECT *, $other AS ko FROM c0)
 SELECT doc_id, n_chars,
        ${all.map(k => s"(CASE WHEN $k > 0 THEN 1 ELSE 0 END)").mkString(" + ")} AS n_distinct,
-       ${r4(s"(${all.map(termQ).mkString(" + ")}) / 1000000.0")} AS entropy,
-       CASE WHEN ${r4(s"(${all.map(termQ).mkString(" + ")}) / 1000000.0")} < $minBits THEN 1 ELSE 0 END AS low_diversity
+       ${r4(fromQ6sql(s"(${all.map(termQ).mkString(" + ")})"))} AS entropy,
+       CASE WHEN ${r4(fromQ6sql(s"(${all.map(termQ).mkString(" + ")})"))} < $minBits THEN 1 ELSE 0 END AS low_diversity
 FROM c1"""
   }
 
@@ -1749,8 +1748,7 @@ fs AS (
   FROM fb GROUP BY b
 ), tot AS (SELECT CAST(sum(ct) AS BIGINT) AS tt, CAST(sum(cr) AS BIGINT) AS tr FROM cnt),
 lr AS (
-  SELECT b, CAST(floor((ln((ct + 1.0) / (tt + ${nBuckets}.0)) -
-                        ln((cr + 1.0) / (tr + ${nBuckets}.0))) * 1000000 + 0.5) AS BIGINT) AS lrq
+  SELECT b, ${q6sql(s"ln((ct + 1.0) / (tt + ${nBuckets}.0)) - ln((cr + 1.0) / (tr + ${nBuckets}.0))")} AS lrq
   FROM cnt, tot
 ), pd AS (
   SELECT f.doc_id, count(*) AS n_feat, CAST(sum(l.lrq) AS BIGINT) AS slr
@@ -1759,7 +1757,7 @@ lr AS (
 )
 SELECT d.doc_id, d.source,
        coalesce(p.n_feat, 0) AS n_feat,
-       ${r4("coalesce(p.slr, 0) / 1000000.0")} AS log_w,
+       ${r4(fromQ6sql("coalesce(p.slr, 0)"))} AS log_w,
        CAST(CASE WHEN coalesce(p.slr, 0) > 0 THEN 1 ELSE 0 END AS BIGINT) AS selected
 FROM ds d LEFT JOIN pd p USING (doc_id) WHERE d.source <> '$target'"""
 
@@ -2000,6 +1998,8 @@ GROUP BY a.cell"""
                            fallbackShare: Long = 1L): String = {
     val k1 = graft.vector.Similarity.Bm25K1
     val b = graft.vector.Similarity.Bm25B
+    val bm25 = s"""ln(CAST(1 AS DOUBLE) + (CAST(s.n_docs - q.df AS DOUBLE) + 0.5) / (CAST(q.df AS DOUBLE) + 0.5))
+           * ((CAST(t.tf AS DOUBLE) * ${k1 + 1}) / (t.tf + $k1 * (${1 - b} + $b * (d.dlen / s.avgdlen))))"""
     toksCte + s"""
 , vecs AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
@@ -2028,10 +2028,7 @@ stats AS (
   ) WHERE trm <= $nTerms
 ), sc AS (
   SELECT q.qid, t.doc_id,
-         sum(CAST(floor(
-           ln(CAST(1 AS DOUBLE) + (CAST(s.n_docs - q.df AS DOUBLE) + 0.5) / (CAST(q.df AS DOUBLE) + 0.5))
-           * ((CAST(t.tf AS DOUBLE) * ${k1 + 1}) / (t.tf + $k1 * (${1 - b} + $b * (d.dlen / s.avgdlen))))
-           * 1000000 + 0.5) AS BIGINT)) AS bm25q
+         sum(${q6sql(bm25)}) AS bm25q
   FROM qt q JOIN tf t ON q.tok = t.tok AND t.doc_id <> q.qid
   JOIN dlen d ON t.doc_id = d.doc_id CROSS JOIN stats s
   GROUP BY q.qid, t.doc_id
@@ -2064,10 +2061,10 @@ stats AS (
 )"""
   }
 
-  private def hybridFusionSql(k: Int): String = hybridFusedCte(k) + """
+  private def hybridFusionSql(k: Int): String = hybridFusedCte(k) + s"""
 SELECT qid, doc_id, coalesce(lex_rank, 0) AS lex_rank,
        coalesce(vec_rank, 0) AS vec_rank,
-       floor(rrf * 1000000 + 0.5) / 1000000 AS rrf, rnk
+       ${r6sql("rrf")} AS rrf, rnk
 FROM hyb"""
 
   def qv18(k: Int = 10, nTerms: Int = 3, depth: Int = 20,
@@ -2175,7 +2172,7 @@ centroids AS (
 SELECT system, qid,
        CAST(sum(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
        ${r4(s"CAST(sum(rel * (CASE rnk $discCase ELSE 0 END)) AS BIGINT) / $idcg")} AS ndcg,
-       ${r4("max(CASE WHEN rel > 0 THEN 1000000 // rnk ELSE 0 END) / 1000000.0")} AS rr
+       ${r4(fromQ6sql("max(CASE WHEN rel > 0 THEN 1000000 // rnk ELSE 0 END)"))} AS rr
 FROM s23 GROUP BY system, qid"""
   }
 }

@@ -542,13 +542,12 @@ object TextOps {
       (length(col("text")) - length(translate(col("text"), c, ""))).cast("long")
     val counts = entropyAlphabet.map(cnt) :+
       (length(col("text")).cast("long") - entropyAlphabet.map(cnt).reduce(_ + _))
-    def termQ(k: Column): Column = when(k > 0,
-      floor(-(k / n) * log(2.0, k / n) * 1000000d + 0.5d).cast("long")).otherwise(0L)
+    def termQ(k: Column): Column = when(k > 0, Num.q6(-(k / n) * log(2.0, k / n))).otherwise(0L)
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"), length(col("text")).cast("long").as("n_chars"))
       .select(col("doc_id"), col("n_chars"),
         counts.map(c => when(c > 0, 1).otherwise(0)).reduce(_ + _).as("n_distinct"),
-        Num.r4(counts.map(termQ).reduce(_ + _) / 1000000d).as("entropy"))
+        Num.r4(Num.fromQ6(counts.map(termQ).reduce(_ + _))).as("entropy"))
       .withColumn("low_diversity", when(col("entropy") < minBits, 1).otherwise(0))
   }
 
@@ -589,7 +588,7 @@ object TextOps {
     val tot = per.agg(sum("n_tok").as("tot"))
     val sh = per.crossJoin(broadcast(tot))
       .withColumn("p_nat", col("n_tok").cast("double") / col("tot"))
-      .withColumn("pa_q", floor(pow(col("p_nat"), alpha) * 1000000d + 0.5d).cast("long"))
+      .withColumn("pa_q", Num.q6(pow(col("p_nat"), alpha)))
     val z = sh.agg(sum("pa_q").as("z"))
     sh.crossJoin(broadcast(z))
   }
@@ -905,9 +904,8 @@ object TextOps {
       .localCheckpoint(eager = false)
     val tot = dense.agg(sum("ct").as("tt"), sum("cr").as("tr"))
     dense.crossJoin(broadcast(tot)).select(col("b"),
-      floor((log((col("ct") + lit(1d)) / (col("tt") + lit(nBuckets.toDouble))) -
-             log((col("cr") + lit(1d)) / (col("tr") + lit(nBuckets.toDouble))))
-        * 1000000d + 0.5d).cast("long").as("lrq"))
+      Num.q6(log((col("ct") + lit(1d)) / (col("tt") + lit(nBuckets.toDouble))) -
+        log((col("cr") + lit(1d)) / (col("tr") + lit(nBuckets.toDouble)))).as("lrq"))
   }
 
   def dsirWeights(spark: SparkSession, sfDir: String, target: String = "src0",
@@ -921,7 +919,7 @@ object TextOps {
       .join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("source"),
         coalesce(col("n_feat"), lit(0L)).as("n_feat"),
-        Num.r4(coalesce(col("slr"), lit(0L)) / 1000000d).as("log_w"),
+        Num.r4(Num.fromQ6(coalesce(col("slr"), lit(0L)))).as("log_w"),
         when(coalesce(col("slr"), lit(0L)) > 0, 1L).otherwise(0L).as("selected"))
   }
 

@@ -152,8 +152,7 @@ object Forecast {
         lit("seasonal_naive").as("variant"), col("y"), col("x3").as("p")))
     val yb = col("syq") / 10000d / col("ny")
     val smTerm = when(abs(col("p")) + abs(col("y")) === 0.0, 0L)
-      .otherwise(floor(lit(2d) * abs(col("y") - col("p")) /
-        (abs(col("p")) + abs(col("y"))) * 1000000d + 0.5d).cast("long"))
+      .otherwise(Num.q6(lit(2d) * abs(col("y") - col("p")) / (abs(col("p")) + abs(col("y")))))
     both.join(ybar, "series")
       .groupBy("series", "variant").agg(
         count(lit(1)).as("n"),
@@ -162,7 +161,7 @@ object Forecast {
         sum(Num.sqErrQ4(col("y"), col("p"))).as("sse"),
         sum(Num.q4((col("y") - yb) * (col("y") - yb))).as("ssy"))
       .select(col("series"), col("variant"), col("n"),
-        Num.r4(col("ssm") / 1000000d / col("n") * 100d).as("smape"),
+        Num.r4(Num.fromQ6(col("ssm")) / col("n") * 100d).as("smape"),
         Num.maeQ4(col("sae"), col("n")).as("mae"),
         Num.r4(Num.meanQ4(col("sse"), col("n"))).as("mse"),
         Num.rmseQ4(col("sse"), col("n")).as("rmse"),

@@ -111,9 +111,8 @@ object MllibForecast {
 
   // fitted-model session cache (the model analogue of StageCache: a
   // GBTRegressionModel is a few KB of tree arrays, no RDD references)
-  private val gbtCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int, Long),
-    org.apache.spark.ml.regression.GBTRegressionModel]()
+  private val gbtCache = new graft.util.SessionMemo[
+    (String, Int, Int, Long), org.apache.spark.ml.regression.GBTRegressionModel]
 
   /** Fit (or reuse) the session's q61 model; None on an empty train
     * split (EmptyInputSpec's sparse edge — GBT.fit throws on empty).
@@ -121,23 +120,15 @@ object MllibForecast {
   private[graft] def gbtModel(spark: SparkSession, sfDir: String,
                                    maxIter: Int, maxDepth: Int, seed: Long)
       : Option[org.apache.spark.ml.regression.GBTRegressionModel] = {
-    // StageCache's eviction discipline: entries pin their SparkSession,
-    // so sweep stopped sessions on every access (weak refs can't work —
-    // see StageCache's lifecycle note)
-    val it = gbtCache.keySet().iterator()
-    while (it.hasNext) { if (it.next()._1.sparkContext.isStopped) it.remove() }
-    val key = (spark, sfDir, maxIter, maxDepth, seed)
-    val hit = gbtCache.get(key)
-    if (hit != null) return Some(hit)
-    val b = gbtZFrame(Forecast.featureBase(spark, sfDir), gbtStats(spark, sfDir))
-    val train = gbtAssembler.transform(b.filter(col("t") < col("tsplit")))
-    if (train.isEmpty) None
-    else {
-      val gbt = new GBTRegressor()
+    val key = (sfDir, maxIter, maxDepth, seed)
+    gbtCache.get(spark, key).orElse {
+      val b = gbtZFrame(Forecast.featureBase(spark, sfDir), gbtStats(spark, sfDir))
+      val train = gbtAssembler.transform(b.filter(col("t") < col("tsplit")))
+      if (train.isEmpty) None
+      else Some(gbtCache.getOrElseUpdate(spark, key)(new GBTRegressor()
         .setFeaturesCol("features").setLabelCol("zy")
         .setMaxIter(maxIter).setMaxDepth(maxDepth).setSeed(seed)
-      gbtCache.putIfAbsent(key, gbt.fit(train))
-      Some(gbtCache.get(key))
+        .fit(train)))
     }
   }
 

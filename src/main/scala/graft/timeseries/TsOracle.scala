@@ -7,7 +7,12 @@ package graft.timeseries
 object TsOracle {
   import TsCore._
   import graft.util.Num.{r4sql => r4, q4sql, sumQ4sql, absErrQ4sql, sqErrQ4sql, meanQ4sql,
-    maeQ4sql, rmseQ4sql}
+    maeQ4sql, rmseQ4sql, q6sql, fromQ6sql}
+
+  /** The smoothed-PSI fold over per-bin (p, q) rows — mirrors
+    * TsQueries.psiOf's 1e-6 pre-sum terms; shared by q62 and qp7.
+    */
+  private val psiSql = r4(fromQ6sql(s"sum(${q6sql("(p - q) * ln(p / q)")})"))
 
   /** The `mae`/`rmse` select items of Num's forecast-error reducer over
     * the grouped rows' (y, p) pairs.
@@ -1222,7 +1227,7 @@ ${olsCtes(identity, "train", Seq("series"))}"""
   FROM drcnt62 WINDOW ws AS (PARTITION BY series)
 ), psi62 AS (
   SELECT series,
-    ${r4("sum(CAST(floor((p - q) * ln(p / q) * 1000000 + 0.5) AS BIGINT)) / 1000000.0")} AS psi
+    $psiSql AS psi
   FROM drterm62 GROUP BY series
 )
 SELECT r.series, s.psi, CASE WHEN s.psi > $thr THEN 1 ELSE 0 END AS drifted,
@@ -1267,7 +1272,7 @@ FROM testf GROUP BY series"""
 ), agg64 AS (
   SELECT b.series, b.variant, count(*) AS n,
     sum(CASE WHEN abs(b.p) + abs(b.y) = 0 THEN CAST(0 AS BIGINT)
-         ELSE CAST(floor(2 * abs(b.y - b.p) / (abs(b.p) + abs(b.y)) * 1000000 + 0.5) AS BIGINT) END) AS ssm,
+         ELSE ${q6sql("2 * abs(b.y - b.p) / (abs(b.p) + abs(b.y))")} END) AS ssm,
     sum(${absErrQ4sql("b.y", "b.p")}) AS sae,
     sum(${sqErrQ4sql("b.y", "b.p")}) AS sse,
     sum(${q4sql("(b.y - yb.syq / 10000.0 / yb.ny) * (b.y - yb.syq / 10000.0 / yb.ny)")}) AS ssy
@@ -1275,7 +1280,7 @@ FROM testf GROUP BY series"""
   GROUP BY b.series, b.variant
 )
 SELECT series, variant, n,
-  ${r4("ssm / 1000000.0 / n * 100")} AS smape,
+  ${r4(s"${fromQ6sql("ssm")} / n * 100")} AS smape,
   ${maeQ4sql("sae", "n")} AS mae,
   ${r4(meanQ4sql("sse", "n"))} AS mse,
   ${rmseQ4sql("sse", "n")} AS rmse,
@@ -1490,7 +1495,7 @@ FROM medf"""
   FROM drcnt WINDOW ws AS (PARTITION BY series)
 )
 SELECT series, CAST(max(t0) AS BIGINT) AS n_first, CAST(max(t1) AS BIGINT) AS n_second,
-  ${r4("sum(CAST(floor((p - q) * ln(p / q) * 1000000 + 0.5) AS BIGINT)) / 1000000.0")} AS psi
+  $psiSql AS psi
 FROM drterm GROUP BY series"""
 
   /** Classical additive decomposition — mirrors Forecast.decompose

@@ -183,11 +183,10 @@ object TsQueries {
       .withColumn("t1", sum("n1").over(wp))
       .withColumn("p", (col("n0") + sm) / (col("t0") + sm * nBins))
       .withColumn("q", (col("n1") + sm) / (col("t1") + sm * nBins))
-      .withColumn("termq",
-        floor((col("p") - col("q")) * log(col("p") / col("q")) * 1000000d + 0.5d).cast("long"))
+      .withColumn("termq", Num.q6((col("p") - col("q")) * log(col("p") / col("q"))))
     terms.groupBy("series").agg(
       max("t0").as("n_first"), max("t1").as("n_second"),
-      Num.r4(sum("termq") / 1000000d).as("psi"))
+      Num.r4(Num.fromQ6(sum("termq"))).as("psi"))
   }
 
   /** The train-time drift baseline streaming.driftStream monitors

@@ -3,35 +3,64 @@ package graft.util
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{abs, floor, sqrt}
 
-/** Engine-agnostic 4-dp quantization — the ONE definition of the 1e-4
-  * grid for both engines: every Spark column, DuckDB oracle text and
-  * driver-side scalar that lands a value on the grid calls a form here.
-  * `round()` semantics differ between Spark (BigDecimal HALF_UP on the
-  * decimal expansion) and DuckDB (multiply + C round), which flips the
-  * last digit when a value lands on a .00005 boundary. floor(x*1e4 +
-  * 0.5)/1e4 runs the identical IEEE ops in both engines, so identical
-  * inputs give identical outputs. [[r4]] lands a value on the grid as a
-  * double, [[q4]] as an exact int64 (the operand of order-free sums).
+/** Engine-agnostic fixed-point quantization — the ONE definition of
+  * every grid scale (1e-4, 1e-6, 1e-8) in every dialect: Spark Columns,
+  * DuckDB oracle text, Spark-SQL text (`spark.sql`, `expr`, `transform`
+  * lambdas) and driver-side scalars all call a form here. `round()`
+  * semantics differ between Spark (BigDecimal HALF_UP on the decimal
+  * expansion) and DuckDB (multiply + C round), which flips the last
+  * digit when a value lands on a half boundary. The step floor(x·S +
+  * 0.5) runs the identical IEEE ops in both engines, so identical inputs
+  * give identical outputs; each dialect writes it once below, for the
+  * fixed scales S4/S6/S8. 1e-4 is the output grid ([[r4]] lands a value
+  * on it as a double, [[q4]] as an exact int64, the operand of
+  * order-free sums); 1e-6 holds pre-sum terms that need more digits
+  * (PSI, entropy and BM25 terms, log-ratios, centroid components); 1e-8
+  * holds BinaryMeta's byte-moment tables and Dedup's PageRank.
   */
 object Num {
-  def r4(c: Column): Column = floor(c * 10000d + 0.5d) / 10000d
+  private val S4 = 10000
+  private val S6 = 1000000
+  private val S8 = 100000000
 
-  def q4(c: Column): Column = floor(c * 10000d + 0.5d).cast("long")
+  private def step(x: Column, s: Int): Column = floor(x * s.toDouble + 0.5d)
+  private def step(x: Double, s: Int): Double = math.floor(x * s + 0.5d)
+  private def stepSql(x: String, s: Int): String = s"floor($x*$s + 0.5)"
+  private def stepExpr(x: String, s: Int): String = s"floor($x*${s}D + 0.5D)"
+  private def qSql(x: String, s: Int): String = s"CAST(${stepSql(x, s)} AS BIGINT)"
 
-  /** Driver-side r4 and q4: bit-identical to `r4(lit(x))` / `q4(lit(x))`
+  def r4(c: Column): Column = step(c, S4) / S4.toDouble
+  def q4(c: Column): Column = step(c, S4).cast("long")
+  def r6(c: Column): Column = step(c, S6) / S6.toDouble
+  def q6(c: Column): Column = step(c, S6).cast("long")
+
+  /** A 1e-6- or 1e-8-grid value (or an exact sum of them) as a double. */
+  def fromQ6(s: Column): Column = s / S6.toDouble
+  def fromQ8(s: Column): Column = s / S8.toDouble
+
+  /** Driver-side forms: bit-identical to the Column forms over `lit(x)`
     * for every finite |x| < 9e14 (a NaN stays NaN here).
     */
-  def r4(x: Double): Double = gridFloor(x) / 10000d
+  def r4(x: Double): Double = step(x, S4) / S4
+  def q4(x: Double): Long = step(x, S4).toLong
+  def q8(x: Double): Long = step(x, S8).toLong
+  def fromQ8(s: Long): Double = s / S8.toDouble
 
-  def q4(x: Double): Long = gridFloor(x).toLong
+  /** DuckDB SQL forms — each mirrors its Column form exactly. */
+  def r4sql(e: String): String = s"${stepSql(s"($e)", S4)}/$S4"
+  def q4sql(e: String): String = qSql(s"($e)", S4)
+  def r6sql(e: String): String = s"${stepSql(s"($e)", S6)}/$S6"
+  def q6sql(e: String): String = qSql(s"($e)", S6)
+  def fromQ6sql(s: String): String = s"$s / ${S6}.0"
+  def fromQ8sql(s: String): String = s"$s / ${S8}.0"
 
-  private def gridFloor(x: Double): Double = math.floor(x * 10000d + 0.5d)
-
-  /** SQL form for the DuckDB oracle — must mirror r4 exactly. */
-  def r4sql(e: String): String = s"floor(($e)*10000 + 0.5)/10000"
-
-  /** SQL form for the DuckDB oracle — must mirror q4 exactly. */
-  def q4sql(e: String): String = s"CAST(floor(($e)*10000 + 0.5) AS BIGINT)"
+  /** Spark-SQL text forms: D-suffixed literals, because Spark SQL parses
+    * a bare `10000.0` as DECIMAL (the Column forms' literals are doubles).
+    */
+  def r4expr(e: String): String = s"${stepExpr(s"($e)", S4)}/${S4}D"
+  def sumQ4expr(e: String): String = s"sum(CAST(${stepExpr(s"($e)", S4)} AS BIGINT)) / ${S4}D"
+  def r6expr(e: String): String = s"${stepExpr(s"($e)", S6)}/${S6}D"
+  def q6expr(e: String): String = s"CAST(${stepExpr(s"($e)", S6)} AS BIGINT)"
 
   /** Order-independent float sum: quantize each element to the 1e-4
     * grid, accumulate as exact integers, scale back. A raw float
@@ -63,9 +92,9 @@ object Num {
     * ranks [[absErrQ4]] residuals, so a served band flag compares on the
     * same grid. Keep Σ|term|·1e4 < 2^63 per group.
     */
-  def absErrQ4(y: Column, p: Column): Column = floor(abs(y - p) * 10000d + 0.5d).cast("long")
+  def absErrQ4(y: Column, p: Column): Column = q4(abs(y - p))
 
-  def sqErrQ4(y: Column, p: Column): Column = floor((y - p) * (y - p) * 10000d + 0.5d).cast("long")
+  def sqErrQ4(y: Column, p: Column): Column = q4((y - p) * (y - p))
 
   /** The unrounded mean s / 1e4 / n of a quantized error sum. */
   def meanQ4(s: Column, n: Column): Column = s / 10000d / n
@@ -77,9 +106,9 @@ object Num {
   /** SQL forms of the forecast-error reducer — must mirror absErrQ4 …
     * rmseQ4 exactly (BIGINT terms, the same division order).
     */
-  def absErrQ4sql(y: String, p: String): String = s"CAST(floor(abs($y - $p)*10000 + 0.5) AS BIGINT)"
+  def absErrQ4sql(y: String, p: String): String = qSql(s"abs($y - $p)", S4)
 
-  def sqErrQ4sql(y: String, p: String): String = s"CAST(floor(($y - $p)*($y - $p)*10000 + 0.5) AS BIGINT)"
+  def sqErrQ4sql(y: String, p: String): String = qSql(s"($y - $p)*($y - $p)", S4)
 
   def meanQ4sql(s: String, n: String): String = s"$s / 10000.0 / $n"
 

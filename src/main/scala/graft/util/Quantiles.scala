@@ -22,35 +22,26 @@ import org.apache.spark.sql.functions.{col, lit}
 object Quantiles {
 
   /** Memo of computed quantiles, keyed by (session, canonicalized
-    * logical plan of the input, column). The detection family asks for
-    * the SAME thresholds over the SAME cached stages repeatedly (the
-    * denoise cut in Detect.pipeline / ModelStore.save / Coreset.keptBank,
-    * the contamination cut in q16/q23) — each recomputation is a full
-    * range-sort job chain. Entries are a handful of doubles; stopped
-    * sessions are swept like util.StageCache.
+    * logical plan of the input, column, quantile). The detection family
+    * asks for the SAME thresholds over the SAME cached stages repeatedly
+    * (the denoise cut in Detect.pipeline / ModelStore.save /
+    * Coreset.keptBank, the contamination cut in q16/q23) — each
+    * recomputation is a full range-sort job chain.
     */
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-     String, Double), Option[Double]]()
-
-  private def sweepStopped(): Unit = {
-    val it = memo.keySet().iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-  }
+  private val memo = new SessionMemo[
+    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Double), Option[Double]]
 
   /** Exact interpolated quantiles of `df(c)` (nulls ignored, like
     * `percentile()`); `None` per quantile on empty input (mirroring the
     * aggregate's NULL so the sparse-SF edge behaves identically).
     */
   def exact(df: DataFrame, c: String, qs: Seq[Double]): Map[Double, Option[Double]] = {
-    sweepStopped()
     val planKey = df.queryExecution.analyzed.canonicalized
-    val keyOf = (q: Double) => (df.sparkSession, planKey, c, q)
-    val missing = qs.filter(q => !memo.containsKey(keyOf(q)))
-    if (missing.nonEmpty) {
-      computeExact(df, c, missing).foreach { case (q, v) => memo.put(keyOf(q), v) }
-    }
-    qs.map(q => q -> memo.get(keyOf(q))).toMap
+    val keyOf = (q: Double) => (planKey, c, q)
+    // one computeExact pass for every quantile not memoized yet
+    lazy val computed =
+      computeExact(df, c, qs.filterNot(q => memo.contains(df.sparkSession, keyOf(q))))
+    qs.map(q => q -> memo.getOrElseUpdate(df.sparkSession, keyOf(q))(computed(q))).toMap
   }
 
   private def computeExact(df: DataFrame, c: String,

@@ -9,33 +9,15 @@ import org.apache.spark.sql.execution.metric.SQLMetric
   * stages (grid→fill→inject→features for time series, shingle→minhash
   * for dedup); materializing each stage once per session turns the
   * multi-pass pipelines into cache hits — the DataFrame analogue of a
-  * staged intermediate table.
-  *
-  * Lifecycle: the key holds the SparkSession REFERENCE (identity
-  * equality — unlike a bare identityHashCode, two live sessions can
-  * never collide), and every `cached` call sweeps entries whose
-  * SparkContext has stopped, releasing their localCheckpoint RDD
-  * graphs. A cached DataFrame strongly references its own session, so
-  * weak-reference schemes cannot reclaim anything while entries are
-  * held — explicit eviction on session stop is the only correct
-  * collection point. Sessions abandoned without stop() keep their
-  * entries until the JVM exits; that is the cost of caching their
-  * frames at all.
+  * staged intermediate table. Entries live in a [[SessionMemo]], which
+  * releases a stopped session's localCheckpoint RDD graphs.
   */
 object StageCache extends AdaptiveSparkPlanHelper {
 
   /** A cached stage and the SQL metrics of the plan that builds it. */
   private final case class Entry(df: DataFrame, metrics: Seq[SQLMetric])
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Entry]()
-
-  private def sweepStopped(): Unit = {
-    val it = cache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
-    }
-  }
+  private val cache = new SessionMemo[(String, String), Entry]
 
   /** Test probe: has this stage been built in this session? Lets specs
     * assert NEGATIVE structure — e.g. that the default cluster chain
@@ -43,17 +25,11 @@ object StageCache extends AdaptiveSparkPlanHelper {
     * show once stages checkpoint to LogicalRDDs.
     */
   private[graft] def contains(spark: SparkSession, sfDir: String, name: String): Boolean =
-    cache.containsKey((spark, sfDir, name))
+    cache.contains(spark, (sfDir, name))
 
   def cached(spark: SparkSession, sfDir: String, name: String)
-            (build: => DataFrame): DataFrame = {
-    sweepStopped()
-    // get/putIfAbsent (not computeIfAbsent): stage builders nest, and
-    // computeIfAbsent forbids reentrant updates.
-    val key = (spark, sfDir, name)
-    val hit = cache.get(key)
-    if (hit != null) hit.df
-    else {
+            (build: => DataFrame): DataFrame =
+    cache.getOrElseUpdate(spark, (sfDir, name)) {
       // localCheckpoint (not persist): materializes the stage AND
       // truncates lineage, so downstream plans reference a flat
       // LogicalRDD instead of re-embedding the whole upstream tree —
@@ -85,11 +61,8 @@ object StageCache extends AdaptiveSparkPlanHelper {
       // operator; the plan itself (and its broadcasts) is not held.
       val df = build
       val staged = df.localCheckpoint(eager = false)
-      val metrics = collectWithSubqueries(df.queryExecution.executedPlan) {
+      Entry(staged, collectWithSubqueries(df.queryExecution.executedPlan) {
         case p => p.metrics.values.toSeq
-      }.flatten
-      cache.putIfAbsent(key, Entry(staged, metrics))
-      cache.get(key).df
-    }
-  }
+      }.flatten)
+    }.df
 }

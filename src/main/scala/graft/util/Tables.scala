@@ -46,16 +46,11 @@ object Tables {
     * corpora or production row-group sizings (≤ 1 GB) get near that
     * regime.
     */
-  private val probed =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Int), Integer]()
+  private val probed = new SessionMemo[Int, Integer]
 
-  private def probeNumPartitions(df: DataFrame): Int = {
-    val it = probed.keySet().iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    probed.computeIfAbsent(
-      (df.sparkSession, df.queryExecution.logical.canonicalized.semanticHash()),
-      _ => df.rdd.getNumPartitions).intValue()
-  }
+  private def probeNumPartitions(df: DataFrame): Int =
+    probed.getOrElseUpdate(df.sparkSession, df.queryExecution.logical.canonicalized.semanticHash())(
+      Int.box(df.rdd.getNumPartitions)).intValue()
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")

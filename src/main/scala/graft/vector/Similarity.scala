@@ -641,9 +641,8 @@ object Similarity {
     */
   private[graft] def sq8ReconFrom(params: DataFrame, codes: DataFrame): DataFrame =
     codes.crossJoin(broadcast(params))
-      .select(col("vec_id"), expr(
-        "transform(code, (c, d) -> floor((element_at(mn, d+1) + " +
-          "CAST(c AS DOUBLE) * element_at(sc, d+1)) * 1000000d + 0.5d) / 1000000d)").as("rv"))
+      .select(col("vec_id"), expr("transform(code, (c, d) -> " +
+        Num.r6expr("element_at(mn, d+1) + CAST(c AS DOUBLE) * element_at(sc, d+1)") + ")").as("rv"))
 
   /** qv11: scalar-quantized (SQ8) ANN — the third classic
     * compression point next to qv5's PQ (FAISS ScalarQuantizer QT_8bit,
@@ -753,13 +752,7 @@ object Similarity {
       val assigned = e.crossJoin(broadcast(packed(cent)))
         .select(col("vec_id"), col("v"),
           expr("element_at(cellIds, int(graft_argmin_dist2(cf, v)) + 1)").as("cell"))
-      val next = assigned.select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
-        .withColumn("xq", floor(col("x") * 1000000d + 0.5d).cast("long"))
-        .groupBy("cell", "pos")
-        .agg((floor(sum("xq") / count(lit(1)) + 0.5d) / 1000000d).as("c"))
-        .groupBy("cell")
-        .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("cs"))
-        .select(col("cell"), expr("transform(cs, p -> p.c)").as("cv"))
+      val next = centroids(assigned, Seq("cell")).select("cell", "cv")
         .as[(Long, Seq[Double])].collect().toSeq
       cent = spark.createDataset(next).toDF("cell", "cv")
     }
@@ -852,14 +845,15 @@ object Similarity {
     */
   /** Per-group element-wise mean embedding (1e-6 scaled-int exact
     * accumulation, r6-quantized components) with its norm — shared by
-    * qv8 (per-label) and qv9 (per label × snapshot half).
+    * qv8 (per-label), qv9 (per label × snapshot half) and each k-means
+    * round (per cell).
     */
   private def centroids(e: DataFrame, keys: Seq[String]): DataFrame = {
     val kc = keys.map(col)
     e.select(kc :+ posexplode(col("v")).as(Seq("pos", "x")): _*)
-      .withColumn("xq", floor(col("x") * 1000000d + 0.5d).cast("long"))
+      .withColumn("xq", Num.q6(col("x")))
       .groupBy((keys :+ "pos").map(col): _*)
-      .agg((floor(sum("xq") / count(lit(1)) + 0.5d) / 1000000d).as("c"),
+      .agg(Num.fromQ6(floor(sum("xq") / count(lit(1)) + 0.5d)).as("c"),
         count(lit(1)).as("ng"))
       .groupBy(kc: _*)
       .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("cs"),
@@ -1261,7 +1255,7 @@ object Similarity {
       log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val w = idf * ((col("tf") * lit(Bm25K1 + 1)) /
       (col("tf") + lit(Bm25K1) * (lit(1 - Bm25B) + lit(Bm25B) * (col("dlen") / col("avgdlen")))))
-    floor(w * 1000000d + 0.5d).cast("long")
+    Num.q6(w)
   }
 
   /** The qv18 query-term table: each query doc's top-nTerms tokens by
@@ -1398,7 +1392,7 @@ object Similarity {
       .select(col("qid"), col("doc_id"),
         coalesce(col("lex_rank"), lit(0)).as("lex_rank"),
         coalesce(col("vec_rank"), lit(0)).as("vec_rank"),
-        (floor(col("rrf") * 1000000d + 0.5d) / 1000000d).as("rrf"), col("rnk"))
+        Num.r6(col("rrf")).as("rrf"), col("rnk"))
   }
 
   /** 1e-6 scaled-int nDCG discount table 1/log2(i+1), i = 1..k —
@@ -1436,7 +1430,7 @@ object Similarity {
           .otherwise(0L)).as("rr_micro"))
       .select(col("qid"), col("n_hit"),
         Num.r4(col("dcg_micro") / lit(idcgMicro(k))).as("ndcg"),
-        Num.r4(col("rr_micro") / lit(1000000.0)).as("rr"))
+        Num.r4(Num.fromQ6(col("rr_micro"))).as("rr"))
   }
 
   /** qv19: retrieval ranking-QUALITY metrics — per-query nDCG@k, MRR

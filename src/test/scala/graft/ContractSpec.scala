@@ -10,6 +10,19 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ContractSpec extends AnyFunSuite {
 
+  /** (path, text) of every .scala file under `root`, recursively — the
+    * input of the source scans below.
+    */
+  private def sources(root: String): Seq[(String, String)] = {
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    files(new java.io.File(root)).filter(_.getName.endsWith(".scala")).map { f =>
+      f.getPath -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    }
+  }
+
+  private def name(path: String): String = path.split('/').last
+
   test("every oracleSql key names a registered query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle entries without a query: $orphans")
@@ -40,13 +53,9 @@ class ContractSpec extends AnyFunSuite {
   test("exactly one file under src/main builds a SparkSession") {
     // graft.Session is the one session factory: a second builder would
     // fork the settings every main, tool and spec is meant to share
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
-    val builders = files(new java.io.File("src/main")).filter { f =>
-      f.getName.endsWith(".scala") &&
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-          .contains("SparkSession.builder")
-    }.map(_.getPath.stripPrefix("src/main/scala/"))
+    val builders = sources("src/main").collect {
+      case (path, src) if src.contains("SparkSession.builder") => path.stripPrefix("src/main/scala/")
+    }
     assert(builders === Seq("graft/Session.scala"))
   }
 
@@ -57,11 +66,8 @@ class ContractSpec extends AnyFunSuite {
     // bit parity. Unwrap col("s11_") / s("s11") references so Column
     // code and SQL text match the same determinant pattern.
     val det = """\bs11\w* \* \(s22\w* \* s33\w* - s23\w* \* s23\w*\)""".r
-    val dir = new java.io.File("src/main/scala/graft/timeseries")
-    val counts = dir.listFiles().toSeq.filter(_.getName.endsWith(".scala")).map { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .replaceAll("""\w+\("(\w+)"\)""", "$1")
-      f.getName -> det.findAllMatchIn(src).size
+    val counts = sources("src/main/scala/graft/timeseries").map { case (path, src) =>
+      name(path) -> det.findAllMatchIn(src.replaceAll("""\w+\("(\w+)"\)""", "$1")).size
     }.filter(_._2 > 0).toMap
     assert(counts === Map("Ols.scala" -> 1, "TsOracle.scala" -> 1))
   }
@@ -73,35 +79,30 @@ class ContractSpec extends AnyFunSuite {
     // ${…} splices and after commas so Column code and SQL text match the
     // same pattern.
     val step = """\S+ - \S+ \* \(\S+ / \S+\)""".r
-    val dir = new java.io.File("src/main/scala/graft/timeseries")
-    def read(f: java.io.File) = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    val counts = dir.listFiles().toSeq.filter(_.getName.endsWith(".scala")).map { f =>
-      val src = """\$\{[^}]*\}""".r
-        .replaceAllIn(read(f), m => scala.util.matching.Regex.quoteReplacement(
+    val timeseries = sources("src/main/scala/graft/timeseries").map { case (p, src) => name(p) -> src }
+    val counts = timeseries.map { case (file, src) =>
+      val squeezed = """\$\{[^}]*\}""".r
+        .replaceAllIn(src, m => scala.util.matching.Regex.quoteReplacement(
           m.matched.replaceAll("\\s", "")))
         .replace(", ", ",")
-      f.getName -> step.findAllMatchIn(src).size
+      file -> step.findAllMatchIn(squeezed).size
     }.filter(_._2 > 0).toMap
     assert(counts === Map("Ols.scala" -> 1, "TsOracle.scala" -> 1))
     // q10's inverse runs in the plan: no driver-side copy, no round-trip
-    val detect = read(new java.io.File(dir, "Detect.scala"))
+    val detect = timeseries.toMap.apply("Detect.scala")
     assert(Seq("invertGaussJordan", "createDataFrame").filter(detect.contains).isEmpty)
   }
 
   test("q11/q12 have one bank-kNN route: no pairwise fallback or exact/capped forks") {
     // Detect.knnRef's packed graft_knn scan is the only kNN route; the
     // pairwise self-join lives on only as DetectSpec's reference
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
     val banned = Seq("pairwiseRef", "KnnBroadcastMaxBytes", "lofWeightExact",
       "lofWeightCapped", "nearestDistWeightExact")
     val selfJoin = """col\("a_id"\)\s*=!=\s*col\("b_id"\)""".r
-    val hits = files(new java.io.File("src/main/scala/graft"))
-      .filter(_.getName.endsWith(".scala")).flatMap { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        (banned.filter(src.contains) ++ selfJoin.findFirstIn(src).map(_ => "b_id self-join"))
-          .map(h => s"${f.getPath.stripPrefix("src/main/scala/")}: $h")
-      }
+    val hits = sources("src/main/scala/graft").flatMap { case (path, src) =>
+      (banned.filter(src.contains) ++ selfJoin.findFirstIn(src).map(_ => "b_id self-join"))
+        .map(h => s"${path.stripPrefix("src/main/scala/")}: $h")
+    }
     assert(hits.isEmpty, hits.mkString("; "))
   }
 
@@ -109,65 +110,51 @@ class ContractSpec extends AnyFunSuite {
     // a join forwards straight to Dataset.join (AQE sizes it at run
     // time); the dead salted aggregation stays deleted; the oracles
     // quantize through Num.r4sql / Num.sumQ4sql
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
-    def read(f: java.io.File) = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    val sources = files(new java.io.File("src"))
-      .filter(f => f.getName.endsWith(".scala") && f.getName != "ContractSpec.scala")
-    val hits = sources.flatMap { f =>
-      val src = read(f)
+    val scanned = sources("src").filter { case (path, _) => name(path) != "ContractSpec.scala" }
+    val hits = scanned.flatMap { case (path, src) =>
       val banned = Seq("dimJoin", "util.Joins", "saltedStats", "def q4sum(") ++
-        (if (Set("TsOracle.scala", "DocOracle.scala")(f.getName)) Seq("def r4(") else Nil)
-      banned.filter(src.contains).map(h => s"${f.getPath}: $h")
+        (if (Set("TsOracle.scala", "DocOracle.scala")(name(path))) Seq("def r4(") else Nil)
+      banned.filter(src.contains).map(h => s"$path: $h")
     }
-    assert(sources.size > 1)
+    assert(scanned.size > 1)
     assert(hits.isEmpty, hits.mkString("; "))
   }
 
   test("the forecast-error residual is quantized once in Spark and once in the oracle") {
     // Num.absErrQ4 / absErrQ4sql are the one definition of the 1e-4-grid
-    // absolute residual every MAE and conformal rank reduces: any other
-    // abs(a - b) * 10000 under src/main is a hand-written copy. One level
-    // of nested parens covers col("y") - col("p") in Column code.
+    // absolute residual every MAE and conformal rank reduces: Num writes
+    // it once per engine (q4(abs(y - p)) and the abs($y - $p) SQL text),
+    // and any abs(a - b) * 10000 under src/main is a hand-written copy.
+    // One level of nested parens covers col("y") - col("p") in Column
+    // code; the two hand-written shapes keep the pattern honest.
     val arg = """(?:[^()]|\([^()]*\))*"""
     val shape = ("""abs\(""" + arg + " - " + arg + """\)\s*\*\s*10000(d?)""").r
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
-    val hits = files(new java.io.File("src/main/scala/graft"))
-      .filter(_.getName.endsWith(".scala")).flatMap { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        shape.findAllMatchIn(src).map { m =>
-          (f.getPath.stripPrefix("src/main/scala/"), if (m.group(1) == "d") "spark" else "sql")
-        }
-      }
-    assert(hits.groupBy(identity).map { case (k, v) => k -> v.size } ===
-      Map(("graft/util/Num.scala", "spark") -> 1, ("graft/util/Num.scala", "sql") -> 1))
+    assert(Seq("""floor(abs(col("y") - col("p")) * 10000d + 0.5d)""", "floor(abs(b.y - b.p)*10000 + 0.5)")
+      .map(shape.findFirstMatchIn(_).map(_.group(1))) === Seq(Some("d"), Some("")))
+    val main = sources("src/main/scala/graft")
+    val copies = main.flatMap { case (path, src) => shape.findAllMatchIn(src).map(_ => path) }
+    assert(copies.isEmpty, copies.mkString("; "))
+    val num = main.collectFirst { case (p, src) if p.endsWith("/util/Num.scala") => src }.get
+    assert("""abs\((\$?)y - \$?p\)""".r.findAllMatchIn(num).map(_.group(1)).toSeq.sorted === Seq("", "$"))
   }
 
-  test("the 1e-4 grid step is written only in util/Num.scala") {
-    // Num's r4/q4 (Column, SQL and Double forms) are the one definition
-    // of floor(x·1e4 + 0.5) in both engines. The one exception is
-    // Relational.groupingSets' Spark-SQL text: it needs D-suffixed
-    // literals (Spark parses a bare 10000.0 as DECIMAL), which no Num
-    // SQL form (DuckDB text) reproduces.
-    val column = """10000d\s*\+\s*0\.5d""".r
-    val sql = """\*\s*10000(?:\.0+)?D?\s*\+\s*0\.5""".r
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
-    val hits = files(new java.io.File("src/main/scala/graft"))
-      .filter(_.getName.endsWith(".scala")).flatMap { f =>
-        val path = f.getPath.stripPrefix("src/main/scala/")
-        val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        src.split("\n").toSeq.zipWithIndex.collect {
-          case (l, i) if path != "graft/util/Num.scala" &&
-              (column.findFirstIn(l).nonEmpty || sql.findFirstIn(l).nonEmpty) =>
-            s"$path:${i + 1}: ${l.trim}"
-        }
+  test("every grid step (1e-4, 1e-6, 1e-8) is written only in util/Num.scala") {
+    // Num's private step forms are the one definition of floor(x·S + 0.5)
+    // at every scale, in Column code, DuckDB text, Spark-SQL text and
+    // driver scalars. A scale literal followed by + 0.5 anywhere else —
+    // 10000, 1000000, 100000000 or 1e4/1e6/1e8, bare or with a d/D/.0
+    // suffix, in code or comments, across line breaks — is a
+    // hand-written copy. The shapes below keep the pattern honest.
+    val step = """(?<![\w.])(?:10000|1000000|100000000|1e[468])(?:\.0+)?[dD]?\s*\+\s*0\.5""".r
+    val shapes = Seq("floor(c * 10000d + 0.5d)", "floor((x)*10000 + 0.5)", "*10000.0D + 0.5D",
+      "v[i]*1000000 + 0.5", "x\n  * 1000000D + 0.5D", "pow(b, k) * 1e8 + 0.5", "x * 1e6 + 0.5")
+    assert(shapes.filter(step.findFirstIn(_).isEmpty).isEmpty)
+    val copies = sources("src/main/scala/graft").flatMap { case (path, src) =>
+      step.findAllMatchIn(src).map { m =>
+        s"${path.stripPrefix("src/main/scala/")}:${src.take(m.start).count(_ == '\n') + 1}"
       }
-    val (groupingSets, copies) = hits.partition(h =>
-      h.startsWith("graft/analytics/Relational.scala:") && h.contains("*10000.0D + 0.5D"))
-    if (copies.nonEmpty) fail(s"${copies.size} lines hand-write the step:\n${copies.mkString("\n")}")
-    assert(groupingSets.size === 1)
+    }.filterNot(_.startsWith("graft/util/Num.scala:"))
+    assert(copies.isEmpty, s"${copies.size} hand-written grid steps:\n${copies.mkString("\n")}")
   }
 
   test("query keys follow the short-prefix naming the bench JSON relies on") {

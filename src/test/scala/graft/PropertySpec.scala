@@ -65,19 +65,24 @@ class PropertySpec extends SparkSuite {
     assert(floatOrderSensitive > 0, "expected raw double sums to be order-sensitive")
   }
 
-  test("Num's Double, Column and SQL forms of r4/q4 return the same bits (305 values)") {
+  test("Num's Double, Column and SQL forms return the same bits (408 values)") {
     // random doubles across magnitudes, negatives, and decimals sitting
-    // exactly on a .00005 boundary, where a round() would disagree; the
-    // SQL text runs through Spark's parser over a double column, as it
-    // runs through DuckDB's over the oracle's
+    // exactly on a .00005 or .0000005 boundary, where a round() would
+    // disagree. The DuckDB text runs through Spark's parser over a double
+    // column, as it runs through DuckDB's over the oracle's; the
+    // Spark-SQL text runs as `expr`/`spark.sql` callers run it
     val rnd = new Random(14)
     val xs = Seq.fill(100)((rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(9))) ++
       Seq.fill(100)(-rnd.nextDouble() * 1000) ++
       Seq.fill(100)((rnd.nextInt(2000001) - 1000000) * 10 + 5).map(_ / 1e5) ++
-      Seq(0.0, -0.0, 0.00005, -0.00005, 2.49995)
+      Seq.fill(100)((rnd.nextInt(2000001) - 1000000) * 10 + 5).map(_ / 1e7) ++
+      Seq(0.0, -0.0, 0.00005, -0.00005, 2.49995, 0.0000005, -0.0000005, 2.4999995)
     import spark.implicits._
-    val byCol = xs.toDF("x").select(col("x"), Num.r4(col("x")), expr(Num.r4sql("x")),
-      Num.q4(col("x")), expr(Num.q4sql("x"))).collect()
+    val byCol = xs.toDF("x").select(col("x"),
+      Num.r4(col("x")), expr(Num.r4sql("x")), expr(Num.r4expr("x")),
+      Num.q4(col("x")), expr(Num.q4sql("x")),
+      Num.r6(col("x")), expr(Num.r6sql("x")), expr(Num.r6expr("x")),
+      Num.q6(col("x")), expr(Num.q6sql("x")), expr(Num.q6expr("x"))).collect()
     val byLit = spark.range(1).select(array(xs.map(x => Num.r4(lit(x))): _*),
       array(xs.map(x => Num.q4(lit(x))): _*)).head()
     val litR4 = byLit.getSeq[Double](0)
@@ -88,9 +93,19 @@ class PropertySpec extends SparkSuite {
       val x = r.getDouble(0)
       assert(bits(x) === bits(xs(i)))
       val r4 = Num.r4(x)
-      assert(Seq(r.getDouble(1), r.getDouble(2), litR4(i)).map(bits) === Seq.fill(3)(bits(r4)), s"r4($x)")
-      assert(Seq(r.getLong(3), r.getLong(4), litQ4(i)) === Seq.fill(3)(Num.q4(x)), s"q4($x)")
+      assert(Seq(r.getDouble(1), r.getDouble(2), r.getDouble(3), litR4(i)).map(bits) ===
+        Seq.fill(4)(bits(r4)), s"r4($x)")
+      assert(Seq(r.getLong(4), r.getLong(5), litQ4(i)) === Seq.fill(3)(Num.q4(x)), s"q4($x)")
+      val step6 = math.floor(x * 1e6 + 0.5)
+      assert(Seq(r.getDouble(6), r.getDouble(7), r.getDouble(8)).map(bits) ===
+        Seq.fill(3)(bits(step6 / 1e6)), s"r6($x)")
+      assert(Seq(r.getLong(9), r.getLong(10), r.getLong(11)) === Seq.fill(3)(step6.toLong), s"q6($x)")
     }
+    // qa17's Spark-SQL sum against the Column sum and the driver's
+    val sums = xs.toDF("x").agg(Num.r4(Num.sumQ4(col("x"))),
+      expr(Num.r4expr(Num.sumQ4expr("x")))).head()
+    val sumRef = Num.r4(xs.map(x => Num.q4(x)).sum / 10000d)
+    assert(Seq(sums.getDouble(0), sums.getDouble(1)).map(bits) === Seq.fill(2)(bits(sumRef)))
   }
 
   test("LCG draws are deterministic, in [0,1), and salt-separated") {
