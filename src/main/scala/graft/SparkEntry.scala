@@ -109,6 +109,28 @@ object SparkEntry {
        JOIN region   ON n_regionkey = r_regionkey
        GROUP BY r_name, n_name"""
 
+  /** qt20/qc4's share CTEs (tk … sh, z), the oracle twin of
+    * TextOps.mixShares: per-source token counts, the natural share
+    * p_nat, its 1e-6-quantized α-power pa_q (α = 0.7) and the
+    * normalizer z, with `tot` carried in `sh` as the Spark frame does.
+    */
+  private val MixSharesSql = s"""
+      WITH tk AS (
+        SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
+      ), nt AS (
+        SELECT doc_id, count(*) AS nt FROM tk WHERE tok <> '' GROUP BY doc_id
+      ), per AS (
+        SELECT source, count(*) AS n_docs,
+               CAST(sum(coalesce(nt, 0)) AS BIGINT) AS n_tok
+        FROM documents d LEFT JOIN nt USING (doc_id) GROUP BY source
+      ), tot AS (SELECT CAST(sum(n_tok) AS BIGINT) AS tot FROM per),
+      sh AS (
+        SELECT source, n_docs, n_tok, tot,
+               CAST(n_tok AS DOUBLE) / tot AS p_nat,
+               ${q6sql("pow(CAST(n_tok AS DOUBLE) / tot, 0.7)")} AS pa_q
+        FROM per, tot
+      ), z AS (SELECT CAST(sum(pa_q) AS BIGINT) AS z FROM sh)"""
+
   private val Qp5Sql = s"""
       WITH ev AS (
         SELECT user_id FROM events
@@ -773,22 +795,7 @@ object SparkEntry {
       Sql(graft.text.DocOracle.qt25(rounds = 64))),
     "qt29_bpe_encode64" -> Op((s, d) => graft.text.TextOps.bpeEncodeLocal(s, d),
       Sql(graft.text.DocOracle.qt26(rounds = 64))),
-    "qc4_budget_plan" -> Op((s, d) => graft.text.TextOps.budgetPlan(s, d), Sql(s"""
-      WITH tk AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-      ), nt AS (
-        SELECT doc_id, count(*) AS nt FROM tk WHERE tok <> '' GROUP BY doc_id
-      ), per AS (
-        SELECT source, count(*) AS n_docs,
-               CAST(sum(coalesce(nt, 0)) AS BIGINT) AS n_tok
-        FROM documents d LEFT JOIN nt USING (doc_id) GROUP BY source
-      ), tot AS (SELECT CAST(sum(n_tok) AS BIGINT) AS tot FROM per),
-      sh AS (
-        SELECT source, n_docs, n_tok, tot,
-               CAST(n_tok AS DOUBLE) / tot AS p_nat,
-               ${q6sql("pow(CAST(n_tok AS DOUBLE) / tot, 0.7)")} AS pa_q
-        FROM per, tot
-      ), z AS (SELECT CAST(sum(pa_q) AS BIGINT) AS z FROM sh),
+    "qc4_budget_plan" -> Op((s, d) => graft.text.TextOps.budgetPlan(s, d), Sql(MixSharesSql + s""",
       plan4 AS (
         SELECT source,
                CAST(pa_q AS DOUBLE) / z AS w_raw,
@@ -1106,22 +1113,7 @@ object SparkEntry {
         ${r4sql("""CAST(sum(CASE WHEN n_bytes IS NOT NULL AND dim = 64 THEN 1 ELSE 0 END) AS DOUBLE)
               / count(*)""")} AS pct_complete
       FROM j GROUP BY 1""")),
-    "qt20_mix_weights" -> Op((s, d) => graft.text.TextOps.mixWeights(s, d), Sql(s"""
-      WITH tk AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-      ), nt AS (
-        SELECT doc_id, count(*) AS nt FROM tk WHERE tok <> '' GROUP BY doc_id
-      ), per AS (
-        SELECT source, count(*) AS n_docs,
-               CAST(sum(coalesce(nt, 0)) AS BIGINT) AS n_tok
-        FROM documents d LEFT JOIN nt USING (doc_id) GROUP BY source
-      ), tot AS (SELECT CAST(sum(n_tok) AS BIGINT) AS tot FROM per),
-      sh AS (
-        SELECT source, n_docs, n_tok,
-               CAST(n_tok AS DOUBLE) / tot AS p_nat,
-               ${q6sql("pow(CAST(n_tok AS DOUBLE) / tot, 0.7)")} AS pa_q
-        FROM per, tot
-      ), z AS (SELECT CAST(sum(pa_q) AS BIGINT) AS z FROM sh)
+    "qt20_mix_weights" -> Op((s, d) => graft.text.TextOps.mixWeights(s, d), Sql(MixSharesSql + s"""
       SELECT source, n_docs, n_tok,
              ${r4sql("p_nat")} AS p_nat,
              ${r4sql("CAST(pa_q AS DOUBLE) / z")} AS w_mix,

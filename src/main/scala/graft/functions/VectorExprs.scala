@@ -174,6 +174,11 @@ case class L2Dist2(left: Expression, right: Expression) extends BinaryExpression
   * `ORDER BY d, id`. The nearest row's distance is graft_l2 over its
   * slice — the same fold of the same squared differences, so equal to
   * the scan's minimum bit-for-bit (VectorExprSpec asserts it).
+  * Partial-distance exit: a row's fold stops once its running sum is no
+  * longer `< best`. This is exact — IEEE addition of non-negative terms
+  * never decreases the sum, so a row whose prefix already reached
+  * `best` could not win under the strict-`<` first-index rule, and a
+  * NaN sum is never `< best` whether the fold stops or not.
   * Replaces an O(n·m)-row broadcast join + hash-agg with an O(n)-row
   * codegen loop — the difference between a 180M-row shuffle and 6.7k
   * tight loops at sf0.1, and the reason the scored side never shuffles
@@ -205,7 +210,9 @@ case class ArgMinDist2(left: Expression, right: Expression) extends BinaryExpres
       var s = 0.0
       var j = 0
       val off = i * dim
-      while (j < dim) { val d = p.getDouble(j) - flat.getDouble(off + j); s += d * d; j += 1 }
+      while (j < dim && s < best) {
+        val d = p.getDouble(j) - flat.getDouble(off + j); s += d * d; j += 1
+      }
       if (s < best) { best = s; bi = i.toLong }
       i += 1
     }
@@ -231,7 +238,7 @@ case class ArgMinDist2(left: Expression, right: Expression) extends BinaryExpres
          |for (int $i = 0; $i < $m; $i++) {
          |  double $s = 0.0;
          |  int $off = $i * $dim;
-         |  for (int $j = 0; $j < $dim; $j++) {
+         |  for (int $j = 0; $j < $dim && $s < $best; $j++) {
          |    double $d = $b.getDouble($j) - $a.getDouble($off + $j);
          |    $s += $d * $d;
          |  }

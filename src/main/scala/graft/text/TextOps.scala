@@ -575,7 +575,9 @@ object TextOps {
           Num.r4((col("pa_q").cast("double") / col("z")) / col("p_nat"))).as("oversample"))
 
   /** qt20's share frame with the raw quantities kept (pa_q, z, tot) —
-    * ONE definition read by the qt20 report and qc4's budget planner.
+    * ONE definition read by the qt20 report and qc4's budget planner,
+    * mirrored by the one share-CTE text both oracles start from
+    * (SparkEntry.MixSharesSql).
     */
   private[graft] def mixShares(spark: SparkSession, sfDir: String,
                                alpha: Double): DataFrame = {

@@ -53,26 +53,28 @@ object Detect {
   def gaussianScore(spark: SparkSession, sfDir: String): DataFrame =
     StageCache.cached(spark, sfDir, "gauss_mdist")(gaussianScoreBuild(spark, sfDir))
 
-  /** q10's plan before the cache, built without a job: one single-pass
-    * groupBy per position (9 avg + 45 covar_samp sufficient statistics),
-    * then `[Σ + 0.01·I | I]` through [[Ols.gaussJordan]] (no pivoting:
-    * the regularized covariance is SPD) and Σ⁻¹'s upper triangle read
-    * from the right block. A single-patch position's NULL covar_samp
-    * propagates to a NULL mdist, as in the oracle. The ≤24-row inverse
-    * broadcasts to the test patches; the quadratic form is unrolled in
-    * fixed fold order (i00, i01·2, …, i88), mirrored term-for-term in
-    * the oracle.
+  /** q10's plan before the cache, built without a job: the per-position
+    * fit of [[gaussMoments]], then `[Σ + 0.01·I | I]` through
+    * [[Ols.gaussJordan]]'s one elimination expression (no pivoting: the
+    * regularized covariance is SPD) and Σ⁻¹'s upper triangle read from
+    * the right block. A single-patch position's NULL Σ propagates to a
+    * NULL mdist, as in the oracle. The ≤24-row inverse broadcasts to the
+    * test patches; the quadratic form is unrolled in fixed fold order
+    * (i00, i01·2, …, i88), mirrored term-for-term in the oracle.
     */
   private[graft] def gaussianScoreBuild(spark: SparkSession, sfDir: String): DataFrame = {
     val (bank, test) = TsCore.bankAndTest(spark, sfDir)
-    val aggs = (0 to 8).map(i => avg(s"f$i").as(s"m$i")) ++
-      UpperIdx.map { case (i, j) => covar_samp(col(s"f$i"), col(s"f$j")).as(s"c${i}_$j") }
+    gaussianScoreOf(bank, test)
+  }
+
+  /** [[gaussianScoreBuild]] over explicit bank and test patch frames. */
+  private[graft] def gaussianScoreOf(bank: DataFrame, test: DataFrame): DataFrame = {
     def sig(i: Int, j: Int): Column = {
       val c = col(s"c${math.min(i, j)}_${math.max(i, j)}")
       if (i == j) c + 0.01 else c
     }
     val means = (0 to 8).map(i => col(s"m$i"))
-    val aug = bank.groupBy("pos").agg(aggs.head, aggs.tail: _*)
+    val aug = gaussMoments(bank)
       .select(col("pos") +: means :+ array((0 to 8).map { i =>
         array((0 to 8).map(sig(i, _)) ++ (0 to 8).map(j => lit(if (i == j) 1.0 else 0.0)): _*)
       }: _*).as("a"): _*)
@@ -85,6 +87,28 @@ object Detect {
     }.reduce(_ + _)
     test.join(broadcast(g), "pos")
       .select(col("series"), col("win"), col("pos"), Num.r4(sqrt(form)).as("mdist"))
+  }
+
+  /** q10's Gaussian fit per position of `bank`: the means m0..m8 and the
+    * 45 sample covariances c{i}_{j} (i ≤ j, ddof = 1) from ONE aggregate
+    * of 55 sufficient statistics — the count n, t_i = Σ f_i and
+    * p_ij = Σ f_i·f_j (the one-pass grouped fit of MLlib*, ICDE 2019).
+    * Then m_i = t_i/n and c_ij = (p_ij − t_i·t_j/n)/(n − 1), NULL when
+    * n ≤ 1 as covar_samp is. The 55-slot buffer keeps the aggregate
+    * inside whole-stage codegen; 9 avg + 45 covar_samp is a 198-slot
+    * buffer that falls out of it. TsOracle.gauss9Cte writes the same
+    * sums and formula in the same operation order.
+    */
+  private[graft] def gaussMoments(bank: DataFrame): DataFrame = {
+    val sums = count(lit(1)).as("n") +: ((0 to 8).map(i => sum(s"f$i").as(s"t$i")) ++
+      UpperIdx.map { case (i, j) => sum(col(s"f$i") * col(s"f$j")).as(s"p${i}_$j") })
+    val n = col("n")
+    def t(i: Int): Column = col(s"t$i")
+    bank.groupBy("pos").agg(sums.head, sums.tail: _*)
+      .select(col("pos") +: ((0 to 8).map(i => (t(i) / n).as(s"m$i")) ++
+        UpperIdx.map { case (i, j) =>
+          when(n > 1, (col(s"p${i}_$j") - t(i) * t(j) / n) / (n - 1)).as(s"c${i}_$j")
+        }): _*)
   }
 
   /** Per-position cap on the q11/q12 kNN reference set: the neighbour
@@ -135,6 +159,12 @@ object Detect {
     * eps added to the sqrt before selection, UTF8 binary nid tie-break
     * (DetectSpec keeps that reference and asserts equality). `maxRef`
     * is the specs' seam on the cap.
+    *
+    * The probe side is first spread on (pos, id) (util.Tables.spread, as
+    * [[bankScored]] does): the bank checkpoint arrives in 1–2
+    * partitions, which left the kernel stage on one or two cores. The
+    * exchange also clusters the stream on (pos, id), so the callers'
+    * per-patch aggregations reuse it.
     */
   private[graft] def knnRef(spark: SparkSession, bank: DataFrame, k: Int, eps: Double,
                             maxRef: Int = MaxRef): DataFrame = {
@@ -147,7 +177,7 @@ object Detect {
       .groupBy("pos").agg(array_sort(collect_list(col("s"))).as("ps"))
       .select(col("pos"), expr("transform(ps, x -> x.id)").as("nids"),
         flatten(expr("transform(ps, x -> x.fs)")).as("bf"))
-    withId.join(broadcast(packed), "pos")
+    graft.util.Tables.spread(withId, "pos", "id").join(broadcast(packed), "pos")
       .select(col("pos"), col("id"),
         explode(call_function("graft_knn", col("id"),
           array(FeatCols.map(col): _*), col("nids"), col("bf"),

@@ -1083,7 +1083,7 @@ FROM pows"""
     *           carries)
     * — ridge-solved per series. The 6×6 normal-equations solve is
     * [[Ols.gaussJordan]] over the augmented `[S | sy]` array IN THE
-    * PLAN (six chained narrow selects over the |series|-row stats
+    * PLAN (one elimination expression over the |series|-row stats
     * frame, the same elimination as q10's inverse) — fully distributed,
     * no driver matrix work. The same machinery extends to any feature
     * list (the spec's win criterion is what fixed this one).

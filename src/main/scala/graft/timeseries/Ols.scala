@@ -85,17 +85,18 @@ private[graft] object Ols {
     * `[S | sy]` (the last column becomes the coefficients). Step k maps
     * row k to a(k,j)/a(k,k) and every other row to
     * a(i,j) − a(i,k)·(a(k,j)/a(k,k)); there is no pivoting, so the
-    * callers' regularized diagonals keep a(k,k) nonzero. Each step is one
-    * select (CollapseProject keeps them apart: the pivot row is
-    * referenced many times), and TsOracle.gaussJordanCtes writes the same
-    * steps in DuckDB list form, so both engines agree bit-for-bit.
+    * callers' regularized diagonals keep a(k,k) nonzero. The n steps are
+    * ONE expression — an `aggregate` over k = 0 … n−1 whose accumulator
+    * is the matrix — so the plan holds a single Project, not one per step
+    * (DetectSpec asserts bit-equality with a per-step fold).
+    * TsOracle.gaussJordanCtes writes the same steps in DuckDB list form,
+    * so both engines agree bit-for-bit.
     */
   def gaussJordan(df: DataFrame, a: String, n: Int): DataFrame =
-    (0 until n).foldLeft(df) { (cur, k) =>
-      val akk = col(a)(k)(k)
-      cur.withColumn(a, transform(col(a), (r, i) => transform(r, (x, j) => {
-        val akj = col(a)(k)(j)
+    df.withColumn(a, aggregate(sequence(lit(0), lit(n - 1)), col(a), (m, k) =>
+      transform(m, (r, i) => transform(r, (x, j) => {
+        val akj = m(k)(j)
+        val akk = m(k)(k)
         when(i === k, akj / akk).otherwise(x - r(k) * (akj / akk))
-      })))
-    }
+      }))))
 }

@@ -417,14 +417,20 @@ SELECT series, win, ${r4("max(pscore)")} AS score FROM scored GROUP BY series, w
     }.mkString
 
   /** CTE chain computing the per-position 9-dim Gaussian inverse
-    * (gstats → g0 → … → g9 → ginv), mirroring Detect.gaussianScore: the
-    * [Σ + 0.01·I | I] list matrix through [[gaussJordanCtes]]; shared
-    * by q10, q29 and q50.
+    * (gsum → gstats → g0 → … → g9 → ginv), mirroring Detect.gaussMoments
+    * and Detect.gaussianScoreOf: the count, Σ f_i and Σ f_i·f_j per
+    * position, then m_i = t_i/n and Σ_ij = (p_ij − t_i·t_j/n)/(n − 1)
+    * (NULL for n ≤ 1) in the same operation order, then the
+    * [Σ + 0.01·I | I] list matrix through [[gaussJordanCtes]]; shared by
+    * q10, q29 and q50.
     */
   private def gauss9Cte: String = {
-    val means = (0 to 8).map(i => s"avg(f$i) AS m$i").mkString(", ")
-    val covs = upperIdx.map { case (i, j) => s"covar_samp(f$i, f$j) AS c${i}_$j" }
-      .mkString(",\n         ")
+    val sums = ((0 to 8).map(i => s"sum(f$i) AS t$i") ++
+      upperIdx.map { case (i, j) => s"sum(f$i * f$j) AS p${i}_$j" }).mkString(",\n         ")
+    val means = (0 to 8).map(i => s"t$i / n AS m$i").mkString(", ")
+    val covs = upperIdx.map { case (i, j) =>
+      s"CASE WHEN n > 1 THEN (p${i}_$j - t$i * t$j / n) / (n - 1) END AS c${i}_$j"
+    }.mkString(",\n         ")
     def sig(i: Int, j: Int): String = {
       val (a, b) = if (i <= j) (i, j) else (j, i)
       if (i == j) s"c${a}_$b + 0.01" else s"c${a}_$b"
@@ -436,10 +442,14 @@ SELECT series, win, ${r4("max(pscore)")} AS score FROM scored GROUP BY series, w
     val invCols = upperIdx.map { case (i, j) => s"a[${i + 1}][${j + 10}] AS i${i}_$j" }
       .mkString(",\n         ")
     s"""
-, gstats AS (
+, gsum AS (
+  SELECT pos, count(*) AS n,
+         $sums
+  FROM bank GROUP BY pos
+), gstats AS (
   SELECT pos, $means,
          $covs
-  FROM bank GROUP BY pos
+  FROM gsum
 ), g0 AS (
   SELECT pos, $g0 AS a
   FROM gstats

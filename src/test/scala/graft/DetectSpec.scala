@@ -59,6 +59,89 @@ class DetectSpec extends SparkSuite {
       .forall(_.forall(_ == null)))
   }
 
+  /** The elimination as n chained selects, one per step — the form
+    * Ols.gaussJordan's single `aggregate` expression replaced, kept as
+    * its bit-equality reference.
+    */
+  private def gaussJordanSteps(df: DataFrame, a: String, n: Int): DataFrame =
+    (0 until n).foldLeft(df) { (cur, k) =>
+      val akk = col(a)(k)(k)
+      cur.withColumn(a, transform(col(a), (r, i) => transform(r, (x, j) => {
+        val akj = col(a)(k)(j)
+        when(i === k, akj / akk).otherwise(x - r(k) * (akj / akk))
+      })))
+    }
+
+  test("gauss-jordan: the one-expression elimination equals the per-step fold bit for bit") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    def spd(n: Int, d: Double): Array[Array[Double]] = {
+      val b = Array.fill(n, n)(rnd.nextDouble() * 4 - 2)
+      Array.tabulate(n, n) { (i, j) =>
+        (0 until n).map(k => b(k)(i) * b(k)(j)).sum + (if (i == j) d else 0.0)
+      }
+    }
+    def bits(df: DataFrame): Seq[Seq[Seq[java.lang.Long]]] =
+      df.orderBy("id").collect().toSeq.map(_.getSeq[collection.Seq[java.lang.Double]](1).toSeq
+        .map(_.toSeq.map(v => if (v == null) null else Long.box(java.lang.Double.doubleToRawLongBits(v)))))
+    def same(rows: Seq[Array[Array[Double]]], n: Int): Unit = {
+      val df = rows.zipWithIndex.map { case (m, id) => (id, m.toSeq.map(_.toSeq)) }.toDF("id", "a")
+      assert(bits(Ols.gaussJordan(df, "a", n)) === bits(gaussJordanSteps(df, "a", n)),
+        s"${n}×${rows.head.head.length} elimination diverged from the per-step fold")
+    }
+    // q10's [Σ + 0.01·I | I] (9×18) and q56's [S | sy] (6×7)
+    same(Seq.fill(12) {
+      val a = spd(9, 0.01)
+      Array.tabulate(9, 18)((i, j) => if (j < 9) a(i)(j) else if (j - 9 == i) 1.0 else 0.0)
+    }, 9)
+    same(Seq.fill(12) {
+      val s = spd(6, 0.001)
+      Array.tabulate(6, 7)((i, j) => if (j < 6) s(i)(j) else rnd.nextDouble() - 0.5)
+    }, 6)
+    // the NULL-propagation case
+    val withNull = spark.sql("SELECT 0 AS id, " +
+      "array(array(CAST(NULL AS DOUBLE), 0.0, 1.0, 0.0), array(0.0, 1.0, 0.0, 1.0)) AS a")
+    assert(bits(Ols.gaussJordan(withNull, "a", 2)) === bits(gaussJordanSteps(withNull, "a", 2)))
+  }
+
+  test("q10's sufficient-statistics fit agrees with avg / covar_samp on the sf0.01 bank") {
+    val (bank, _) = TsCore.bankAndTest(spark, Sf01)
+    val upper = for { i <- 0 to 8; j <- i to 8 } yield (i, j)
+    val ref = bank.groupBy("pos").agg(count(lit(1)).as("n"), (0 to 8).map(i => avg(s"f$i").as(s"rm$i")) ++
+      upper.map { case (i, j) => covar_samp(col(s"f$i"), col(s"f$j")).as(s"rc${i}_$j") }: _*)
+    val rows = Detect.gaussMoments(bank).join(ref, "pos").collect()
+    assert(rows.length === 24 && rows.forall(_.getAs[Long]("n") > 1))
+    // the one-pass formula cancels in p_ij − t_i·t_j/n; its error is
+    // relative to the scale of the two variances, √(Σ_ii·Σ_jj)
+    val Tol = 1e-12
+    val errs: Seq[Double] = rows.toSeq.flatMap { r =>
+      def d(c: String) = r.getAs[Double](c)
+      (0 to 8).map(i => math.abs(d(s"m$i") - d(s"rm$i")) / math.max(math.abs(d(s"rm$i")), 1.0)) ++
+        upper.map { case (i, j) =>
+          // a zero-padded edge feature is constant (Σ_ii = 0): both
+          // forms give exactly 0 there
+          val e = math.abs(d(s"c${i}_$j") - d(s"rc${i}_$j"))
+          if (e == 0) 0.0 else e / math.sqrt(d(s"rc${i}_$i") * d(s"rc${j}_$j"))
+        }
+    }
+    assert(errs.max <= Tol, s"sufficient-statistics fit off by ${errs.max} (scaled)")
+  }
+
+  test("q10: a single-patch position yields a NULL mdist, as covar_samp's NULL does") {
+    import spark.implicits._
+    def row(series: String, win: Long, pos: Long, v: Double) =
+      (series, win, pos, v, v * v, 1.0 - v, v / 2, 0.5, v * 3, 2.0 - v, v + 1, v * v * v)
+    val cols = Seq("series", "win", "pos") ++ Detect.FeatCols
+    val bank = Seq(row("a", 0, 0, 0.1), row("b", 0, 0, 0.7), row("c", 0, 0, 0.4),
+      row("a", 0, 1, 0.3)).toDF(cols: _*)
+    val test = Seq(row("a", 5, 0, 0.2), row("a", 5, 1, 0.2)).toDF(cols: _*)
+    val got = Detect.gaussianScoreOf(bank, test).collect()
+      .map(r => r.getAs[Long]("pos") -> Option(r.getAs[java.lang.Double]("mdist"))).toMap
+    assert(got.keySet === Set(0L, 1L))
+    assert(got(0L).isDefined, "a fitted position must score")
+    assert(got(1L).isEmpty, s"single-patch position scored ${got(1L)}")
+  }
+
   test("lof weights hover around 1 for inliers") {
     val l = Detect.lofWeight(spark, Sf01).cache()
     assert(l.count() > 0)

@@ -313,6 +313,47 @@ class PlanSpec extends SparkSuite {
     assert(extra.isEmpty, s"q10 scans driver-made RDDs $extra:\n${plan(q10).take(1500)}")
   }
 
+  test("q10's bank aggregate runs inside whole-stage codegen") {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import graft.timeseries.{Detect, TsCore}
+    // every aggregate node of the executed plan, with whether a
+    // WholeStageCodegen stage fuses it (an InputAdapter ends the stage)
+    def aggs(p: SparkPlan, fused: Boolean): Seq[(BaseAggregateExec, Boolean)] = p match {
+      case a: AdaptiveSparkPlanExec => aggs(a.executedPlan, fused = false)
+      case q: QueryStageExec => aggs(q.plan, fused = false)
+      case w: WholeStageCodegenExec => aggs(w.child, fused = true)
+      case i: InputAdapter => aggs(i.child, fused = false)
+      case a: BaseAggregateExec => (a, fused) +: a.children.flatMap(aggs(_, fused))
+      case other => other.children.flatMap(aggs(_, fused))
+    }
+    def fusion(df: org.apache.spark.sql.DataFrame): Seq[(BaseAggregateExec, Boolean)] = {
+      df.collect() // the final adaptive plan exists once the query has run
+      val found = aggs(df.queryExecution.executedPlan, fused = false)
+      assert(found.nonEmpty, plan(df).take(1500))
+      found
+    }
+    val bank = TsCore.bankAndTest(spark, Sf01)._1
+    val found = fusion(Detect.gaussMoments(bank))
+    assert(found.forall(_._2), s"an aggregate of q10's fit left whole-stage codegen:\n" +
+      found.filterNot(_._2).map(_._1.simpleString(400)).mkString("\n"))
+    // the gate discriminates: the 9 avg + 45 covar_samp form (198 buffer
+    // slots) does not fuse
+    val upper = for { i <- 0 to 8; j <- i to 8 } yield covar_samp(col(s"f$i"), col(s"f$j"))
+    val wide = bank.groupBy("pos").agg(avg("f0"), (1 to 8).map(i => avg(s"f$i")) ++ upper: _*)
+    assert(!fusion(wide).forall(_._2), plan(wide).take(1500))
+  }
+
+  test("knnRef spreads an under-split probe side on (pos, id) before the kernel") {
+    import graft.timeseries.{Detect, TsCore}
+    val bank = TsCore.bankAndTest(spark, Sf01)._1.coalesce(1)
+    val p = plan(Detect.knnRef(spark, bank, k = 1, eps = 0.0))
+    assert(p.contains("graft_knn"), p.take(1500))
+    assert("""hashpartitioning\(pos#\d+L?, id#\d+, \d+\)""".r.findFirstIn(p).isDefined,
+      s"the one-partition bank reaches the kNN kernel unspread:\n${p.take(2000)}")
+  }
+
   test("bank scorers scan the packed bank once per patch — no graft_min_dist2 pass") {
     import graft.timeseries.{Detect, ModelStore}
     val dir = java.nio.file.Files.createTempDirectory("planspec-model").toString

@@ -61,7 +61,7 @@ class VectorExprSpec extends SparkSuite {
     VectorExprs.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
-    val cases = (1 to 200).map { _ =>
+    val random = (1 to 200).map { _ =>
       val dim = 1 + rnd.nextInt(5)
       val m = 1 + rnd.nextInt(8)
       // small integer coordinates force frequent exact distance ties
@@ -69,26 +69,70 @@ class VectorExprSpec extends SparkSuite {
       val p = Array.fill(dim)(rnd.nextInt(3).toDouble)
       (bank, p, dim)
     }
-    val df = cases.toDF("bank", "p", "dim")
+    val NaN = Double.NaN
+    // inputs that drive the partial-distance exit: each row of a 4-dim
+    // bank against p = 0
+    val edges = Seq(
+      // rows whose zero prefix stays under the best (1.0): one passes it
+      // on its last term, one ties it, one beats it; the last row exits
+      // on its first term
+      Array(1.0, 0, 0, 0, 0, 0, 0, 1.5, 0, 0, 0, 1, 0, 0, 0, 0.5, 3, 0, 0, 0),
+      // an exact full-sum tie after a better row: the first index keeps it
+      Array(2.0, 0, 0, 0, 0, 1, 0, 0, 0, 0, 1, 0, 1, 0, 0, 0),
+      // a row that reaches best = 0 stops every later row at its first term
+      Array(0.0, 0, 0, 0, 0, 0, 0, 0, 1, 0, 0, 0),
+      // a NaN coordinate before any best, one after, and one past the exit
+      Array(NaN, 0, 0, 0, 0, 2, 0, 0, 0, 0, NaN, 0, 3, 0, 0, NaN, 0, 0, 0, 1),
+      // every row NaN: no row is ever < best
+      Array(0.0, NaN, 0, 0, NaN, 0, 0, 0),
+      // the empty bank
+      Array.empty[Double]
+    ).map(b => (b, Array(0.0, 0, 0, 0), 4)) :+
+      // a NaN query coordinate poisons every row
+      ((Array(1.0, 0, 0, 0, 2, 0), Array(0.0, NaN), 2))
+    // an RDD source keeps the projection out of ConvertToLocalRelation's
+    // interpreted pass, so the planner's choice of codegen decides the path
+    def df = spark.sparkContext.parallelize(random ++ edges, 3).toDF("bank", "p", "dim")
       .selectExpr("bank", "p", "dim",
         "graft_argmin_dist2(bank, p) AS kidx",
         // the single-pass route of Detect.bankScored: the argmin row's
         // distance re-read over its slice
         "graft_l2(slice(bank, int(graft_argmin_dist2(bank, p)) * dim + 1, dim), p) AS kslice")
-      .collect()
-    df.foreach { r =>
-      val bank = r.getAs[scala.collection.Seq[Double]]("bank")
-      val p = r.getAs[scala.collection.Seq[Double]]("p")
-      val dim = r.getAs[Int]("dim")
-      val d2s = bank.grouped(dim).map(b =>
-        b.zip(p).map { case (x, y) => (y - x) * (y - x) }.sum).toVector
-      val bruteMin = d2s.min
-      val bruteIdx = d2s.indexWhere(_ == bruteMin) // FIRST index on ties
-      assert(r.getAs[Long]("kidx") === bruteIdx.toLong)
-      assert(java.lang.Double.doubleToRawLongBits(r.getAs[Double]("kslice")) ===
-        java.lang.Double.doubleToRawLongBits(bruteMin),
-        "slice re-read must equal the brute-force min bit-for-bit")
+    def check(codegen: Boolean): Unit = {
+      val scan = df // planned under the current settings
+      val p = scan.queryExecution.executedPlan.toString
+      val fused = p.linesIterator
+        .exists(l => l.contains("graft_argmin_dist2") && l.trim.startsWith("*("))
+      assert(fused === codegen, p.take(800))
+      val rows = scan.collect()
+      assert(rows.length === random.length + edges.length)
+      rows.foreach { r =>
+        val bank = r.getAs[scala.collection.Seq[Double]]("bank")
+        val p = r.getAs[scala.collection.Seq[Double]]("p")
+        val dim = r.getAs[Int]("dim")
+        val d2s = bank.grouped(dim).map(b =>
+          b.zip(p).map { case (x, y) => (y - x) * (y - x) }.sum).toVector
+        // rows that can win: a NaN or infinite full sum never is < best
+        val finite = d2s.zipWithIndex.filter(_._1 < Double.PositiveInfinity)
+        val label = s"bank=${bank.mkString(",")} p=${p.mkString(",")} codegen=$codegen"
+        if (finite.isEmpty) {
+          assert(r.isNullAt(r.fieldIndex("kidx")) && r.isNullAt(r.fieldIndex("kslice")), label)
+        } else {
+          val bruteMin = finite.map(_._1).min
+          val bruteIdx = finite.find(_._1 == bruteMin).get._2 // FIRST index on ties
+          assert(r.getAs[Long]("kidx") === bruteIdx.toLong, label)
+          assert(java.lang.Double.doubleToRawLongBits(r.getAs[Double]("kslice")) ===
+            java.lang.Double.doubleToRawLongBits(bruteMin),
+            s"slice re-read must equal the brute-force min bit-for-bit: $label")
+        }
+      }
     }
+    check(codegen = true)
+    val key = "spark.sql.codegen.factoryMode"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "NO_CODEGEN")
+    try check(codegen = false)
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("ANN quality: LSH and IVF recall against the exact top-k baseline") {
